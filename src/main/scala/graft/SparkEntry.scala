@@ -3,33 +3,28 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory each
-  * key maps to. Every `queries` entry with an `oracleSql` entry is
-  * hash-checked against DuckDB at sf0.01 by the driver. */
+/** Driver contract — see SURVEY.md §2 for the inventory each key maps
+  * to. Every key with an oracle is hash-checked against DuckDB; the
+  * rest get a rows-only check. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Gold.dailySalesSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Gold.queries ++ Athena.queries ++ Silver.queries ++ Ingest.queries ++
-      DataQuality.queries ++ TextAnalysis.queries ++ Dedup.queries ++
-      Similarity.queries ++ Events.queries ++ Multimodal.queries ++
-      AsOfJoin.queries ++ IntervalJoin.queries ++ Curation.queries ++
-      Clustering.queries ++ Compaction.queries ++ FuzzyMatch.queries ++
-      Graph.queries ++ Html.queries ++ Url.queries ++ Warc.queries ++
-      Robots.queries ++ Sitemap.queries ++ CrawlBudget.queries
+  /** Every module's query declarations, one per implemented operator. */
+  lazy val defs: Seq[QueryDef] =
+    Gold.defs ++ Athena.defs ++ Silver.defs ++ Ingest.defs ++ DataQuality.defs ++
+      TextAnalysis.defs ++ Dedup.defs ++ Similarity.defs ++ Events.defs ++
+      Multimodal.defs ++ AsOfJoin.defs ++ IntervalJoin.defs ++ Curation.defs ++
+      Clustering.defs ++ Compaction.defs ++ FuzzyMatch.defs ++ Graph.defs ++
+      Html.defs ++ Url.defs ++ Warc.defs ++ Robots.defs ++ Sitemap.defs ++
+      CrawlBudget.defs
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a rows-only check. */
-  def oracleSql: Map[String, String] =
-    Gold.oracles ++ Athena.oracles ++ Silver.oracles ++ Ingest.oracles ++
-      DataQuality.oracles ++ TextAnalysis.oracles ++ Dedup.oracles ++
-      Similarity.oracles ++ Events.oracles ++ Multimodal.oracles ++
-      AsOfJoin.oracles ++ IntervalJoin.oracles ++ Curation.oracles ++
-      Clustering.oracles ++ Compaction.oracles ++ FuzzyMatch.oracles ++
-      Graph.oracles ++ Html.oracles ++ Url.oracles ++ Warc.oracles ++
-      Robots.oracles ++ Sitemap.oracles ++ CrawlBudget.oracles
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    defs.map(d => d.key -> d.build).toMap
+
+  /** Equivalent ANSI SQL runnable by DuckDB on the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    defs.flatMap(d => d.oracle.map(d.key -> _)).toMap
 }

@@ -9,23 +9,24 @@ object Verify {
     // optional extra args: run only these query keys (local iteration;
     // the driver always passes exactly two args → full run)
     val only = args.drop(2).toSet
-    val queries =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(only).toMap
-    val oracleSql =
-      if (only.isEmpty) SparkEntry.oracleSql
-      else SparkEntry.oracleSql.view.filterKeys(only).toMap
+    val defs =
+      if (only.isEmpty) SparkEntry.defs else SparkEntry.defs.filter(d => only(d.key))
+    val unknown = only -- defs.map(_.key)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] unknown query keys: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     // same session profile as Bench (incl. AQE) so the verified plans
     // are the benched plans
     val spark = SparkConfigs.local(SparkSession.builder(),
       SparkConfigs.cpusFromEnv(4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    defs.foreach { d =>
+      try d.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${d.key}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${d.key} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -40,8 +41,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = defs.flatMap(d => d.oracle.map(v => s"${q(d.key)}: ${q(v)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -154,8 +154,8 @@ object AsOfJoin {
       .orderBy("event_id")
   }
 
-  val oracles: Map[String, String] = Map(
-    "evt_asof_nearest_order" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("evt_asof_nearest_order", eventAsOfNearestOrder,
       """WITH b AS (
         |  SELECT e.event_id, e.user_id, e.ts, o.o_orderdate AS prev_o
         |  FROM events e ASOF LEFT JOIN orders o
@@ -170,20 +170,15 @@ object AsOfJoin {
         |            WHEN (b.ts - prev_o) <= (next_o - b.ts) THEN prev_o
         |            ELSE next_o END AS nearest_order_date
         |FROM b JOIN f ON b.event_id = f.event_id
-        |ORDER BY b.event_id""".stripMargin,
-    "evt_asof_order" ->
+        |ORDER BY b.event_id""".stripMargin),
+    QueryDef("evt_asof_order", eventAsOfOrder,
       """SELECT e.event_id, e.user_id, o.o_orderdate AS asof_order_date
         |FROM events e ASOF LEFT JOIN orders o
         |  ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
-        |ORDER BY e.event_id""".stripMargin,
-    "evt_asof_next_order" ->
+        |ORDER BY e.event_id""".stripMargin),
+    QueryDef("evt_asof_next_order", eventAsOfNextOrder,
       """SELECT e.event_id, e.user_id, o.o_orderdate AS next_order_date
         |FROM events e ASOF LEFT JOIN orders o
         |  ON e.user_id = o.o_custkey AND e.ts <= o.o_orderdate
-        |ORDER BY e.event_id""".stripMargin)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_asof_order" -> eventAsOfOrder,
-    "evt_asof_next_order" -> eventAsOfNextOrder,
-    "evt_asof_nearest_order" -> eventAsOfNearestOrder)
+        |ORDER BY e.event_id""".stripMargin))
 }

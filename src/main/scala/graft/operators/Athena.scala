@@ -382,8 +382,8 @@ object Athena {
        |FROM sm GROUP BY category ORDER BY category""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "ath_store_credit" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("ath_store_credit", storeCredit,
       s"""WITH ${Tables.salesCte},
          |rev AS (SELECT store_id,
          |               SUM(CAST(FLOOR(unit_price*quantity*10000)
@@ -401,8 +401,8 @@ object Athena {
          |       CAST(SUM(COALESCE(rev_i, 0)) AS DOUBLE)/10000
          |         / CAST(COUNT(*) AS DOUBLE) AS rev_per_store
          |FROM st LEFT JOIN rev USING (store_id)
-         |GROUP BY 1 ORDER BY country""".stripMargin,
-    "ath_yoy_growth" ->
+         |GROUP BY 1 ORDER BY country""".stripMargin),
+    QueryDef("ath_yoy_growth", yoyGrowth,
       s"""WITH ${Tables.salesCte}, ${Tables.productsCte},
          |cy AS (
          |  SELECT p.category, year(s.sale_ts) AS sale_year, COUNT(*) AS n_sales,
@@ -417,37 +417,37 @@ object Athena {
          |         / CAST(pr.rev_i AS DOUBLE) AS yoy_growth
          |FROM cy c LEFT JOIN cy pr
          |  ON c.category = pr.category AND c.sale_year = pr.sale_year + 1
-         |ORDER BY c.category, c.sale_year""".stripMargin,
-    "ath_daily_revenue" ->
+         |ORDER BY c.category, c.sale_year""".stripMargin),
+    QueryDef("ath_daily_revenue", dailyRevenue,
       s"""WITH $goldCtes
          |SELECT sale_date, total_orders, total_items, revenue,
          |       ${Gold.fixedRoundSql("revenue / total_items", 2)} AS avg_item_value
          |FROM daily WHERE revenue > 0
-         |ORDER BY sale_date DESC LIMIT 10""".stripMargin,
-    "ath_top_customers" ->
+         |ORDER BY sale_date DESC LIMIT 10""".stripMargin),
+    QueryDef("ath_top_customers", topPerformingCustomers,
       s"""WITH $goldCtes
          |SELECT customer_id, total_spent, order_count, total_items,
          |       ${Gold.fixedRoundSql("total_spent / order_count", 2)} AS avg_order_value,
          |       city, country
          |FROM top_cust
-         |ORDER BY total_spent DESC, customer_id LIMIT 5""".stripMargin,
-    "ath_product_analysis" ->
+         |ORDER BY total_spent DESC, customer_id LIMIT 5""".stripMargin),
+    QueryDef("ath_product_analysis", productAnalysis,
       s"""WITH $goldCtes
          |SELECT product_id, product_name, category, times_sold, total_quantity,
          |       ${Gold.fixedRoundSql("avg_price", 2)} AS avg_price,
          |       ${Gold.fixedRoundSql("(times_sold * 1.0) / (SELECT MAX(times_sold) FROM prod_perf)", 2)}
          |         AS popularity_score
          |FROM prod_perf
-         |ORDER BY times_sold DESC, product_id LIMIT 10""".stripMargin,
-    "ath_rolling_revenue" ->
+         |ORDER BY times_sold DESC, product_id LIMIT 10""".stripMargin),
+    QueryDef("ath_rolling_revenue", rollingRevenue,
       s"""WITH $goldCtes
          |SELECT a.sale_date, a.revenue, COUNT(*) AS n_days,
          |       ${Gold.moneySumSql("b.revenue")} AS rev_7d_sum,
          |       ${Gold.moneySumSql("b.revenue")}/COUNT(*) AS rev_7d_avg
          |FROM daily a JOIN daily b
          |  ON b.sale_date BETWEEN a.sale_date - 6 AND a.sale_date
-         |GROUP BY a.sale_date, a.revenue ORDER BY a.sale_date""".stripMargin,
-    "ath_top_products_per_category" ->
+         |GROUP BY a.sale_date, a.revenue ORDER BY a.sale_date""".stripMargin),
+    QueryDef("ath_top_products_per_category", topProductsPerCategory,
       s"""WITH $goldCtes,
          |r AS (SELECT category, product_id, times_sold,
          |             ROW_NUMBER() OVER (PARTITION BY category
@@ -455,15 +455,15 @@ object Athena {
          |      FROM prod_perf WHERE category IS NOT NULL)
          |SELECT category, CAST(rn AS INT) AS rn, product_id,
          |       CAST(times_sold AS BIGINT) AS times_sold
-         |FROM r WHERE rn <= $TopPerCategory ORDER BY category, rn""".stripMargin,
-    "ath_category_month_pivot" -> pivotOracleSql,
-    "ath_month_unpivot" ->
+         |FROM r WHERE rn <= $TopPerCategory ORDER BY category, rn""".stripMargin),
+    QueryDef("ath_category_month_pivot", categoryMonthPivot, pivotOracleSql),
+    QueryDef("ath_month_unpivot", monthUnpivot,
       s"""SELECT category, mth, revenue
          |FROM ($pivotOracleSql)
          |UNPIVOT (revenue FOR mth IN
          |  (${(1 to 12).map(m => f"m$m%02d").mkString(", ")}))
-         |ORDER BY category, mth""".stripMargin,
-    "ath_revenue_by_category" ->
+         |ORDER BY category, mth""".stripMargin),
+    QueryDef("ath_revenue_by_category", revenueByCategory,
       s"""WITH $goldCtes
          |SELECT category,
          |       CAST(SUM(times_sold) AS BIGINT) AS total_sales,
@@ -471,8 +471,8 @@ object Athena {
          |       ${Gold.fixedRoundSql(Gold.moneySumSql("times_sold*avg_price"), 2)}
          |         AS estimated_revenue
          |FROM prod_perf GROUP BY category
-         |ORDER BY estimated_revenue DESC, category""".stripMargin,
-    "ath_pricing_summary" ->
+         |ORDER BY estimated_revenue DESC, category""".stripMargin),
+    QueryDef("ath_pricing_summary", pricingSummary,
       s"""SELECT l_returnflag, l_linestatus,
          |       CAST(SUM(CAST(FLOOR(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty,
          |       ${Gold.moneySumSql("l_extendedprice")} AS sum_base_price,
@@ -484,8 +484,8 @@ object Athena {
          |         / CAST(COUNT(*) AS DOUBLE) AS avg_qty,
          |       ${Gold.moneySumSql("l_extendedprice")}
          |         / CAST(COUNT(*) AS DOUBLE) AS avg_price
-         |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "ath_priority_fulfillment" ->
+         |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("ath_priority_fulfillment", priorityFulfillment,
       s"""WITH ls AS (SELECT l_orderkey AS o_orderkey,
          |              MAX(l_shipdate) AS last_ship, COUNT(*) AS n_lines
          |            FROM lineitem GROUP BY 1),
@@ -500,8 +500,8 @@ object Athena {
          |       CAST(SUM(n_lines) AS BIGINT) AS n_lines,
          |       CAST(SUM(late) AS BIGINT) AS n_late,
          |       CAST(SUM(late) AS DOUBLE)/CAST(COUNT(*) AS DOUBLE) AS late_rate
-         |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-    "ath_sales_rollup" ->
+         |FROM j GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("ath_sales_rollup", salesRollup,
       s"""WITH ${Tables.salesCte}, ${Tables.productsCte},
          |sm AS (SELECT p.category, CAST(YEAR(sale_ts) AS INT) AS yr,
          |              unit_price*quantity AS rev
@@ -512,20 +512,5 @@ object Athena {
          |       COUNT(*) AS n_sales,
          |       ${Gold.moneySumSql("rev")} AS revenue
          |FROM sm GROUP BY ROLLUP (category, yr)
-         |ORDER BY category, sale_year""".stripMargin)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ath_daily_revenue"       -> dailyRevenue,
-    "ath_top_customers"       -> topPerformingCustomers,
-    "ath_product_analysis"    -> productAnalysis,
-    "ath_revenue_by_category" -> revenueByCategory,
-    "ath_rolling_revenue"     -> rollingRevenue,
-    "ath_top_products_per_category" -> topProductsPerCategory,
-    "ath_category_month_pivot" -> categoryMonthPivot,
-    "ath_month_unpivot"        -> monthUnpivot,
-    "ath_sales_rollup"         -> salesRollup,
-    "ath_yoy_growth"           -> yoyGrowth,
-    "ath_priority_fulfillment" -> priorityFulfillment,
-    "ath_pricing_summary"      -> pricingSummary,
-    "ath_store_credit"         -> storeCredit)
+         |ORDER BY category, sale_year""".stripMargin))
 }

@@ -272,12 +272,12 @@ object Clustering {
        |${updateSql("a2", "cent1", "cent2")},
        |${assignSql("cent2", "af")}""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "emb_kmeans" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("emb_kmeans", kmeans,
       s"""WITH $kmeansCte
          |SELECT vec_id, CAST(cell AS INT) AS cluster, d2
-         |FROM af ORDER BY vec_id""".stripMargin,
-    "dd_semantic" ->
+         |FROM af ORDER BY vec_id""".stripMargin),
+    QueryDef("dd_semantic", semanticDedup,
       s"""WITH $kmeansCte,
          |p AS (
          |  SELECT b.vec_id AS b_id
@@ -288,9 +288,5 @@ object Clustering {
          |        >= $SemDedupThreshold)
          |SELECT f.vec_id, CAST(f.cell AS INT) AS cluster,
          |       f.vec_id IN (SELECT b_id FROM p) AS is_dup
-         |FROM af f ORDER BY vec_id""".stripMargin)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "emb_kmeans"  -> kmeans,
-    "dd_semantic" -> semanticDedup)
+         |FROM af f ORDER BY vec_id""".stripMargin))
 }

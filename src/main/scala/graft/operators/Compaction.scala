@@ -58,8 +58,8 @@ object Compaction {
       .orderBy("part", "file_id")
   }
 
-  val oracles: Map[String, String] = Map(
-    "lake_compaction" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("lake_compaction", lakeCompaction,
       s"""WITH f AS (
          |  SELECT CAST(ts AS DATE) AS part, user_id % 64 AS file_id,
          |         CAST(64*COUNT(*) + SUM(COALESCE(length(props),0)) AS BIGINT)
@@ -70,8 +70,5 @@ object Compaction {
          |              ORDER BY file_id
          |              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
          |            // $TargetBytes AS INT) AS out_group
-         |FROM f ORDER BY part, file_id""".stripMargin)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "lake_compaction" -> lakeCompaction)
+         |FROM f ORDER BY part, file_id""".stripMargin))
 }

@@ -112,7 +112,7 @@ object CrawlBudget {
     * `novel` (the admitted-novel URL rows, h = host) and
     * `alloc(host_id, host, points, demand, capacity, share, quota,
     * binding)`. Shared by the smp_crawl_budget and xf_fetch_schedule
-    * oracles. Declared above `oracles` (object-init order). */
+    * oracles. */
   private val budgetCte: String = {
     val h = Curation.portableHashSql("doc_id")
     s"""${Graph.hostRankCte},
@@ -242,8 +242,8 @@ object CrawlBudget {
       .orderBy("host_id", "slot")
   }
 
-  val oracles: Map[String, String] = Map(
-    "xf_refresh_schedule" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("xf_refresh_schedule", refreshSchedule,
       s"""WITH $budgetCte,
          |${Sitemap.sitemapCteSql},
          |${Sitemap.lastCrawlCteSql},
@@ -269,11 +269,11 @@ object CrawlBudget {
          |       dl.delay, (rq.quota + rk.slot - 1) * dl.delay AS fetch_offset_s
          |FROM rk JOIN rq USING (host_id) JOIN dl ON rk.host_id = dl.host_id
          |WHERE rk.slot <= rq.refresh_quota
-         |ORDER BY host_id, slot""".stripMargin,
-    "smp_crawl_budget" ->
+         |ORDER BY host_id, slot""".stripMargin),
+    QueryDef("smp_crawl_budget", crawlBudget,
       s"""WITH $budgetCte
-         |SELECT * FROM alloc ORDER BY host_id""".stripMargin,
-    "smp_recrawl_plan" ->
+         |SELECT * FROM alloc ORDER BY host_id""".stripMargin),
+    QueryDef("smp_recrawl_plan", recrawlPlan,
       s"""WITH $budgetCte,
          |${Sitemap.sitemapCteSql},
          |${Sitemap.lastCrawlCteSql},
@@ -287,8 +287,8 @@ object CrawlBudget {
          |       LEAST(COALESCE(rdem.refresh_demand, 0),
          |             al.capacity - al.quota) AS refresh_quota
          |FROM alloc al LEFT JOIN rdem ON al.host_id = rdem.host_id
-         |ORDER BY al.host_id""".stripMargin,
-    "xf_fetch_schedule" ->
+         |ORDER BY al.host_id""".stripMargin),
+    QueryDef("xf_fetch_schedule", fetchSchedule,
       s"""WITH $budgetCte,
          |dn AS (SELECT DISTINCT h AS host_id, canon_url FROM novel),
          |rk AS (SELECT host_id, canon_url,
@@ -304,7 +304,7 @@ object CrawlBudget {
          |       dl.delay, (rk.slot - 1) * dl.delay AS fetch_offset_s
          |FROM rk JOIN alloc USING (host_id) JOIN dl ON rk.host_id = dl.host_id
          |WHERE rk.slot <= alloc.quota
-         |ORDER BY host_id, slot""".stripMargin)
+         |ORDER BY host_id, slot""".stripMargin))
 
   /** `xf_fetch_schedule`: the budget EMITTED as a politeness-spaced
     * fetch plan — the scheduler output a fetcher fleet actually
@@ -340,10 +340,4 @@ object CrawlBudget {
           .as("fetch_offset_s"))
       .orderBy("host_id", "slot")
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "smp_crawl_budget"    -> crawlBudget,
-    "xf_fetch_schedule"   -> fetchSchedule,
-    "smp_recrawl_plan"    -> recrawlPlan,
-    "xf_refresh_schedule" -> refreshSchedule)
 }

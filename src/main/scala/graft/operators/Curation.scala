@@ -604,9 +604,8 @@ object Curation {
 
   /** Epoch cap for [[repeatPlan]] — the ~4-epoch knee past which
     * repeated data stops buying loss (Muennighoff et al. 2023,
-    * "Scaling Data-Constrained Language Models"). `final val` literals:
-    * inlined, immune to object-init order. */
-  final val MaxEpochs = 4L
+    * "Scaling Data-Constrained Language Models"). */
+  val MaxEpochs = 4L
 
   /** Token budget for [[repeatPlan]] as a multiple of the unique
     * corpus — 2× forces genuine repetition decisions. */
@@ -978,8 +977,8 @@ object Curation {
       .orderBy("customer_id", "cand_idx")
   }
 
-  val oracles: Map[String, String] = Map(
-    "smp_trust_weighted" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("smp_trust_weighted", trustWeighted,
       s"""WITH ${Graph.hostTrustCte},
          |dw AS (SELECT doc_id, doc_id % ${Url.HostMod} AS host_id
          |       FROM documents),
@@ -997,8 +996,8 @@ object Curation {
          |       prior / (CAST(s AS DOUBLE) / ${Graph.PrScale}) AS weight,
          |       (prior / (CAST(s AS DOUBLE) / ${Graph.PrScale}))
          |         * $HostSampleBudget AS expected_picks
-         |FROM j, t ORDER BY doc_id""".stripMargin,
-    "smp_host_weighted" ->
+         |FROM j, t ORDER BY doc_id""".stripMargin),
+    QueryDef("smp_host_weighted", hostWeighted,
       s"""WITH ${Graph.hostRankCte},
          |dw AS (SELECT doc_id, doc_id % ${Url.HostMod} AS host_id
          |       FROM documents),
@@ -1011,8 +1010,8 @@ object Curation {
          |       pagerank / (CAST(s AS DOUBLE) / ${Graph.PrScale}) AS weight,
          |       (pagerank / (CAST(s AS DOUBLE) / ${Graph.PrScale}))
          |         * ${HostSampleBudget} AS expected_picks
-         |FROM j, t ORDER BY doc_id""".stripMargin,
-    "smp_interleave" ->
+         |FROM j, t ORDER BY doc_id""".stripMargin),
+    QueryDef("smp_interleave", interleave,
       s"""WITH d AS (SELECT doc_id, source,
          |             ${portableHashSql("doc_id")} AS hk
          |           FROM documents),
@@ -1027,8 +1026,8 @@ object Curation {
          |             s_idx, nsrc
          |      FROM d JOIN i ON d.source = i.source)
          |SELECT doc_id, source, rn, (rn - 1) * nsrc + s_idx AS order_key
-         |FROM r ORDER BY order_key""".stripMargin,
-    "smp_mix_plan" ->
+         |FROM r ORDER BY order_key""".stripMargin),
+    QueryDef("smp_mix_plan", mixPlan,
       """WITH t AS (SELECT source,
         |             CAST(SUM(len(string_split(text,' '))) AS BIGINT) AS n_tokens
         |           FROM documents GROUP BY 1),
@@ -1055,8 +1054,8 @@ object Curation {
         |                        THEN 1 ELSE 0 END
         |       END AS BIGINT) AS allocation,
         |       NOT uncapped AS capped
-        |FROM f, u ORDER BY source""".stripMargin,
-    "smp_negative_sampling" ->
+        |FROM f, u ORDER BY source""".stripMargin),
+    QueryDef("smp_negative_sampling", negativeSampling,
       s"""WITH ${Tables.salesCte}, ${Tables.productsCte},
          |p AS (SELECT DISTINCT customer_id, product_id FROM sales),
          |cust AS (SELECT DISTINCT customer_id FROM p),
@@ -1072,20 +1071,20 @@ object Curation {
          |WHERE NOT EXISTS (SELECT 1 FROM p
          |                  WHERE p.customer_id = c.customer_id
          |                    AND p.product_id = c.product_id)
-         |ORDER BY c.customer_id, c.cand_idx""".stripMargin,
-    "smp_shard" ->
+         |ORDER BY c.customer_id, c.cand_idx""".stripMargin),
+    QueryDef("smp_shard", shardReport,
       s"""SELECT ${portableHashSql("doc_id")} % $ShardCount AS shard,
          |       COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS n_chars,
          |       MIN(doc_id) AS min_doc_id, MAX(doc_id) AS max_doc_id
-         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "smp_split" ->
+         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("smp_split", trainValTestSplit,
       s"""SELECT doc_id,
          |       ${portableHashSql("doc_id")} % 100 AS bucket,
          |       CASE WHEN ${portableHashSql("doc_id")} % 100 < $TrainPct THEN 'train'
          |            WHEN ${portableHashSql("doc_id")} % 100 < ${TrainPct + ValPct} THEN 'val'
          |            ELSE 'test' END AS split
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "smp_stratified" ->
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("smp_stratified", stratifiedSample,
       s"""WITH h AS (
          |  SELECT event_type, event_id,
          |         ${portableHashSql("event_id")} AS hk
@@ -1097,32 +1096,32 @@ object Curation {
          |  FROM h)
          |SELECT event_type, CAST(rn AS INT) AS rn, event_id
          |FROM r WHERE rn <= $StratumSampleK
-         |ORDER BY event_type, rn""".stripMargin,
-    "smp_kfold" ->
+         |ORDER BY event_type, rn""".stripMargin),
+    QueryDef("smp_kfold", kfoldAssign,
       s"""WITH RECURSIVE $componentsCtes
          |SELECT doc_id, cluster_id,
          |       ${portableHashSql("cluster_id")} % $KFolds AS fold
-         |FROM asg ORDER BY doc_id""".stripMargin,
-    "smp_leakage_split" ->
+         |FROM asg ORDER BY doc_id""".stripMargin),
+    QueryDef("smp_leakage_split", leakageSafeSplit,
       s"""WITH RECURSIVE $componentsCtes
          |SELECT doc_id, cluster_id,
          |       ${portableHashSql("cluster_id")} % 100 AS bucket,
          |       CASE WHEN ${portableHashSql("cluster_id")} % 100 < $TrainPct THEN 'train'
          |            WHEN ${portableHashSql("cluster_id")} % 100 < ${TrainPct + ValPct} THEN 'val'
          |            ELSE 'test' END AS split
-         |FROM asg ORDER BY doc_id""".stripMargin,
-    "smp_token_budget" ->
-      s"""WITH q AS (SELECT * FROM (${TextAnalysis.oracles("txt_quality")})),
+         |FROM asg ORDER BY doc_id""".stripMargin),
+    QueryDef("smp_token_budget", tokenBudgetSelect,
+      s"""WITH q AS (SELECT * FROM (${QueryDef.oracleOf(TextAnalysis.defs, "txt_quality")})),
          |tot AS (SELECT CAST(SUM(n_tokens) AS BIGINT) // 2 AS budget FROM q),
          |c AS (SELECT doc_id, n_tokens, quality_score,
          |             CAST(SUM(n_tokens) OVER (ORDER BY quality_score DESC, doc_id)
          |                  AS BIGINT) AS cum_tokens
          |      FROM q)
          |SELECT doc_id, n_tokens, quality_score, cum_tokens
-         |FROM c, tot WHERE cum_tokens <= budget ORDER BY doc_id""".stripMargin,
-    "dd_components" -> componentsOracleSql,
-    "dd_components_star" -> componentsOracleSql,
-    "dd_weights" ->
+         |FROM c, tot WHERE cum_tokens <= budget ORDER BY doc_id""".stripMargin),
+    QueryDef("dd_components", dedupComponents, componentsOracleSql),
+    QueryDef("dd_components_star", dedupComponentsStar, componentsOracleSql),
+    QueryDef("dd_weights", dedupWeights,
       s"""WITH RECURSIVE $componentsCtes,
          |sized AS (SELECT doc_id, cluster_id,
          |            COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
@@ -1130,25 +1129,25 @@ object Curation {
          |SELECT doc_id, cluster_id,
          |       CAST(cluster_size AS BIGINT) AS cluster_size,
          |       CAST(1.0 AS DOUBLE)/cluster_size AS weight
-         |FROM sized ORDER BY doc_id""".stripMargin,
-    "dd_cluster_stats" ->
+         |FROM sized ORDER BY doc_id""".stripMargin),
+    QueryDef("dd_cluster_stats", clusterStats,
       s"""WITH RECURSIVE $componentsCtes,
          |sized AS (SELECT cluster_id, COUNT(*) AS cluster_size
          |          FROM asg GROUP BY 1)
          |SELECT cluster_size, COUNT(*) AS n_clusters,
          |       CAST(cluster_size * COUNT(*) AS BIGINT) AS n_docs
-         |FROM sized GROUP BY 1 ORDER BY 1""".stripMargin,
-    "dd_canonical" ->
+         |FROM sized GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("dd_canonical", canonicalByQuality,
       s"""WITH RECURSIVE $componentsCtes,
-         |q AS (SELECT * FROM (${TextAnalysis.oracles("txt_quality")})),
+         |q AS (SELECT * FROM (${QueryDef.oracleOf(TextAnalysis.defs, "txt_quality")})),
          |ranked AS (
          |  SELECT a.doc_id, a.cluster_id, q.quality_score,
          |         ROW_NUMBER() OVER (PARTITION BY a.cluster_id
          |           ORDER BY q.quality_score DESC, a.doc_id) AS rn
          |  FROM asg a JOIN q ON a.doc_id = q.doc_id)
          |SELECT doc_id, cluster_id, quality_score, rn = 1 AS is_canonical
-         |FROM ranked ORDER BY doc_id""".stripMargin,
-    "smp_temperature" ->
+         |FROM ranked ORDER BY doc_id""".stripMargin),
+    QueryDef("smp_temperature", temperatureSample,
       s"""WITH d AS (SELECT doc_id, source,
          |                  ${portableHashSql("doc_id")} AS hk
          |           FROM documents),
@@ -1166,8 +1165,8 @@ object Curation {
          |      FROM d)
          |SELECT r.source, CAST(rn AS INT) AS rn, doc_id
          |FROM r JOIN al USING (source) WHERE rn <= alloc
-         |ORDER BY source, rn""".stripMargin,
-    "smp_mix_report" -> {
+         |ORDER BY source, rn""".stripMargin),
+    QueryDef("smp_mix_report", mixReport, {
       val wValues = MixWeightsMilli
         .map { case (l, w) => s"('$l',${w}::BIGINT)" }.mkString(", ")
       s"""WITH w(lang, w_milli) AS (VALUES $wValues),
@@ -1184,8 +1183,8 @@ object Curation {
          |       CAST(CAST(SUM(n_epochs) AS BIGINT) * 1000 // COUNT(*) AS BIGINT)
          |         AS realized_milli
          |FROM e GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-    "smp_weighted" -> {
+    }),
+    QueryDef("smp_weighted", weightedMix, {
       val wValues = MixWeightsMilli
         .map { case (l, w) => s"('$l',${w}::BIGINT)" }.mkString(", ")
       s"""WITH w(lang, w_milli) AS (VALUES $wValues),
@@ -1198,11 +1197,11 @@ object Curation {
          |      FROM d)
          |SELECT doc_id, lang, unnest(generate_series(1, n_epochs)) AS epoch
          |FROM e ORDER BY doc_id, epoch""".stripMargin
-    },
-    "smp_shuffle" ->
+    }),
+    QueryDef("smp_shuffle", corpusShuffle,
       s"""SELECT doc_id, ${portableHashSql("doc_id")} AS shuffle_key
-         |FROM documents ORDER BY shuffle_key, doc_id""".stripMargin,
-    "smp_zorder" ->
+         |FROM documents ORDER BY shuffle_key, doc_id""".stripMargin),
+    QueryDef("smp_zorder", zorderKey,
       s"""WITH e AS (
          |  SELECT event_id, user_id,
          |         CAST(FLOOR(epoch(ts)) AS BIGINT) // 86400 AS day
@@ -1215,8 +1214,8 @@ object Curation {
          |         ((day - min_d) * ${1L << ZBits}) // (max_d - min_d + 1) AS v_n
          |  FROM e, m)
          |SELECT event_id, ${mortonSql("u_n", "v_n", "//")} AS zval
-         |FROM r ORDER BY zval, event_id""".stripMargin,
-    "smp_pack" ->
+         |FROM r ORDER BY zval, event_id""".stripMargin),
+    QueryDef("smp_pack", sequencePack,
       s"""WITH RECURSIVE base AS (
          |  SELECT doc_id,
          |         CAST((${portableHashSql("doc_id")}) % $PackBuckets AS INT) AS bucket,
@@ -1238,9 +1237,9 @@ object Curation {
          |  FROM state s JOIN ord o ON o.bucket = s.bucket AND o.rn = s.rn + 1)
          |SELECT bucket, CAST(pack_idx AS INT) AS pack_idx,
          |       CAST(pack_pos AS INT) AS pack_pos, doc_id, n_tokens
-         |FROM state ORDER BY bucket, pack_idx, pack_pos""".stripMargin,
-    "smp_repeat_plan" ->
-      s"""WITH q AS (SELECT * FROM (${TextAnalysis.oracles("txt_quality")})),
+         |FROM state ORDER BY bucket, pack_idx, pack_pos""".stripMargin),
+    QueryDef("smp_repeat_plan", repeatPlan,
+      s"""WITH q AS (SELECT * FROM (${QueryDef.oracleOf(TextAnalysis.defs, "txt_quality")})),
          |st AS (SELECT d.source,
          |              CAST(SUM(q.n_tokens) AS BIGINT) AS n_tokens,
          |              CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1267,14 +1266,14 @@ object Curation {
          |SELECT source, q_rank, avg_quality, n_tokens,
          |       CAST(epochs AS BIGINT) AS epochs,
          |       CAST(epochs * n_tokens AS BIGINT) AS tokens_used
-         |FROM ep ORDER BY q_rank""".stripMargin,
-    "smp_curriculum" ->
-      s"""WITH q AS (SELECT * FROM (${TextAnalysis.oracles("txt_quality")}))
+         |FROM ep ORDER BY q_rank""".stripMargin),
+    QueryDef("smp_curriculum", curriculum,
+      s"""WITH q AS (SELECT * FROM (${QueryDef.oracleOf(TextAnalysis.defs, "txt_quality")}))
          |SELECT doc_id, CAST(FLOOR(quality_score * 10.0) AS INT) AS q_bucket,
          |       ${portableHashSql("doc_id")} AS shuffle_key
          |FROM q
-         |ORDER BY q_bucket DESC, shuffle_key, doc_id""".stripMargin,
-    "smp_dsir" ->
+         |ORDER BY q_bucket DESC, shuffle_key, doc_id""".stripMargin),
+    QueryDef("smp_dsir", dsirResample,
       s"""WITH toks AS (
          |  SELECT doc_id, lang = '$DsirTargetLang' AS is_tgt,
          |         unnest(string_split(text, ' ')) AS token
@@ -1295,26 +1294,23 @@ object Curation {
          |                     AS DECIMAL(38,0))) AS DOUBLE)
          |         / ${TextAnalysis.LmScale} / COUNT(*) AS dsir_w
          |FROM r GROUP BY 1
-         |ORDER BY dsir_w DESC, doc_id LIMIT $DsirTopK""".stripMargin,
-    "txt_curate" ->
-      s"""WITH q AS (SELECT * FROM (${TextAnalysis.oracles("txt_quality")})),
-         |l AS (SELECT * FROM (${TextAnalysis.oracles("txt_lang_id")})),
+         |ORDER BY dsir_w DESC, doc_id LIMIT $DsirTopK""".stripMargin),
+    QueryDef("txt_curate", curate,
+      s"""WITH q AS (SELECT * FROM (${QueryDef.oracleOf(TextAnalysis.defs, "txt_quality")})),
+         |l AS (SELECT * FROM (${QueryDef.oracleOf(TextAnalysis.defs, "txt_lang_id")})),
          |canon AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY sha256(text))
          |SELECT q.doc_id, l.pred_lang, q.n_tokens, q.quality_score
          |FROM q JOIN l ON q.doc_id = l.doc_id
          |WHERE q.passed AND l.pred_lang = 'en'
          |  AND q.doc_id IN (SELECT doc_id FROM canon)
-         |ORDER BY q.doc_id""".stripMargin)
+         |ORDER BY q.doc_id""".stripMargin))
 
-  /** Sample budget `smp_host_weighted` sizes expected picks against.
-    * `final` so it is a compile-time constant: the `oracles` val is
-    * declared ABOVE this and would otherwise read 0.0 mid-init. */
-  final val HostSampleBudget = 1000.0
+  /** Sample budget `smp_host_weighted` sizes expected picks against. */
+  val HostSampleBudget = 1000.0
 
   /** Spam-mass level above which `smp_trust_weighted` flags a host
-    * demoted (Gyöngyi et al. §6 threshold the ops report reads).
-    * `final` compile-time constant (init-order rule, as above). */
-  final val SpamMassDemote = 0.5
+    * demoted (Gyöngyi et al. §6 threshold the ops report reads). */
+  val SpamMassDemote = 0.5
 
   /** `smp_trust_weighted`: quality×trust 2-D sampling weights — the
     * host-prior sampler ([[hostWeighted]]) composed with the spam
@@ -1389,32 +1385,4 @@ object Curation {
         (weight * lit(HostSampleBudget)).as("expected_picks"))
       .orderBy("doc_id")
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "smp_host_weighted" -> hostWeighted,
-    "smp_trust_weighted" -> trustWeighted,
-    "smp_split"      -> trainValTestSplit,
-    "smp_shard"      -> shardReport,
-    "smp_leakage_split" -> leakageSafeSplit,
-    "smp_kfold"      -> kfoldAssign,
-    "smp_token_budget"  -> tokenBudgetSelect,
-    "smp_stratified" -> stratifiedSample,
-    "smp_weighted"   -> weightedMix,
-    "smp_mix_report" -> mixReport,
-    "smp_pack"       -> sequencePack,
-    "smp_shuffle"    -> corpusShuffle,
-    "smp_zorder"     -> zorderKey,
-    "smp_dsir"       -> dsirResample,
-    "smp_curriculum" -> curriculum,
-    "smp_repeat_plan" -> repeatPlan,
-    "smp_temperature" -> temperatureSample,
-    "smp_mix_plan"    -> mixPlan,
-    "smp_interleave"  -> interleave,
-    "smp_negative_sampling" -> negativeSampling,
-    "dd_components"  -> dedupComponents,
-    "dd_components_star" -> dedupComponentsStar,
-    "dd_weights"     -> dedupWeights,
-    "dd_canonical"   -> canonicalByQuality,
-    "dd_cluster_stats" -> clusterStats,
-    "txt_curate"     -> curate)
 }

@@ -269,10 +269,7 @@ object DataQuality {
        |  (SELECT CAST(COALESCE(SUM($nullSum), 0) AS BIGINT) FROM $t) AS null_count""".stripMargin
   }
 
-  /** Robust-z threshold for daily-volume anomaly flags. Declared ABOVE
-    * the oracles map: a strict `val` interpolated into another strict
-    * `val`'s string initializes in declaration order, and a forward
-    * reference silently reads 0.0. */
+  /** Robust-z threshold for daily-volume anomaly flags. */
   val VolumeRobustK = 3.0
 
   /** Columns profiled by [[nullProfile]], with their string-ness —
@@ -455,8 +452,8 @@ object DataQuality {
       }.mkString("\nUNION ALL\n")
     }.mkString("\nUNION ALL\n") + "\nORDER BY table_name, column_name"
 
-  val oracles: Map[String, String] = Map(
-    "dq_fd_profile" -> {
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("dq_fd_profile", fdProfile, {
       val perFd = FdCatalog
         .map { case (name, src, lhs, rhs) =>
           s"""SELECT '$name' AS fd, COUNT(*) AS n_keys,
@@ -472,11 +469,11 @@ object DataQuality {
          |SELECT * FROM (
          |$perFd
          |) ORDER BY fd""".stripMargin
-    },
-    "dq_null_profile" -> nullProfileOracle,
-    "dq_key_profile" -> keyProfileOracle,
-    "dq_value_skew" -> valueSkewOracle,
-    "dq_order_reconciliation" ->
+    }),
+    QueryDef("dq_null_profile", nullProfile, nullProfileOracle),
+    QueryDef("dq_key_profile", keyProfile, keyProfileOracle),
+    QueryDef("dq_value_skew", valueSkew, valueSkewOracle),
+    QueryDef("dq_order_reconciliation", orderReconciliation,
       s"""WITH l AS (SELECT l_orderkey AS o_orderkey,
          |             SUM(CAST(FLOOR(l_extendedprice*(1.0-l_discount)*(1.0+l_tax)*10000)
          |                 AS DECIMAL(28,0))) AS lines_i
@@ -494,14 +491,14 @@ object DataQuality {
          |      FROM d)
          |SELECT n_orders, n_matched, n_mismatched, total_abs_drift, max_abs_drift,
          |       CAST(n_matched AS DOUBLE)/CAST(n_orders AS DOUBLE) AS match_rate
-         |FROM a""".stripMargin,
-    "dq_event_dups" ->
+         |FROM a""".stripMargin),
+    QueryDef("dq_event_dups", eventDups,
       """SELECT COUNT(*) AS n_events,
         |       COUNT(DISTINCT event_id) AS n_distinct_ids,
         |       COUNT(*) - COUNT(DISTINCT event_id) AS n_duplicates,
         |       COUNT(*) = COUNT(DISTINCT event_id) AS ids_unique
-        |FROM events""".stripMargin,
-    "dq_temporal_integrity" ->
+        |FROM events""".stripMargin),
+    QueryDef("dq_temporal_integrity", temporalIntegrity,
       """WITH j AS (SELECT CAST(l_shipdate AS DATE) AS ship,
         |             CAST(o_orderdate AS DATE) AS placed
         |           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
@@ -518,8 +515,8 @@ object DataQuality {
         |  SELECT 'ship_before_order' AS rule, sbo AS n_violations, n_lines FROM a
         |  UNION ALL
         |  SELECT 'ship_over_year_late', sol, n_lines FROM a)
-        |ORDER BY rule""".stripMargin,
-    "dq_benford" -> {
+        |ORDER BY rule""".stripMargin),
+    QueryDef("dq_benford", benford, {
       // exponent suffix: a bare decimal literal parses as DECIMAL in
       // DuckDB and the decimal→double conversion can land an ulp off
       // the strtod parse; `...e0` is an approximate-numeric literal,
@@ -538,8 +535,8 @@ object DataQuality {
          |       ABS(CAST(n_orders AS DOUBLE)/CAST(total AS DOUBLE)
          |           - ($cases)) AS abs_dev
          |FROM g, t ORDER BY digit""".stripMargin
-    },
-    "dq_hour_coverage" ->
+    }),
+    QueryDef("dq_hour_coverage", hourCoverage,
       """WITH hd AS (SELECT DISTINCT
         |              date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS eday,
         |              CAST(hour(ts) AS BIGINT) AS hr
@@ -548,8 +545,8 @@ object DataQuality {
         |SELECT DATE '1970-01-01' + CAST(eday AS INT) AS day, n_active_hours,
         |       24 - n_active_hours AS n_silent_hours,
         |       n_active_hours < 24 AS coverage_gap
-        |FROM g ORDER BY day""".stripMargin,
-    "dq_error_rate" ->
+        |FROM g ORDER BY day""".stripMargin),
+    QueryDef("dq_error_rate", errorRate,
       s"""WITH d AS (SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS eday,
          |                  COUNT(*) AS n_events,
          |                  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
@@ -567,8 +564,8 @@ object DataQuality {
          |       CAST(rate_m AS DOUBLE)/100000 AS err_rate,
          |       ABS(rate_m - med) > CAST($VolumeRobustK AS DOUBLE) * mad
          |         AS rate_anomaly
-         |FROM r, x ORDER BY day""".stripMargin,
-    "dq_volume_anomaly" ->
+         |FROM r, x ORDER BY day""".stripMargin),
+    QueryDef("dq_volume_anomaly", volumeAnomaly,
       s"""WITH d AS (SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS eday,
          |                  COUNT(*) AS n_events
          |           FROM events GROUP BY 1),
@@ -580,11 +577,11 @@ object DataQuality {
          |SELECT DATE '1970-01-01' + CAST(eday AS INT) AS day, n_events, med, mad,
          |       ABS(n_events - med) > CAST($VolumeRobustK AS DOUBLE) * mad
          |         AS volume_anomaly
-         |FROM d, x ORDER BY day""".stripMargin,
-    "dq_table_stats" ->
+         |FROM d, x ORDER BY day""".stripMargin),
+    QueryDef("dq_table_stats", tableStatsQuery,
       (statsTables.map(statsSql).mkString("", "\nUNION ALL\n", "\n") +
-        "ORDER BY table_name"),
-    "dq_business_rules" ->
+        "ORDER BY table_name")),
+    QueryDef("dq_business_rules", businessRules,
       s"""WITH ${Tables.salesCte},
          |daily AS (
          |  SELECT CAST(sale_ts AS DATE) AS sale_date,
@@ -604,8 +601,8 @@ object DataQuality {
          |SELECT check_name, table_name,
          |       (observed = 0 OR check_name = 'top_customers_max_10' AND observed <= 10) AS passed,
          |       CAST(observed AS BIGINT) AS observed
-         |FROM checks ORDER BY check_name""".stripMargin,
-    "dq_referential" ->
+         |FROM checks ORDER BY check_name""".stripMargin),
+    QueryDef("dq_referential", referentialIntegrity,
       s"""WITH ${Tables.salesCte}, ${Tables.customersCte}, ${Tables.productsCte},
          |${Tables.storesCte},
          |checks(fk_name, orphan_rows) AS (
@@ -620,8 +617,8 @@ object DataQuality {
          |            (SELECT 1 FROM stores t WHERE t.store_id = s.store_id)))
          |SELECT fk_name, CAST(orphan_rows AS BIGINT) AS orphan_rows,
          |       orphan_rows = 0 AS passed
-         |FROM checks ORDER BY fk_name""".stripMargin,
-    "dq_drift" ->
+         |FROM checks ORDER BY fk_name""".stripMargin),
+    QueryDef("dq_drift", drift,
       s"""WITH b AS (
          |  SELECT event_type,
          |         CAST(FLOOR(value) AS BIGINT) // ${Events.HistBucketWidth} AS bin,
@@ -635,7 +632,7 @@ object DataQuality {
          |       CAST(SUM(ABS(c*m - d*n)) AS DOUBLE)
          |         / (CAST(2 AS DOUBLE) * n * m) AS tv_distance
          |FROM b JOIN t USING (event_type)
-         |GROUP BY b.event_type, n, m ORDER BY event_type""".stripMargin)
+         |GROUP BY b.event_type, n, m ORDER BY event_type""".stripMargin))
 
   /** `dq_volume_anomaly`: partition-volume monitoring — daily event
     * counts flagged against the median/MAD of the daily series (the
@@ -738,9 +735,7 @@ object DataQuality {
     * the Spark plan and the oracle SQL (shortest-repr round-trip, so
     * both engines parse the same bits — no libm call in either
     * plan). */
-  // lazy: the strict `oracles` val above interpolates this map, and a
-  // strict forward reference would read null (the VolumeRobustK trap)
-  private[operators] lazy val BenfordExpected: Map[Int, Double] =
+  private[operators] val BenfordExpected: Map[Int, Double] =
     (1 to 9).map(d => d -> math.log10(1.0 + 1.0 / d)).toMap
 
   /** `dq_benford`: first-digit distribution of order totals vs
@@ -833,8 +828,7 @@ object DataQuality {
     * Tables.sales's scaladoc), and `p_brand → p_type` is a
     * brand-spans-types business fact, not a key. A profiler that
     * reports zero everywhere is reading the wrong columns. */
-  // lazy: the oracles map above references this at class-init time
-  private lazy val FdCatalog: Seq[(String, String, String, String)] = Seq(
+  private val FdCatalog: Seq[(String, String, String, String)] = Seq(
     // (fd name, source, lhs col, rhs col); source "sales" = retail view
     ("customer.c_custkey->c_mktsegment", "customer", "c_custkey", "c_mktsegment"),
     ("orders.o_orderkey->o_custkey", "orders", "o_orderkey", "o_custkey"),
@@ -902,21 +896,4 @@ object DataQuality {
         fds.map { case (name, _, _, rhs) => rollup(name, shared, rhs) }
       }.reduce(_ unionAll _).orderBy("fd")
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dq_fd_profile"     -> fdProfile,
-    "dq_table_stats"    -> tableStatsQuery,
-    "dq_business_rules" -> businessRules,
-    "dq_referential"    -> referentialIntegrity,
-    "dq_drift"          -> drift,
-    "dq_volume_anomaly" -> volumeAnomaly,
-    "dq_order_reconciliation" -> orderReconciliation,
-    "dq_error_rate"     -> errorRate,
-    "dq_hour_coverage"  -> hourCoverage,
-    "dq_benford"        -> benford,
-    "dq_temporal_integrity" -> temporalIntegrity,
-    "dq_event_dups"     -> eventDups,
-    "dq_null_profile"   -> nullProfile,
-    "dq_key_profile"    -> keyProfile,
-    "dq_value_skew"     -> valueSkew)
 }

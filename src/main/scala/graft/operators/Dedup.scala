@@ -1670,17 +1670,14 @@ object Dedup {
        |FROM per ORDER BY decile""".stripMargin
   }
 
-  // lazy: the source-dup oracle composes Curation.componentsCtes, which
-  // itself composes Dedup.ngramPairCtes — eager init would deadlock into
-  // a null during mutual object initialization
-  lazy val oracles: Map[String, String] = Map(
-    "dd_simhash" -> simhashOracleSql,
-    "dd_lsh_calibration" -> lshCalibrationOracleSql,
-    "dd_exact" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("dd_simhash", simhash, simhashOracleSql),
+    QueryDef("dd_lsh_calibration", lshCalibration, lshCalibrationOracleSql),
+    QueryDef("dd_exact", exact,
       """SELECT sha256(text) AS content_hash, COUNT(*) AS n_copies,
         |       MIN(doc_id) AS canonical_doc_id
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "dd_source_dup_profile" ->
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("dd_source_dup_profile", sourceDupProfile,
       s"""WITH RECURSIVE ${Curation.componentsCtes},
          |exd AS (SELECT doc_id,
          |          doc_id > MIN(doc_id) OVER (PARTITION BY text) AS is_exact_dup
@@ -1698,8 +1695,8 @@ object Dedup {
          |       CAST(SUM(CASE WHEN nearf.in_near THEN 1 ELSE 0 END)
          |            AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS near_dup_rate
          |FROM documents d JOIN exd USING (doc_id) JOIN nearf USING (doc_id)
-         |GROUP BY 1 ORDER BY source""".stripMargin,
-    "dd_decontam_substr" -> {
+         |GROUP BY 1 ORDER BY source""".stripMargin),
+    QueryDef("dd_decontam_substr", decontamSubstr, {
       val bench = s"${Curation.portableHashSql("doc_id")} % $DecontamBenchMod = 0"
       s"""WITH grams AS (
          |  SELECT doc_id, ($bench) AS is_bench, gs.g AS pos,
@@ -1732,8 +1729,8 @@ object Dedup {
          |FROM documents d LEFT JOIN cov c USING (doc_id)
          |WHERE NOT ($bench)
          |ORDER BY d.doc_id""".stripMargin
-    },
-    "dd_dup_coverage" ->
+    }),
+    QueryDef("dd_dup_coverage", dupCoverage,
       """WITH grams AS (
         |  SELECT doc_id, gs.g AS pos, substring(text, gs.g::INT, 48) AS gram
         |  FROM documents,
@@ -1760,8 +1757,8 @@ object Dedup {
         |       CASE WHEN d.n_chars = 0 THEN 0.0
         |            ELSE COALESCE(c.dup_chars, 0) / d.n_chars END AS dup_ratio
         |FROM documents d LEFT JOIN cov c USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-    "dd_bloom" -> {
+        |ORDER BY d.doc_id""".stripMargin),
+    QueryDef("dd_bloom", bloomIncrementalDedup, {
       val h = s"${Curation.portableHashSql("doc_id")} % 10"
       s"""WITH d AS (SELECT doc_id, sha256(text) AS h FROM documents),
          |c AS (SELECT DISTINCT h FROM d WHERE $h <> 0)
@@ -1769,8 +1766,8 @@ object Dedup {
          |FROM d LEFT JOIN c ON d.h = c.h
          |WHERE $h = 0
          |ORDER BY d.doc_id""".stripMargin
-    },
-    "dd_incremental" -> {
+    }),
+    QueryDef("dd_incremental", incrementalDedup, {
       val h = s"${Curation.portableHashSql("doc_id")} % 10"
       s"""WITH d AS (SELECT doc_id, sha256(text) AS h FROM documents),
          |b AS (SELECT * FROM d WHERE $h = 0),
@@ -1780,10 +1777,10 @@ object Dedup {
          |       (c.h IS NULL AND b.doc_id = k.keep_id) AS kept
          |FROM b JOIN k ON b.h = k.h LEFT JOIN c ON b.h = c.h
          |ORDER BY b.doc_id""".stripMargin
-    },
-    "dd_ngram_jaccard" -> ngramJaccardOracle,
-    "dd_containment"   -> containmentOracle,
-    "dd_cross_overlap" ->
+    }),
+    QueryDef("dd_ngram_jaccard", ngramJaccard, ngramJaccardOracle),
+    QueryDef("dd_containment", containment, containmentOracle),
+    QueryDef("dd_cross_overlap", crossOverlap,
       s"""WITH sh AS (
          |  SELECT DISTINCT source, shingle FROM (
          |    SELECT source, unnest(list_distinct(list_transform(
@@ -1801,8 +1798,8 @@ object Dedup {
          |       n_common*1.0/pa.n_sh AS containment_a,
          |       n_common*1.0/pb.n_sh AS containment_b
          |FROM ix JOIN per pa ON src_a = pa.source JOIN per pb ON src_b = pb.source
-         |ORDER BY src_a, src_b""".stripMargin,
-    "dd_chunk_dedup" -> {
+         |ORDER BY src_a, src_b""".stripMargin),
+    QueryDef("dd_chunk_dedup", chunkDedup, {
       // char-level mirror of graft_rolling_hash over the trailing 3-gram
       val g = "l3 || ' ' || l2 || ' ' || l1"
       s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS tokens
@@ -1842,8 +1839,8 @@ object Dedup {
          |       CAST(n_dup_chunks AS DOUBLE)/CAST(n_chunks AS DOUBLE)
          |         AS dup_chunk_ratio
          |FROM per ORDER BY doc_id""".stripMargin
-    },
-    "dd_span" -> {
+    }),
+    QueryDef("dd_span", spanDedup, {
       val gram = (0 until SpanK).map(j => s"t[i+$j]").mkString(" || ' ' || ")
       s"""WITH sh AS (
          |  SELECT doc_id, unnest(list_distinct(list_transform(
@@ -1853,11 +1850,11 @@ object Dedup {
          |SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_shared
          |FROM sh a JOIN sh b ON a.span = b.span AND a.doc_id < b.doc_id
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    },
+    }),
     // minhash+LSH is exact-verified; at these similarities its recall is
     // 1.0, so the exact-Jaccard oracle applies to it too.
-    "dd_minhash_lsh" -> ngramJaccardOracle,
-    "dd_threshold_curve" ->
+    QueryDef("dd_minhash_lsh", minhashLsh, ngramJaccardOracle),
+    QueryDef("dd_threshold_curve", thresholdCurve,
       s"""WITH sh AS (
          |  SELECT doc_id, unnest(list_distinct(list_transform(
          |           generate_series(1, len(t)-2),
@@ -1880,8 +1877,8 @@ object Dedup {
          |       a.n_pairs_exact,
          |       CAST(SUM(b.n_pairs_exact) AS BIGINT) AS n_pairs_at_least
          |FROM h a LEFT JOIN h b ON b.decile >= a.decile
-         |GROUP BY 1, 2, 3 ORDER BY a.decile""".stripMargin,
-    "dd_df_hist" ->
+         |GROUP BY 1, 2, 3 ORDER BY a.decile""".stripMargin),
+    QueryDef("dd_df_hist", dfHist,
       """WITH sh AS (
         |  SELECT doc_id, unnest(list_distinct(list_transform(
         |           generate_series(1, len(t)-2),
@@ -1890,8 +1887,8 @@ object Dedup {
         |  WHERE len(t) >= 3),
         |d AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY 1)
         |SELECT df, COUNT(*) AS n_shingles
-        |FROM d GROUP BY 1 ORDER BY df""".stripMargin,
-    "dd_method_report" -> {
+        |FROM d GROUP BY 1 ORDER BY df""".stripMargin),
+    QueryDef("dd_method_report", methodReport, {
       def pairSql(name: String, sub: String) =
         s"""SELECT '$name' AS method,
            |       (SELECT COUNT(*) FROM ($sub)) AS n_pairs,
@@ -1911,8 +1908,8 @@ object Dedup {
          |UNION ALL
          |${pairSql("containment", containmentOracle)}
          |) ORDER BY method""".stripMargin
-    },
-    "dd_minhash_incremental" -> {
+    }),
+    QueryDef("dd_minhash_incremental", minhashIncremental, {
       val h = Curation.portableHashSql("doc_id")
       s"""WITH sh AS (
          |  SELECT doc_id, unnest(list_distinct(list_transform(
@@ -1938,8 +1935,8 @@ object Dedup {
          |       COALESCE(n, 0) = 0 AS novel
          |FROM batch LEFT JOIN m ON doc_id = batch_id
          |ORDER BY doc_id""".stripMargin
-    },
-    "dd_admission" -> {
+    }),
+    QueryDef("dd_admission", admission, {
       val h = Curation.portableHashSql("doc_id")
       s"""WITH d AS (SELECT doc_id, text, sha256(text) AS h,
          |                  (($h) % 10 = 0) AS is_batch
@@ -2042,9 +2039,9 @@ object Dedup {
          |LEFT JOIN us ON b.doc_id = us.doc_id
          |WHERE b.is_batch
          |ORDER BY b.doc_id""".stripMargin
-    },
-    "dd_decontam" -> decontamOracle,
-    "dd_contam_report" ->
+    }),
+    QueryDef("dd_decontam", decontam, decontamOracle),
+    QueryDef("dd_contam_report", contamReport,
       s"""WITH dec AS (SELECT * FROM ($decontamOracle))
          |SELECT d.source, COUNT(*) AS n_train_docs,
          |       CAST(SUM(CASE WHEN contaminated THEN 1 ELSE 0 END) AS BIGINT)
@@ -2053,7 +2050,7 @@ object Dedup {
          |       CAST(SUM(CASE WHEN contaminated THEN 1 ELSE 0 END) AS DOUBLE)
          |         / CAST(COUNT(*) AS DOUBLE) AS contamination_rate
          |FROM dec JOIN documents d USING (doc_id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin)
+         |GROUP BY 1 ORDER BY 1""".stripMargin))
 
   private lazy val decontamOracle: String = {
       val benchHash = Curation.portableHashSql("doc_id")
@@ -2125,27 +2122,4 @@ object Dedup {
        |WHERE inter*1.0/LEAST(sa.n_sh, sb.n_sh) >= $ContainmentThreshold
        |  AND LEAST(sa.n_sh, sb.n_sh) >= $ContainMinShingles
        |ORDER BY a_id, b_id""".stripMargin
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dd_exact"         -> exact,
-    "dd_ngram_jaccard" -> ngramJaccard,
-    "dd_containment"   -> containment,
-    "dd_cross_overlap" -> crossOverlap,
-    "dd_chunk_dedup"   -> chunkDedup,
-    "dd_span"          -> spanDedup,
-    "dd_dup_coverage"  -> dupCoverage,
-    "dd_decontam_substr" -> decontamSubstr,
-    "dd_minhash_lsh"   -> minhashLsh,
-    "dd_minhash_incremental" -> minhashIncremental,
-    "dd_method_report" -> methodReport,
-    "dd_df_hist"       -> dfHist,
-    "dd_threshold_curve" -> thresholdCurve,
-    "dd_lsh_calibration" -> lshCalibration,
-    "dd_source_dup_profile" -> sourceDupProfile,
-    "dd_simhash"       -> simhash,
-    "dd_decontam"      -> decontam,
-    "dd_contam_report" -> contamReport,
-    "dd_incremental"   -> incrementalDedup,
-    "dd_bloom"         -> bloomIncrementalDedup,
-    "dd_admission"     -> admission)
 }

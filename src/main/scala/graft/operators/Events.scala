@@ -1217,8 +1217,8 @@ object Events {
        |           CAST(COALESCE(r.r, 0) AS DOUBLE)/CAST(tot AS DOUBLE) AS p
        |         FROM ty LEFT JOIN r$i r ON ty.t = r.t, tot$i)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "evt_seasonal_baseline" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("evt_seasonal_baseline", seasonalBaseline,
       s"""WITH hc AS (SELECT event_type,
          |              CAST(FLOOR(epoch(ts)) AS BIGINT) // 3600 AS h,
          |              COUNT(*) AS n
@@ -1242,8 +1242,8 @@ object Events {
          |         / CAST(COUNT(*) AS DOUBLE) AS mae,
          |       CAST(SUM(actual - predicted) AS DOUBLE)
          |         / CAST(COUNT(*) AS DOUBLE) AS bias
-         |FROM s GROUP BY 1 ORDER BY event_type""".stripMargin,
-    "evt_power_curve" ->
+         |FROM s GROUP BY 1 ORDER BY event_type""".stripMargin),
+    QueryDef("evt_power_curve", powerCurve,
       """WITH x AS (SELECT user_id, COUNT(*) AS x FROM events GROUP BY 1),
         |t AS (SELECT COUNT(*) AS n, CAST(SUM(x) AS BIGINT) AS te FROM x),
         |r AS (SELECT x.x,
@@ -1260,8 +1260,8 @@ object Events {
         |         / CAST(t.te AS DOUBLE) AS cum_event_share
         |FROM d JOIN d d2 ON d2.decile <= d.decile CROSS JOIN t
         |GROUP BY d.decile, d.n_users, d.decile_events, t.te
-        |ORDER BY d.decile""".stripMargin,
-    "evt_type_cooccurrence" ->
+        |ORDER BY d.decile""".stripMargin),
+    QueryDef("evt_type_cooccurrence", typeCooccurrence,
       """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d, event_type
         |            FROM events),
         |t AS (SELECT COUNT(*) AS n_ud
@@ -1278,8 +1278,8 @@ object Events {
         |         / (CAST(pa.n_t AS DOUBLE) * CAST(pb.n_t AS DOUBLE)) AS lift
         |FROM p JOIN per pa ON pa.event_type = p.type_a
         |       JOIN per pb ON pb.event_type = p.type_b CROSS JOIN t
-        |ORDER BY type_a, type_b""".stripMargin,
-    "evt_ab_assign" ->
+        |ORDER BY type_a, type_b""".stripMargin),
+    QueryDef("evt_ab_assign", abAssign,
       s"""WITH u AS (SELECT user_id,
          |                  MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS clicked,
          |                  MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS purchased
@@ -1290,8 +1290,8 @@ object Events {
          |       CAST(SUM(purchased) AS BIGINT) AS n_purchasers,
          |       CAST(SUM(clicked) AS BIGINT)*1.0/COUNT(*) AS click_rate,
          |       CAST(SUM(purchased) AS BIGINT)*1.0/COUNT(*) AS purchase_rate
-         |FROM u GROUP BY 1 ORDER BY variant""".stripMargin,
-    "evt_cart_abandonment" ->
+         |FROM u GROUP BY 1 ORDER BY variant""".stripMargin),
+    QueryDef("evt_cart_abandonment", cartAbandonment,
       """WITH ud AS (SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS eday,
         |                   user_id,
         |                   MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS clicked,
@@ -1303,8 +1303,8 @@ object Events {
         |         AS n_abandoned,
         |       CAST(SUM(CASE WHEN purchased = 0 THEN 1 ELSE 0 END) AS DOUBLE)
         |         / CAST(COUNT(*) AS DOUBLE) AS abandonment_rate
-        |FROM ud WHERE clicked = 1 GROUP BY eday ORDER BY day""".stripMargin,
-    "evt_signup_conversion" ->
+        |FROM ud WHERE clicked = 1 GROUP BY eday ORDER BY day""".stripMargin),
+    QueryDef("evt_signup_conversion", signupConversion,
       s"""WITH e AS (SELECT user_id, event_type,
          |                  CAST(FLOOR(epoch(ts)) AS BIGINT) AS es FROM events),
          |su AS (SELECT user_id, MIN(es) AS signup_es FROM e
@@ -1322,8 +1322,8 @@ object Events {
          |                      AND first_purchase_es - signup_es <= $ConvertWindowSec
          |                     THEN 1 ELSE 0 END) AS DOUBLE)
          |         / CAST(COUNT(*) AS DOUBLE) AS conversion_rate
-         |FROM fp GROUP BY signup_es // 86400 ORDER BY day""".stripMargin,
-    "evt_gini" ->
+         |FROM fp GROUP BY signup_es // 86400 ORDER BY day""".stripMargin),
+    QueryDef("evt_gini", activityGini,
       """WITH x AS (SELECT user_id, COUNT(*) AS x FROM events GROUP BY 1),
         |r AS (SELECT x, ROW_NUMBER() OVER (ORDER BY x, user_id) AS i FROM x),
         |a AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
@@ -1333,8 +1333,8 @@ object Events {
         |SELECT CAST(n AS BIGINT) AS n_users, CAST(s1 AS BIGINT) AS total_events,
         |       (2.0*CAST(s2 AS DOUBLE) - (CAST(n AS DOUBLE) + 1.0)*CAST(s1 AS DOUBLE))
         |         / (CAST(n AS DOUBLE)*CAST(s1 AS DOUBLE)) AS gini
-        |FROM a""".stripMargin,
-    "evt_streaks" ->
+        |FROM a""".stripMargin),
+    QueryDef("evt_streaks", streaks,
       """WITH ud AS (SELECT DISTINCT user_id,
         |              date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS eday
         |            FROM events),
@@ -1345,8 +1345,8 @@ object Events {
         |SELECT user_id, CAST(SUM(len) AS BIGINT) AS n_active_days,
         |       CAST(MAX(len) AS BIGINT) AS longest_streak,
         |       COUNT(*) AS n_streaks
-        |FROM s GROUP BY 1 ORDER BY 1""".stripMargin,
-    "evt_user_features" ->
+        |FROM s GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("evt_user_features", userFeatures,
       """WITH e AS (SELECT user_id, event_type, value,
         |                  CAST(FLOOR(epoch(ts)) AS BIGINT) AS es FROM events)
         |SELECT user_id,
@@ -1363,8 +1363,8 @@ object Events {
         |       MIN(es) AS first_es,
         |       MAX(es) AS last_es,
         |       COUNT(DISTINCT es // 86400) AS active_days
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-    "evt_bot_rate" ->
+        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("evt_bot_rate", botRate,
       s"""WITH e AS (SELECT user_id,
          |                  CAST(FLOOR(epoch(ts)) AS BIGINT) // 3600 AS hr
          |           FROM events),
@@ -1372,8 +1372,8 @@ object Events {
          |SELECT user_id, CAST(SUM(n) AS BIGINT) AS n_events,
          |       CAST(MAX(n) AS BIGINT) AS max_per_hour,
          |       MAX(n) >= $BotMaxPerHour AS burst_flag
-         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-    "evt_active_users" ->
+         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("evt_active_users", activeUsers,
       s"""WITH ud AS (SELECT DISTINCT
          |              date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS eday,
          |              user_id FROM events),
@@ -1388,8 +1388,8 @@ object Events {
          |       ${Gold.fixedRoundSql(
              "CAST(d.dau AS DOUBLE)/CAST(w.wau AS DOUBLE)", 4)} AS stickiness
          |FROM dau d JOIN wau w USING (eday)
-         |ORDER BY day""".stripMargin,
-    "evt_funnel" ->
+         |ORDER BY day""".stripMargin),
+    QueryDef("evt_funnel", funnel,
       """WITH e AS (SELECT user_id, event_type,
         |                  CAST(FLOOR(epoch(ts)) AS BIGINT) AS es FROM events),
         |v AS (SELECT user_id, MIN(es) AS view_es FROM e
@@ -1400,8 +1400,8 @@ object Events {
         |      WHERE event_type = 'purchase' AND es > click_es GROUP BY 1)
         |SELECT user_id, view_es, click_es, purchase_es
         |FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)
-        |ORDER BY user_id""".stripMargin,
-    "evt_retention" ->
+        |ORDER BY user_id""".stripMargin),
+    QueryDef("evt_retention", retention,
       s"""WITH e AS (SELECT user_id,
          |                  CAST(FLOOR(epoch(ts)) AS BIGINT) // $WeekSec AS wk
          |           FROM events),
@@ -1409,21 +1409,21 @@ object Events {
          |a AS (SELECT DISTINCT user_id, cohort_wk, wk - cohort_wk AS week_offset
          |      FROM e JOIN c USING (user_id))
          |SELECT cohort_wk, week_offset, COUNT(*) AS n_users
-         |FROM a GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "evt_quantiles" ->
+         |FROM a GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("evt_quantiles", valueQuantiles,
       s"""SELECT event_type, COUNT(*) AS n_events,
          |       ${Gold.fixedRoundSql("quantile_cont(value, 0.5)", 4)} AS p50,
          |       ${Gold.fixedRoundSql("quantile_cont(value, 0.9)", 4)} AS p90,
          |       ${Gold.fixedRoundSql("quantile_cont(value, 0.99)", 4)} AS p99
-         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "evt_activity_curve" ->
+         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("evt_activity_curve", activityCurve,
       """WITH c AS (SELECT user_id, COUNT(*) AS k FROM events GROUP BY 1),
         |h AS (SELECT k, COUNT(*) AS n_users_exact FROM c GROUP BY 1)
         |SELECT a.k, a.n_users_exact,
         |       CAST(SUM(b.n_users_exact) AS BIGINT) AS n_users_at_least
         |FROM h a LEFT JOIN h b ON b.k >= a.k
-        |GROUP BY 1, 2 ORDER BY a.k""".stripMargin,
-    "evt_gap_histogram" ->
+        |GROUP BY 1, 2 ORDER BY a.k""".stripMargin),
+    QueryDef("evt_gap_histogram", gapHistogram,
       s"""WITH e AS (SELECT user_id, event_type, event_id,
          |             CAST(FLOOR(epoch(ts)) AS BIGINT) AS es
          |           FROM events),
@@ -1435,8 +1435,8 @@ object Events {
          |      FROM l WHERE prev IS NOT NULL)
          |SELECT event_type, bucket, bucket*$GapHistBucketSec AS gap_lo_sec,
          |       COUNT(*) AS n_gaps
-         |FROM b GROUP BY 1, 2 ORDER BY event_type, bucket""".stripMargin,
-    "evt_behavior_diversity" ->
+         |FROM b GROUP BY 1, 2 ORDER BY event_type, bucket""".stripMargin),
+    QueryDef("evt_behavior_diversity", behaviorDiversity,
       """WITH tc AS (SELECT user_id, event_type, COUNT(*) AS c
         |            FROM events GROUP BY 1, 2),
         |g AS (SELECT user_id, CAST(SUM(c) AS BIGINT) AS n_events,
@@ -1448,8 +1448,8 @@ object Events {
         |            THEN CAST(rep AS DOUBLE)
         |                   / CAST(n_events*(n_events-1) AS DOUBLE)
         |            ELSE 0.0 END AS simpson
-        |FROM g ORDER BY user_id""".stripMargin,
-    "evt_conversion_lag" ->
+        |FROM g ORDER BY user_id""".stripMargin),
+    QueryDef("evt_conversion_lag", conversionLag,
       s"""WITH e AS (SELECT user_id, event_id, event_type,
          |             CAST(FLOOR(epoch(ts)) AS BIGINT) AS es
          |           FROM events WHERE event_type IN ('view', 'purchase')),
@@ -1464,8 +1464,8 @@ object Events {
          |SELECT bucket, bucket*$ConvLagBucketSec AS lag_lo_sec,
          |       COUNT(*) AS n_conversions,
          |       COUNT(DISTINCT user_id) AS n_users
-         |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
-    "evt_reactivation" ->
+         |FROM b GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("evt_reactivation", reactivation,
       s"""WITH ud AS (SELECT DISTINCT user_id,
          |              date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS eday
          |            FROM events),
@@ -1481,8 +1481,8 @@ object Events {
          |       n_active_users, n_reactivated,
          |       CAST(n_reactivated AS DOUBLE)/CAST(n_active_users AS DOUBLE)
          |         AS reactivation_rate
-         |FROM g ORDER BY day""".stripMargin,
-    "evt_trending" ->
+         |FROM g ORDER BY day""".stripMargin),
+    QueryDef("evt_trending", trendingItems,
       s"""WITH e AS (SELECT CAST(ts AS DATE) AS day,
          |             CAST(json_extract(props, '$$.k') AS BIGINT) AS item
          |           FROM events WHERE event_type IN ('view', 'click')),
@@ -1492,26 +1492,26 @@ object Events {
          |               AS rn
          |      FROM c)
          |SELECT day, CAST(rn AS INT) AS rn, item, CAST(n AS BIGINT) AS n_events
-         |FROM r WHERE rn <= $TrendK ORDER BY day, rn""".stripMargin,
-    "evt_json_extract" ->
+         |FROM r WHERE rn <= $TrendK ORDER BY day, rn""".stripMargin),
+    QueryDef("evt_json_extract", jsonExtract,
       """SELECT event_id, event_type,
         |       CAST(json_extract(props, '$.k') AS BIGINT) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-    "evt_heavy_users" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    QueryDef("evt_heavy_users", heavyUsers,
       s"""WITH c AS (SELECT user_id, COUNT(*) AS n_events FROM events GROUP BY 1),
          |t AS (SELECT COUNT(*) AS n FROM events)
          |SELECT user_id, n_events FROM c, t
          |WHERE n_events * ${MgK + 1} > n
-         |ORDER BY user_id""".stripMargin,
-    "evt_user_paths" ->
+         |ORDER BY user_id""".stripMargin),
+    QueryDef("evt_user_paths", userPaths,
       s"""WITH e AS (SELECT user_id, event_id, event_type,
          |                  CAST(FLOOR(epoch(ts)) AS BIGINT) AS es FROM events)
          |SELECT user_id, COUNT(*) AS n_events,
          |       array_to_string(
          |         (list(event_type ORDER BY es, event_id))[1:$MaxPathLen],
          |         '>') AS path
-         |FROM e GROUP BY 1 ORDER BY user_id""".stripMargin,
-    "evt_winsorize" ->
+         |FROM e GROUP BY 1 ORDER BY user_id""".stripMargin),
+    QueryDef("evt_winsorize", winsorize,
       s"""WITH b AS (
          |  SELECT event_type,
          |         ${Gold.fixedRoundSql("quantile_cont(value, 0.01)", 4)} AS lo,
@@ -1521,8 +1521,8 @@ object Events {
          |       LEAST(GREATEST(value, lo), hi) AS clamped,
          |       (value < lo OR value > hi) AS was_capped
          |FROM events e JOIN b USING (event_type)
-         |ORDER BY event_id""".stripMargin,
-    "evt_robust_anomaly" ->
+         |ORDER BY event_id""".stripMargin),
+    QueryDef("evt_robust_anomaly", robustAnomalies,
       s"""WITH m AS (
          |  SELECT event_type,
          |         ${Gold.fixedRoundSql("quantile_cont(value, 0.5)", 4)} AS med
@@ -1534,8 +1534,8 @@ object Events {
          |SELECT event_id, e.event_type, value, med, mad
          |FROM events e JOIN d USING (event_type)
          |WHERE ABS(value - med) > CAST($RobustK AS DOUBLE) * mad
-         |ORDER BY event_id""".stripMargin,
-    "evt_attribution" ->
+         |ORDER BY event_id""".stripMargin),
+    QueryDef("evt_attribution", attribution,
       s"""WITH e AS (SELECT user_id, event_id, event_type, value,
          |                  CAST(FLOOR(epoch(ts)) AS BIGINT) AS es FROM events),
          |t AS (SELECT *,
@@ -1552,8 +1552,8 @@ object Events {
          |      FROM t WHERE event_type = 'purchase')
          |SELECT channel, COUNT(*) AS n_purchases,
          |       ${Gold.moneySumSql("value")} AS attributed_revenue
-         |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-    "evt_attribution_linear" ->
+         |FROM p GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("evt_attribution_linear", attributionLinear,
       s"""WITH e AS (SELECT user_id, event_id, event_type, value,
          |                  CAST(FLOOR(epoch(ts)) AS BIGINT) AS es FROM events),
          |p AS (SELECT user_id, event_id AS p_id, es AS p_es, value
@@ -1576,8 +1576,8 @@ object Events {
          |  WHERE p_id NOT IN (SELECT p_id FROM cand))
          |SELECT channel, COUNT(DISTINCT p_id) AS n_purchases,
          |       ${Gold.moneySumSql("credit")} AS credited_revenue
-         |FROM credits GROUP BY 1 ORDER BY 1""".stripMargin,
-    "evt_markov_stationary" ->
+         |FROM credits GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("evt_markov_stationary", markovStationary,
       s"""WITH e AS (SELECT user_id, event_id, event_type,
          |                  CAST(FLOOR(epoch(ts)) AS BIGINT) AS es FROM events),
          |l AS (SELECT user_id, event_type AS to_type,
@@ -1597,8 +1597,8 @@ object Events {
          |${(1 to MarkovIters).map(i => mkRound(s"mk${i - 1}", i))
              .mkString(",\n")}
          |SELECT t AS event_type, p AS stationary_prob
-         |FROM mk$MarkovIters ORDER BY event_type""".stripMargin,
-    "evt_trigrams" ->
+         |FROM mk$MarkovIters ORDER BY event_type""".stripMargin),
+    QueryDef("evt_trigrams", trigrams,
       s"""WITH e AS (SELECT user_id, event_id, event_type,
          |                  CAST(FLOOR(epoch(ts)) AS BIGINT) AS es FROM events),
          |l AS (SELECT user_id, event_type AS t3,
@@ -1613,8 +1613,8 @@ object Events {
          |      FROM c GROUP BY 1, 2)
          |SELECT c.t1, c.t2, c.t3, n, CAST(n AS DOUBLE)/prefix_n AS prob
          |FROM c JOIN p USING (t1, t2)
-         |ORDER BY t1, t2, t3""".stripMargin,
-    "evt_transitions" ->
+         |ORDER BY t1, t2, t3""".stripMargin),
+    QueryDef("evt_transitions", transitions,
       s"""WITH e AS (SELECT user_id, event_id, event_type,
          |                  CAST(FLOOR(epoch(ts)) AS BIGINT) AS es FROM events),
          |l AS (SELECT user_id, event_type AS to_type,
@@ -1627,8 +1627,8 @@ object Events {
          |      FROM c GROUP BY 1)
          |SELECT c.from_type, c.to_type, n, CAST(n AS DOUBLE)/row_n AS prob
          |FROM c JOIN t USING (from_type)
-         |ORDER BY from_type, to_type""".stripMargin,
-    "evt_hourly_profile" ->
+         |ORDER BY from_type, to_type""".stripMargin),
+    QueryDef("evt_hourly_profile", hourlyProfile,
       s"""WITH c AS (
          |  SELECT CAST(hour(ts) AS INT) AS hour_of_day, event_type,
          |         COUNT(*) AS n_events,
@@ -1639,14 +1639,14 @@ object Events {
          |SELECT hour_of_day, event_type, n_events, value_sum,
          |       CAST(n_events AS DOUBLE)/CAST(type_total AS DOUBLE) AS share_of_type
          |FROM c JOIN t USING (event_type)
-         |ORDER BY hour_of_day, event_type""".stripMargin,
-    "evt_value_histogram" ->
+         |ORDER BY hour_of_day, event_type""".stripMargin),
+    QueryDef("evt_value_histogram", valueHistogram,
       s"""SELECT event_type,
          |       (CAST(FLOOR(value) AS BIGINT) // $HistBucketWidth)
          |         * $HistBucketWidth AS bucket_lo,
          |       COUNT(*) AS n_events
-         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "evt_anomaly" ->
+         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("evt_anomaly", valueAnomalies,
       s"""WITH s AS (
          |  SELECT event_type, COUNT(*) AS n,
          |         ${Gold.moneySumSql("value")} AS sx,
@@ -1660,13 +1660,13 @@ object Events {
          |       ${Gold.fixedRoundSql("(value - mean)/std", 4)} AS z
          |FROM events e JOIN m USING (event_type)
          |WHERE abs(value - mean) > $AnomalyZ*std
-         |ORDER BY event_id""".stripMargin,
-    "str_windowed_agg" ->
+         |ORDER BY event_id""".stripMargin),
+    QueryDef("str_windowed_agg", windowedAgg,
       s"""SELECT time_bucket(INTERVAL '5 minutes', ts) AS window_start,
          |       event_type, COUNT(*) AS n_events,
          |       ${Gold.moneySumSql("value")} AS sum_value
-         |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "str_sliding_agg" ->
+         |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin),
+    QueryDef("str_sliding_agg", slidingAgg,
       s"""WITH e AS (SELECT CAST(FLOOR(epoch(ts)) AS BIGINT) AS es,
          |                  event_type, value FROM events),
          |x AS (SELECT es, event_type, value,
@@ -1677,8 +1677,8 @@ object Events {
          |             event_type, value FROM x)
          |SELECT window_start, event_type, COUNT(*) AS n_events,
          |       ${Gold.moneySumSql("value")} AS sum_value
-         |FROM w GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "evt_daily_new_users" ->
+         |FROM w GROUP BY 1,2 ORDER BY 1,2""".stripMargin),
+    QueryDef("evt_daily_new_users", dailyNewUsers,
       """WITH ud AS (SELECT DISTINCT user_id,
         |              date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS eday
         |            FROM events),
@@ -1689,8 +1689,8 @@ object Events {
         |      FROM ud JOIN f USING (user_id) GROUP BY 1)
         |SELECT DATE '1970-01-01' + CAST(eday AS INT) AS day,
         |       n_active, n_new, n_active - n_new AS n_returning
-        |FROM g ORDER BY day""".stripMargin,
-    "evt_session_histogram" ->
+        |FROM g ORDER BY day""".stripMargin),
+    QueryDef("evt_session_histogram", sessionHistogram,
       s"""WITH e AS (SELECT user_id, event_id,
          |                  CAST(FLOOR(epoch(ts)) AS BIGINT) AS es FROM events),
          |l AS (SELECT *, LAG(es) OVER (PARTITION BY user_id ORDER BY es, event_id) AS prev
@@ -1711,8 +1711,8 @@ object Events {
          |              COUNT(*) AS n_sessions
          |       FROM sess GROUP BY 2, 3)
          |SELECT * FROM (SELECT * FROM be UNION ALL SELECT * FROM bd)
-         |ORDER BY metric, bucket""".stripMargin,
-    "str_sessionize" ->
+         |ORDER BY metric, bucket""".stripMargin),
+    QueryDef("str_sessionize", sessionize,
       s"""WITH e AS (SELECT user_id, event_id,
          |                  CAST(FLOOR(epoch(ts)) AS BIGINT) AS es FROM events),
          |l AS (SELECT *, LAG(es) OVER (PARTITION BY user_id ORDER BY es, event_id) AS prev
@@ -1724,45 +1724,5 @@ object Events {
          |SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
          |       COUNT(*) AS n_events, MIN(es) AS session_start_es,
          |       MAX(es) - MIN(es) AS duration_sec
-         |FROM s GROUP BY 1,2 ORDER BY 1,2""".stripMargin)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "str_windowed_agg" -> windowedAgg,
-    "str_sliding_agg"  -> slidingAgg,
-    "str_sessionize"   -> sessionize,
-    "evt_json_extract" -> jsonExtract,
-    "evt_trending"     -> trendingItems,
-    "evt_reactivation" -> reactivation,
-    "evt_conversion_lag" -> conversionLag,
-    "evt_behavior_diversity" -> behaviorDiversity,
-    "evt_gap_histogram" -> gapHistogram,
-    "evt_activity_curve" -> activityCurve,
-    "evt_session_histogram" -> sessionHistogram,
-    "evt_daily_new_users" -> dailyNewUsers,
-    "evt_quantiles"    -> valueQuantiles,
-    "evt_funnel"          -> funnel,
-    "evt_retention"       -> retention,
-    "evt_value_histogram" -> valueHistogram,
-    "evt_hourly_profile"  -> hourlyProfile,
-    "evt_anomaly"         -> valueAnomalies,
-    "evt_heavy_users"     -> heavyUsers,
-    "evt_transitions"     -> transitions,
-    "evt_trigrams"        -> trigrams,
-    "evt_markov_stationary" -> markovStationary,
-    "evt_attribution"     -> attribution,
-    "evt_attribution_linear" -> attributionLinear,
-    "evt_winsorize"       -> winsorize,
-    "evt_robust_anomaly"  -> robustAnomalies,
-    "evt_user_paths"      -> userPaths,
-    "evt_active_users"    -> activeUsers,
-    "evt_user_features"   -> userFeatures,
-    "evt_bot_rate"        -> botRate,
-    "evt_streaks"         -> streaks,
-    "evt_gini"            -> activityGini,
-    "evt_cart_abandonment" -> cartAbandonment,
-    "evt_signup_conversion" -> signupConversion,
-    "evt_power_curve"     -> powerCurve,
-    "evt_type_cooccurrence" -> typeCooccurrence,
-    "evt_seasonal_baseline" -> seasonalBaseline,
-    "evt_ab_assign"       -> abAssign)
+         |FROM s GROUP BY 1,2 ORDER BY 1,2""".stripMargin))
 }

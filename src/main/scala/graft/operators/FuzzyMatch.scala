@@ -251,13 +251,8 @@ object FuzzyMatch {
       s"list_prepend($s, ${del1Sql(s)}), " +
       s"x -> list_prepend(x, ${del1Sql("x")}))))"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "xf_fuzzy_match"  -> fuzzyMatch,
-    "xf_fuzzy_match2" -> fuzzyMatchD2,
-    "xf_golden_record" -> goldenRecord)
-
-  val oracles: Map[String, String] = Map(
-    "xf_golden_record" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("xf_golden_record", goldenRecord,
       s"""WITH dirty AS (
          |  SELECT c_custkey AS d_key,
          |         substr(c_name, 1, CAST(1 + ${posHashSql("c_custkey")}
@@ -285,8 +280,8 @@ object FuzzyMatch {
          |FROM customer c
          |LEFT JOIN (SELECT * FROM b WHERE rn = 1) b ON c.c_custkey = b.d_key
          |LEFT JOIN nc ON c.c_custkey = nc.d_key
-         |ORDER BY d_key""".stripMargin,
-    "xf_fuzzy_match" ->
+         |ORDER BY d_key""".stripMargin),
+    QueryDef("xf_fuzzy_match", fuzzyMatch,
       s"""WITH dirty AS (
          |  SELECT c_custkey AS d_key,
          |         substr(c_name, 1, CAST(1 + ${posHashSql("c_custkey")}
@@ -303,8 +298,8 @@ object FuzzyMatch {
          |         FROM dv JOIN cv USING (v))
          |SELECT d_key, d_name, clean_key, levenshtein(d_name, c_name) AS dist
          |FROM cand WHERE levenshtein(d_name, c_name) <= 1
-         |ORDER BY d_key, clean_key""".stripMargin,
-    "xf_fuzzy_match2" ->
+         |ORDER BY d_key, clean_key""".stripMargin),
+    QueryDef("xf_fuzzy_match2", fuzzyMatchD2,
       s"""WITH d0 AS (SELECT c_custkey AS d_key, c_name AS d_name FROM customer),
          |d1 AS (
          |  SELECT d_key,
@@ -329,5 +324,5 @@ object FuzzyMatch {
          |         FROM dv JOIN cv USING (v))
          |SELECT d_key, d_name, clean_key, levenshtein(d_name, c_name) AS dist
          |FROM cand WHERE levenshtein(d_name, c_name) <= 2
-         |ORDER BY d_key, clean_key""".stripMargin)
+         |ORDER BY d_key, clean_key""".stripMargin))
 }

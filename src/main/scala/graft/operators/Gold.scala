@@ -1202,8 +1202,8 @@ object Gold {
 
   // ---- DuckDB oracles (same math; fixed-point sums are exact in both) ----
 
-  val oracles: Map[String, String] = Map(
-    "gold_price_index" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("gold_price_index", priceIndex,
       s"""WITH ${Tables.salesCte},
          |pm AS (SELECT product_id,
          |              YEAR(sale_ts)*12 + MONTH(sale_ts) - 1 AS ym,
@@ -1221,8 +1221,8 @@ object Gold {
          |         AS month,
          |       n_products, basket_cost, base_cost,
          |       basket_cost / base_cost AS price_index
-         |FROM g ORDER BY month""".stripMargin,
-    "gold_segment_sales" ->
+         |FROM g ORDER BY month""".stripMargin),
+    QueryDef("gold_segment_sales", segmentSales,
       s"""WITH ${Tables.salesCte},
          |${Tables.customersCte},
          |g AS (SELECT c.city, YEAR(sale_ts)*12 + MONTH(sale_ts) - 1 AS ym,
@@ -1236,8 +1236,8 @@ object Gold {
          |         AS month,
          |       n_orders, n_customers, revenue,
          |       revenue / CAST(n_orders AS DOUBLE) AS rev_per_order
-         |FROM g ORDER BY segment, month""".stripMargin,
-    "gold_nation_trade" ->
+         |FROM g ORDER BY segment, month""".stripMargin),
+    QueryDef("gold_nation_trade", nationTrade,
       s"""WITH ${Tables.salesCte},
          |${Tables.customersCte},
          |${Tables.storesCte}
@@ -1249,8 +1249,8 @@ object Gold {
          |JOIN customers c USING (customer_id)
          |JOIN stores st USING (store_id)
          |GROUP BY 1, 2
-         |ORDER BY cust_country, store_country""".stripMargin,
-    "gold_revenue_autocorr" ->
+         |ORDER BY cust_country, store_country""".stripMargin),
+    QueryDef("gold_revenue_autocorr", revenueAutocorr,
       s"""WITH ${Tables.salesCte},
          |m AS (SELECT YEAR(sale_ts)*12 + MONTH(sale_ts) - 1 AS ym,
          |        CAST(SUM(CAST(FLOOR((unit_price*quantity)*10000)
@@ -1275,8 +1275,8 @@ object Gold {
          |                * (n * CAST(syy AS DOUBLE)
          |                  - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
          |         AS autocorr
-         |FROM s""".stripMargin,
-    "gold_assortment_overlap" ->
+         |FROM s""".stripMargin),
+    QueryDef("gold_assortment_overlap", assortmentOverlap,
       s"""WITH ${Tables.salesCte},
          |sp AS (SELECT DISTINCT store_id, product_id FROM sales),
          |per AS (SELECT store_id, COUNT(*) AS n FROM sp GROUP BY 1),
@@ -1295,8 +1295,8 @@ object Gold {
          |         AS containment_b
          |FROM p JOIN per pa ON pa.store_id = p.store_a
          |       JOIN per pb ON pb.store_id = p.store_b
-         |ORDER BY store_a, store_b""".stripMargin,
-    "gold_inventory_turnover" ->
+         |ORDER BY store_a, store_b""".stripMargin),
+    QueryDef("gold_inventory_turnover", inventoryTurnover,
       s"""WITH ${Tables.salesCte},
          |led AS (SELECT store_id, product_id,
          |          CAST(SUM(quantity) AS BIGINT) AS units,
@@ -1315,8 +1315,8 @@ object Gold {
          |       CAST(SUM(CASE WHEN l.n_mv < sp.span_months THEN 1 ELSE 0 END)
          |              AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS slow_mover_share
          |FROM led l JOIN sp USING (store_id)
-         |GROUP BY l.store_id, sp.span_months ORDER BY store_id""".stripMargin,
-    "gold_first_purchase_category" ->
+         |GROUP BY l.store_id, sp.span_months ORDER BY store_id""".stripMargin),
+    QueryDef("gold_first_purchase_category", firstPurchaseCategory,
       s"""WITH ${Tables.salesCte}, ${Tables.productsCte},
          |r AS (SELECT customer_id, sale_ts, product_id,
          |             ROW_NUMBER() OVER (PARTITION BY customer_id
@@ -1331,8 +1331,8 @@ object Gold {
          |SELECT make_date(CAST(ym // 12 AS INT), CAST(ym % 12 + 1 AS INT), 1)
          |         AS cohort_month,
          |       category, n_new_customers
-         |FROM g ORDER BY cohort_month, category""".stripMargin,
-    "gold_category_hhi" ->
+         |FROM g ORDER BY cohort_month, category""".stripMargin),
+    QueryDef("gold_category_hhi", categoryHhi,
       s"""WITH ${Tables.salesCte}, ${Tables.productsCte},
          |rev AS (
          |  SELECT p.category, p.sku,
@@ -1348,8 +1348,8 @@ object Gold {
          |SELECT category, n_brands,
          |       CAST(tot AS DOUBLE)/10000 AS category_revenue,
          |       CAST(sq AS DOUBLE)/(CAST(tot AS DOUBLE)*CAST(tot AS DOUBLE)) AS hhi
-         |FROM g ORDER BY category""".stripMargin,
-    "gold_aov_monthly" ->
+         |FROM g ORDER BY category""".stripMargin),
+    QueryDef("gold_aov_monthly", aovMonthly,
       s"""WITH ${Tables.salesCte},
          |m AS (SELECT year(sale_ts)*12 + month(sale_ts) - 1 AS ym,
          |             COUNT(DISTINCT transaction_id // 10) AS n_orders,
@@ -1364,8 +1364,8 @@ object Gold {
          |       x.n_orders, CAST(x.rev_i AS DOUBLE)/10000 AS revenue, x.aov,
          |       x.aov - p.aov AS mom_delta
          |FROM a x LEFT JOIN a p ON x.ym = p.ym + 1
-         |ORDER BY month""".stripMargin,
-    "gold_top_movers" ->
+         |ORDER BY month""".stripMargin),
+    QueryDef("gold_top_movers", topMovers,
       s"""WITH ${Tables.salesCte},
          |s AS (SELECT product_id,
          |             date_diff('day', DATE '1970-01-01', CAST(sale_ts AS DATE)) AS eday,
@@ -1385,8 +1385,8 @@ object Gold {
          |       CAST(h2_i AS DOUBLE)/10000 AS h2_revenue,
          |       CAST(h2_i AS DOUBLE)/CAST(h1_i AS DOUBLE) AS growth_ratio
          |FROM g WHERE h1_i > 0 AND h2_i > 0
-         |ORDER BY growth_ratio DESC, product_id LIMIT $MoversK""".stripMargin,
-    "gold_also_bought" ->
+         |ORDER BY growth_ratio DESC, product_id LIMIT $MoversK""".stripMargin),
+    QueryDef("gold_also_bought", alsoBought,
       s"""WITH ${Tables.salesCte}, ${Tables.productsCte},
          |b AS (SELECT DISTINCT transaction_id // 10 AS basket_id, sku
          |      FROM sales JOIN products USING (product_id)),
@@ -1409,8 +1409,8 @@ object Gold {
          |               ORDER BY lift DESC, partner) AS rn
          |      FROM sym)
          |SELECT sku, CAST(rn AS INT) AS rn, partner, n_ab, lift
-         |FROM r WHERE rn <= $AlsoBoughtK ORDER BY sku, rn""".stripMargin,
-    "gold_stockout" ->
+         |FROM r WHERE rn <= $AlsoBoughtK ORDER BY sku, rn""".stripMargin),
+    QueryDef("gold_stockout", stockoutRisk,
       s"""WITH ${Tables.salesCte},
          |led AS (
          |  SELECT store_id, product_id, COUNT(*) AS n_movements,
@@ -1429,8 +1429,8 @@ object Gold {
          |                 > date_diff('day', first_movement_date, last_movement_date) * 3
          |            ELSE date_diff('day', last_movement_date, gmax) > $StockoutColdDays
          |       END AS stockout_risk
-         |FROM led, g ORDER BY store_id, product_id""".stripMargin,
-    "gold_seasonality" ->
+         |FROM led, g ORDER BY store_id, product_id""".stripMargin),
+    QueryDef("gold_seasonality", seasonality,
       s"""WITH ${Tables.salesCte}, ${Tables.productsCte},
          |cm AS (
          |  SELECT p.category, CAST(month(sale_ts) AS INT) AS mth,
@@ -1443,8 +1443,8 @@ object Gold {
          |       CAST(rev_i AS DOUBLE)/10000 AS revenue,
          |       CAST(rev_i*12 AS DOUBLE)/CAST(cat_i AS DOUBLE) AS seasonality_index
          |FROM cm JOIN t USING (category)
-         |ORDER BY cm.category, mth""".stripMargin,
-    "gold_returns" ->
+         |ORDER BY cm.category, mth""".stripMargin),
+    QueryDef("gold_returns", returnsByCategory,
       s"""WITH ${Tables.productsCte},
          |li AS (SELECT l_partkey AS product_id, l_returnflag,
          |              CAST(FLOOR(l_quantity) AS BIGINT) AS qty, l_extendedprice
@@ -1460,8 +1460,8 @@ object Gold {
          |       CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS DOUBLE)
          |         / CAST(COUNT(*) AS DOUBLE) AS return_rate
          |FROM li JOIN products p USING (product_id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "gold_discount_impact" ->
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("gold_discount_impact", discountImpact,
       s"""WITH ${Tables.productsCte},
          |li AS (SELECT l_partkey AS product_id, l_extendedprice, l_discount, l_tax
          |       FROM lineitem),
@@ -1473,8 +1473,8 @@ object Gold {
          |      FROM li JOIN products p USING (product_id) GROUP BY 1)
          |SELECT category, n_lines, gross_revenue, discount_amount, net_revenue,
          |       tax_amount, discount_amount/gross_revenue AS effective_discount_rate
-         |FROM g ORDER BY category""".stripMargin,
-    "gold_order_value_histogram" ->
+         |FROM g ORDER BY category""".stripMargin),
+    QueryDef("gold_order_value_histogram", orderValueHistogram,
       s"""WITH b AS (SELECT o_totalprice,
          |             CAST(FLOOR(o_totalprice/$OrderValueBucket.0) AS BIGINT) AS bucket
          |           FROM orders)
@@ -1482,8 +1482,8 @@ object Gold {
          |       COUNT(*) AS n_orders,
          |       MIN(o_totalprice) AS min_total, MAX(o_totalprice) AS max_total,
          |       ${moneySumSql("o_totalprice")} AS bucket_revenue
-         |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "gold_snaive_backtest" ->
+         |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin),
+    QueryDef("gold_snaive_backtest", snaiveBacktest,
       s"""WITH ${Tables.salesCte},
          |${Tables.productsCte},
          |rev AS (SELECT p.category,
@@ -1501,8 +1501,8 @@ object Gold {
          |       CAST(SUM(CAST(ABS(rev_i - pred_i) AS DECIMAL(38,0)))
          |         AS DOUBLE)
          |         / CAST(SUM(CAST(rev_i AS DECIMAL(38,0))) AS DOUBLE) AS wape
-         |FROM j GROUP BY 1 ORDER BY category""".stripMargin,
-    "gold_xyz_class" ->
+         |FROM j GROUP BY 1 ORDER BY category""".stripMargin),
+    QueryDef("gold_xyz_class", xyzClass,
       s"""WITH ${Tables.salesCte},
          |pm AS (SELECT product_id, year(sale_ts)*12 + month(sale_ts) - 1 AS ym,
          |              CAST(SUM(quantity) AS BIGINT) AS q
@@ -1519,8 +1519,8 @@ object Gold {
          |            WHEN sqrt(CAST(n_months*s2 - s1*s1 AS DOUBLE))
          |                   / CAST(s1 AS DOUBLE) < 1.0 THEN 'Y'
          |            ELSE 'Z' END AS xyz_class
-         |FROM p ORDER BY product_id""".stripMargin,
-    "gold_market_share" ->
+         |FROM p ORDER BY product_id""".stripMargin),
+    QueryDef("gold_market_share", marketShare,
       s"""WITH ${Tables.salesCte}, ${Tables.productsCte},
          |rev AS (
          |  SELECT p.category, p.sku, COUNT(*) AS n_sales,
@@ -1534,8 +1534,8 @@ object Gold {
          |       CAST(cat_i AS DOUBLE)/10000 AS category_revenue,
          |       CAST(rev_i AS DOUBLE)/CAST(cat_i AS DOUBLE) AS share
          |FROM rev JOIN ct USING (category)
-         |ORDER BY rev.category, rev.sku""".stripMargin,
-    "gold_new_vs_returning" ->
+         |ORDER BY rev.category, rev.sku""".stripMargin),
+    QueryDef("gold_new_vs_returning", newVsReturning,
       s"""WITH ${Tables.salesCte},
          |cm AS (
          |  SELECT customer_id,
@@ -1553,8 +1553,8 @@ object Gold {
          |       CAST(SUM(CASE WHEN ym = first_ym THEN 0 ELSE rev_i END) AS DOUBLE)/10000
          |         AS returning_revenue
          |FROM cm JOIN f USING (customer_id)
-         |GROUP BY ym ORDER BY month""".stripMargin,
-    "gold_repeat_rate" ->
+         |GROUP BY ym ORDER BY month""".stripMargin),
+    QueryDef("gold_repeat_rate", repeatRate,
       """WITH o AS (SELECT o_custkey AS customer_id,
         |             CAST(year(o_orderdate)*12 + month(o_orderdate) - 1 AS BIGINT) AS ym
         |           FROM orders),
@@ -1564,8 +1564,8 @@ object Gold {
         |       CAST(SUM(CASE WHEN n >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_repeat,
         |       CAST(SUM(CASE WHEN n >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
         |         / CAST(COUNT(*) AS DOUBLE) AS repeat_rate
-        |FROM c GROUP BY ym ORDER BY month""".stripMargin,
-    "gold_abc_class" ->
+        |FROM c GROUP BY ym ORDER BY month""".stripMargin),
+    QueryDef("gold_abc_class", abcClass,
       s"""WITH ${Tables.salesCte},
          |r AS (SELECT product_id,
          |        CAST(SUM(CAST(FLOOR((unit_price*quantity)*10000) AS DECIMAL(28,0)))
@@ -1580,8 +1580,8 @@ object Gold {
          |       CAST(cum AS DOUBLE)/10000 AS cum_revenue,
          |       CASE WHEN cum*5 <= total*4 THEN 'A'
          |            WHEN cum*20 <= total*19 THEN 'B' ELSE 'C' END AS abc_class
-         |FROM c ORDER BY product_id""".stripMargin,
-    "gold_order_gap" ->
+         |FROM c ORDER BY product_id""".stripMargin),
+    QueryDef("gold_order_gap", orderGaps,
       s"""WITH ${Tables.salesCte},
          |cd AS (SELECT DISTINCT customer_id, CAST(sale_ts AS DATE) AS sale_date
          |       FROM sales),
@@ -1594,8 +1594,8 @@ object Gold {
          |SELECT CAST(gap_days AS BIGINT) AS gap_days, COUNT(*) AS n_gaps,
          |       COUNT(DISTINCT customer_id) AS n_customers
          |FROM l WHERE gap_days IS NOT NULL
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "gold_price_slope" ->
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("gold_price_slope", priceSlope,
       s"""WITH ${Tables.salesCte}, ${Tables.productsCte},
          |s AS (SELECT category,
          |             CAST(FLOOR(unit_price*10000) AS HUGEINT) AS x,
@@ -1612,8 +1612,8 @@ object Gold {
          |       CASE WHEN n*sxx - sx*sx = 0 THEN NULL
          |            ELSE (n*sxy - sx*sy)/(n*sxx - sx*sx)*10000
          |       END AS slope
-         |FROM a ORDER BY category""".stripMargin,
-    "gold_basket_affinity" ->
+         |FROM a ORDER BY category""".stripMargin),
+    QueryDef("gold_basket_affinity", basketAffinity,
       s"""WITH ${Tables.salesCte}, ${Tables.productsCte},
          |b AS (SELECT DISTINCT transaction_id // 10 AS basket_id, sku
          |      FROM sales JOIN products USING (product_id)),
@@ -1628,8 +1628,8 @@ object Gold {
          |         /(CAST(pa.n_sku AS DOUBLE)*CAST(pb.n_sku AS DOUBLE)) AS lift
          |FROM pr JOIN per pa ON sku_a = pa.sku JOIN per pb ON sku_b = pb.sku
          |CROSS JOIN nb
-         |ORDER BY sku_a, sku_b""".stripMargin,
-    "gold_cohort_ltv" ->
+         |ORDER BY sku_a, sku_b""".stripMargin),
+    QueryDef("gold_cohort_ltv", cohortLtv,
       s"""WITH ${Tables.salesCte},
          |s AS (SELECT customer_id,
          |             CAST(year(sale_ts)*12 + month(sale_ts) - 1 AS BIGINT) AS ym,
@@ -1643,8 +1643,8 @@ object Gold {
          |       COUNT(*) AS n_sales,
          |       ${moneySumSql("amount")} AS revenue
          |FROM s JOIN f USING (customer_id)
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "gold_daily_sales_summary" ->
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("gold_daily_sales_summary", dailySalesSummary,
       s"""WITH ${Tables.salesCte}
          |SELECT CAST(sale_ts AS DATE) AS sale_date,
          |       COUNT(transaction_id) AS total_orders,
@@ -1652,8 +1652,8 @@ object Gold {
          |       CAST(SUM(CAST(FLOOR((unit_price*quantity)*10000) AS DECIMAL(28,0))) AS DOUBLE)/10000 AS revenue
          |FROM sales
          |WHERE CAST(sale_ts AS DATE) IS NOT NULL
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "gold_top_customers" ->
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("gold_top_customers", topCustomers,
       s"""WITH ${Tables.salesCte}, ${Tables.customersCte},
          |spend AS (
          |  SELECT customer_id,
@@ -1664,8 +1664,8 @@ object Gold {
          |SELECT s.customer_id, s.order_count, s.total_items, s.total_spent,
          |       c.customer_name, c.city, c.country, c.acctbal
          |FROM spend s LEFT JOIN customers c USING (customer_id)
-         |ORDER BY s.total_spent DESC, s.customer_id LIMIT 10""".stripMargin,
-    "gold_product_performance" ->
+         |ORDER BY s.total_spent DESC, s.customer_id LIMIT 10""".stripMargin),
+    QueryDef("gold_product_performance", productPerformance,
       s"""WITH ${Tables.salesCte}, ${Tables.productsCte},
          |perf AS (
          |  SELECT product_id,
@@ -1677,8 +1677,8 @@ object Gold {
          |SELECT f.product_id, f.times_sold, f.total_quantity, f.avg_price,
          |       p.product_name, p.sku, p.category, p.price
          |FROM perf f LEFT JOIN products p USING (product_id)
-         |ORDER BY f.times_sold DESC, f.product_id""".stripMargin,
-    "gold_store_performance" ->
+         |ORDER BY f.times_sold DESC, f.product_id""".stripMargin),
+    QueryDef("gold_store_performance", storePerformance,
       s"""WITH ${Tables.salesCte}, ${Tables.storesCte},
          |perf AS (
          |  SELECT store_id,
@@ -1689,13 +1689,13 @@ object Gold {
          |SELECT f.store_id, f.total_transactions, f.total_items, f.total_revenue,
          |       s.store_name, s.country
          |FROM perf f LEFT JOIN stores s USING (store_id)
-         |ORDER BY f.store_id""".stripMargin,
-    "src_inventory" ->
+         |ORDER BY f.store_id""".stripMargin),
+    QueryDef("src_inventory", inventoryView,
       s"""WITH ${Tables.salesCte}, ${Tables.inventoryCte}
          |SELECT store_id, product_id, units_sold, n_movements,
          |       last_movement_date
-         |FROM inventory ORDER BY store_id, product_id""".stripMargin,
-    "gold_manager_revenue" ->
+         |FROM inventory ORDER BY store_id, product_id""".stripMargin),
+    QueryDef("gold_manager_revenue", managerRevenue,
       s"""WITH ${Tables.salesCte}, ${Tables.storesCte}, ${Tables.salesManagersCte}
          |SELECT m.manager_id, m.manager_name, m.region,
          |       COUNT(DISTINCT t.store_id) AS n_stores,
@@ -1705,8 +1705,8 @@ object Gold {
          |JOIN stores s USING (store_id)
          |JOIN sales_managers m USING (country)
          |GROUP BY 1, 2, 3
-         |ORDER BY revenue DESC, manager_id""".stripMargin,
-    "gold_rfm" -> {
+         |ORDER BY revenue DESC, manager_id""".stripMargin),
+    QueryDef("gold_rfm", rfmSegments, {
       val qs = Seq(20, 40, 60, 80)
       val b =
         (qs.map(q => fixedRoundSql(s"quantile_cont(recency_days, 0.$q)", 4) +
@@ -1748,40 +1748,5 @@ object Gold {
          |            WHEN r_score <= 2 AND f_score <= 2 THEN 'hibernating'
          |            ELSE 'regular' END AS segment
          |FROM s ORDER BY customer_id""".stripMargin
-    })
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "gold_segment_sales"       -> segmentSales,
-    "gold_nation_trade"        -> nationTrade,
-    "gold_price_index"         -> priceIndex,
-    "gold_daily_sales_summary" -> dailySalesSummary,
-    "gold_top_customers"       -> topCustomers,
-    "gold_product_performance" -> productPerformance,
-    "gold_store_performance"   -> storePerformance,
-    "src_inventory"            -> inventoryView,
-    "gold_manager_revenue"     -> managerRevenue,
-    "gold_rfm"                 -> rfmSegments,
-    "gold_basket_affinity"     -> basketAffinity,
-    "gold_cohort_ltv"          -> cohortLtv,
-    "gold_order_gap"           -> orderGaps,
-    "gold_price_slope"         -> priceSlope,
-    "gold_abc_class"           -> abcClass,
-    "gold_xyz_class"           -> xyzClass,
-    "gold_snaive_backtest"     -> snaiveBacktest,
-    "gold_repeat_rate"         -> repeatRate,
-    "gold_market_share"        -> marketShare,
-    "gold_new_vs_returning"    -> newVsReturning,
-    "gold_returns"             -> returnsByCategory,
-    "gold_discount_impact"     -> discountImpact,
-    "gold_order_value_histogram" -> orderValueHistogram,
-    "gold_seasonality"         -> seasonality,
-    "gold_stockout"            -> stockoutRisk,
-    "gold_inventory_turnover"  -> inventoryTurnover,
-    "gold_assortment_overlap"  -> assortmentOverlap,
-    "gold_revenue_autocorr"    -> revenueAutocorr,
-    "gold_also_bought"         -> alsoBought,
-    "gold_top_movers"          -> topMovers,
-    "gold_aov_monthly"         -> aovMonthly,
-    "gold_category_hhi"        -> categoryHhi,
-    "gold_first_purchase_category" -> firstPurchaseCategory)
+    }))
 }

@@ -747,7 +747,7 @@ object Graph {
     * exactly the loop's result (including the all-peeled-empty and
     * budget-exhausted cases). Rounds MATERIALIZED (the chain is
     * [[KCoreMaxRounds]] deep). */
-  private val kcoreSql: String = {
+  private def kcoreSql: String = {
     val rounds = (1 to KCoreMaxRounds).map { r =>
       s"""kp$r AS MATERIALIZED (
          |  SELECT u FROM (SELECT u, COUNT(*) AS c FROM ke${r - 1} GROUP BY 1)
@@ -767,16 +767,16 @@ object Graph {
        |FROM ke$KCoreMaxRounds GROUP BY 1 ORDER BY node_id""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "gr_kcore" -> kcoreSql,
-    "gr_host_rank" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("gr_kcore", kcore, kcoreSql),
+    QueryDef("gr_host_rank", hostRank,
       s"""WITH $hostRankCte
-         |SELECT host_id, host, pagerank FROM hostpr ORDER BY host_id""".stripMargin,
-    "gr_host_trust" ->
+         |SELECT host_id, host, pagerank FROM hostpr ORDER BY host_id""".stripMargin),
+    QueryDef("gr_host_trust", hostTrust,
       s"""WITH $hostTrustCte
          |SELECT host_id, host, trust, pagerank, spam_mass
-         |FROM ht ORDER BY host_id""".stripMargin,
-    "gr_pagerank" ->
+         |FROM ht ORDER BY host_id""".stripMargin),
+    QueryDef("gr_pagerank", pagerank,
       s"""WITH ${Tables.salesCte},
          |e AS (SELECT DISTINCT customer_id*2 AS u, product_id*2 + 1 AS v
          |      FROM sales),
@@ -791,8 +791,8 @@ object Graph {
          |SELECT u AS node_id,
          |       CASE WHEN u % 2 = 0 THEN 'customer' ELSE 'product' END AS kind,
          |       u // 2 AS entity_id, pr AS pagerank
-         |FROM pr$PagerankIters ORDER BY node_id""".stripMargin,
-    "gr_hits" ->
+         |FROM pr$PagerankIters ORDER BY node_id""".stripMargin),
+    QueryDef("gr_hits", hits,
       s"""WITH ${Tables.salesCte},
          |e AS (SELECT DISTINCT customer_id AS u, product_id AS v FROM sales),
          |hub0 AS (SELECT DISTINCT u, CAST(1 AS DOUBLE) AS h FROM e),
@@ -804,8 +804,8 @@ object Graph {
          |  UNION ALL
          |  SELECT 'product' AS kind, v AS entity_id, a AS score
          |  FROM auth$HitsIters)
-         |ORDER BY kind, entity_id""".stripMargin,
-    "gr_labelprop" ->
+         |ORDER BY kind, entity_id""".stripMargin),
+    QueryDef("gr_labelprop", labelprop,
       s"""WITH ${Tables.salesCte},
          |e AS (SELECT DISTINCT customer_id*2 AS u, product_id*2 + 1 AS v
          |      FROM sales),
@@ -816,8 +816,8 @@ object Graph {
          |SELECT u AS node_id,
          |       CASE WHEN u % 2 = 0 THEN 'customer' ELSE 'product' END AS kind,
          |       u // 2 AS entity_id, lbl AS label
-         |FROM lbl$LabelpropIters ORDER BY node_id""".stripMargin,
-    "gr_triangles" ->
+         |FROM lbl$LabelpropIters ORDER BY node_id""".stripMargin),
+    QueryDef("gr_triangles", triangles,
       s"""WITH ${Tables.salesCte},
          |bp AS (SELECT DISTINCT transaction_id // 10 AS basket_id, product_id
          |       FROM sales),
@@ -831,8 +831,8 @@ object Graph {
          |nodes AS (SELECT u AS p FROM t UNION ALL SELECT v FROM t
          |          UNION ALL SELECT w FROM t)
          |SELECT p AS product_id, COUNT(*) AS triangles
-         |FROM nodes GROUP BY 1 ORDER BY product_id""".stripMargin,
-    "gr_modularity" ->
+         |FROM nodes GROUP BY 1 ORDER BY product_id""".stripMargin),
+    QueryDef("gr_modularity", categoryModularity,
       s"""WITH ${Tables.salesCte},
          |bp AS (SELECT DISTINCT transaction_id // 10 AS basket_id, product_id
          |       FROM sales),
@@ -860,8 +860,8 @@ object Graph {
          |           * (CAST(d.degree_sum AS DOUBLE) / (2 * CAST(m.m AS DOUBLE)))
          |         AS q_contrib
          |FROM deg d LEFT JOIN i USING (category) CROSS JOIN m
-         |ORDER BY category""".stripMargin,
-    "gr_assortativity" ->
+         |ORDER BY category""".stripMargin),
+    QueryDef("gr_assortativity", assortativity,
       s"""WITH ${Tables.salesCte},
          |bp AS (SELECT DISTINCT transaction_id // 10 AS basket_id, product_id
          |       FROM sales),
@@ -889,8 +889,8 @@ object Graph {
          |                * (n * CAST(syy AS DOUBLE)
          |                  - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
          |         AS assortativity
-         |FROM s""".stripMargin,
-    "gr_bfs_distance" ->
+         |FROM s""".stripMargin),
+    QueryDef("gr_bfs_distance", bfsDistance,
       s"""WITH RECURSIVE ${Tables.salesCte},
          |bp AS (SELECT DISTINCT transaction_id // 10 AS basket_id, product_id
          |       FROM sales),
@@ -907,8 +907,8 @@ object Graph {
          |  SELECT und.v, reach.dist + 1 FROM und JOIN reach ON und.u = reach.n
          |  WHERE reach.dist < $BfsMaxRounds)
          |SELECT n AS product_id, CAST(MIN(dist) AS BIGINT) AS dist
-         |FROM reach GROUP BY 1 ORDER BY product_id""".stripMargin,
-    "gr_edge_jaccard" ->
+         |FROM reach GROUP BY 1 ORDER BY product_id""".stripMargin),
+    QueryDef("gr_edge_jaccard", edgeJaccard,
       s"""WITH ${Tables.salesCte},
          |bp AS (SELECT DISTINCT transaction_id // 10 AS basket_id, product_id
          |       FROM sales),
@@ -932,8 +932,8 @@ object Graph {
          |         / CAST(da.d + db.d - COALESCE(sup.sup, 0) AS DOUBLE) AS jaccard
          |FROM e LEFT JOIN sup ON sup.a = e.a AND sup.b = e.b
          |JOIN deg da ON da.a = e.a JOIN deg db ON db.a = e.b
-         |ORDER BY product_a, product_b""".stripMargin,
-    "gr_support_hist" ->
+         |ORDER BY product_a, product_b""".stripMargin),
+    QueryDef("gr_support_hist", supportHist,
       s"""WITH ${Tables.salesCte},
          |bp AS (SELECT DISTINCT transaction_id // 10 AS basket_id, product_id
          |       FROM sales),
@@ -942,8 +942,8 @@ object Graph {
          |        ON x.basket_id = y.basket_id AND x.product_id < y.product_id
          |      GROUP BY 1, 2)
          |SELECT n_co, COUNT(*) AS n_pairs
-         |FROM e GROUP BY 1 ORDER BY n_co""".stripMargin,
-    "gr_components" ->
+         |FROM e GROUP BY 1 ORDER BY n_co""".stripMargin),
+    QueryDef("gr_components", components,
       s"""WITH RECURSIVE ${Tables.salesCte},
          |bp AS (SELECT DISTINCT transaction_id // 10 AS basket_id, product_id
          |       FROM sales),
@@ -958,8 +958,8 @@ object Graph {
          |  SELECT d.v, reach.r FROM und d JOIN reach ON d.u = reach.u),
          |lbl AS (SELECT u, MIN(r) AS component_id FROM reach GROUP BY 1)
          |SELECT component_id, COUNT(*) AS n_products
-         |FROM lbl GROUP BY 1 ORDER BY component_id""".stripMargin,
-    "gr_clustering_coeff" ->
+         |FROM lbl GROUP BY 1 ORDER BY component_id""".stripMargin),
+    QueryDef("gr_clustering_coeff", clusteringCoeff,
       s"""WITH ${Tables.salesCte},
          |bp AS (SELECT DISTINCT transaction_id // 10 AS basket_id, product_id
          |       FROM sales),
@@ -983,8 +983,8 @@ object Graph {
          |                   / CAST(d.degree*(d.degree - 1) AS DOUBLE)
          |            ELSE 0.0 END AS clustering_coeff
          |FROM deg d LEFT JOIN tc USING (product_id)
-         |ORDER BY d.product_id""".stripMargin,
-    "gr_degrees" ->
+         |ORDER BY d.product_id""".stripMargin),
+    QueryDef("gr_degrees", degrees,
       s"""WITH ${Tables.salesCte},
          |e AS (SELECT DISTINCT customer_id*2 AS u, product_id*2 + 1 AS v
          |      FROM sales),
@@ -992,7 +992,7 @@ object Graph {
          |deg AS (SELECT u, COUNT(*) AS degree FROM und GROUP BY 1)
          |SELECT CASE WHEN u % 2 = 0 THEN 'customer' ELSE 'product' END AS kind,
          |       degree, COUNT(*) AS n_nodes
-         |FROM deg GROUP BY 1, 2 ORDER BY kind, degree""".stripMargin)
+         |FROM deg GROUP BY 1, 2 ORDER BY kind, degree""".stripMargin))
 
   /** `gr_clustering_coeff`: local clustering coefficient per product —
     * `2·T(v) / (deg(v)·(deg(v)−1))` over the support-filtered
@@ -1100,17 +1100,14 @@ object Graph {
           .as("assortativity"))
   }
 
-  /** Core order for [[kcore]]. `final` (inlined constant): the
-    * `oracles` val above references it mid-init (the r12 object-init
-    * lesson). */
-  final val KCoreK = 3L
+  /** Core order for [[kcore]]. */
+  val KCoreK = 3L
   /** Peel-round budget: real interaction graphs shed their shell in a
     * handful of rounds (each round removes every node currently below
     * k, not one at a time); adversarial path-like graphs could need
     * more, so the budget is asserted reached-fixpoint in GraphSpec
-    * rather than silently trusted. `final` (inlined) for the same
-    * init-order reason. */
-  final val KCoreMaxRounds = 20
+    * rather than silently trusted. */
+  val KCoreMaxRounds = 20
 
   /** `gr_kcore`: the k-core of the co-purchase graph — the maximal
     * subgraph where every node keeps ≥ k neighbors, the standard dense-
@@ -1206,21 +1203,4 @@ object Graph {
         col("core_degree"))
       .orderBy("node_id")
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "gr_pagerank"  -> pagerank,
-    "gr_host_rank" -> hostRank,
-    "gr_host_trust" -> hostTrust,
-    "gr_labelprop" -> labelprop,
-    "gr_hits"      -> hits,
-    "gr_degrees"   -> degrees,
-    "gr_triangles" -> triangles,
-    "gr_clustering_coeff" -> clusteringCoeff,
-    "gr_components" -> components,
-    "gr_support_hist" -> supportHist,
-    "gr_edge_jaccard" -> edgeJaccard,
-    "gr_bfs_distance" -> bfsDistance,
-    "gr_assortativity" -> assortativity,
-    "gr_modularity"    -> categoryModularity,
-    "gr_kcore"     -> kcore)
 }

@@ -167,8 +167,8 @@ object Html {
     spark.read.parquet(s"$outDir/documents.parquet")
   }
 
-  val oracles: Map[String, String] = Map(
-    "txt_html_extract" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("txt_html_extract", htmlExtract,
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          |p AS (SELECT doc_id, w,
          |             unnest(generate_series(0, (len(w)-1)//$ParaWords)) AS ci
@@ -200,8 +200,5 @@ object Html {
          |       n_paras - n_long + 1 AS n_dropped_short,
          |       length(extracted_text) AS extracted_chars,
          |       extracted_text
-         |FROM e ORDER BY doc_id""".stripMargin)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "txt_html_extract" -> htmlExtract)
+         |FROM e ORDER BY doc_id""".stripMargin))
 }

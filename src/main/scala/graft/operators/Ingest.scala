@@ -210,56 +210,56 @@ object Ingest {
       .orderBy("doc_id")
   }
 
-  val oracles: Map[String, String] = Map(
-    "src_textlines_roundtrip" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("src_textlines_roundtrip", textlinesRoundtrip,
       """SELECT doc_id, NULLIF(lang, '') AS lang, NULLIF(source, '') AS source,
         |       NULLIF(replace(replace(replace(text, chr(9), ' '), chr(10), ' '),
         |               chr(13), ' '), '') AS text
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "src_schema_evolution" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("src_schema_evolution", schemaEvolution,
       """SELECT doc_id, text, lang,
         |       CASE WHEN doc_id % 2 = 1 THEN source END AS source,
         |       CASE WHEN doc_id % 2 = 1 THEN n_chars END AS n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "src_jsonl_roundtrip" ->
-      "SELECT doc_id, text, lang, source, n_chars FROM documents ORDER BY doc_id",
-    "snk_orc_roundtrip" ->
-      "SELECT doc_id, text, lang, source, n_chars FROM documents ORDER BY doc_id",
-    "src_parquet_scan" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("src_jsonl_roundtrip", jsonlRoundtrip,
+      "SELECT doc_id, text, lang, source, n_chars FROM documents ORDER BY doc_id"),
+    QueryDef("snk_orc_roundtrip", orcRoundtrip,
+      "SELECT doc_id, text, lang, source, n_chars FROM documents ORDER BY doc_id"),
+    QueryDef("src_parquet_scan", parquetScan,
       """SELECT l_returnflag,
         |       COUNT(*) AS n_rows,
         |       CAST(SUM(CAST(FLOOR(l_extendedprice*10000) AS DECIMAL(28,0))) AS DOUBLE)/10000 AS sum_price
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_discount > 0.05
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "src_csv_roundtrip" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
-    "snk_partitioned_parquet" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    QueryDef("src_csv_roundtrip", csvRoundtrip,
+      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey"),
+    QueryDef("snk_partitioned_parquet", partitionedParquetSink,
       s"""WITH ${Tables.salesCte}
          |SELECT 'd20260101' AS load_date, COUNT(*) AS n_rows,
          |       ${Gold.moneySumSql("unit_price*quantity")} AS revenue
-         |FROM sales""".stripMargin,
-    "snk_s3_layout" ->
+         |FROM sales""".stripMargin),
+    QueryDef("snk_s3_layout", s3LayoutSink,
       s"""WITH ${Tables.salesCte}
          |SELECT CAST(sale_ts AS DATE) AS sale_date,
          |       COUNT(transaction_id) AS total_orders,
          |       CAST(SUM(quantity) AS BIGINT) AS total_items,
          |       ${Gold.moneySumSql("unit_price*quantity")} AS revenue
          |FROM sales WHERE CAST(sale_ts AS DATE) IS NOT NULL
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "cat_register_tables" ->
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("cat_register_tables", catalogQuery,
       s"""WITH ${Tables.salesCte}, ${Tables.customersCte}
          |SELECT c.country, COUNT(s.transaction_id) AS n_sales,
          |       ${Gold.moneySumSql("s.unit_price*s.quantity")} AS revenue
          |FROM sales s JOIN customers c ON s.customer_id = c.customer_id
-         |GROUP BY c.country ORDER BY c.country""".stripMargin,
-    "cat_external_partitioned" ->
+         |GROUP BY c.country ORDER BY c.country""".stripMargin),
+    QueryDef("cat_external_partitioned", externalPartitionedCatalog,
       s"""WITH ${Tables.salesCte}
          |SELECT CAST(YEAR(sale_ts) AS INT) AS sale_year, COUNT(*) AS n_rows,
          |       ${Gold.moneySumSql("unit_price*quantity")} AS revenue
          |FROM sales WHERE YEAR(sale_ts) >= 1996
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "cat_discover_lake" ->
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("cat_discover_lake", lakeDiscovery,
       s"""WITH ${Tables.customersCte}, ${Tables.storesCte}
          |SELECT c.country, n_customers, n_stores
          |FROM (SELECT country, COUNT(*) AS n_customers
@@ -267,18 +267,5 @@ object Ingest {
          |JOIN (SELECT country, COUNT(*) AS n_stores
          |      FROM stores GROUP BY country) s
          |  ON c.country = s.country
-         |ORDER BY c.country""".stripMargin)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "src_textlines_roundtrip"  -> textlinesRoundtrip,
-    "src_parquet_scan"         -> parquetScan,
-    "src_csv_roundtrip"        -> csvRoundtrip,
-    "snk_partitioned_parquet"  -> partitionedParquetSink,
-    "snk_s3_layout"            -> s3LayoutSink,
-    "cat_register_tables"      -> catalogQuery,
-    "cat_external_partitioned" -> externalPartitionedCatalog,
-    "cat_discover_lake"        -> lakeDiscovery,
-    "src_jsonl_roundtrip"      -> jsonlRoundtrip,
-    "src_schema_evolution"     -> schemaEvolution,
-    "snk_orc_roundtrip"        -> orcRoundtrip)
+         |ORDER BY c.country""".stripMargin))
 }

@@ -39,8 +39,8 @@ object IntervalJoin {
       .orderBy("user_id", "a_id", "b_id")
   }
 
-  val oracles: Map[String, String] = Map(
-    "evt_interval_pairs" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("evt_interval_pairs", eventPairs,
       s"""WITH e AS (SELECT user_id, event_id,
          |                  CAST(FLOOR(epoch(ts)) AS BIGINT) AS es FROM events)
          |SELECT a.user_id, a.event_id AS a_id, b.event_id AS b_id,
@@ -49,8 +49,5 @@ object IntervalJoin {
          |  ON a.user_id = b.user_id
          | AND b.es - a.es BETWEEN 0 AND $BoundSec
          | AND (a.es < b.es OR (a.es = b.es AND a.event_id < b.event_id))
-         |ORDER BY a.user_id, a_id, b_id""".stripMargin)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_interval_pairs" -> eventPairs)
+         |ORDER BY a.user_id, a_id, b_id""".stripMargin))
 }

@@ -1102,12 +1102,12 @@ object Multimodal {
        |ORDER BY a_doc, a_frame, b_doc, b_frame""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "mm_frame_neardup" -> frameNearDupOracleSql,
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("mm_frame_neardup", frameNearDup, frameNearDupOracleSql),
     // equivalence classes derived from doc_id arithmetic, NOT from
     // hashing: the Spark side must hash the real payload bytes into
     // exactly these classes for the hash gate to match
-    "mm_exact_dedup" ->
+    QueryDef("mm_exact_dedup", mediaDedup,
       """WITH k AS (
         |  SELECT doc_id,
         |         CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END AS media_type,
@@ -1125,16 +1125,16 @@ object Multimodal {
         |      FROM k GROUP BY 1)
         |SELECT doc_id, media_type, byte_len, canonical_id, copies,
         |       doc_id <> canonical_id AS is_dup
-        |FROM k JOIN c USING (key) ORDER BY doc_id""".stripMargin,
-    "mm_resolution_hist" ->
+        |FROM k JOIN c USING (key) ORDER BY doc_id""".stripMargin),
+    QueryDef("mm_resolution_hist", resolutionHist,
       s"""WITH meta AS (SELECT * FROM ($mediaMetaOracle))
          |SELECT format, width // $ResolutionBucket AS wbucket,
          |       (width // $ResolutionBucket) * $ResolutionBucket AS width_lo,
          |       COUNT(*) AS n_assets,
          |       MIN(height) AS min_height, MAX(height) AS max_height
          |FROM meta WHERE format IS NOT NULL
-         |GROUP BY 1, 2, 3 ORDER BY format, wbucket""".stripMargin,
-    "mm_frame_dedup" -> {
+         |GROUP BY 1, 2, 3 ORDER BY format, wbucket""".stripMargin),
+    QueryDef("mm_frame_dedup", frameDedup, {
       val fp = (0 until 4).map(j =>
         s"""CAST(FLOOR(CAST(CAST((byte_len + frame_idx*31 + ${j * 7}) % 997 AS REAL)
            |  /CAST(997 AS REAL) AS DOUBLE)*$FrameFpScale) AS BIGINT) AS fp$j"""
@@ -1160,8 +1160,8 @@ object Multimodal {
          |       ck // 8 AS canon_doc_id, ck % 8 AS canon_frame_idx
          |FROM g WHERE n_frames >= 2
          |ORDER BY fp0, fp1, fp2, fp3""".stripMargin
-    },
-    "mm_frame_samples" ->
+    }),
+    QueryDef("mm_frame_samples", frameSamples,
       """WITH m AS (
         |  SELECT doc_id,
         |         CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
@@ -1178,30 +1178,30 @@ object Multimodal {
         |       + CAST(CAST((byte_len + frame_idx*31 + 14) % 997 AS REAL)/CAST(997 AS REAL) AS DOUBLE)
         |       + CAST(CAST((byte_len + frame_idx*31 + 21) % 997 AS REAL)/CAST(997 AS REAL) AS DOUBLE)
         |         AS feat_sum
-        |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
+        |FROM f ORDER BY doc_id, frame_idx""".stripMargin),
     // expected values derived from doc_id arithmetic, NOT from the
     // parser: the Spark side must synthesize real headers and parse
     // them back correctly for the hash to match
-    "mm_media_meta" -> mediaMetaOracle,
-    "mm_audio_meta" -> audioMetaOracle,
-    "mm_video_meta" -> videoMetaOracle,
-    "mm_video_profile" ->
+    QueryDef("mm_media_meta", mediaMeta, mediaMetaOracle),
+    QueryDef("mm_audio_meta", audioMeta, audioMetaOracle),
+    QueryDef("mm_video_meta", videoMeta, videoMetaOracle),
+    QueryDef("mm_video_profile", videoProfile,
       s"""WITH meta AS (SELECT * FROM ($videoMetaOracle))
          |SELECT format, duration_ms // 1000 AS duration_s,
          |       COUNT(*) AS n_assets,
          |       MAX(width) AS max_width,
          |       MAX(height) AS max_height
          |FROM meta WHERE format IS NOT NULL
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "mm_audio_profile" ->
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("mm_audio_profile", audioProfile,
       s"""WITH meta AS (SELECT * FROM ($audioMetaOracle))
          |SELECT format, duration_ms // 1000 AS duration_s,
          |       COUNT(*) AS n_assets,
          |       MIN(bit_rate) AS min_bit_rate,
          |       MAX(bit_rate) AS max_bit_rate
          |FROM meta WHERE format IS NOT NULL
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "mm_gif_meta" ->
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    QueryDef("mm_gif_meta", gifMeta,
       """SELECT doc_id, 'gif' AS media_type,
         |       CASE WHEN doc_id % 7 = 0
         |            THEN CAST(octet_length(encode(text)) + 1 AS BIGINT)
@@ -1214,8 +1214,8 @@ object Multimodal {
         |            ELSE CAST(8 + (doc_id*5) % 512 AS BIGINT) END AS width,
         |       CASE WHEN doc_id % 7 = 0 THEN NULL
         |            ELSE CAST(8 + (doc_id*11) % 256 AS BIGINT) END AS height
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "mm_corrupt_rate" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("mm_corrupt_rate", corruptRate,
       s"""WITH meta AS (
          |  SELECT media_type, format, byte_len FROM ($mediaMetaOracle)
          |  UNION ALL
@@ -1228,7 +1228,7 @@ object Multimodal {
          |       CAST(SUM(byte_len) AS BIGINT) AS total_bytes,
          |       CAST(SUM(CASE WHEN format IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
          |         / CAST(COUNT(*) AS DOUBLE) AS corrupt_rate
-         |FROM meta GROUP BY 1 ORDER BY 1""".stripMargin)
+         |FROM meta GROUP BY 1 ORDER BY 1""".stripMargin))
 
   private lazy val audioMetaOracle: String =
     """SELECT doc_id,
@@ -1344,18 +1344,4 @@ object Multimodal {
         (col("n_corrupt").cast("double") / col("n_records").cast("double"))
           .as("corrupt_rate"))
       .orderBy("media_type")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_media_meta"    -> mediaMeta,
-    "mm_gif_meta"      -> gifMeta,
-    "mm_audio_meta"    -> audioMeta,
-    "mm_audio_profile" -> audioProfile,
-    "mm_video_meta"    -> videoMeta,
-    "mm_video_profile" -> videoProfile,
-    "mm_frame_samples" -> frameSamples,
-    "mm_exact_dedup"   -> mediaDedup,
-    "mm_corrupt_rate"  -> corruptRate,
-    "mm_frame_dedup"   -> frameDedup,
-    "mm_frame_neardup" -> frameNearDup,
-    "mm_resolution_hist" -> resolutionHist)
 }

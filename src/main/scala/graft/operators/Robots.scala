@@ -236,8 +236,8 @@ object Robots {
     }.reduce(_.unionAll(_)).orderBy("stage")
   }
 
-  val oracles: Map[String, String] = Map(
-    "xf_crawl_funnel" -> {
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("xf_crawl_funnel", crawlFunnel, {
       val h = Curation.portableHashSql("doc_id")
       // batch split + per-stage arithmetic: valid = variants 0..4;
       // robots-allowed drops v0..v3 of hosts where str(p) startswith
@@ -273,8 +273,8 @@ object Robots {
          |  UNION ALL SELECT 4, 'frontier_distinct',
          |            (SELECT COUNT(DISTINCT canon_url) FROM novel)
          |) ORDER BY stage""".stripMargin
-    },
-    "xf_robots_screen" -> {
+    }),
+    QueryDef("xf_robots_screen", robotsScreen, {
       // verdicts recomputed from the synthesis arithmetic: hosts
       // h%3=0 carry the graftbot allow-all override (no delay), other
       // hosts deny path prefixes /private and /p{h} with delay 1+h%5
@@ -294,9 +294,5 @@ object Robots {
          |            ELSE 1 + h % 5 END AS crawl_delay
          |FROM r WHERE path IS NOT NULL
          |ORDER BY doc_id, variant""".stripMargin
-    })
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "xf_robots_screen" -> robotsScreen,
-    "xf_crawl_funnel"  -> crawlFunnel)
+    }))
 }

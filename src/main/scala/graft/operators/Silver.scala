@@ -181,16 +181,16 @@ object Silver {
       .orderBy("event_id")
   }
 
-  val oracles: Map[String, String] = Map(
-    "xf_date_coercion" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("xf_date_coercion", dateCoercion,
       """SELECT o_orderkey,
         |       CASE WHEN o_orderkey % 10 = 0 THEN NULL ELSE o_orderdate END AS parsed_ts
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "xf_null_fill" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    QueryDef("xf_null_fill", nullFill,
       """SELECT event_id,
         |       CASE WHEN event_id % 7 = 0 THEN 0.0 ELSE value END AS value_filled
-        |FROM events ORDER BY event_id""".stripMargin,
-    "xf_scd2" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    QueryDef("xf_scd2", scd2Customers,
       s"""WITH ${Tables.customersCte},
          |upd AS (SELECT customer_id, acctbal + 100.0 AS new_acctbal
          |        FROM customers
@@ -202,8 +202,8 @@ object Silver {
          |SELECT customer_id, 2 AS version, new_acctbal AS acctbal,
          |       TRUE AS is_current
          |FROM upd
-         |ORDER BY customer_id, version""".stripMargin,
-    "xf_dim_diff" -> {
+         |ORDER BY customer_id, version""".stripMargin),
+    QueryDef("xf_dim_diff", snapshotDiffCustomers, {
       val h = s"${Curation.portableHashSql("customer_id")} % 10"
       s"""WITH ${Tables.customersCte},
          |oldsnap AS (SELECT customer_id, acctbal FROM customers),
@@ -223,10 +223,10 @@ object Silver {
          |FROM oldsnap o FULL OUTER JOIN newsnap n
          |  ON o.customer_id = n.customer_id
          |ORDER BY customer_id""".stripMargin
-    },
+    }),
     // the round-trip contract: applying the diff reproduces the new
     // snapshot, so the oracle is the new snapshot's own definition
-    "xf_cdc_apply" -> {
+    QueryDef("xf_cdc_apply", cdcApplyCustomers, {
       val h = s"${Curation.portableHashSql("customer_id")} % 10"
       s"""WITH ${Tables.customersCte}
          |SELECT customer_id,
@@ -236,12 +236,5 @@ object Silver {
          |SELECT customer_id + 1000000000, acctbal
          |FROM customers WHERE $h = 2
          |ORDER BY customer_id""".stripMargin
-    })
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "xf_date_coercion" -> dateCoercion,
-    "xf_null_fill"     -> nullFill,
-    "xf_scd2"          -> scd2Customers,
-    "xf_dim_diff"      -> snapshotDiffCustomers,
-    "xf_cdc_apply"     -> cdcApplyCustomers)
+    }))
 }

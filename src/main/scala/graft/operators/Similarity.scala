@@ -1357,8 +1357,7 @@ object Similarity {
 
   /** Brute-force exact top-k — the oracle for `ann_topk_exact` AND (under
     * the measured-recall-1.0 license, SURVEY §6, asserted per SF in
-    * SimilaritySpec) for `ann_topk_lsh`. Declared above `oracles`
-    * (object-init order). */
+    * SimilaritySpec) for `ann_topk_lsh`. */
   private val annTopKExactSql: String =
     s"""WITH c AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
        |           FROM embeddings),
@@ -1686,8 +1685,7 @@ object Similarity {
        |ORDER BY method""".stripMargin
   }
 
-  /** emb_gram's oracle — also the matrix source of the emb_pca replay.
-    * Declared above `oracles` (object-init order). */
+  /** emb_gram's oracle — also the matrix source of the emb_pca replay. */
   private val embGramSql: String =
     """WITH c AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
       |           FROM embeddings),
@@ -1775,16 +1773,16 @@ object Similarity {
        |ORDER BY sel_idx""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "emb_kcenter" -> embKcenterSql,
-    "emb_pca" -> embPcaSql,
-    "emb_mmr_rerank" -> mmrRerankSql,
-    "ann_recall_report" -> annRecallReportSql,
-    "ann_topk_exact" -> annTopKExactSql,
-    "ann_topk_lsh" -> annTopKLshSql,
-    "ann_topk_ivf" -> annTopKIvfSql,
-    "ann_topk_pq" -> annTopKPqSql,
-    "ann_range" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("emb_kcenter", kcenterSelect, embKcenterSql),
+    QueryDef("emb_pca", pcaProject, embPcaSql),
+    QueryDef("emb_mmr_rerank", mmrRerank, mmrRerankSql),
+    QueryDef("ann_recall_report", annRecallReport, annRecallReportSql),
+    QueryDef("ann_topk_exact", annTopKExact, annTopKExactSql),
+    QueryDef("ann_topk_lsh", annTopKLsh, annTopKLshSql),
+    QueryDef("ann_topk_ivf", annTopKIvf, annTopKIvfSql),
+    QueryDef("ann_topk_pq", annTopKPq, annTopKPqSql),
+    QueryDef("ann_range", annRange,
       s"""WITH c AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
          |           FROM embeddings),
          |q AS (SELECT vec_id AS query_id, e AS qe FROM c WHERE vec_id % $QueryModulus = 0)
@@ -1796,9 +1794,9 @@ object Similarity {
          |  AND list_dot_product(c.e, q.qe)
          |        / (SQRT(list_dot_product(c.e, c.e)) * SQRT(list_dot_product(q.qe, q.qe)))
          |      >= $RangeThreshold
-         |ORDER BY query_id, neighbor_id""".stripMargin,
-    "emb_gram" -> embGramSql,
-    "emb_quantize" ->
+         |ORDER BY query_id, neighbor_id""".stripMargin),
+    QueryDef("emb_gram", gramMatrix, embGramSql),
+    QueryDef("emb_quantize", embQuantize,
       """WITH c AS (SELECT vec_id,
         |                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
         |           FROM embeddings),
@@ -1813,8 +1811,8 @@ object Similarity {
         |                  ELSE 0 END AS INT) AS code
         |      FROM ex)
         |SELECT vec_id, dim, code, ABS(x - (mn + code*scale)) AS err
-        |FROM k ORDER BY vec_id, dim""".stripMargin,
-    "emb_norm" ->
+        |FROM k ORDER BY vec_id, dim""".stripMargin),
+    QueryDef("emb_norm", embNorm,
       """WITH c AS (SELECT vec_id,
         |                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
         |           FROM embeddings),
@@ -1822,8 +1820,8 @@ object Similarity {
         |ex AS (SELECT vec_id, nrm, e,
         |              unnest(generate_series(1, len(e))) AS i FROM n)
         |SELECT vec_id, CAST(i - 1 AS INT) AS dim, nrm, e[i]/nrm AS u
-        |FROM ex ORDER BY vec_id, dim""".stripMargin,
-    "emb_retrieval_metrics" -> {
+        |FROM ex ORDER BY vec_id, dim""".stripMargin),
+    QueryDef("emb_retrieval_metrics", retrievalMetrics, {
       val wCase = (1 to TopK)
         .map(i => s"WHEN $i THEN ${ndcgWeights(i - 1)}")
         .mkString("CASE rn ", " ", " ELSE 0 END")
@@ -1863,8 +1861,8 @@ object Similarity {
          |            ELSE CAST(0 AS DOUBLE) END AS ndcg_at_k
          |FROM a JOIN ls ON ls.label = a.q_label
          |ORDER BY query_id""".stripMargin
-    },
-    "emb_silhouette" ->
+    }),
+    QueryDef("emb_silhouette", labelSilhouette,
       s"""WITH c AS (SELECT vec_id, label,
          |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
          |           FROM embeddings),
@@ -1895,8 +1893,8 @@ object Similarity {
          |SELECT label, COUNT(*) AS n_vecs,
          |       CAST(SUM(CAST(FLOOR(sil * $CentroidScale) AS DECIMAL(38,0)))
          |            AS DOUBLE) / $CentroidScale / COUNT(*) AS mean_silhouette
-         |FROM s GROUP BY 1 ORDER BY label""".stripMargin,
-    "emb_centroids" ->
+         |FROM s GROUP BY 1 ORDER BY label""".stripMargin),
+    QueryDef("emb_centroids", labelCentroids,
       s"""WITH ex AS (
          |  SELECT label, unnest(generate_series(1, len(embedding))) AS i,
          |         embedding AS e
@@ -1906,8 +1904,8 @@ object Similarity {
          |SELECT label, dim, COUNT(*) AS n_vecs,
          |       CAST(SUM(CAST(FLOOR(v*$CentroidScale) AS DECIMAL(28,0))) AS DOUBLE)
          |         / $CentroidScale / COUNT(*) AS centroid
-         |FROM d GROUP BY 1, 2 ORDER BY label, dim""".stripMargin,
-    "emb_hard_negatives" ->
+         |FROM d GROUP BY 1, 2 ORDER BY label, dim""".stripMargin),
+    QueryDef("emb_hard_negatives", hardNegatives,
       s"""WITH c AS (SELECT vec_id, label,
          |                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
          |           FROM embeddings),
@@ -1921,8 +1919,8 @@ object Similarity {
          |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
          |        ORDER BY cosine DESC, neighbor_id) AS rn FROM scored)
          |SELECT query_id, neighbor_id, cosine, CAST(rn AS INT) AS rn
-         |FROM r WHERE rn <= $TopK ORDER BY query_id, rn""".stripMargin,
-    "emb_diversity" ->
+         |FROM r WHERE rn <= $TopK ORDER BY query_id, rn""".stripMargin),
+    QueryDef("emb_diversity", diversity,
       s"""WITH ex AS (
          |  SELECT unnest(generate_series(1, len(embedding))) AS i, embedding AS e
          |  FROM embeddings),
@@ -1939,8 +1937,8 @@ object Similarity {
          |        CAST(SUM(CAST(FLOOR(variance*1e12 + 0.5) AS DECIMAL(38,0))) AS DOUBLE)/1e12
          |          AS trace_cov
          |      FROM v)
-         |SELECT n_vectors, trace_cov, trace_cov*2.0 AS mean_sq_dist FROM t""".stripMargin,
-    "emb_dim_stats" ->
+         |SELECT n_vectors, trace_cov, trace_cov*2.0 AS mean_sq_dist FROM t""".stripMargin),
+    QueryDef("emb_dim_stats", dimStats,
       s"""WITH ex AS (
          |  SELECT unnest(generate_series(1, len(embedding))) AS i, embedding AS e
          |  FROM embeddings),
@@ -1953,8 +1951,8 @@ object Similarity {
          |       sx/$CentroidScale/n AS mean,
          |       sxx/$CentroidScale/n - (sx/$CentroidScale/n)*(sx/$CentroidScale/n)
          |         AS variance
-         |FROM a ORDER BY dim""".stripMargin,
-    "emb_drift" -> {
+         |FROM a ORDER BY dim""".stripMargin),
+    QueryDef("emb_drift", embDrift, {
       val h = graft.operators.Curation.portableHashSql("vec_id")
       def m(sx: String, n: String) =
         s"(CAST($sx AS DOUBLE)/$CentroidScale/$n)"
@@ -1985,8 +1983,8 @@ object Similarity {
          |SELECT dim, n_a, n_b, mean_a, mean_b, var_a, var_b, mean_shift, z,
          |       z > CAST($DriftZ AS DOUBLE) AS drift
          |FROM z ORDER BY dim""".stripMargin
-    },
-    "emb_label_confusion" ->
+    }),
+    QueryDef("emb_label_confusion", labelConfusion,
       s"""WITH ex AS (
          |  SELECT vec_id, label, unnest(generate_series(1, len(embedding))) AS i,
          |         embedding AS e
@@ -2007,8 +2005,8 @@ object Similarity {
          |      FROM d)
          |SELECT label, cand AS nearest_label, COUNT(*) AS n_vecs
          |FROM b WHERE rn = 1
-         |GROUP BY 1, 2 ORDER BY label, nearest_label""".stripMargin,
-    "emb_sim_hist" ->
+         |GROUP BY 1, 2 ORDER BY label, nearest_label""".stripMargin),
+    QueryDef("emb_sim_hist", centroidDistHist,
       s"""WITH ex AS (
          |  SELECT vec_id, label, unnest(generate_series(1, len(embedding))) AS i,
          |         embedding AS e
@@ -2030,8 +2028,8 @@ object Similarity {
          |SELECT label, bucket,
          |       CAST(bucket*$DistHistBucketI AS DOUBLE)/$CentroidScale AS d2_lo,
          |       COUNT(*) AS n_vecs
-         |FROM b GROUP BY 1, 2 ORDER BY label, bucket""".stripMargin,
-    "emb_outliers" ->
+         |FROM b GROUP BY 1, 2 ORDER BY label, bucket""".stripMargin),
+    QueryDef("emb_outliers", embOutliers,
       s"""WITH ex AS (
          |  SELECT vec_id, label, unnest(generate_series(1, len(embedding))) AS i,
          |         embedding AS e
@@ -2055,10 +2053,10 @@ object Similarity {
          |      FROM d2 GROUP BY 1)
          |SELECT vec_id, d2.label, dist2,
          |       dist2 > CAST($OutlierRatio AS DOUBLE) * mean_d2 AS is_outlier
-         |FROM d2 JOIN m USING (label) ORDER BY vec_id""".stripMargin,
+         |FROM d2 JOIN m USING (label) ORDER BY vec_id""".stripMargin),
     // LSH-candidate near-dup is exact-reranked; recall at sf0.01 is 1.0
     // (verified against the all-pairs oracle), so the exact oracle applies.
-    "dd_embed_neardup" ->
+    QueryDef("dd_embed_neardup", embedNearDup,
       s"""WITH c AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
          |           FROM embeddings)
          |SELECT a.vec_id AS a_id, b.vec_id AS b_id,
@@ -2068,10 +2066,10 @@ object Similarity {
          |WHERE list_dot_product(a.e, b.e)
          |        / (SQRT(list_dot_product(a.e, a.e)) * SQRT(list_dot_product(b.e, b.e)))
          |      >= $NearDupThreshold
-         |ORDER BY a_id, b_id""".stripMargin,
+         |ORDER BY a_id, b_id""".stripMargin),
     // exact oracle licensed by the per-SF recall-1.0 assertion in
     // SimilaritySpec (brute-force train×eval comparison)
-    "dd_decontam_sem" ->
+    QueryDef("dd_decontam_sem", semanticDecontam,
       s"""WITH c AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
          |           FROM embeddings),
          |ev AS (SELECT vec_id, e FROM c
@@ -2089,31 +2087,5 @@ object Similarity {
          |       COALESCE(n_eval_hits, 0) AS n_eval_hits,
          |       COALESCE(max_cos, 0.0) AS max_cos,
          |       COALESCE(n_eval_hits, 0) > 0 AS contaminated
-         |FROM tr LEFT JOIN h USING (vec_id) ORDER BY vec_id""".stripMargin)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_topk_exact"   -> annTopKExact,
-    "emb_hard_negatives" -> hardNegatives,
-    "dd_embed_neardup" -> embedNearDup,
-    "dd_decontam_sem"  -> semanticDecontam,
-    "ann_topk_lsh"     -> annTopKLsh,
-    "ann_topk_ivf"     -> annTopKIvf,
-    "ann_topk_pq"      -> annTopKPq,
-    "emb_centroids"    -> labelCentroids,
-    "emb_silhouette"   -> labelSilhouette,
-    "emb_norm"         -> embNorm,
-    "emb_quantize"     -> embQuantize,
-    "emb_outliers"     -> embOutliers,
-    "emb_sim_hist"     -> centroidDistHist,
-    "ann_recall_report" -> annRecallReport,
-    "emb_label_confusion" -> labelConfusion,
-    "emb_drift"        -> embDrift,
-    "emb_dim_stats"    -> dimStats,
-    "ann_range"        -> annRange,
-    "emb_gram"         -> gramMatrix,
-    "emb_pca"          -> pcaProject,
-    "emb_kcenter"      -> kcenterSelect,
-    "emb_mmr_rerank"   -> mmrRerank,
-    "emb_retrieval_metrics" -> retrievalMetrics,
-    "emb_diversity"    -> diversity)
+         |FROM tr LEFT JOIN h USING (vec_id) ORDER BY vec_id""".stripMargin))
 }

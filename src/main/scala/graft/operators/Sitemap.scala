@@ -246,8 +246,7 @@ object Sitemap {
 
   /** The synthesized-sitemap arithmetic as a reusable WITH body ending
     * in `alle(h, seq, loc, canon_url, lastmod, priority)` — shared by
-    * the xf_sitemap, xf_recrawl and smp_recrawl_plan oracles. Declared
-    * above `oracles` (object-init order). */
+    * the xf_sitemap, xf_recrawl and smp_recrawl_plan oracles. */
   private[operators] val sitemapCteSql: String =
     s"""hosts AS (SELECT unnest(generate_series(0, ${Url.HostMod - 1})) AS h),
        |g AS (SELECT h, unnest(generate_series(0, 2 + h % 3)) AS k FROM hosts),
@@ -273,16 +272,16 @@ object Sitemap {
        |        FROM hosts WHERE h % 5 = 0),
        |alle AS (SELECT * FROM ge UNION ALL SELECT * FROM bad)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "xf_sitemap" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("xf_sitemap", sitemapScreen,
       s"""WITH ${Url.variantCteSql},
          |cf AS (SELECT DISTINCT canon_url FROM v WHERE canon_url IS NOT NULL),
          |$sitemapCteSql
          |SELECT a.h AS host_id, a.seq, a.loc, a.canon_url, a.lastmod,
          |       a.priority, cf.canon_url IS NOT NULL AS known
          |FROM alle a LEFT JOIN cf ON a.canon_url = cf.canon_url
-         |ORDER BY host_id, seq""".stripMargin,
-    "xf_recrawl" ->
+         |ORDER BY host_id, seq""".stripMargin),
+    QueryDef("xf_recrawl", recrawl,
       s"""WITH ${Url.variantCteSql},
          |$sitemapCteSql,
          |$lastCrawlCteSql,
@@ -298,9 +297,5 @@ object Sitemap {
          |       CAST(rk.refresh_rank AS BIGINT) AS refresh_rank
          |FROM st LEFT JOIN rk ON st.host_id = rk.host_id
          |                    AND st.canon_url = rk.canon_url
-         |ORDER BY st.host_id, st.canon_url""".stripMargin)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "xf_sitemap" -> sitemapScreen,
-    "xf_recrawl" -> recrawl)
+         |ORDER BY st.host_id, st.canon_url""".stripMargin))
 }

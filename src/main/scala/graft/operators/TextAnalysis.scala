@@ -1833,15 +1833,9 @@ object TextAnalysis {
        |         >= 0.5 AS passed
        |FROM c ORDER BY doc_id""".stripMargin
 
-  /** The txt_lm_score recompute as a reusable WITH-body ending in an
-    * `lm(doc_id, n_bigrams, lm_score)` CTE — shared with the
-    * txt_ccnet_bucket oracle. Declared ABOVE `oracles` (object-init
-    * order: a val referenced before its declaration reads null
-    * mid-init). */
   /** The txt_quality_ensemble recompute WITHOUT the output ordering —
     * shared by the txt_quality_ensemble oracle and (as the feature
-    * source) the txt_quality_lr training replay. Declared ABOVE
-    * `oracles` (object-init order). */
+    * source) the txt_quality_lr training replay. */
   private val ensembleSelectSql: String =
     s"""WITH q AS (SELECT doc_id, quality_score FROM ($qualityOracleSql)),
        |g AS (
@@ -2043,6 +2037,9 @@ object TextAnalysis {
        |ORDER BY f0.doc_id""".stripMargin
   }
 
+  /** The txt_lm_score recompute as a reusable WITH-body ending in an
+    * `lm(doc_id, n_bigrams, lm_score)` CTE — shared with the
+    * txt_ccnet_bucket oracle. */
   private val lmScoreCte: String =
     s"""bg AS (
        |  SELECT doc_id, unnest(list_transform(generate_series(1, len(t)-1),
@@ -2068,16 +2065,16 @@ object TextAnalysis {
        |           / $LmScale / COUNT(*) AS lm_score
        |  FROM p GROUP BY doc_id)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "txt_stats" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("txt_stats", stats,
       """SELECT doc_id, length(text) AS n_chars,
         |       len(string_split(text,' ')) AS n_tokens,
         |       len(list_distinct(string_split(text,' '))) AS n_uniq_tokens,
         |       (length(text) - (len(string_split(text,' ')) - 1)) * 1.0
         |         / len(string_split(text,' ')) AS avg_token_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "txt_lang_id" -> langIdOracle,
-    "txt_lang_confusion" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("txt_lang_id", langId, langIdOracle),
+    QueryDef("txt_lang_confusion", langConfusion,
       s"""WITH lid AS ($langIdOracle),
          |cells AS (SELECT d.lang, l.pred_lang, COUNT(*) AS n_docs
          |          FROM lid l JOIN documents d USING (doc_id) GROUP BY 1, 2),
@@ -2087,9 +2084,9 @@ object TextAnalysis {
          |       CAST(n_docs AS DOUBLE) / CAST(lang_total AS DOUBLE) AS cell_share,
          |       lang = pred_lang AS agree
          |FROM cells JOIN tot USING (lang)
-         |ORDER BY lang, pred_lang""".stripMargin,
-    "txt_quality" -> qualityOracleSql,
-    "txt_quality_by_source" ->
+         |ORDER BY lang, pred_lang""".stripMargin),
+    QueryDef("txt_quality", quality, qualityOracleSql),
+    QueryDef("txt_quality_by_source", qualityBySource,
       s"""WITH sc AS (SELECT q.doc_id, q.quality_score, d.source
          |            FROM ($qualityOracleSql) q
          |            JOIN documents d USING (doc_id)),
@@ -2105,8 +2102,8 @@ object TextAnalysis {
          |             AS BIGINT) THEN quality_score END) AS q50,
          |       MAX(CASE WHEN rk = CAST(CEIL(CAST(n_docs AS DOUBLE) * 0.75)
          |             AS BIGINT) THEN quality_score END) AS q75
-         |FROM r GROUP BY 1 ORDER BY source""".stripMargin,
-    "txt_source_divergence" ->
+         |FROM r GROUP BY 1 ORDER BY source""".stripMargin),
+    QueryDef("txt_source_divergence", sourceDivergence,
       """WITH tc AS (SELECT source, token, COUNT(*) AS c
         |            FROM (SELECT source, unnest(string_split(text,' ')) AS token
         |                  FROM documents)
@@ -2126,8 +2123,8 @@ object TextAnalysis {
         |SELECT src_a, src_b, n_shared_tokens,
         |       1.0 + (CAST(sabs AS DOUBLE) - CAST(ssum AS DOUBLE))
         |         / (2.0 * CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)) AS tvd
-        |FROM g ORDER BY src_a, src_b""".stripMargin,
-    "txt_length_profile" ->
+        |FROM g ORDER BY src_a, src_b""".stripMargin),
+    QueryDef("txt_length_profile", lengthProfile,
       s"""WITH t AS (SELECT source,
          |             CAST(len(string_split(text,' ')) AS BIGINT) AS n_tokens
          |           FROM documents)
@@ -2137,8 +2134,8 @@ object TextAnalysis {
          |       ${Gold.fixedRoundSql("quantile_cont(n_tokens, 0.5)", 4)} AS p50_tokens,
          |       ${Gold.fixedRoundSql("quantile_cont(n_tokens, 0.9)", 4)} AS p90_tokens,
          |       CAST(SUM(n_tokens) AS DOUBLE)/CAST(COUNT(*) AS DOUBLE) AS mean_tokens
-         |FROM t GROUP BY source ORDER BY source""".stripMargin,
-    "txt_strip_repeats" ->
+         |FROM t GROUP BY source ORDER BY source""".stripMargin),
+    QueryDef("txt_strip_repeats", stripRepeats,
       """WITH d AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |tok AS (SELECT doc_id, CAST(i-1 AS BIGINT) AS pos, t[i] AS tok
         |        FROM (SELECT doc_id, t, unnest(generate_series(1, len(t))) AS i
@@ -2165,27 +2162,27 @@ object TextAnalysis {
         |       CAST(n_tokens_before - n_tokens_after AS DOUBLE)
         |         / CAST(n_tokens_before AS DOUBLE) AS removed_fraction,
         |       cleaned_text
-        |FROM base b JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "txt_bpe_pairs" ->
+        |FROM base b JOIN agg USING (doc_id) ORDER BY doc_id""".stripMargin),
+    QueryDef("txt_bpe_pairs", bpePairs,
       s"""WITH w AS (SELECT unnest(string_split(text,' ')) AS w FROM documents),
          |p AS (SELECT substring(w, CAST(i AS INT), 2) AS pair
          |      FROM (SELECT w, unnest(generate_series(1, len(w)-1)) AS i
          |            FROM w WHERE len(w) >= 2))
          |SELECT pair, COUNT(*) AS n FROM p
-         |GROUP BY 1 ORDER BY n DESC, pair LIMIT $BpeTopK""".stripMargin,
-    "txt_quality_ensemble" ->
+         |GROUP BY 1 ORDER BY n DESC, pair LIMIT $BpeTopK""".stripMargin),
+    QueryDef("txt_quality_ensemble", qualityEnsemble,
       s"""$ensembleSelectSql
-         |ORDER BY doc_id""".stripMargin,
-    "txt_quality_lr" -> qualityLrOracleSql,
-    "txt_bpe_train" -> bpeTrainOracleSql,
-    "txt_apply_bpe" -> applyBpeOracleSql,
-    "txt_freq_spectrum" ->
+         |ORDER BY doc_id""".stripMargin),
+    QueryDef("txt_quality_lr", qualityLr, qualityLrOracleSql),
+    QueryDef("txt_bpe_train", bpeTrain, bpeTrainOracleSql),
+    QueryDef("txt_apply_bpe", applyBpe, applyBpeOracleSql),
+    QueryDef("txt_freq_spectrum", freqSpectrum,
       """WITH t AS (SELECT unnest(string_split(text,' ')) AS token FROM documents),
         |c AS (SELECT token, COUNT(*) AS cnt FROM t GROUP BY 1)
         |SELECT cnt AS token_count, COUNT(*) AS n_types,
         |       cnt * COUNT(*) AS token_mass
-        |FROM c GROUP BY cnt ORDER BY token_count""".stripMargin,
-    "txt_pmi_pairs" ->
+        |FROM c GROUP BY cnt ORDER BY token_count""".stripMargin),
+    QueryDef("txt_pmi_pairs", pmiPairs,
       s"""WITH bg AS (
          |  SELECT unnest(list_transform(generate_series(1, len(t)-1),
          |           i -> t[i] || ' ' || t[i+1])) AS bigram
@@ -2206,15 +2203,15 @@ object TextAnalysis {
          |           * (CAST(b.c1 AS DOUBLE)/CAST(nu AS DOUBLE))) AS lift
          |FROM p JOIN c1 a ON p.w1 = a.token JOIN c1 b ON p.w2 = b.token
          |CROSS JOIN nb CROSS JOIN nu
-         |ORDER BY lift DESC, bigram LIMIT $PmiTopK""".stripMargin,
-    "txt_vocab" ->
+         |ORDER BY lift DESC, bigram LIMIT $PmiTopK""".stripMargin),
+    QueryDef("txt_vocab", vocab,
       s"""WITH t AS (SELECT unnest(string_split(text,' ')) AS token FROM documents),
          |c AS (SELECT token, COUNT(*) AS cnt FROM t GROUP BY 1),
          |r AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, token) - 1 AS INT)
          |               AS id, token, cnt
          |      FROM c)
-         |SELECT id, token, cnt FROM r WHERE id < $VocabK ORDER BY id""".stripMargin,
-    "txt_oov" ->
+         |SELECT id, token, cnt FROM r WHERE id < $VocabK ORDER BY id""".stripMargin),
+    QueryDef("txt_oov", oovScore,
       s"""WITH t AS (SELECT doc_id, unnest(string_split(text,' ')) AS token
          |           FROM documents),
          |c AS (SELECT token, COUNT(*) AS cnt FROM t GROUP BY 1),
@@ -2227,20 +2224,20 @@ object TextAnalysis {
          |      FROM t LEFT JOIN v ON t.token = v.token GROUP BY 1)
          |SELECT doc_id, n_tokens, n_oov,
          |       CAST(n_oov AS DOUBLE) / n_tokens AS oov_ratio
-         |FROM g ORDER BY doc_id""".stripMargin,
-    "txt_top_ngrams" ->
+         |FROM g ORDER BY doc_id""".stripMargin),
+    QueryDef("txt_top_ngrams", topNgrams,
       """SELECT bg AS bigram, COUNT(*) AS n FROM (
         |  SELECT unnest(list_transform(generate_series(1, len(t)-1),
         |           i -> t[i] || ' ' || t[i+1])) AS bg
         |  FROM (SELECT string_split(text,' ') AS t FROM documents)
         |  WHERE len(t) >= 2)
-        |GROUP BY bg ORDER BY n DESC, bg LIMIT 20""".stripMargin,
-    "txt_token_count" ->
+        |GROUP BY bg ORDER BY n DESC, bg LIMIT 20""".stripMargin),
+    QueryDef("txt_token_count", tokenCount,
       """SELECT doc_id,
         |       len(string_split(text, ' ')) AS n_ws_tokens,
         |       len(regexp_extract_all(text, '\w+|[^\w\s]')) AS n_bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "txt_corpus_profile" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("txt_corpus_profile", corpusProfile,
       s"""WITH q AS (SELECT * FROM ($qualityOracleSql)),
          |j AS (SELECT d.lang, q.n_tokens, q.quality_score, q.passed
          |      FROM documents d JOIN q ON d.doc_id = q.doc_id)
@@ -2249,13 +2246,13 @@ object TextAnalysis {
          |       ${Gold.moneySumSql("quality_score")}/COUNT(*) AS mean_quality,
          |       CAST(SUM(CASE WHEN passed THEN 1 ELSE 0 END) AS BIGINT)*1.0/COUNT(*)
          |         AS pass_rate
-         |FROM j GROUP BY lang ORDER BY lang""".stripMargin,
-    "txt_normalize" ->
+         |FROM j GROUP BY lang ORDER BY lang""".stripMargin),
+    QueryDef("txt_normalize", normalize,
       """SELECT doc_id,
         |       trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm_text,
         |       trim(regexp_replace(lower(text), '\s+', ' ', 'g')) <> text AS changed
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "txt_chunks" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("txt_chunks", chunks,
       s"""WITH d AS (SELECT doc_id, string_split(text,' ') AS toks,
          |                  len(string_split(text,' ')) AS n FROM documents),
          |e AS (SELECT doc_id, toks,
@@ -2268,8 +2265,8 @@ object TextAnalysis {
          |SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
          |       len(ctoks) AS n_chunk_tokens,
          |       array_to_string(ctoks, ' ') AS chunk_text
-         |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-    "txt_lexical" ->
+         |FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
+    QueryDef("txt_lexical", lexicalDiversity,
       """WITH tf AS (
         |  SELECT doc_id, term, COUNT(*) AS c
         |  FROM (SELECT doc_id, unnest(string_split(text,' ')) AS term
@@ -2288,8 +2285,8 @@ object TextAnalysis {
         |       CASE WHEN n_tokens >= 2
         |            THEN rep_pairs*1.0/(n_tokens*(n_tokens-1))
         |            ELSE 0.0 END AS simpson_rep
-        |FROM d ORDER BY doc_id""".stripMargin,
-    "txt_rep_ratio" ->
+        |FROM d ORDER BY doc_id""".stripMargin),
+    QueryDef("txt_rep_ratio", repRatio,
       """WITH g AS (
         |  SELECT doc_id,
         |         CASE WHEN len(t) >= 2 THEN list_transform(generate_series(1, len(t)-1),
@@ -2306,8 +2303,8 @@ object TextAnalysis {
         |       CASE WHEN len(g3) > 0
         |            THEN (len(g3) - len(list_distinct(g3)))*1.0/len(g3)
         |            ELSE 0.0 END AS dup_3gram_ratio
-        |FROM g ORDER BY doc_id""".stripMargin,
-    "txt_pii_profile" ->
+        |FROM g ORDER BY doc_id""".stripMargin),
+    QueryDef("txt_pii_profile", piiProfile,
       s"""WITH d AS (
          |  SELECT source, n_chars,
          |         len(regexp_extract_all(text, '$EmailPat')) AS e,
@@ -2324,8 +2321,8 @@ object TextAnalysis {
          |           AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS pii_doc_rate,
          |       (CAST(SUM(e) + SUM(i) + SUM(p) AS DOUBLE) * 1000.0)
          |         / CAST(SUM(n_chars) AS DOUBLE) AS pii_per_kchar
-         |FROM d GROUP BY 1 ORDER BY source""".stripMargin,
-    "txt_redact" ->
+         |FROM d GROUP BY 1 ORDER BY source""".stripMargin),
+    QueryDef("txt_redact", redact,
       s"""SELECT doc_id,
          |       len(regexp_extract_all(text, '$EmailPat')) AS n_emails,
          |       len(regexp_extract_all(text, '$Ipv4Pat')) AS n_ips,
@@ -2334,14 +2331,14 @@ object TextAnalysis {
          |         '$EmailPat', '<EMAIL>', 'g'),
          |         '$Ipv4Pat', '<IP>', 'g'),
          |         '$PhonePat', '<PHONE>', 'g') AS redacted
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "txt_fingerprint" ->
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("txt_fingerprint", fingerprint,
       """SELECT doc_id,
         |       list_reduce(list_transform(generate_series(1, length(text)),
         |         i -> CAST(unicode(substr(text,i,1)) AS BIGINT)),
         |         (acc,c) -> (acc*31+c) % 1000000007) AS fingerprint
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "txt_tfidf" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("txt_tfidf", tfidf,
       s"""WITH tf AS (
          |  SELECT doc_id, term, COUNT(*) AS tf
          |  FROM (SELECT doc_id, unnest(string_split(text,' ')) AS term
@@ -2358,11 +2355,11 @@ object TextAnalysis {
          |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
          |        ORDER BY weight DESC, term) AS rn FROM w)
          |SELECT doc_id, term, tf, df, weight, CAST(rn AS INT) AS rn
-         |FROM r WHERE rn <= $TfidfTopK ORDER BY doc_id, rn""".stripMargin,
-    "txt_lm_score" ->
+         |FROM r WHERE rn <= $TfidfTopK ORDER BY doc_id, rn""".stripMargin),
+    QueryDef("txt_lm_score", lmScore,
       s"""WITH $lmScoreCte
-         |SELECT doc_id, n_bigrams, lm_score FROM lm ORDER BY doc_id""".stripMargin,
-    "txt_ccnet_bucket" ->
+         |SELECT doc_id, n_bigrams, lm_score FROM lm ORDER BY doc_id""".stripMargin),
+    QueryDef("txt_ccnet_bucket", ccnetBucket,
       s"""WITH $lmScoreCte,
          |sc AS (SELECT lm.doc_id, d.lang, lm.lm_score
          |       FROM lm JOIN documents d USING (doc_id)),
@@ -2375,8 +2372,8 @@ object TextAnalysis {
          |       CAST(((rn - 1) * 3) // n_lang AS INT) AS bucket_idx,
          |       CASE ((rn - 1) * 3) // n_lang WHEN 0 THEN 'head'
          |            WHEN 1 THEN 'middle' ELSE 'tail' END AS bucket
-         |FROM r ORDER BY doc_id""".stripMargin,
-    "txt_kn_score" ->
+         |FROM r ORDER BY doc_id""".stripMargin),
+    QueryDef("txt_kn_score", knScore,
       s"""WITH bg AS (
          |  SELECT doc_id, unnest(list_transform(generate_series(1, len(t)-1),
          |           i -> t[i])) AS ctx,
@@ -2399,8 +2396,8 @@ object TextAnalysis {
          |SELECT doc_id, COUNT(*) AS n_bigrams,
          |       CAST(SUM(CAST(FLOOR(p*$LmScale) AS DECIMAL(38,0))) AS DOUBLE)
          |         / $LmScale / COUNT(*) AS kn_score
-         |FROM p GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "txt_kn3_score" ->
+         |FROM p GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    QueryDef("txt_kn3_score", kn3Score,
       s"""WITH tg AS (
          |  SELECT doc_id, unnest(list_transform(generate_series(1, len(t)-2),
          |           i -> t[i])) AS w1,
@@ -2434,8 +2431,8 @@ object TextAnalysis {
          |SELECT doc_id, COUNT(*) AS n_trigrams,
          |       CAST(SUM(CAST(FLOOR(p*$LmScale) AS DECIMAL(38,0))) AS DOUBLE)
          |         / $LmScale / COUNT(*) AS kn3_score
-         |FROM p GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "txt_kn5_score" ->
+         |FROM p GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    QueryDef("txt_kn5_score", kn5Score,
       s"""WITH tg AS (
          |  SELECT doc_id, unnest(list_transform(generate_series(1, len(t)-4),
          |           i -> t[i])) AS w1,
@@ -2499,8 +2496,8 @@ object TextAnalysis {
          |SELECT doc_id, COUNT(*) AS n_5grams,
          |       CAST(SUM(CAST(FLOOR(p*$LmScale) AS DECIMAL(38,0))) AS DOUBLE)
          |         / $LmScale / COUNT(*) AS kn5_score
-         |FROM p GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "txt_topgram_share" -> {
+         |FROM p GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    QueryDef("txt_topgram_share", topgramShare, {
       def per(n: Int): String = {
         val parts = (0 until n).map(j => s"t[i+$j]").mkString("||' '||")
         s"""g$n AS (SELECT doc_id,
@@ -2535,8 +2532,8 @@ object TextAnalysis {
          |        LEFT JOIN t3 ON dt.doc_id = t3.doc_id
          |        LEFT JOIN t4 ON dt.doc_id = t4.doc_id
          |ORDER BY dt.doc_id""".stripMargin
-    },
-    "txt_bm25" -> {
+    }),
+    QueryDef("txt_bm25", bm25, {
       val termList = Bm25Terms.map(t => s"'$t'").mkString(", ")
       s"""WITH toks AS (
          |  SELECT doc_id, unnest(string_split(text,' ')) AS token
@@ -2570,8 +2567,8 @@ object TextAnalysis {
          |         / $LmScale AS score
          |FROM term GROUP BY doc_id
          |ORDER BY score DESC, doc_id LIMIT $Bm25TopK""".stripMargin
-    },
-    "txt_rag" -> {
+    }),
+    QueryDef("txt_rag", ragChunks, {
       val terms = Bm25Terms.map(t => s"'$t'").mkString(", ")
       s"""WITH d AS (SELECT doc_id, string_split(text,' ') AS toks,
          |                  len(string_split(text,' ')) AS n FROM documents),
@@ -2605,8 +2602,8 @@ object TextAnalysis {
          |         / $LmScale AS score
          |FROM term GROUP BY 1, 2
          |ORDER BY score DESC, doc_id, chunk_idx LIMIT $RagTopK""".stripMargin
-    },
-    "txt_novelty" ->
+    }),
+    QueryDef("txt_novelty", novelty,
       """WITH sh AS (
         |  SELECT doc_id, unnest(list_distinct(list_transform(
         |           generate_series(1, len(t)-2),
@@ -2617,45 +2614,6 @@ object TextAnalysis {
         |SELECT sh.doc_id, COUNT(*) AS n_shingles,
         |       COUNT(*) FILTER (WHERE df.df >= 2) AS n_dup,
         |       COUNT(*) FILTER (WHERE df.df >= 2)*1.0/COUNT(*) AS dup_frac
-        |FROM sh JOIN df USING (g) GROUP BY 1 ORDER BY 1""".stripMargin)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "txt_stats"       -> stats,
-    "txt_lang_id"     -> langId,
-    "txt_lang_confusion" -> langConfusion,
-    "txt_quality"     -> quality,
-    "txt_top_ngrams"  -> topNgrams,
-    "txt_token_count" -> tokenCount,
-    "txt_corpus_profile" -> corpusProfile,
-    "txt_rep_ratio"   -> repRatio,
-    "txt_redact"      -> redact,
-    "txt_normalize"   -> normalize,
-    "txt_chunks"      -> chunks,
-    "txt_fingerprint" -> fingerprint,
-    "txt_tfidf"       -> tfidf,
-    "txt_lm_score"    -> lmScore,
-    "txt_ccnet_bucket" -> ccnetBucket,
-    "txt_kn_score"    -> knScore,
-    "txt_kn3_score"   -> kn3Score,
-    "txt_kn5_score"   -> kn5Score,
-    "txt_topgram_share" -> topgramShare,
-    "txt_quality_by_source" -> qualityBySource,
-    "txt_pii_profile" -> piiProfile,
-    "txt_bm25"        -> bm25,
-    "txt_rag"         -> ragChunks,
-    "txt_novelty"     -> novelty,
-    "txt_vocab"       -> vocab,
-    "txt_freq_spectrum" -> freqSpectrum,
-    "txt_pmi_pairs"   -> pmiPairs,
-    "txt_compress"    -> compressionRatio,
-    "txt_quality_ensemble" -> qualityEnsemble,
-    "txt_quality_lr"  -> qualityLr,
-    "txt_bpe_pairs"   -> bpePairs,
-    "txt_bpe_train"   -> bpeTrain,
-    "txt_apply_bpe"   -> applyBpe,
-    "txt_strip_repeats" -> stripRepeats,
-    "txt_length_profile" -> lengthProfile,
-    "txt_source_divergence" -> sourceDivergence,
-    "txt_oov"         -> oovScore,
-    "txt_lexical"     -> lexicalDiversity)
+        |FROM sh JOIN df USING (g) GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("txt_compress", compressionRatio))
 }

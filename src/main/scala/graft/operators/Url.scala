@@ -46,7 +46,7 @@ object Url {
   val UrlVariants = 6
 
   /** The synthesized variant table: (doc_id, variant, url). Shared by
-    * both queries; arithmetic mirrored verbatim in [[oracles]]. */
+    * both queries; arithmetic mirrored verbatim in the [[defs]] oracles. */
   def urlVariants(spark: SparkSession, dir: String): DataFrame = {
     val id = col("doc_id").cast("string")
     val h = (col("doc_id") % HostMod).cast("string")
@@ -187,19 +187,19 @@ object Url {
        |             ELSE NULL END AS canon_host
        |      FROM b)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "xf_url_canon" ->
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("xf_url_canon", urlCanon,
       s"""WITH $variantCteSql
          |SELECT doc_id, variant, url, canon_url, canon_host
-         |FROM v ORDER BY doc_id, variant""".stripMargin,
-    "dd_url_dedup" ->
+         |FROM v ORDER BY doc_id, variant""".stripMargin),
+    QueryDef("dd_url_dedup", urlDedup,
       s"""WITH $variantCteSql
          |SELECT canon_url, COUNT(*) AS n_urls,
          |       COUNT(DISTINCT doc_id) AS n_docs,
          |       MIN(doc_id) AS first_doc_id
          |FROM v WHERE canon_url IS NOT NULL
-         |GROUP BY 1 ORDER BY canon_url""".stripMargin,
-    "dd_url_incremental" -> {
+         |GROUP BY 1 ORDER BY canon_url""".stripMargin),
+    QueryDef("dd_url_incremental", urlIncremental, {
       val h = Curation.portableHashSql("doc_id")
       s"""WITH $variantCteSql,
          |cf AS (SELECT DISTINCT canon_url FROM v
@@ -210,10 +210,5 @@ object Url {
          |FROM v LEFT JOIN cf ON v.canon_url = cf.canon_url
          |WHERE ($h) % 10 = 0
          |ORDER BY v.doc_id, v.variant""".stripMargin
-    })
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "xf_url_canon" -> urlCanon,
-    "dd_url_dedup" -> urlDedup,
-    "dd_url_incremental" -> urlIncremental)
+    }))
 }

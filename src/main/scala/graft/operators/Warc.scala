@@ -404,8 +404,8 @@ object Warc {
       .orderBy("doc_id")
   }
 
-  val oracles: Map[String, String] = Map(
-    "xf_warc_extract" -> {
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("xf_warc_extract", warcExtract, {
       // the txt_html_extract oracle arithmetic + the WARC target-URI
       // arithmetic (Html.synthPage census over documents.text; URI from
       // the framing contract)
@@ -445,26 +445,21 @@ object Warc {
          |       length(extracted_text) AS extracted_chars,
          |       extracted_text
          |FROM e ORDER BY doc_id""".stripMargin
-    },
-    "src_warc_roundtrip" ->
+    }),
+    QueryDef("src_warc_roundtrip", warcRoundtrip,
       s"""SELECT doc_id,
          |       'http://host'||(doc_id % ${Url.HostMod})||'.example/p'||doc_id
          |         AS target_uri,
          |       CAST(octet_length(encode(text)) AS BIGINT) AS content_length,
          |       CAST($HeaderCount AS BIGINT) AS n_headers,
          |       TRUE AS payload_match
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "snk_warc_dir" ->
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    QueryDef("snk_warc_dir", warcSinkRoundtrip,
       s"""SELECT doc_id,
          |       'http://host'||(doc_id % ${Url.HostMod})||'.example/p'||doc_id
          |         AS target_uri,
          |       CAST(octet_length(encode(text)) AS BIGINT) AS content_length,
          |       TRUE AS payload_match,
          |       TRUE AS file_ok
-         |FROM documents ORDER BY doc_id""".stripMargin)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "src_warc_roundtrip" -> warcRoundtrip,
-    "xf_warc_extract"    -> warcExtract,
-    "snk_warc_dir"       -> warcSinkRoundtrip)
+         |FROM documents ORDER BY doc_id""".stripMargin))
 }

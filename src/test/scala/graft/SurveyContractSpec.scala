@@ -42,8 +42,26 @@ class SurveyContractSpec extends AnyFunSuite {
     assert(stray.isEmpty, s"keys outside the family prefixes: $stray")
   }
 
-  test("every oracle key has a queries entry") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracleSql keys with no query: $orphans")
+  test("no query key is declared twice across the module lists") {
+    // SparkEntry.queries is built with toMap, where a later duplicate
+    // would silently replace an earlier one
+    val dups = SparkEntry.defs.groupBy(_.key).collect {
+      case (k, ds) if ds.size > 1 => k
+    }
+    assert(dups.isEmpty, s"keys declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("SURVEY §2 marks rows-only exactly the keys declared without an oracle") {
+    // table rows read from the right: ... | queries key | Oracle | Impl |
+    // (Capability cells may themselves contain `|`)
+    val surveyRowsOnly = section2.split("\n").filter(_.startsWith("|")).flatMap { row =>
+      val cells = row.split("\\|").map(_.trim)
+      if (cells.length < 4 || !cells(cells.length - 2).startsWith("rows-only")) Nil
+      else KeyPattern.findAllMatchIn(cells(cells.length - 3)).map(_.group(1))
+    }.toSet
+    val declaredRowsOnly = SparkEntry.defs.filter(_.oracle.isEmpty).map(_.key).toSet
+    assert(surveyRowsOnly == declaredRowsOnly,
+      s"SURVEY rows-only ${surveyRowsOnly.toSeq.sorted} != declared without oracle " +
+        s"${declaredRowsOnly.toSeq.sorted}")
   }
 }
