@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors}
+import scala.util.{Failure, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,7 +17,17 @@ import graft.sources.{CsvSource, Tables}
   *
   * Bronze lands as headered CSV for fidelity with the reference's
   * extract stage (extract.py dumps CSV); at 100 TB the bronze landing
-  * would go straight to parquet — swap `bronzeCsv=false` for that.
+  * would go straight to parquet, a change to the extract step's
+  * `CsvSource` write and read (there is no switch for it).
+  *
+  * Concurrency: as the reference runs its extracts as parallel tasks,
+  * [[run]] runs each source table's extract → bronze → silver chain, and
+  * then the four gold writes and the four catalog reads, on a thread
+  * pool that exists for that one run (one worker per source table; the
+  * cores are shared by Spark's FIFO scheduler). Every task is joined
+  * before [[run]] returns or throws, and the pool's threads have exited
+  * by then. The DQ gate stays a barrier: gold starts only after all four
+  * silver tables are written and checked.
   */
 object Pipeline {
 
@@ -47,80 +59,111 @@ object Pipeline {
     * the four analytics results computed FROM the lake's gold layer. */
   def run(spark: SparkSession, srcDir: String, lakeBase: String,
       loadDate: String = "d20260101"): RunResult = {
+    val extracts: Seq[(String, () => DataFrame)] = Seq(
+      "sales"     -> (() => Tables.sales(spark, srcDir)
+        .withColumn("sale_ts", col("sale_ts").cast("string"))),
+      "customers" -> (() => Tables.customers(spark, srcDir)),
+      "products"  -> (() => Tables.products(spark, srcDir)),
+      "stores"    -> (() => Tables.stores(spark, srcDir)))
+    val pool = new RunPool(extracts.size)
+    try {
+      // 1-2. per table, one chain: extract → bronze CSV (the reference
+      //    extracts each source table to CSV) → explicit-schema CSV read →
+      //    clean → partitioned snappy parquet (transform.py semantics) →
+      //    THIS run's snapshot, read once: with dynamic partition overwrite
+      //    the lake accumulates one load_date partition per daily tick, and
+      //    a run's DQ/gold read their own partition (pruned at the
+      //    directory level), never a mix of loads
+      val chains = pool.all(extracts) { case (name, extract) =>
+        val bronze = ParquetSink.layerPath(lakeBase, "bronze", name)
+        CsvSource.write(extract(), bronze)
+        val cleaned = Silver
+          .clean(CsvSource.read(spark, bronze, retailSchemas(name)),
+            dateCols = Seq("sale_ts"))
+          .withColumn("load_date", lit(loadDate))
+        val path = ParquetSink.layerPath(lakeBase, "silver", name)
+        ParquetSink.writePartitioned(cleaned, path, Seq("load_date"))
+        (name, path, spark.read.parquet(path)
+          .where(col("load_date") === loadDate).drop("load_date"))
+      }
+      val silverPaths = chains.map { case (name, path, _) => name -> path }.toMap
+      val silver = chains.map { case (name, _, df) => name -> df }.toMap
 
-    // 1. extract → bronze (reference extracts each source table to CSV)
-    val sources = Map(
-      "sales"     -> Tables.sales(spark, srcDir)
-        .withColumn("sale_ts", col("sale_ts").cast("string")),
-      "customers" -> Tables.customers(spark, srcDir),
-      "products"  -> Tables.products(spark, srcDir),
-      "stores"    -> Tables.stores(spark, srcDir))
-    sources.foreach { case (name, df) =>
-      CsvSource.write(df, ParquetSink.layerPath(lakeBase, "bronze", name))
+      // 3. quality gate on the silver layer, a barrier between silver and
+      //    gold: single-pass rule checks plus referential integrity
+      //    (orphan FK rows via broadcast anti-joins)
+      val sales = silver("sales")
+      val rules = DataQuality
+        .genericRules(sales, silver("customers"), silver("products"))
+        .select("check_name", "passed")
+      val refs = Seq(
+        ("customers", "customer_id"), ("products", "product_id"),
+        ("stores", "store_id")).map { case (dim, fk) =>
+        DataQuality.orphanCheck(s"sales_${fk}_fk", sales, fk,
+          silver(dim).select(fk))
+          .select(col("fk_name").as("check_name"), col("passed"))
+      }.reduce(_ unionAll _)
+      val dqPassed = rules.unionAll(refs)
+        .agg(min(col("passed"))).head.getBoolean(0)
+
+      // 4. gold aggregates from silver, written in the S3 layout
+      val gold = Seq(
+        "daily_sales_summary" -> Gold.dailySalesSummaryOf(sales),
+        "top_customers"       -> Gold.topCustomersOf(sales, silver("customers")),
+        "product_performance" -> Gold.productPerformanceOf(sales, silver("products")),
+        "store_performance"   -> Gold.storePerformanceOf(sales, silver("stores")))
+      val goldPaths = pool.all(gold) { case (name, df) =>
+        name -> ParquetSink.writeGold(df, lakeBase, name)
+      }.toMap
+
+      // 5. catalog registration (Glue analog): gold tables by name, read
+      //    concurrently, registered on the calling thread
+      pool.all(goldPaths.toSeq) { case (name, path) => name -> spark.read.parquet(path) }
+        .foreach { case (name, df) => df.createOrReplaceTempView(name) }
+
+      // 6. the Athena business queries over the registered gold layer
+      val analytics = Map(
+        "daily_revenue"       -> Athena.dailyRevenueOf(spark.table("daily_sales_summary")),
+        "top_performing_customers" ->
+          Athena.topPerformingCustomersOf(spark.table("top_customers")),
+        "product_analysis"    -> Athena.productAnalysisOf(spark.table("product_performance")),
+        "revenue_by_category" -> Athena.revenueByCategoryOf(spark.table("product_performance")))
+
+      RunResult(silverPaths, goldPaths, dqPassed, analytics)
+    } finally pool.close()
+  }
+
+  /** The worker threads of one [[run]], one per source table. The calling
+    * thread starts each worker when it first submits work, so the worker
+    * inherits the caller's Spark local properties (job group, job tags)
+    * as they are during this run; a pool that outlived the run would
+    * carry them into later runs' jobs. */
+  private final class RunPool(size: Int) {
+    private val threads = new ConcurrentLinkedQueue[Thread]()
+    private val pool = Executors.newFixedThreadPool(size, { (r: Runnable) =>
+      val t = new Thread(r, s"graft-pipeline-${threads.size + 1}")
+      t.setDaemon(true)
+      threads.add(t)
+      t
+    })
+
+    /** `f` over `items`, concurrently. Waits for EVERY task, also after
+      * one has failed: a failed attempt must not go on writing into the
+      * lake while [[withRetries]] starts the next. Returns the results in
+      * item order, or rethrows the first failure in item order as thrown
+      * (not wrapped in an ExecutionException). */
+    def all[A, B](items: Seq[A])(f: A => B): Seq[B] =
+      items.map(a => pool.submit(new Callable[B] { def call(): B = f(a) }))
+        .map(task => Try(task.get()).recoverWith {
+          case e: ExecutionException => Failure(e.getCause)
+        })
+        .map(_.get)
+
+    /** Returns once every worker thread has exited. */
+    def close(): Unit = {
+      pool.shutdown()
+      threads.forEach(_.join())
     }
-
-    // 2. transform → silver: explicit-schema CSV read, clean, partitioned
-    //    snappy parquet (transform.py semantics)
-    val silver = sources.keys.map { name =>
-      val cleaned = Silver
-        .clean(
-          CsvSource.read(spark, ParquetSink.layerPath(lakeBase, "bronze", name),
-            retailSchemas(name)),
-          dateCols = Seq("sale_ts"))
-        .withColumn("load_date", lit(loadDate))
-      val path = ParquetSink.layerPath(lakeBase, "silver", name)
-      ParquetSink.writePartitioned(cleaned, path, Seq("load_date"))
-      name -> path
-    }.toMap
-
-    // THIS run's snapshot only: with dynamic partition overwrite the
-    // lake accumulates one load_date partition per daily tick, and a
-    // run's DQ/gold read their own partition (pruned at the directory
-    // level), never a mix of loads
-    def silverTable(name: String): DataFrame =
-      spark.read.parquet(silver(name))
-        .where(col("load_date") === loadDate).drop("load_date")
-
-    // 3. quality gate on the silver layer: single-pass rule checks plus
-    //    referential integrity (orphan FK rows via broadcast anti-joins)
-    val sales = silverTable("sales")
-    val rules = DataQuality
-      .genericRules(sales, silverTable("customers"), silverTable("products"))
-      .select("check_name", "passed")
-    val refs = Seq(
-      ("customers", "customer_id"), ("products", "product_id"),
-      ("stores", "store_id")).map { case (dim, fk) =>
-      DataQuality.orphanCheck(s"sales_${fk}_fk", sales, fk,
-        silverTable(dim).select(fk))
-        .select(col("fk_name").as("check_name"), col("passed"))
-    }.reduce(_ unionAll _)
-    val dqPassed = rules.unionAll(refs)
-      .agg(min(col("passed"))).head.getBoolean(0)
-
-    // 4. gold aggregates from silver, written in the S3 layout
-    val gold = Map(
-      "daily_sales_summary" -> Gold.dailySalesSummaryOf(sales),
-      "top_customers"       -> Gold.topCustomersOf(sales, silverTable("customers")),
-      "product_performance" -> Gold.productPerformanceOf(sales, silverTable("products")),
-      "store_performance"   -> Gold.storePerformanceOf(sales, silverTable("stores")))
-    val goldPaths = gold.map { case (name, df) =>
-      name -> ParquetSink.writeGold(df, lakeBase, name)
-    }
-
-    // 5. catalog registration (Glue analog): gold tables by name
-    goldPaths.foreach { case (name, path) =>
-      spark.read.parquet(path).createOrReplaceTempView(name)
-    }
-
-    // 6. the Athena business queries over the registered gold layer
-    val analytics = Map(
-      "daily_revenue"       -> Athena.dailyRevenueOf(spark.table("daily_sales_summary")),
-      "top_performing_customers" ->
-        Athena.topPerformingCustomersOf(spark.table("top_customers")),
-      "product_analysis"    -> Athena.productAnalysisOf(spark.table("product_performance")),
-      "revenue_by_category" -> Athena.revenueByCategoryOf(spark.table("product_performance")))
-
-    RunResult(silver, goldPaths, dqPassed, analytics)
   }
 
   /** The reference DAG's operational contract
@@ -162,7 +205,7 @@ object Pipeline {
   def loadedDates(spark: SparkSession, lakeBase: String): Set[String] = {
     val p = new org.apache.hadoop.fs.Path(
       ParquetSink.layerPath(lakeBase, "silver", "sales"))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) Set.empty
     else fs.listStatus(p).iterator
       .map(_.getPath.getName)

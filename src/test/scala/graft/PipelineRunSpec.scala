@@ -1,10 +1,58 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 import graft.operators.Gold
 
 class PipelineRunSpec extends SparkSpec {
+
+  /** (rows, order-insensitive content hash) of each gold table. */
+  private def goldHashes(r: Pipeline.RunResult): Map[String, (Long, String)] =
+    r.goldTables.map { case (name, path) =>
+      val df = spark.read.parquet(path)
+      val cols = df.columns.sorted.map(col).toSeq
+      val h = df.select(sha2(to_json(struct(cols: _*)), 256).as("h"))
+        .agg(sum(conv(substring(col("h"), 1, 15), 16, 10).cast("decimal(38,0)")))
+        .head().getDecimal(0).toString
+      name -> (df.count(), h)
+    }
+
+  /** Each job's value of the local property `key` and its end time, as a
+    * listener sees them. */
+  private final class JobLog(key: String) extends SparkListener {
+    final class Job(val tag: String) { @volatile var end = Long.MaxValue }
+    private val jobs = TrieMap[Int, Job]()
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs(j.jobId) = new Job(Option(j.properties).map(_.getProperty(key)).orNull)
+    override def onJobEnd(j: SparkListenerJobEnd): Unit =
+      jobs.get(j.jobId).foreach(_.end = j.time)
+
+    /** The jobs seen since the last call. Runs a marker job first and
+      * waits until its end arrives: the bus delivers a listener's events
+      * in order, so every job event posted before it has arrived too. */
+    def drain(): Seq[Job] = {
+      val sc = spark.sparkContext
+      val saved = sc.getLocalProperty(key)
+      sc.setLocalProperty(key, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, saved)
+      eventually(timeout(30.seconds)) {
+        assert(jobs.values.exists(j => j.tag == "marker" && j.end < Long.MaxValue))
+      }
+      val seen = jobs.values.filter(_.tag != "marker").toSeq
+      jobs.clear()
+      seen
+    }
+  }
+
+  private def pipelineThreads(): Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-pipeline-") && t.isAlive).toSet
 
   test("full medallion run: bronze CSV -> silver -> DQ -> gold -> analytics") {
     val lake = Files.createTempDirectory("graft_lake").toString
@@ -39,15 +87,6 @@ class PipelineRunSpec extends SparkSpec {
     // a second run over the same input into the same lakeBase must
     // leave byte-identical gold content, not append or drift
     val lake = Files.createTempDirectory("graft_lake2").toString
-    def goldHashes(r: Pipeline.RunResult): Map[String, (Long, String)] =
-      r.goldTables.map { case (name, path) =>
-        val df = spark.read.parquet(path)
-        val cols = df.columns.sorted.map(col).toSeq
-        val h = df.select(sha2(to_json(struct(cols: _*)), 256).as("h"))
-          .agg(sum(conv(substring(col("h"), 1, 15), 16, 10).cast("decimal(38,0)")))
-          .head().getDecimal(0).toString
-        name -> (df.count(), h)
-      }
     val first = goldHashes(Pipeline.run(spark, sfDir, lake))
     def catalogState(): Map[String, Long] =
       Seq("daily_sales_summary", "top_customers", "product_performance",
@@ -56,6 +95,57 @@ class PipelineRunSpec extends SparkSpec {
     val second = goldHashes(Pipeline.run(spark, sfDir, lake))
     assert(second == first, "second run changed gold content")
     assert(catalogState() == firstCat, "second run changed catalog state")
+  }
+
+  test("a failed table chain: its own exception, every task joined, a clean rerun") {
+    // the stores chain fails at its extract (no supplier table) while the
+    // other three chains are writing bronze and silver
+    val partial = Files.createTempDirectory("graft_src_partial")
+    Files.list(Paths.get(sfDir)).iterator.asScala
+      .filter(_.getFileName.toString != "supplier.parquet")
+      .foreach(f => Files.createSymbolicLink(partial.resolve(f.getFileName), f))
+    val lake = Files.createTempDirectory("graft_lake_fail").toString
+    val log = new JobLog("graft.test.run")
+    spark.sparkContext.addSparkListener(log)
+    try {
+      log.drain()
+      val e = intercept[AnalysisException](Pipeline.run(spark, partial.toString, lake))
+      val returned = System.currentTimeMillis()
+      assert(e.getMessage.contains("supplier.parquet"), e.getMessage)
+      assert(pipelineThreads().isEmpty, "a pool thread outlived the run")
+      val jobs = log.drain()
+      assert(jobs.nonEmpty && jobs.forall(_.end <= returned),
+        "a job of the failed run was still running when it returned")
+      eventually(timeout(10.seconds)) {
+        assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+      }
+    } finally spark.sparkContext.removeSparkListener(log)
+    // the retry into the half-written lake lands what a fresh lake gets
+    val rerun = goldHashes(Pipeline.run(spark, sfDir, lake))
+    val fresh = goldHashes(Pipeline.run(spark, sfDir,
+      Files.createTempDirectory("graft_lake_fresh").toString))
+    assert(rerun == fresh)
+  }
+
+  test("every job of a run carries the caller's local properties, fresh each run") {
+    // perfbench attributes jobs by the local properties of the thread that
+    // calls run; a pool that outlived a run would tag the next run's jobs
+    // with the values its threads were created under
+    val key = "graft.test.run"
+    val log = new JobLog(key)
+    val sc = spark.sparkContext
+    sc.addSparkListener(log)
+    try {
+      log.drain()
+      def tagsOfRun(tag: String): Set[String] = {
+        sc.setLocalProperty(key, tag)
+        try Pipeline.run(spark, sfDir, Files.createTempDirectory("graft_lake_tag").toString)
+        finally sc.setLocalProperty(key, null)
+        log.drain().map(_.tag).toSet
+      }
+      assert(tagsOfRun("first") == Set("first"))
+      assert(tagsOfRun("second") == Set("second"))
+    } finally sc.removeSparkListener(log)
   }
 
   test("scheduling calendar: @daily processes yesterday only, catchup=False never backfills") {
