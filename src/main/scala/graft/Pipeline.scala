@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors}
-import scala.util.{Failure, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -65,7 +63,7 @@ object Pipeline {
       "customers" -> (() => Tables.customers(spark, srcDir)),
       "products"  -> (() => Tables.products(spark, srcDir)),
       "stores"    -> (() => Tables.stores(spark, srcDir)))
-    val pool = new RunPool(extracts.size)
+    val pool = new RunPool(extracts.size, "graft-pipeline")
     try {
       // 1-2. per table, one chain: extract → bronze CSV (the reference
       //    extracts each source table to CSV) → explicit-schema CSV read →
@@ -131,39 +129,6 @@ object Pipeline {
 
       RunResult(silverPaths, goldPaths, dqPassed, analytics)
     } finally pool.close()
-  }
-
-  /** The worker threads of one [[run]], one per source table. The calling
-    * thread starts each worker when it first submits work, so the worker
-    * inherits the caller's Spark local properties (job group, job tags)
-    * as they are during this run; a pool that outlived the run would
-    * carry them into later runs' jobs. */
-  private final class RunPool(size: Int) {
-    private val threads = new ConcurrentLinkedQueue[Thread]()
-    private val pool = Executors.newFixedThreadPool(size, { (r: Runnable) =>
-      val t = new Thread(r, s"graft-pipeline-${threads.size + 1}")
-      t.setDaemon(true)
-      threads.add(t)
-      t
-    })
-
-    /** `f` over `items`, concurrently. Waits for EVERY task, also after
-      * one has failed: a failed attempt must not go on writing into the
-      * lake while [[withRetries]] starts the next. Returns the results in
-      * item order, or rethrows the first failure in item order as thrown
-      * (not wrapped in an ExecutionException). */
-    def all[A, B](items: Seq[A])(f: A => B): Seq[B] =
-      items.map(a => pool.submit(new Callable[B] { def call(): B = f(a) }))
-        .map(task => Try(task.get()).recoverWith {
-          case e: ExecutionException => Failure(e.getCause)
-        })
-        .map(_.get)
-
-    /** Returns once every worker thread has exited. */
-    def close(): Unit = {
-      pool.shutdown()
-      threads.forEach(_.join())
-    }
   }
 
   /** The reference DAG's operational contract

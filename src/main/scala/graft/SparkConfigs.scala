@@ -31,6 +31,10 @@ object SparkConfigs {
   /** Cluster profile: apply on top of a cluster-master builder. */
   def cluster100TB(builder: SparkSession.Builder): SparkSession.Builder =
     builder
+      // register graft's native functions once at session build (the
+      // supported deployment path, see GraftExtensions) — otherwise each
+      // one registers through the per-call Registration fallback
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       // AQE re-plans with runtime statistics: coalesces small shuffle
       // partitions, converts to broadcast when a side turns out small,
       // and splits skewed join partitions — all three matter at 100 TB.

@@ -329,11 +329,6 @@ object HtmlExtract {
     org.apache.spark.sql.functions.call_function("graft_html_text", html)
   }
 
-  def statsCol(spark: SparkSession, html: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("graft_html_block_stats", html)
-  }
-
   def parsedCol(spark: SparkSession, html: Column): Column = {
     register(spark)
     org.apache.spark.sql.functions.call_function("graft_html_parsed", html)

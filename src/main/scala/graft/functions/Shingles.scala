@@ -17,9 +17,6 @@ object Shingles {
     array_distinct(when(size(t) >= k, grams).otherwise(array()))
   }
 
-  /** Distinct tokens of a text column. */
-  def distinctTokens(text: Column): Column = array_distinct(split(text, " "))
-
   /** Native-codegen shingles (same semantics as [[wordShingles]]; one
     * pass, no interpreted higher-order functions — see [[WordShingles]]). */
   def wordShinglesNative(spark: org.apache.spark.sql.SparkSession,

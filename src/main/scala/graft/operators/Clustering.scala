@@ -81,17 +81,6 @@ object Clustering {
       .select(col("vec_id"), col("e"),
         col("m.cell").as("cell"), col("m.d2").as("d2"))
 
-  /** Train-once centroid cache, keyed by corpus dir (the
-    * [[Similarity.ivfCodebook]] contract: fit one time, reuse from
-    * every query; in a deployment the book persists next to the
-    * table). */
-  private val kmBooks = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, Seq[Double])]]()
-
-  /** Drop the cached book for a rewritten corpus dir (see
-    * [[Similarity.invalidateCorpus]]). */
-  private[operators] def invalidate(dir: String): Unit = kmBooks.remove(dir)
-
   /** Seeded deterministic init: the k vectors whose
     * [[Curation.portableHash]](vec_id) sorts smallest (ties to vec_id) —
     * a hash-ordered sample in the k-means‖ spirit. Seeds land
@@ -145,13 +134,16 @@ object Clustering {
     * rounds of assign + fixed-point mean update. Each round's collect
     * moves k×dim doubles of centroid metadata, never corpus rows; cells
     * that lose every member keep their previous centroid (deterministic,
-    * mirrored by the oracle's LEFT JOIN + COALESCE). */
+    * mirrored by the oracle's LEFT JOIN + COALESCE). Train-once: the
+    * book is an [[ArtifactCache]] value per corpus dir (the
+    * [[Similarity.ivfCodebook]] contract: fit one time, reuse from every
+    * query; in a deployment the book persists next to the table). */
   def kmeansCentroids(spark: SparkSession, dir: String): Seq[(Long, Seq[Double])] =
-    kmBooks.computeIfAbsent(dir, _ => {
+    ArtifactCache.value(spark, dir, "km_centroids") {
       val c = corpus(spark, dir)
       val k = kFor(Similarity.corpusCount(spark, dir))
       fit(spark, c, seedCentroids(c, k))
-    })
+    }
 
   /** Persist the trained centroid book next to the table (the
     * [[Similarity.saveIvfCodebook]] contract): one row per cell,
@@ -171,7 +163,7 @@ object Clustering {
     val book = spark.read.parquet(path).orderBy("cell").collect()
       .map(r => (r.getLong(0),
         r.getAs[scala.collection.Seq[Double]]("centroid").toSeq)).toSeq
-    kmBooks.put(dir, book)
+    ArtifactCache.put(spark, dir, "km_centroids", book)
     book
   }
 

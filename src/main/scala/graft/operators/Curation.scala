@@ -274,14 +274,6 @@ object Curation {
     m
   }
 
-  /** Drop the cached artifacts for a corpus dir rewritten in place —
-    * ALL of them, not just the map: the map derives from the cached
-    * ngram pair list (and the containment/minhash pair lists cover the
-    * same corpus), so a name-at-a-time drop would re-derive the map
-    * from stale upstreams. */
-  def invalidateClusterMap(spark: SparkSession, dir: String): Unit =
-    ArtifactCache.invalidateDir(spark, dir)
-
   /** (doc_id, cluster_id) for EVERY document from a label fixpoint over
     * the near-dup pairs (docs in no pair are their own cluster). */
   private def resolveClusters(spark: SparkSession, dir: String,

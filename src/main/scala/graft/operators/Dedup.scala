@@ -648,9 +648,9 @@ object Dedup {
     * banding calibration) reads it without re-signing the corpus.
     * Unlike the cluster map there is no safe resolution against a
     * changed corpus — a signature is a function of the text — so after
-    * any in-place corpus rewrite call
-    * [[graft.operators.Curation.invalidateClusterMap]] (whole-dir) and
-    * re-derive rather than loading a stale index. Returns the index. */
+    * any in-place corpus rewrite call [[ArtifactCache.invalidateDir]]
+    * and re-derive rather than loading a stale index. Returns the
+    * index. */
   def loadMinhashIndex(spark: SparkSession, dir: String,
       path: String): DataFrame = {
     val idx = spark.read.parquet(path)
@@ -1284,14 +1284,12 @@ object Dedup {
     lanes
   }
 
-  /** documents-table row count per dir, cached for the JVM lifetime
-    * (the [[Similarity.corpusCount]] contract: immutable corpus per
-    * dir; width derivation needs n before plan construction). */
-  private val docCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** documents-table row count per dir and session, an
+    * [[ArtifactCache]] value (the [[Similarity.corpusCount]] contract:
+    * width derivation needs n before plan construction). */
   private def docCount(spark: SparkSession, dir: String): Long =
-    docCounts.computeIfAbsent(dir,
-      _ => Tables.table(spark, dir, "documents").count())
+    ArtifactCache.value(spark, dir, "doc_count")(
+      Tables.table(spark, dir, "documents").count())
 
   /** SimHash: width-scaled signature from token-hash bit voting (native
     * per-row expression — a pure map, no shuffle); candidate pairs via
@@ -1337,8 +1335,9 @@ object Dedup {
     * `dir`. Same staleness contract as [[loadMinhashIndex]]: a
     * signature is a function of the text (and of the width schedule
     * [[simhashLanesFor]], which is a function of the corpus count), so
-    * after any in-place corpus rewrite invalidate the dir and
-    * re-derive rather than loading a stale table. Returns the table. */
+    * after any in-place corpus rewrite call
+    * [[ArtifactCache.invalidateDir]] and re-derive rather than loading
+    * a stale table. Returns the table. */
   def loadSimhashSigs(spark: SparkSession, dir: String,
       path: String): DataFrame = {
     val sigs = spark.read.parquet(path)

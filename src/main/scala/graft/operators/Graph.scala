@@ -469,8 +469,9 @@ object Graph {
   /** Load persisted pair counts and prime the cache for `dir`, so
     * every graph analytic reads the materialization without re-running
     * the basket self-join. Counts are a function of the fact table —
-    * after an in-place rewrite, invalidate the dir and re-derive
-    * rather than loading a stale table. Returns the counts. */
+    * after an in-place rewrite, call [[ArtifactCache.invalidateDir]]
+    * and re-derive rather than loading a stale table. Returns the
+    * counts. */
   def loadPairCounts(spark: SparkSession, dir: String,
       path: String): DataFrame = {
     val pc = spark.read.parquet(path)

@@ -41,13 +41,6 @@ object Multimodal {
     }
   }
 
-  /** Partition-parallel metadata extraction — the batch shape a real
-    * decoder needs (iterator in, iterator out, no per-row JNI setup). */
-  def extractMeta(ds: Dataset[MediaRecord], decoder: MediaDecoder): Dataset[MediaMeta] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions(_.map(decoder.decode))
-  }
-
   /** Real container-header parsing — pure-JVM magic-number decode of
     * PNG (IHDR) and JPEG (SOF0-3 after marker-segment skipping), no
     * codec libraries. This is the part of "decode" a metadata pass

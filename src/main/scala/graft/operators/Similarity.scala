@@ -78,29 +78,16 @@ object Similarity {
     math.min(LshMaxTables, math.ceil(
       LshTables * math.pow(1.0 / LshBitCollisionP, (bits - LshBits).toDouble)).toInt)
 
-  /** Corpus row count, computed once per dir (one zero-column count job
-    * — parquet answers it from row-group metadata, no value pages read)
-    * and cached for the JVM lifetime: the LSH/IVF parameter derivations
-    * need n before plan construction. The cache assumes an IMMUTABLE
-    * corpus per dir (the lake contract everywhere in this repo:
-    * snapshots are written to new paths, never rewritten in place); a
-    * process that does rewrite a dir must call [[invalidateCorpus]] so
-    * derived parameters and codebooks refit against the new n. */
-  private val corpusSizes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** Corpus row count, computed once per dir and session (one
+    * zero-column count job — parquet answers it from row-group metadata,
+    * no value pages read; an [[ArtifactCache]] value): the LSH/IVF
+    * parameter derivations need n before plan construction. A process
+    * that rewrites a dir in place must call
+    * [[ArtifactCache.invalidateDir]] so derived parameters and codebooks
+    * refit against the new n. */
   def corpusCount(spark: SparkSession, dir: String): Long =
-    corpusSizes.computeIfAbsent(dir,
-      _ => Tables.table(spark, dir, "embeddings").count())
-
-  /** Drop every per-dir cache (row count, IVF codebook, PQ codebooks,
-    * and the k-means books in [[Clustering]]) for a corpus dir that has
-    * been rewritten in place. */
-  def invalidateCorpus(dir: String): Unit = {
-    corpusSizes.remove(dir)
-    codebooks.remove(dir)
-    pqBooks.remove(dir)
-    Clustering.invalidate(dir)
-  }
+    ArtifactCache.value(spark, dir, "emb_count")(
+      Tables.table(spark, dir, "embeddings").count())
 
   /** Corpus with the norm precomputed once per row (never per pair). */
   private[graft] def corpus(spark: SparkSession, dir: String): DataFrame = {
@@ -199,8 +186,9 @@ object Similarity {
     * re-signing the corpus. Signatures are a function of the embedding
     * values AND of the derived width schedule
     * ([[lshBitsFor]]/[[lshTablesFor]], functions of the corpus count),
-    * so after any in-place corpus rewrite invalidate the dir and
-    * re-derive rather than loading a stale table. Returns the table. */
+    * so after any in-place corpus rewrite call
+    * [[ArtifactCache.invalidateDir]] and re-derive rather than loading
+    * a stale table. Returns the table. */
   def loadLshSigs(spark: SparkSession, dir: String,
       path: String): DataFrame = {
     val sigs = spark.read.parquet(path)
@@ -348,14 +336,6 @@ object Similarity {
     math.max(IvfProbes,
       math.ceil(IvfProbes * math.sqrt(cells.toDouble / IvfCells)).toInt)
 
-  /** Train-once codebook cache, keyed by corpus dir: the quantizer is
-    * fit ONE time per corpus on a deterministic sample and the (tiny)
-    * codebook is reused by every subsequent query — in a deployment the
-    * codebook would be persisted next to the table and loaded, never
-    * refit on the query path. */
-  private val codebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Double]]]()
-
   /** Deterministic quantizer-training sample: every row whose portable
     * id hash lands in the 1-in-`max(1, n/target)` bucket — replayable
     * arithmetic (the exact rows are a function of vec_id alone), unlike
@@ -375,8 +355,10 @@ object Similarity {
     * instead of requiring recall 1.0. Book order = seed vec_id order
     * (what [[Clustering.fit]] returns), so a centroid's ARRAY INDEX —
     * the cell id [[graft.functions.NearestCells]] emits — is
-    * deterministic too. Keyed by dir ALONE (one book per corpus —
-    * mirroring `Clustering.kmBooks`): a book primed by
+    * deterministic too. The book is fit ONE time per corpus on the
+    * sample and reused by every later query (an [[ArtifactCache]]
+    * value). Keyed by dir ALONE (one book per corpus, like
+    * [[Clustering.kmeansCentroids]]): a book primed by
     * [[loadIvfCodebook]] always wins over a refit, even if its cell
     * count differs from today's derived `ivfCellsFor(n)`, so a
     * persisted book can never be silently ignored. Query paths read
@@ -385,7 +367,7 @@ object Similarity {
     * force. */
   def ivfCodebook(spark: SparkSession, dir: String,
       cells: Int = IvfCells): Seq[Seq[Double]] =
-    codebooks.computeIfAbsent(dir, _ => {
+    ArtifactCache.value(spark, dir, "ivf_codebook") {
       val c = corpus(spark, dir)
       val n = corpusCount(spark, dir)
       val target = math.max(IvfTrainTarget, IvfTrainPerCell * cells)
@@ -393,7 +375,7 @@ object Similarity {
         c.select(col("vec_id"), col("embedding").as("e")), n, target)
       Clustering.fit(spark, smp, Clustering.seedCentroids(smp, cells))
         .map(_._2)
-    })
+    }
 
   /** IVF search: corpus partitioned by nearest-centroid cell, queries
     * probe the `IvfProbes` nearest cells, exact rerank inside the probed
@@ -447,7 +429,7 @@ object Similarity {
   def loadIvfCodebook(spark: SparkSession, dir: String, path: String): Seq[Seq[Double]] = {
     val book = spark.read.parquet(path).orderBy("cell").collect()
       .map(_.getAs[scala.collection.Seq[Double]]("centroid").toSeq).toSeq
-    codebooks.put(dir, book)
+    ArtifactCache.put(spark, dir, "ivf_codebook", book)
     book
   }
 
@@ -464,19 +446,16 @@ object Similarity {
     * exact rerank. */
   val PqRerank: Int = TopK * 8
 
-  private val pqBooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Seq[Double]]]]()
-
   /** Train-once PQ codebooks (one [[PqCodesK]]-centroid k-means per
     * [[PqSubDim]]-dim subspace, fit on the deterministic hash sample,
-    * cached per corpus dir — the same persist-don't-refit discipline as
-    * [[ivfCodebook]]). Each subspace book comes from the SAME
-    * [[Clustering.fit]] fixed-point Lloyd as the IVF coarse book
-    * (hash-ordered seeds over the sliced sample, fixed rounds, decimal
-    * means), so the `ann_topk_pq` oracle replays all [[PqSubspaces]]
-    * trainings arithmetically. */
+    * cached per corpus dir and session as an [[ArtifactCache]] value —
+    * the same persist-don't-refit discipline as [[ivfCodebook]]). Each
+    * subspace book comes from the SAME [[Clustering.fit]] fixed-point
+    * Lloyd as the IVF coarse book (hash-ordered seeds over the sliced
+    * sample, fixed rounds, decimal means), so the `ann_topk_pq` oracle
+    * replays all [[PqSubspaces]] trainings arithmetically. */
   def pqCodebooks(spark: SparkSession, dir: String): Seq[Seq[Seq[Double]]] =
-    pqBooks.computeIfAbsent(dir, _ => {
+    ArtifactCache.value(spark, dir, "pq_codebooks") {
       val c = corpus(spark, dir)
       val n = corpusCount(spark, dir)
       // lineage cut: 16 subspace fits × 2 rounds each re-read this frame
@@ -486,20 +465,18 @@ object Similarity {
       // the 16 subspace fits are independent chains of tiny jobs —
       // submit them concurrently (Spark's scheduler interleaves jobs
       // from multiple threads) instead of paying 16 × per-job latency
-      // sequentially; results are positionally ordered, so the books
-      // are byte-identical to the sequential build
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      Await.result(Future.sequence((0 until PqSubspaces).map { m =>
-        Future {
-          val sub = smp.select(col("vec_id"),
-            slice(col("embedding"), m * PqSubDim + 1, PqSubDim).as("e"))
-          Clustering.fit(spark, sub, Clustering.seedCentroids(sub, PqCodesK))
-            .map(_._2)
-        }
-      }.toSeq), Duration.Inf)
-    })
+      // sequentially, on a pool of this training's own (see RunPool);
+      // results are positionally ordered, so the books are
+      // byte-identical to the sequential build
+      val pool = new graft.RunPool(
+        math.min(PqSubspaces, Runtime.getRuntime.availableProcessors()), "graft-pq")
+      try pool.all(0 until PqSubspaces) { m =>
+        val sub = smp.select(col("vec_id"),
+          slice(col("embedding"), m * PqSubDim + 1, PqSubDim).as("e"))
+        Clustering.fit(spark, sub, Clustering.seedCentroids(sub, PqCodesK))
+          .map(_._2)
+      } finally pool.close()
+    }
 
   /** Persist the PQ sub-codebooks (same contract as [[saveIvfCodebook]]):
     * one row per (subspace, code) sub-centroid. */
@@ -520,7 +497,7 @@ object Similarity {
         rs.sortBy(_.getAs[Int]("code"))
           .map(_.getAs[scala.collection.Seq[Double]]("centroid").toSeq).toSeq
       }
-    pqBooks.put(dir, books)
+    ArtifactCache.put(spark, dir, "pq_codebooks", books)
     books
   }
 

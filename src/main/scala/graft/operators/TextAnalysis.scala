@@ -1217,16 +1217,11 @@ object TextAnalysis {
       .orderBy("merge_idx")
   }
 
-  private val bpeBooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Vector[(Int, String, String, Long)]]()
-
-  /** Drop the cached merge table for a corpus dir rewritten in place. */
-  def invalidateBpe(dir: String): Unit = bpeBooks.remove(dir)
-
-  /** The trained merge table, computed once per corpus dir. */
+  /** The trained merge table, computed once per corpus dir and session
+    * (an [[ArtifactCache]] value). */
   private[graft] def bpeMergesFor(spark: SparkSession,
       dir: String): Vector[(Int, String, String, Long)] =
-    bpeBooks.computeIfAbsent(dir, _ => trainBpeMerges(spark, dir))
+    ArtifactCache.value(spark, dir, "bpe_merges")(trainBpeMerges(spark, dir))
 
   private def trainBpeMerges(spark: SparkSession,
       dir: String): Vector[(Int, String, String, Long)] =
@@ -1531,16 +1526,6 @@ object TextAnalysis {
   private def gradSum(c: Column): Column =
     sum(floor(c * lit(1e9)).cast(DecimalType(28, 0))).cast("double")
 
-  /** Trained (means, weights) per corpus dir — the driver-resident
-    * model artifact (4 + 3 doubles; the [[Similarity]] codebook
-    * persist/load contract applies if a restarted driver must skip
-    * retraining). */
-  private val lrModels = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Double], Array[Double])]()
-
-  /** Drop the cached model for a corpus dir rewritten in place. */
-  def invalidateQualityLr(dir: String): Unit = lrModels.remove(dir)
-
   /** Feature/label frame for [[qualityLr]]: the three INDEPENDENT
     * ensemble families as features, the ensemble keep flag as the
     * training label (heuristic distillation — the production bootstrap
@@ -1564,10 +1549,14 @@ object TextAnalysis {
     * sigmoid σ̃(z) = 0.5 + 0.5·z/(1+|z|): one divide and one abs, so
     * every engine computes bit-identical probabilities — libm exp
     * (whose last-ulp behavior differs across engines) never enters.
-    * Returns (feature means, weights [bias, w1, w2, w3]). */
+    * Returns (feature means, weights [bias, w1, w2, w3]): the
+    * driver-resident model artifact (3 + 4 doubles), trained once per
+    * corpus dir and session (an [[ArtifactCache]] value; the
+    * [[Similarity]] codebook persist/load contract applies if a
+    * restarted driver must skip retraining). */
   private[graft] def qualityLrModel(spark: SparkSession,
       dir: String): (Array[Double], Array[Double]) =
-    lrModels.computeIfAbsent(dir, _ => {
+    ArtifactCache.value(spark, dir, "quality_lr_model") {
       val f = qualityLrFeatures(spark, dir)
       val m = f.agg(gradSum(col("x1")), gradSum(col("x2")),
         gradSum(col("x3")), count(lit(1)).cast("double")).head()
@@ -1588,7 +1577,7 @@ object TextAnalysis {
         }
       }
       (mu, w)
-    })
+    }
 
   /** Persist the trained quality-LR model (3 means + 4 weights) — the
     * IVF-codebook train-once contract: a restarted driver loads the
@@ -1617,7 +1606,7 @@ object TextAnalysis {
     val w = rows.filter(_._1 == "w").sortBy(_._2).map(_._3)
     require(mu.length == 3 && w.length == 4,
       s"malformed quality-LR model at $path: ${mu.length} means, ${w.length} weights")
-    lrModels.put(dir, (mu, w))
+    ArtifactCache.put(spark, dir, "quality_lr_model", (mu, w))
     (mu, w)
   }
 

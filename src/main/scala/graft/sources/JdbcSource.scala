@@ -116,11 +116,4 @@ object JdbcSource {
   def writer(df: DataFrame, cfg: JdbcWriteConfig,
       mode: String = "append"): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
     df.write.format("jdbc").mode(mode).options(writeOptions(cfg))
-
-  /** Load a frame into the warehouse table — [[extractTable]]'s
-    * mirror. `mode = "append"` inserts; `"overwrite"` replaces (with
-    * TRUNCATE when `cfg.truncate`). */
-  def loadTable(df: DataFrame, cfg: JdbcWriteConfig,
-      mode: String = "append"): Unit =
-    writer(df, cfg, mode).save()
 }

@@ -1,13 +1,16 @@
 package graft
 
+import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.operators.ArtifactCache
+import graft.operators.{ArtifactCache, Similarity, TextAnalysis}
+import graft.sources.Tables
 
 /** Direct contract tests for the trained-artifact cache — the
   * consumers' no-recompute proofs live with their operators
   * (CurationSpec, SimilaritySpec, FuzzyMatchSpec); this pins the cache
-  * semantics themselves: build-once, put-override, name- and dir-level
-  * invalidation. */
+  * semantics themselves, for tables ([[ArtifactCache.of]]) and
+  * driver-side values ([[ArtifactCache.value]]) alike: build-once,
+  * put-override, name- and dir-level invalidation. */
 class ArtifactCacheSpec extends SparkSpec {
 
   test("of() builds once per (dir, name) and serves the checkpoint after") {
@@ -25,6 +28,13 @@ class ArtifactCacheSpec extends SparkSpec {
     // a different name under the same dir builds independently
     ArtifactCache.of(spark, dir, "t2")(build())
     assert(builds == 2)
+    // a value built inside a table build (the IVF book inside an
+    // ann_topk_ivf build): nested builds on one map, each cached once
+    var valueBuilds = 0
+    def n() = ArtifactCache.value(spark, dir, "n") { valueBuilds += 1; 3L }
+    val t3 = ArtifactCache.of(spark, dir, "t3")(spark.range(n()).toDF("k"))
+    assert(t3.count() == 3L && n() == 3L && valueBuilds == 1)
+    assert(ArtifactCache.buildSeconds.contains(s"$dir|n"))
   }
 
   test("invalidateDir drops every artifact of the dir and nothing else") {
@@ -32,20 +42,27 @@ class ArtifactCacheSpec extends SparkSpec {
     val (da, db) = ("/cache-spec/corpus-b", "/cache-spec/corpus-c")
     var builds = 0
     def build() = { builds += 1; Seq((builds.toLong, "x")).toDF("k", "v") }
+    def nRows(dir: String) = ArtifactCache.value(spark, dir, "n_rows") {
+      builds += 1; builds.toLong
+    }
     ArtifactCache.of(spark, da, "pairs")(build())
     ArtifactCache.of(spark, da, "map")(build())
     ArtifactCache.of(spark, db, "pairs")(build())
-    assert(builds == 3)
+    nRows(da)
+    nRows(db)
+    assert(builds == 5)
     ArtifactCache.invalidateDir(spark, da)
-    // both of da's artifacts re-derive (the derivation-chain contract:
+    // every artifact of da re-derives (the derivation-chain contract:
     // a corpus rewrite may never leave a downstream artifact cached
     // against stale upstreams) ...
     ArtifactCache.of(spark, da, "pairs")(build())
     ArtifactCache.of(spark, da, "map")(build())
-    assert(builds == 5)
-    // ... while the other dir's stays warm
+    nRows(da)
+    assert(builds == 8)
+    // ... while the other dir's stay warm
     ArtifactCache.of(spark, db, "pairs")(build())
-    assert(builds == 5)
+    nRows(db)
+    assert(builds == 8)
   }
 
   test("put overrides the cached artifact (the load half of persist/load)") {
@@ -58,5 +75,38 @@ class ArtifactCacheSpec extends SparkSpec {
       sys.error("builder must not run after put"))
     assert(got.collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
       Seq((2L, "new")))
+    // a loaded value primes the cache the same way
+    ArtifactCache.put(spark, dir, "book", Seq(Seq(0.5, 1.5)))
+    assert(ArtifactCache.value[Seq[Seq[Double]]](spark, dir, "book")(
+      sys.error("builder must not run after put")) == Seq(Seq(0.5, 1.5)))
+  }
+
+  test("invalidateDir after an in-place rewrite: counts, codebooks and models match a fresh derivation") {
+    val base = Files.createTempDirectory("graft_rewrite").toString
+    val (dir, fresh) = (s"$base/corpus", s"$base/fresh")
+    /** Writes the embeddings and documents of sf0.001 to `to`, the rows
+      * with an id below `maxId` only. */
+    def write(to: String, maxId: Long): Unit =
+      Seq("embeddings" -> "vec_id", "documents" -> "doc_id").foreach { case (t, id) =>
+        Tables.table(spark, sfDir, t).where(col(id) < maxId)
+          .write.mode("overwrite").parquet(s"$to/$t.parquet")
+      }
+    def derive(d: String): (Long, Seq[String], Seq[String]) = (
+      Similarity.corpusCount(spark, d),
+      Similarity.annTopKIvf(spark, d).collect().map(_.toString).toSeq,
+      TextAnalysis.qualityLr(spark, d).collect().map(_.toString).toSeq)
+    write(dir, 300L)
+    val before = derive(dir)
+    // the corpus is rewritten in place with more rows, then invalidated
+    write(dir, Long.MaxValue)
+    ArtifactCache.invalidateDir(spark, dir)
+    val after = derive(dir)
+    write(fresh, Long.MaxValue)
+    val expected = derive(fresh)
+    assert(before._1 == 300L && expected._1 == 500L)
+    assert(before._2 != expected._2 && before._3 != expected._3)
+    assert(after._1 == expected._1, "stale corpus count")
+    assert(after._2 == expected._2, "ann_topk_ivf derived from a stale codebook")
+    assert(after._3 == expected._3, "txt_quality_lr from a stale model or features")
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.operators.{Curation, Dedup}
+import graft.operators.{ArtifactCache, Curation, Dedup}
 import graft.sources.Tables
 
 class CurationSpec extends SparkSpec {
@@ -131,7 +131,7 @@ class CurationSpec extends SparkSpec {
       "k-fold assignment did not ride the loaded cluster map")
     // invalidation re-opens the derivation path: scrambled texts have
     // no near-dup pairs, so every doc becomes its own cluster
-    Curation.invalidateClusterMap(spark, d2)
+    ArtifactCache.invalidateDir(spark, d2)
     val rederived = Curation.dedupComponents(spark, d2).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
     assert(rederived == expected.keys.map(k => k -> k).toMap)
@@ -156,7 +156,7 @@ class CurationSpec extends SparkSpec {
     val got = Curation.dedupComponents(spark, d2).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 9L -> 9L))
-    Curation.invalidateClusterMap(spark, d2)
+    ArtifactCache.invalidateDir(spark, d2)
   }
 
   test("shard report: stable assignment, every doc counted exactly once") {

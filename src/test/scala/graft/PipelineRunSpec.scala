@@ -8,7 +8,7 @@ import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
-import graft.operators.Gold
+import graft.operators.{ArtifactCache, Gold, Similarity}
 
 class PipelineRunSpec extends SparkSpec {
 
@@ -145,6 +145,36 @@ class PipelineRunSpec extends SparkSpec {
       }
       assert(tagsOfRun("first") == Set("first"))
       assert(tagsOfRun("second") == Set("second"))
+    } finally sc.removeSparkListener(log)
+  }
+
+  test("every job of a PQ training carries the caller's local properties, fresh each training") {
+    // the same one-pool-per-run rule as Pipeline.run: the 16 subspace
+    // fits run on a pool of the training's own, so a retrain after an
+    // invalidation tags its jobs with the caller's current values
+    val dir = Files.createTempDirectory("graft_pq_tags")
+    Files.createSymbolicLink(dir.resolve("embeddings.parquet"),
+      Paths.get(sfDir, "embeddings.parquet"))
+    val key = "graft.test.pq"
+    val log = new JobLog(key)
+    val sc = spark.sparkContext
+    sc.addSparkListener(log)
+    try {
+      log.drain()
+      def train(tag: String): (Set[String], Seq[Seq[Seq[Double]]]) = {
+        sc.setLocalProperty(key, tag)
+        val books = try Similarity.pqCodebooks(spark, dir.toString)
+          finally sc.setLocalProperty(key, null)
+        (log.drain().map(_.tag).toSet, books)
+      }
+      val (first, books1) = train("first")
+      ArtifactCache.invalidateDir(spark, dir.toString)
+      val (second, books2) = train("second")
+      assert(first == Set("first") && second == Set("second"))
+      assert(books1 == books2 && books1.size == Similarity.PqSubspaces)
+      assert(Thread.getAllStackTraces.keySet.asScala
+        .forall(t => !(t.getName.startsWith("graft-pq-") && t.isAlive)),
+        "a PQ training thread outlived its training")
     } finally sc.removeSparkListener(log)
   }
 

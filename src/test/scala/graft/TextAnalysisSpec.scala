@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.RollingHash
-import graft.operators.TextAnalysis
+import graft.operators.{ArtifactCache, TextAnalysis}
 import graft.sources.Tables
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -435,7 +435,7 @@ class TextAnalysisSpec extends SparkSpec {
     // (the IVF-codebook train-once contract)
     val path = java.nio.file.Files.createTempDirectory("graft_lr").toString + "/model"
     TextAnalysis.saveQualityLrModel(spark, sfDir, path)
-    TextAnalysis.invalidateQualityLr(sfDir)
+    ArtifactCache.invalidate(spark, sfDir, "quality_lr_model")
     val (mu2, w2) = TextAnalysis.loadQualityLrModel(spark, sfDir, path)
     assert(mu2.toSeq == mu.toSeq && w2.toSeq == w.toSeq)
     val rows2 = TextAnalysis.qualityLr(spark, sfDir).collect()
