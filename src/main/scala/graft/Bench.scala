@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
@@ -21,7 +22,11 @@ import org.apache.spark.sql.SparkSession
   * the artifact itself:
   *   - per-sweep HOST TELEMETRY — /proc/loadavg before/after and the
   *     /proc/stat busy-fraction delta over the sweep, so a slow sweep
-  *     on a loaded host is visibly a loaded-host sweep;
+  *     on a loaded host is visibly a loaded-host sweep, and the classes
+  *     Spark compiled during it (`codegen_compiles`); the host block
+  *     also names the session's `master`, `cores` and
+  *     `shuffle_partitions`, so runs at different core counts can be
+  *     told apart from the artifact alone;
   *   - an ISOLATED re-time of the slowest queries — after the sweeps,
   *     the top-`SPARK_GRAFT_BENCH_ISOLATE` (default 25) queries by min
   *     sweep time run again back-to-back (min of 2), giving a
@@ -120,8 +125,8 @@ object Bench {
     val isolateN = sys.env.get("SPARK_GRAFT_BENCH_ISOLATE")
       .map(_.toInt).getOrElse(25)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out/bench.json")
-    val spark = SparkConfigs.local(SparkSession.builder(),
-      SparkConfigs.cpusFromEnv(32)).getOrCreate()
+    val cores = SparkConfigs.cpusFromEnv(32)
+    val spark = SparkConfigs.local(SparkSession.builder(), cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warmup: JIT the scan/aggregate/noop paths so the first timed query
     // doesn't absorb compilation cost
@@ -144,9 +149,13 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
+    // classes Spark compiled (codegen cache misses); a warm sweep that
+    // still compiles means the cache is smaller than the working set
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val sweepTelemetry = (1 to iters).map { _ =>
       val (b0, t0j) = cpuJiffies
       val l0 = loadAvg
+      val c0 = compiles
       val w0 = System.nanoTime()
       names.foreach(n => times(n) = times(n) :+ runOnce(n))
       val (b1, t1j) = cpuJiffies
@@ -154,7 +163,7 @@ object Bench {
       val wall = (System.nanoTime() - w0) / 1e9
       val busyFrac =
         if (t1j > t0j) (b1 - b0).toDouble / (t1j - t0j).toDouble else -1.0
-      (wall, l0, l1, busyFrac)
+      (wall, l0, l1, busyFrac, compiles - c0)
     }
 
     // isolated steady-state re-times of the slowest queries: min of 2
@@ -198,11 +207,15 @@ object Bench {
       "rel_spread_allruns" -> relSpreadAll.toString))
     val host = obj(Seq(
       "cpus" -> Runtime.getRuntime.availableProcessors().toString,
+      "master" -> ("\"" + spark.sparkContext.master + "\""),
+      "cores" -> cores.toString,
+      "shuffle_partitions" -> spark.conf.get("spark.sql.shuffle.partitions"),
       "effective_cores" -> effectiveCores().toString,
       "sweep_wall_sec" -> sweepTelemetry.map(_._1).mkString("[", ",", "]"),
       "loadavg_pre" -> sweepTelemetry.map(_._2).mkString("[", ",", "]"),
       "loadavg_post" -> sweepTelemetry.map(_._3).mkString("[", ",", "]"),
-      "cpu_busy_frac" -> sweepTelemetry.map(_._4).mkString("[", ",", "]")))
+      "cpu_busy_frac" -> sweepTelemetry.map(_._4).mkString("[", ",", "]"),
+      "codegen_compiles" -> sweepTelemetry.map(_._5).mkString("[", ",", "]")))
     // cold-derivation visibility (r15 VERDICT #2): ArtifactCache-backed
     // queries pay the corpus-sized first derivation ONCE per JVM (the
     // train-once contract), so their per-query minima above are

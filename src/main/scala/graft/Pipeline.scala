@@ -81,7 +81,7 @@ object Pipeline {
           .withColumn("load_date", lit(loadDate))
         val path = ParquetSink.layerPath(lakeBase, "silver", name)
         ParquetSink.writePartitioned(cleaned, path, Seq("load_date"))
-        (name, path, spark.read.parquet(path)
+        (name, path, readAs(spark, cleaned, path)
           .where(col("load_date") === loadDate).drop("load_date"))
       }
       val silverPaths = chains.map { case (name, path, _) => name -> path }.toMap
@@ -116,8 +116,8 @@ object Pipeline {
 
       // 5. catalog registration (Glue analog): gold tables by name, read
       //    concurrently, registered on the calling thread
-      pool.all(goldPaths.toSeq) { case (name, path) => name -> spark.read.parquet(path) }
-        .foreach { case (name, df) => df.createOrReplaceTempView(name) }
+      pool.all(gold) { case (name, df) => name -> readAs(spark, df, goldPaths(name)) }
+        .foreach { case (name, view) => view.createOrReplaceTempView(name) }
 
       // 6. the Athena business queries over the registered gold layer
       val analytics = Map(
@@ -130,6 +130,12 @@ object Pipeline {
       RunResult(silverPaths, goldPaths, dqPassed, analytics)
     } finally pool.close()
   }
+
+  /** Reads back the parquet `written` was just saved to, with its schema
+    * (a Glue table's declared schema) instead of a Spark job that infers
+    * it from a file footer. */
+  private def readAs(spark: SparkSession, written: DataFrame, path: String): DataFrame =
+    spark.read.schema(written.schema).parquet(path)
 
   /** The reference DAG's operational contract
     * (dags/etl_retail_pipeline.py:15-23 — `retries: 1`,

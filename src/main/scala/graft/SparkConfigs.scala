@@ -6,11 +6,26 @@ import org.apache.spark.sql.SparkSession
   * don't re-derive it. Two profiles:
   *
   *  - `local`: the test/bench shape (local[N], partitions = cores).
+  *    Every session graft builds comes from it: `Verify`, `Bench`,
+  *    `BenchOne`, `ProfileOne`, `Explain`, `WindowAudit`, the test
+  *    suites' shared session (`SparkSpec`) and perfbench's harness.
   *  - `cluster100TB`: the knobs that matter when the same plans run on
   *    a 1000-executor cluster — documented inline with the reasoning
   *    the judge of a 100× scale-up would apply.
+  *
+  * Both profiles make generated code compile once per JVM: Spark keys
+  * its codegen cache by (class loader, code), so a per-session class
+  * loader or a cache smaller than the working set recompiles
+  * byte-identical classes on every run.
   */
 object SparkConfigs {
+
+  /** Codegen cache entries (one per class and class loader that
+    * compiles it): above the largest working set graft runs, a cold
+    * sf0.01 `graft.Bench` sweep on local[4] (3,861). A `Pipeline.run`
+    * with its four analytics reads needs 142, perfbench's
+    * `operator_queries` pass about 260. */
+  private val CodegenCacheEntries = 4096
 
   /** SPARK_GRAFT_CPUS as an int, tolerating unset/non-numeric values. */
   def cpusFromEnv(default: Int): Int =
@@ -27,6 +42,11 @@ object SparkConfigs {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // graft adds no per-session artifacts (no addArtifact, no ADD JAR):
+      // isolation would only give each session a fresh class loader
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // hold the working set, not the 100-class default (see above)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   /** Cluster profile: apply on top of a cluster-master builder. */
   def cluster100TB(builder: SparkSession.Builder): SparkSession.Builder =
@@ -59,4 +79,10 @@ object SparkConfigs {
       // Large shuffles: compress + spill-friendly serializer.
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.sql.parquet.compression.codec", "snappy")
+      // One class loader for every session, so a query re-issued in a new
+      // session reuses the classes already compiled; turn it back on
+      // before adding per-session artifacts (Spark Connect, addArtifact).
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // Repeated business queries keep their compiled plans resident.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 }

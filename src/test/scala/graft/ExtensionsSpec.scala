@@ -12,12 +12,9 @@ class ExtensionsSpec extends AnyFunSuite {
     val prevActive  = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    // the profile installs GraftExtensions through spark.sql.extensions
+    val spark = SparkConfigs.local(SparkSession.builder(), 2)
       .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions())
       .getOrCreate()
     try {
       val row = spark.sql(

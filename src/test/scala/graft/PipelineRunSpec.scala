@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
@@ -12,16 +12,18 @@ import graft.operators.{ArtifactCache, Gold, Similarity}
 
 class PipelineRunSpec extends SparkSpec {
 
-  /** (rows, order-insensitive content hash) of each gold table. */
+  /** (rows, order-insensitive content hash) of a table. */
+  private def contentHash(df: DataFrame): (Long, String) = {
+    val cols = df.columns.sorted.map(col).toSeq
+    val h = df.select(sha2(to_json(struct(cols: _*)), 256).as("h"))
+      .agg(sum(conv(substring(col("h"), 1, 15), 16, 10).cast("decimal(38,0)")))
+      .head().getDecimal(0).toString
+    (df.count(), h)
+  }
+
+  /** [[contentHash]] of each gold table, read with an inferred schema. */
   private def goldHashes(r: Pipeline.RunResult): Map[String, (Long, String)] =
-    r.goldTables.map { case (name, path) =>
-      val df = spark.read.parquet(path)
-      val cols = df.columns.sorted.map(col).toSeq
-      val h = df.select(sha2(to_json(struct(cols: _*)), 256).as("h"))
-        .agg(sum(conv(substring(col("h"), 1, 15), 16, 10).cast("decimal(38,0)")))
-        .head().getDecimal(0).toString
-      name -> (df.count(), h)
-    }
+    r.goldTables.map { case (name, path) => name -> contentHash(spark.read.parquet(path)) }
 
   /** Each job's value of the local property `key` and its end time, as a
     * listener sees them. */
@@ -80,6 +82,17 @@ class PipelineRunSpec extends SparkSpec {
     // partitioned silver layout on disk (hive-style load_date dirs)
     assert(new java.io.File(s"${result.silverTables("sales")}/load_date=d20260101")
       .exists())
+  }
+
+  test("catalog views read gold with its written schema: same schema and rows as an inferred read") {
+    // run reads silver and gold back with the schema it just wrote
+    // instead of inferring it from a footer (one Spark job per read)
+    val r = Pipeline.run(spark, sfDir, Files.createTempDirectory("graft_lake_typed").toString)
+    val inferred = goldHashes(r)
+    r.goldTables.foreach { case (name, path) =>
+      assert(spark.table(name).schema == spark.read.parquet(path).schema, name)
+      assert(contentHash(spark.table(name)) == inferred(name), name)
+    }
   }
 
   test("re-run into the same lake is idempotent (daily @retries contract)") {

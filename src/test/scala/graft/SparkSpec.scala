@@ -13,16 +13,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The `SparkConfigs.local` profile on local[4], plus a throwaway
+    * warehouse dir. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = SparkConfigs.local(SparkSession.builder(), 4)
       .appName("graft-tests")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
