@@ -1,6 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
@@ -22,8 +24,9 @@ import org.apache.spark.sql.SparkSession
   * the artifact itself:
   *   - per-sweep HOST TELEMETRY — /proc/loadavg before/after and the
   *     /proc/stat busy-fraction delta over the sweep, so a slow sweep
-  *     on a loaded host is visibly a loaded-host sweep, and the classes
-  *     Spark compiled during it (`codegen_compiles`); the host block
+  *     on a loaded host is visibly a loaded-host sweep, the classes
+  *     Spark compiled during it (`codegen_compiles`) and the Spark jobs
+  *     it launched (`spark_jobs`); the host block
   *     also names the session's `master`, `cores` and
   *     `shuffle_partitions`, so runs at different core counts can be
   *     told apart from the artifact alone;
@@ -115,6 +118,38 @@ object Bench {
       case _ => (-1L, -1L)
     }
 
+  /** Counts the Spark jobs started in the session's context. Listener
+    * events arrive asynchronously, so [[drain]] first runs a marker
+    * job and waits (up to a minute) until the listener has seen it
+    * start: the bus delivers events in order, so by then every job
+    * started before the marker is counted. Markers are not counted. */
+  private[graft] final class JobCounter(spark: SparkSession) extends SparkListener {
+    private val MarkerProp = "graft.bench.marker"
+    private val jobs = new AtomicLong()
+    private val markersSeen = new AtomicLong()
+    private var markersRun = 0L
+    spark.sparkContext.addSparkListener(this)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (e.properties != null && e.properties.getProperty(MarkerProp) != null)
+        markersSeen.incrementAndGet()
+      else jobs.incrementAndGet()
+
+    /** Jobs started since the previous drain (or since creation). */
+    def drain(): Long = {
+      val sc = spark.sparkContext
+      sc.setLocalProperty(MarkerProp, "1")
+      try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(MarkerProp, null)
+      markersRun += 1
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (markersSeen.get() < markersRun && System.nanoTime() < deadline)
+        Thread.sleep(1)
+      jobs.getAndSet(0)
+    }
+
+    def close(): Unit = spark.sparkContext.removeSparkListener(this)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default 3 sweeps (min-of-sweeps absorbs JIT + contention bursts);
@@ -152,6 +187,9 @@ object Bench {
     // classes Spark compiled (codegen cache misses); a warm sweep that
     // still compiles means the cache is smaller than the working set
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // jobs each sweep launched, drained outside the sweep's wall
+    val jobCounter = new JobCounter(spark)
+    jobCounter.drain()
     val sweepTelemetry = (1 to iters).map { _ =>
       val (b0, t0j) = cpuJiffies
       val l0 = loadAvg
@@ -163,7 +201,8 @@ object Bench {
       val wall = (System.nanoTime() - w0) / 1e9
       val busyFrac =
         if (t1j > t0j) (b1 - b0).toDouble / (t1j - t0j).toDouble else -1.0
-      (wall, l0, l1, busyFrac, compiles - c0)
+      val compiled = compiles - c0
+      (wall, l0, l1, busyFrac, compiled, jobCounter.drain())
     }
 
     // isolated steady-state re-times of the slowest queries: min of 2
@@ -215,7 +254,8 @@ object Bench {
       "loadavg_pre" -> sweepTelemetry.map(_._2).mkString("[", ",", "]"),
       "loadavg_post" -> sweepTelemetry.map(_._3).mkString("[", ",", "]"),
       "cpu_busy_frac" -> sweepTelemetry.map(_._4).mkString("[", ",", "]"),
-      "codegen_compiles" -> sweepTelemetry.map(_._5).mkString("[", ",", "]")))
+      "codegen_compiles" -> sweepTelemetry.map(_._5).mkString("[", ",", "]"),
+      "spark_jobs" -> sweepTelemetry.map(_._6).mkString("[", ",", "]")))
     // cold-derivation visibility (r15 VERDICT #2): ArtifactCache-backed
     // queries pay the corpus-sized first derivation ONCE per JVM (the
     // train-once contract), so their per-query minima above are

@@ -13,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    map, ANN top-k result tables), `localCheckpoint`ed — materialized
   *    to executor storage, lineage truncated — so reuse costs one scan;
   *  - [[value]]: driver-side values (corpus row counts, IVF/PQ/k-means
-  *    codebooks, BPE merge tables, the quality-LR model), held as built.
+  *    codebooks, BPE merge tables, the quality-LR model, and the parquet
+  *    schema of each source table `Tables.table` reads), held as built.
   *
   * Artifacts of one dir derive from each other (the IVF book from the
   * corpus count, the cluster map from the ngram pair list), so

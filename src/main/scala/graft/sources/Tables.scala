@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.ArtifactCache
 
 /** Loaders for the testdata star schema and the retail-view mapping of
   * SURVEY.md §3 (reference: scripts/load.py:61-130 loads silver tables
@@ -14,8 +15,22 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A source table. Inferring a parquet schema launches a Spark job
+    * (about 100 ms warm on local[4]), so the inferred schema is an
+    * [[ArtifactCache]] value of the dir: the first read in a session
+    * infers it and returns that DataFrame, every later read passes it in
+    * (about 15 ms, no job). A table rewritten in place needs
+    * `ArtifactCache.invalidateDir`, like every other artifact of its
+    * dir. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    var inferred: DataFrame = null
+    val schema = ArtifactCache.value(spark, dir, s"schema/$name") {
+      inferred = spark.read.parquet(path)
+      inferred.schema
+    }
+    if (inferred != null) inferred else spark.read.schema(schema).parquet(path)
+  }
 
   /** `events.ts` has shipped as both parquet TIMESTAMP(NANOS) (which
     * Spark's vectorized reader rejects — read as nanos-since-epoch and

@@ -3,11 +3,13 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import graft.operators.Gold
 import graft.sources.Tables
 import graft.streaming.GoldStreams
 
 class GoldStreamsSpec extends SparkSpec {
+  override lazy val spark: SparkSession = SparkSpec.streamingSession
 
   test("incrementally maintained gold table equals the batch recompute") {
     import spark.implicits._

@@ -24,4 +24,14 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** A session of [[session]]'s context with AQE off, for the suites
+    * that start streams. Streaming runs without AQE anyway, and every
+    * stream started from a session with AQE on logs a warning saying
+    * so. */
+  lazy val streamingSession: SparkSession = {
+    val s = session.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s
+  }
 }

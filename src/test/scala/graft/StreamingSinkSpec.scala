@@ -2,11 +2,13 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import graft.sinks.CatalogRegistry
 import graft.sources.Tables
 import graft.streaming.EventStreams
 
 class StreamingSinkSpec extends SparkSpec {
+  override lazy val spark: SparkSession = SparkSpec.streamingSession
 
   test("file source -> windowed agg -> checkpointed parquet sink, end to end") {
     val base = Files.createTempDirectory("graft_stream").toString

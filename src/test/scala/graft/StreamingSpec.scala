@@ -2,12 +2,14 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import graft.operators.Events
 import graft.sources.Tables
 import graft.streaming.{DocumentStreams, EventStreams}
 import graft.streaming.EventStreams.{Evt, SessionOut}
 
 class StreamingSpec extends SparkSpec {
+  override lazy val spark: SparkSession = SparkSpec.streamingSession
 
   test("streaming windowed agg matches the batch twin (counts AND money sums)") {
     import spark.implicits._

@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import graft.operators.ArtifactCache
 import graft.sources.Tables
 
 /** Preconditions for [[Tables.salesLite]]'s FK-informed join
@@ -10,7 +12,8 @@ import graft.sources.Tables
   * contract; assert them at every verified scale factor so a future
   * data drop that violates the contract fails HERE, loudly, instead of
   * silently diverging ~25 gold/athena/graph queries from their
-  * join-through oracles. */
+  * join-through oracles. Also pins [[Tables.table]]'s schema memo: one
+  * inference per (session, dir, table), dropped by `invalidateDir`. */
 class TablesSpec extends SparkSpec {
 
   test("salesLite precondition: lineitem→orders FK + order-key uniqueness at every verified SF") {
@@ -36,5 +39,30 @@ class TablesSpec extends SparkSpec {
       .orderBy("transaction_id", "product_id").collect().map(_.toSeq).toSeq
     assert(lite.nonEmpty)
     assert(lite == full)
+  }
+
+  test("a second read of a source table in a session launches no Spark job") {
+    Tables.table(spark, sfDir, "orders")
+    val jobs = new Bench.JobCounter(spark)
+    try {
+      jobs.drain()
+      val second = Tables.table(spark, sfDir, "orders")
+      assert(jobs.drain() == 0, "a read with the schema cached launched a job")
+      assert(second.schema == spark.read.parquet(s"$sfDir/orders.parquet").schema)
+    } finally jobs.close()
+  }
+
+  test("invalidateDir drops a source table's schema with the dir's other artifacts") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_schema").toString
+    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$dir/t.parquet")
+    assert(Tables.table(spark, dir, "t").columns.toSeq == Seq("id", "v"))
+    // rewritten in place with one more column
+    Seq((2L, "b", 3.0)).toDF("id", "v", "w")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    ArtifactCache.invalidateDir(spark, dir)
+    val t = Tables.table(spark, dir, "t")
+    assert(t.columns.toSeq == Seq("id", "v", "w"))
+    assert(t.collect().map(_.toSeq).toSeq == Seq(Seq(2L, "b", 3.0)))
   }
 }

@@ -4,8 +4,15 @@ against the oracle SQL in DuckDB and compare rows/schema/values.
 
 Usage: python3 tools/localverify.py <sfDir> <outDir>
 (run `sbt "runMain graft.Verify <sfDir> <outDir>"` first)
+
+DuckDB runs with a memory limit of half of MemTotal (at least 1 GiB),
+not its default 80% of RAM, and spills to a temp directory under /tmp
+that is removed on exit. A quarter of MemTotal is too little: at sf0.1
+the `gr_hits` oracle then fails with DuckDB's out-of-memory error on a
+16 GB host. The limit bounds DuckDB's buffer pool, not the process: a
+full sf0.1 run still peaks near 12.9 GB RSS on that host.
 """
-import sys, os, json, glob
+import sys, os, json, glob, tempfile
 import duckdb
 import pandas as pd
 
@@ -16,9 +23,18 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
     return df
 
+def memory_limit() -> str:
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    return f"{max(1024, total_kb // 2048)}MB"
+
 def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
+    with tempfile.TemporaryDirectory(prefix="localverify_duckdb_", dir="/tmp") as spill:
+        run(sys.argv[1], sys.argv[2], spill)
+
+def run(sf_dir, out_dir, spill):
+    con = duckdb.connect(config={"memory_limit": memory_limit(),
+                                 "temp_directory": spill})
     for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
         name = os.path.basename(p).replace(".parquet", "")
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
