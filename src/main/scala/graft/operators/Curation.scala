@@ -133,27 +133,16 @@ object Curation {
       // per-round join key — so rounds exchange only the node-sized
       // label vector, never the edge table (graph-loop r15 restructure)
       .repartition(np, col("v")).localCheckpoint()
-    var labels = und.select(col("u").as("id")).distinct()
-      .withColumn("lbl", col("id")).localCheckpoint()
-    var sum = labelChecksum(labels)
-    var it = 0
-    var done = false
-    while (!done && it < maxIter) {
+    val init = und.select(col("u").as("id")).distinct().withColumn("lbl", col("id"))
+    Rounds.fixpoint(init, maxIter)(labelChecksum) { (labels, _) =>
       val nbrMin = und
         .join(labels.select(col("id").as("v"), col("lbl").as("vlbl")), "v")
         .groupBy("u").agg(min("vlbl").as("nbrlbl"))
-      val next = labels
+      labels
         .join(nbrMin.select(col("u").as("id"), col("nbrlbl")), Seq("id"), "left")
         .select(col("id"),
           least(col("lbl"), coalesce(col("nbrlbl"), col("lbl"))).as("lbl"))
-        .localCheckpoint()
-      val s = labelChecksum(next)
-      done = s == sum
-      sum = s
-      labels = next
-      it += 1
     }
-    labels
   }
 
   private def labelChecksum(labels: DataFrame): java.math.BigDecimal =
@@ -175,12 +164,9 @@ object Curation {
     * contract and the same fixpoint labels as [[componentLabels]]. */
   def componentLabelsStar(edges: DataFrame,
       maxIter: Int = MaxCcIterations): DataFrame = {
-    var e = edges.select(col("a_id").as("a"), col("b_id").as("b"))
-      .where(col("a") =!= col("b")).distinct().localCheckpoint()
-    var sig = edgeChecksum(e)
-    var it = 0
-    var done = false
-    while (!done && it < maxIter) {
+    val init = edges.select(col("a_id").as("a"), col("b_id").as("b"))
+      .where(col("a") =!= col("b")).distinct()
+    val e = Rounds.fixpoint(init, maxIter)(edgeChecksum) { (e, _) =>
       // large-star over the bidirected view: for each node u, every
       // neighbor v > u re-links to min(Γ(u) ∪ {u}); each undirected
       // edge is emitted exactly once, from its smaller endpoint
@@ -196,14 +182,9 @@ object Curation {
       val s = ls.select(greatest(col("a"), col("b")).as("u"),
         least(col("a"), col("b")).as("v"))
       val sm = s.groupBy("u").agg(min("v").as("mn"))
-      val ss = s.join(sm, "u").select(col("v").as("a"), col("mn").as("b"))
+      s.join(sm, "u").select(col("v").as("a"), col("mn").as("b"))
         .unionAll(sm.select(col("u").as("a"), col("mn").as("b")))
-        .where(col("a") =!= col("b")).distinct().localCheckpoint()
-      val s2 = edgeChecksum(ss)
-      done = s2 == sig
-      sig = s2
-      e = ss
-      it += 1
+        .where(col("a") =!= col("b")).distinct()
     }
     // fixpoint: every edge is (member, root) with root the component
     // minimum; roots label themselves
@@ -216,7 +197,9 @@ object Curation {
 
   /** O(1) driver-side fixpoint detector for the star rounds: edge count,
     * exact endpoint sums, and a 64-bit per-edge hash sum — equal
-    * checksums across a round mean the edge set is unchanged. */
+    * checksums across a round mean the edge set is unchanged, save for
+    * a changed set whose count and endpoint sums also match and whose
+    * xxhash64 sum collides: odds about 2^-64 per round. */
   private def edgeChecksum(e: DataFrame)
       : (Long, java.math.BigDecimal, java.math.BigDecimal, java.math.BigDecimal) = {
     val r = e.agg(

@@ -22,10 +22,8 @@ import graft.sources.Tables
   *   `u` and every round's join is exchange-free; scores (|V| rows, far
   *   smaller than |E|) are the only moving data.
   * - Rounds are a FIXED count ([[PagerankIters]]) — no driver-side
-  *   convergence collect; production runs checkpoint scores every few
-  *   rounds to truncate lineage exactly as [[Curation.componentLabels]]
-  *   does (here the fixed 3-round plan is left un-checkpointed after
-  *   the one-time edge/degree materialization).
+  *   convergence collect; each round's scores are checkpointed. The
+  *   fixpoint loops (BFS, k-core, components) stop through [[Rounds]].
   * - Determinism: contributions are single IEEE divisions, per-node
   *   accumulation is fixed-point DECIMAL ([[Gold.moneySum]] discipline
   *   at [[PrScale]]), and the damping update is two correctly-rounded
@@ -78,34 +76,53 @@ object Graph {
     * DECIMAL discipline as the contribution sums, so the result stays
     * bit-identical under any partitioning and oracle-expressible. */
   def pagerankOn(spark: SparkSession, edges: DataFrame,
-      iters: Int = PagerankIters): DataFrame = {
-    val zeroDec = lit(0).cast(DecimalType(38, 0))
+      iters: Int = PagerankIters): DataFrame =
+    rankRounds(spark, edges, iters) { (e, deg) =>
+      val np = spark.sessionState.conf.numShufflePartitions
+      // nodes with the dangling flag attached ONCE (sinks = no out-edge):
+      // the per-round dangling mass is then a filter+agg over the score
+      // vector instead of an anti-join against deg — identical row set.
+      val base = e.select("u").unionAll(e.select(col("v").as("u")))
+        .distinct()
+        .join(deg.select(col("u"), lit(true).as("has_out")), Seq("u"), "left")
+        .select(col("u"), coalesce(col("has_out"), lit(false)).as("has_out"))
+        .repartition(np, col("u")).localCheckpoint()
+      // 1-row node-count normalizer, broadcast into every round — the
+      // ath_product_analysis shape, never a driver collect
+      val n = base.agg(count(lit(1)).cast("double").as("nd"))
+      val start = base.crossJoin(broadcast(n))
+        .select(col("u"), col("has_out"), (lit(1.0) / col("nd")).as("pr"))
+      (start, (msgs, dangling) => base.join(msgs, Seq("u"), "left")
+        .crossJoin(broadcast(n)).crossJoin(broadcast(dangling))
+        .select(col("u"), col("has_out"),
+          (lit(0.15) / col("nd") + lit(0.85) *
+            (coalesce(col("s"), zeroDec).cast("double") / lit(PrScale)
+              + col("ds").cast("double") / lit(PrScale) / col("nd"))).as("pr")))
+    }
+
+  private def zeroDec = lit(0).cast(DecimalType(38, 0))
+
+  /** The setup and rounds [[pagerankOn]] and [[trustrankOn]] share.
+    * `scores(e, deg)` gets the checkpointed edge list and its out-degree
+    * table; it returns the start vector `(u, has_out, pr, …)` and the
+    * update from one round's aggregates — `msgs (u, s)`, the DECIMAL
+    * contribution sums into `u`, and the 1-row sink mass `dangling (ds)`
+    * — to the next vector. Returns `(u, pr)`. */
+  private def rankRounds(spark: SparkSession, edges: DataFrame, iters: Int)(
+      scores: (DataFrame, DataFrame) =>
+        (DataFrame, (DataFrame, DataFrame) => DataFrame)): DataFrame = {
     val np = spark.sessionState.conf.numShufflePartitions
     val e = edges.select(col("u").cast("long").as("u"),
       col("v").cast("long").as("v")).localCheckpoint()
     val deg = e.groupBy("u").agg(count(lit(1)).as("deg"))
-    // ROUND-INVARIANT precomputation (r15, guide §2.4): the old loop
-    // re-joined `deg` onto the edges and re-exchanged the EDGE table
-    // every round. `ed` attaches the out-degree once and checkpoints
+    // ROUND-INVARIANT: `ed` attaches the out-degree once and checkpoints
     // HASH-PARTITIONED BY u (localCheckpoint preserves partitioning in
     // the LogicalRDD), so each round's edges⋈scores join exchanges only
     // the nodes-sized score vector — the cluster analog is the bucketed
-    // edge table SURVEY §5 documents. Same rows, same arithmetic.
+    // edge table SURVEY §5 documents.
     val ed = e.join(deg, "u").repartition(np, col("u")).localCheckpoint()
-    // nodes with the dangling flag attached ONCE (sinks = no out-edge):
-    // the per-round dangling mass is then a filter+agg over the score
-    // vector instead of an anti-join against deg — identical row set.
-    val base = e.select("u").unionAll(e.select(col("v").as("u")))
-      .distinct()
-      .join(deg.select(col("u"), lit(true).as("has_out")), Seq("u"), "left")
-      .select(col("u"), coalesce(col("has_out"), lit(false)).as("has_out"))
-      .repartition(np, col("u")).localCheckpoint()
-    // 1-row node-count normalizer, broadcast into every round — the
-    // ath_product_analysis shape, never a driver collect
-    val n = base.agg(count(lit(1)).cast("double").as("nd"))
-    var pr = base.crossJoin(broadcast(n))
-      .select(col("u"), col("has_out"), (lit(1.0) / col("nd")).as("pr"))
-    (1 to iters).foreach { _ =>
+    val (start, update) = scores(e, deg)
+    (1 to iters).foldLeft(start) { (pr, _) =>
       val msgs = ed
         .join(pr.select("u", "pr"), "u")
         .select(col("v").as("u"),
@@ -115,21 +132,14 @@ object Graph {
       val dangling = pr.where(!col("has_out"))
         .agg(coalesce(sum(floor(col("pr") * lit(PrScale))
           .cast(DecimalType(38, 0))), zeroDec).as("ds"))
-      pr = base.join(msgs, Seq("u"), "left")
-        .crossJoin(broadcast(n)).crossJoin(broadcast(dangling))
-        .select(col("u"), col("has_out"),
-          (lit(0.15) / col("nd") + lit(0.85) *
-            (coalesce(col("s"), zeroDec).cast("double") / lit(PrScale)
-              + col("ds").cast("double") / lit(PrScale) / col("nd"))).as("pr"))
-        // truncate lineage per round: without this, round k's plan
-        // re-plans (and the dangling 1-row aggregate RE-EXECUTES)
-        // every earlier round inline — the committed 3-round plan
-        // carried 66 shuffle exchanges; checkpointed it carries a
-        // constant handful per round. Standard iterative-graph
-        // hygiene; the checkpoint is nodes-sized.
-        .localCheckpoint()
-    }
-    pr.select("u", "pr")
+      // truncate lineage per round: without this, round k's plan
+      // re-plans (and the dangling 1-row aggregate RE-EXECUTES)
+      // every earlier round inline — the committed 3-round plan
+      // carried 66 shuffle exchanges; checkpointed it carries a
+      // constant handful per round. Standard iterative-graph
+      // hygiene; the checkpoint is nodes-sized.
+      update(msgs, dangling).localCheckpoint()
+    }.select("u", "pr")
   }
 
   /** `gr_pagerank`: damped PageRank (d = 0.85) after [[PagerankIters]]
@@ -146,6 +156,27 @@ object Graph {
         expr("u DIV 2").as("entity_id"),
         col("pr").as("pagerank"))
       .orderBy("node_id")
+
+  /** The host→host link edge list recovered through the REAL
+    * extraction path (anchor lexer → host canonicalizer) — the
+    * session-cached artifact [[hostRank]] and [[hostTrust]] both rank
+    * over (a production crawler materializes it once per snapshot). */
+  private[graft] def hostEdges(spark: SparkSession, dir: String): DataFrame =
+    ArtifactCache.of(spark, dir, "gr_host_edges") {
+      Html.linkPages(spark, dir)
+        .select(col("src_host").as("u"),
+          explode(graft.functions.HtmlExtract.linksCol(spark, col("html")))
+            .as("href"))
+        .select(col("u"),
+          graft.functions.UrlCanon.hostCol(spark, col("href")).as("dhost"))
+        .where(col("dhost").isNotNull)
+        .where(col("dhost").rlike("^host\\d+\\.example$"))
+        .select(col("u"),
+          regexp_extract(col("dhost"), "^host(\\d+)\\.example$", 1)
+            .cast("long").as("v"))
+        .where(col("u") =!= col("v"))
+        .distinct()
+    }
 
   /** `gr_host_rank`: PageRank over the host→host link graph recovered
     * from the HTML corpus — the standard crawl-quality prior
@@ -169,27 +200,6 @@ object Graph {
     * by DISTINCT on the (src, dst) host pair (hosts ≪ pages — at crawl
     * scale a pre-aggregation keyed on the host pair); the rank loop is
     * [[pagerankOn]]'s host-count-sized iteration. */
-  /** The host→host link edge list recovered through the REAL
-    * extraction path (anchor lexer → host canonicalizer) — the
-    * session-cached artifact [[hostRank]] and [[hostTrust]] both rank
-    * over (a production crawler materializes it once per snapshot). */
-  private[graft] def hostEdges(spark: SparkSession, dir: String): DataFrame =
-    ArtifactCache.of(spark, dir, "gr_host_edges") {
-      Html.linkPages(spark, dir)
-        .select(col("src_host").as("u"),
-          explode(graft.functions.HtmlExtract.linksCol(spark, col("html")))
-            .as("href"))
-        .select(col("u"),
-          graft.functions.UrlCanon.hostCol(spark, col("href")).as("dhost"))
-        .where(col("dhost").isNotNull)
-        .where(col("dhost").rlike("^host\\d+\\.example$"))
-        .select(col("u"),
-          regexp_extract(col("dhost"), "^host(\\d+)\\.example$", 1)
-            .cast("long").as("v"))
-        .where(col("u") =!= col("v"))
-        .distinct()
-    }
-
   def hostRank(spark: SparkSession, dir: String): DataFrame =
     pagerankOn(spark, hostEdges(spark, dir))
       .select(col("u").as("host_id"),
@@ -205,62 +215,41 @@ object Graph {
     * distribution (1/|S| per seed, 0 elsewhere) instead of uniformly,
     * so trust flows only along links reachable from the vetted
     * whitelist — link farms that loop among themselves collect
-    * PageRank but no trust. Same per-round plan: one edges⋈scores
-    * join + one destination-keyed partial agg + a 1-row dangling
-    * aggregate; the seed vector is a nodes-sized checkpointed frame
-    * joined per round. */
+    * PageRank but no trust. Same rounds ([[rankRounds]]); the seed
+    * vector is a nodes-sized checkpointed frame joined per round. */
   def trustrankOn(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
-      iters: Int = PagerankIters): DataFrame = {
-    val zeroDec = lit(0).cast(DecimalType(38, 0))
-    val np = spark.sessionState.conf.numShufflePartitions
-    val e = edges.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v")).localCheckpoint()
-    val deg = e.groupBy("u").agg(count(lit(1)).as("deg"))
-    // round-invariant degree-attached edge table, partitioned by u once
-    // (the [[pagerankOn]] r15 restructure — see the comment there)
-    val ed = e.join(deg, "u").repartition(np, col("u")).localCheckpoint()
-    val nodes = e.select("u").unionAll(e.select(col("v").as("u")))
-      .distinct().localCheckpoint()
-    // seeds are clipped to the graph's node set BEFORE |S| is counted:
-    // a whitelist entry with no edges would otherwise inflate ns and
-    // leave the teleport vector summing < 1 — silently diverging from
-    // any oracle that derives its seed count from the graph itself
-    val sd = seeds.select(col("u").cast("long").as("u")).distinct()
-      .join(nodes, Seq("u"), "left_semi")
-      .withColumn("is_seed", lit(true))
-    val ns = sd.agg(count(lit(1)).cast("double").as("ns"))
-    // the seed vector carries the dangling flag, so every round's sink
-    // mass is a filter+agg over the score vector (no anti-join)
-    val sv = nodes.join(broadcast(sd), Seq("u"), "left")
-      .join(deg.select(col("u"), lit(true).as("has_out")), Seq("u"), "left")
-      .crossJoin(broadcast(ns))
-      .select(col("u"),
-        when(coalesce(col("is_seed"), lit(false)), lit(1.0) / col("ns"))
-          .otherwise(lit(0.0)).as("sv"),
-        coalesce(col("has_out"), lit(false)).as("has_out"))
-      .repartition(np, col("u")).localCheckpoint()
-    var tr = sv.select(col("u"), col("sv"), col("has_out"),
-      col("sv").as("pr"))
-    (1 to iters).foreach { _ =>
-      val msgs = ed
-        .join(tr.select("u", "pr"), "u")
-        .select(col("v").as("u"),
-          floor((col("pr") / col("deg")) * lit(PrScale))
-            .cast(DecimalType(38, 0)).as("c"))
-        .groupBy("u").agg(sum("c").as("s"))
-      val dangling = tr.where(!col("has_out"))
-        .agg(coalesce(sum(floor(col("pr") * lit(PrScale))
-          .cast(DecimalType(38, 0))), zeroDec).as("ds"))
-      tr = sv.join(msgs, Seq("u"), "left")
+      iters: Int = PagerankIters): DataFrame =
+    rankRounds(spark, edges, iters) { (e, deg) =>
+      val np = spark.sessionState.conf.numShufflePartitions
+      val nodes = e.select("u").unionAll(e.select(col("v").as("u")))
+        .distinct().localCheckpoint()
+      // seeds are clipped to the graph's node set BEFORE |S| is counted:
+      // a whitelist entry with no edges would otherwise inflate ns and
+      // leave the teleport vector summing < 1 — silently diverging from
+      // any oracle that derives its seed count from the graph itself
+      val sd = seeds.select(col("u").cast("long").as("u")).distinct()
+        .join(nodes, Seq("u"), "left_semi")
+        .withColumn("is_seed", lit(true))
+      val ns = sd.agg(count(lit(1)).cast("double").as("ns"))
+      // the seed vector carries the dangling flag, so every round's sink
+      // mass is a filter+agg over the score vector (no anti-join)
+      val sv = nodes.join(broadcast(sd), Seq("u"), "left")
+        .join(deg.select(col("u"), lit(true).as("has_out")), Seq("u"), "left")
+        .crossJoin(broadcast(ns))
+        .select(col("u"),
+          when(coalesce(col("is_seed"), lit(false)), lit(1.0) / col("ns"))
+            .otherwise(lit(0.0)).as("sv"),
+          coalesce(col("has_out"), lit(false)).as("has_out"))
+        .repartition(np, col("u")).localCheckpoint()
+      val start = sv.select(col("u"), col("sv"), col("has_out"),
+        col("sv").as("pr"))
+      (start, (msgs, dangling) => sv.join(msgs, Seq("u"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("u"), col("sv"), col("has_out"),
           (lit(0.15) * col("sv") + lit(0.85) *
             (coalesce(col("s"), zeroDec).cast("double") / lit(PrScale)
-              + col("ds").cast("double") / lit(PrScale) * col("sv"))).as("pr"))
-        .localCheckpoint()
+              + col("ds").cast("double") / lit(PrScale) * col("sv"))).as("pr")))
     }
-    tr.select("u", "pr")
-  }
 
   /** `gr_host_trust`: TrustRank + spam mass over the host link graph —
     * the crawl-side spam screen beside [[hostRank]]'s quality prior.
@@ -565,13 +554,19 @@ object Graph {
     * Scale shape: classic frontier BFS — each round is ONE keyed
     * equi-join of the (shrinking) frontier against the edge list plus
     * an anti-join against the visited set, both co-keyed on node id;
-    * frontiers are `localCheckpoint`'d so lineage stays flat (the
-    * k-core/components fixpoint pattern). The seed is a 1-row
+    * the visited set is the [[Rounds.fixpoint]] state and the frontier
+    * its `dist = round` slice. The seed is a 1-row
     * TakeOrdered. The DuckDB oracle replays the identical search as a
     * bounded recursive CTE, so the result is exact at every SF. */
-  def bfsDistance(spark: SparkSession, dir: String): DataFrame = {
-    val np = spark.sessionState.conf.numShufflePartitions
-    val e = coEdges(spark, dir)
+  def bfsDistance(spark: SparkSession, dir: String): DataFrame =
+    bfsDistanceOn(coEdges(spark, dir))
+      .select(col("node").as("product_id"), col("dist"))
+      .orderBy("product_id")
+
+  /** [[bfsDistance]]'s search over an undirected edge list `(a, b)`,
+    * one row per edge: `(node, dist)` from the max-degree node. */
+  private[graft] def bfsDistanceOn(e: DataFrame): DataFrame = {
+    val np = e.sparkSession.sessionState.conf.numShufflePartitions
     // partitioned by the probe key once: every BFS round joins the
     // frontier on `a`, so the edge table never re-exchanges (the
     // [[pagerankOn]] r15 restructure)
@@ -580,26 +575,15 @@ object Graph {
     val deg = und.groupBy("a").agg(count(lit(1)).as("d"))
     val seed = deg.orderBy(col("d").desc, col("a")).limit(1)
       .select(col("a").as("node"), lit(0L).as("dist"))
-    var dist = seed.localCheckpoint()
-    var frontier = dist
-    var round = 0
-    var done = false
-    while (round < BfsMaxRounds && !done) {
-      val next = frontier
+    // the visited set only grows: an unchanged count is an empty frontier
+    Rounds.fixpoint(seed, BfsMaxRounds)(Rounds.rowCount) { (dist, round) =>
+      val frontier = dist.where(col("dist") === round)
+      dist.unionAll(frontier
         .join(und, frontier("node") === und("a"))
         .select(col("b").as("node"), (col("dist") + 1).as("dist"))
         .distinct()
-        .join(dist.select("node"), Seq("node"), "left_anti")
-        .localCheckpoint()
-      if (next.isEmpty) done = true
-      else {
-        dist = dist.unionAll(next).localCheckpoint()
-        frontier = next
-      }
-      round += 1
+        .join(dist.select("node"), Seq("node"), "left_anti"))
     }
-    dist.select(col("node").as("product_id"), col("dist"))
-      .orderBy("product_id")
   }
 
   /** `gr_edge_jaccard`: neighbor-set Jaccard per co-purchase edge —
@@ -1110,20 +1094,6 @@ object Graph {
     * rather than silently trusted. */
   val KCoreMaxRounds = 20
 
-  /** `gr_kcore`: the k-core of the co-purchase graph — the maximal
-    * subgraph where every node keeps ≥ k neighbors, the standard dense-
-    * community prefilter (recommender neighborhoods, fraud rings,
-    * graph-embedding vocabularies) that PageRank and triangle counts
-    * are usually run AFTER.
-    *
-    * Scale shape: iterative peeling; each round is ONE partial-
-    * aggregated degree groupBy + two semi-joins of the edge list
-    * against the ≥k survivor set, all keyed on the endpoint columns the
-    * edge table is already bucketed by — the [[pagerankOn]] per-round
-    * shape. The driver sees one COUNT per round (O(1) fixpoint
-    * detection, the [[Curation]] star-CC pattern), never edges. Each
-    * round's survivor edges are localCheckpoint'd so lineage stays flat
-    * across peels. */
   /** `gr_modularity`: category modularity of the co-purchase graph —
     * per product category: its graph nodes, intra-category edges,
     * degree mass, and the category's Newman-modularity contribution
@@ -1173,6 +1143,18 @@ object Graph {
       .orderBy("category")
   }
 
+  /** `gr_kcore`: the k-core of the co-purchase graph — the maximal
+    * subgraph where every node keeps ≥ k neighbors, the standard dense-
+    * community prefilter (recommender neighborhoods, fraud rings,
+    * graph-embedding vocabularies) that PageRank and triangle counts
+    * are usually run AFTER.
+    *
+    * Scale shape: iterative peeling; each round is ONE partial-
+    * aggregated degree groupBy + two semi-joins of the edge list
+    * against the ≥k survivor set, all keyed on the endpoint columns the
+    * edge table is already bucketed by — the [[pagerankOn]] per-round
+    * shape. The survivor edges are the [[Rounds.fixpoint]] state: the
+    * driver sees one COUNT per peel, never edges. */
   def kcore(spark: SparkSession, dir: String): DataFrame =
     kcoreOn(undirected(spark, dir), KCoreK)
 
@@ -1182,23 +1164,16 @@ object Graph {
     // u-side survivor semi-join then reuse the partitioning instead of
     // re-exchanging the edge table every peel (the [[pagerankOn]] r15
     // restructure; the survivor set rides an AQE broadcast)
-    var e = edges0.select(col("u").cast("long").as("u"),
+    val init = edges0.select(col("u").cast("long").as("u"),
       col("v").cast("long").as("v"))
-      .repartition(np, col("u")).localCheckpoint()
-    var nEdges = e.count()
-    var rounds = 0
-    var done = nEdges == 0
-    while (!done && rounds < KCoreMaxRounds) {
+      .repartition(np, col("u"))
+    // a peel only removes edges: an unchanged count is an unchanged set
+    Rounds.fixpoint(init, KCoreMaxRounds)(Rounds.rowCount) { (e, _) =>
       val keep = e.groupBy("u").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k).select("u")
-      val e2 = e.join(keep, Seq("u"), "left_semi")
+      e.join(keep, Seq("u"), "left_semi")
         .join(keep.select(col("u").as("v")), Seq("v"), "left_semi")
-        .localCheckpoint()
-      val n2 = e2.count()
-      done = n2 == nEdges || n2 == 0
-      e = e2; nEdges = n2; rounds += 1
-    }
-    e.groupBy("u").agg(count(lit(1)).as("core_degree"))
+    }.groupBy("u").agg(count(lit(1)).as("core_degree"))
       .select(col("u").as("node_id"),
         when(col("u") % 2 === 0, "customer").otherwise("product").as("kind"),
         col("core_degree"))

@@ -1,8 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.operators.Events
 import graft.sources.Tables
 import graft.streaming.{DocumentStreams, EventStreams}
@@ -10,6 +13,24 @@ import graft.streaming.EventStreams.{Evt, SessionOut}
 
 class StreamingSpec extends SparkSpec {
   override lazy val spark: SparkSession = SparkSpec.streamingSession
+
+  /** Every query's checkpoint goes to its own dir under this root,
+    * deleted after the suite: a query started without a
+    * `checkpointLocation` makes a temporary one and logs a warning. */
+  private lazy val checkpointRoot = Files.createTempDirectory("graft_stream_ckpt")
+
+  private implicit class MemorySink[T](w: DataStreamWriter[T]) {
+    /** The memory sink as table `name`, checkpointed in a fresh dir. */
+    def toMemory(name: String): DataStreamWriter[T] =
+      w.format("memory").queryName(name).option("checkpointLocation",
+        Files.createTempDirectory(checkpointRoot, name).toString)
+  }
+
+  override def afterAll(): Unit = {
+    val walk = Files.walk(checkpointRoot)
+    try walk.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+    finally walk.close()
+  }
 
   test("streaming windowed agg matches the batch twin (counts AND money sums)") {
     import spark.implicits._
@@ -23,7 +44,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(java.sql.Timestamp, String, Double)]
     val streamDf = input.toDF().toDF("ts", "event_type", "value")
     val q = EventStreams.windowedAgg(streamDf)
-      .writeStream.format("memory").queryName("win_out")
+      .writeStream.toMemory("win_out")
       .outputMode("complete").start()
     val rows = Tables.events(spark, sfDir)
       .select(col("ts").cast("timestamp"), col("event_type"), col("value"))
@@ -54,7 +75,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(java.sql.Timestamp, String, Double)]
     val streamDf = input.toDF().toDF("ts", "event_type", "value")
     val q = EventStreams.slidingAgg(streamDf)
-      .writeStream.format("memory").queryName("slide_out")
+      .writeStream.toMemory("slide_out")
       .outputMode("complete").start()
     val rows = Tables.events(spark, sfDir)
       .select(col("ts").cast("timestamp"), col("event_type"), col("value"))
@@ -92,7 +113,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(java.sql.Timestamp, Long)]
     val streamDf = input.toDF().toDF("ts", "user_id")
     val q = EventStreams.botRateStream(streamDf, minPerHour)
-      .writeStream.format("memory").queryName("bot_out")
+      .writeStream.toMemory("bot_out")
       .outputMode("complete").start()
     val rows = Tables.events(spark, sfDir)
       .select(col("ts").cast("timestamp"), col("user_id")).collect()
@@ -130,7 +151,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(java.sql.Timestamp, Long, String)]
     val streamDf = input.toDF().toDF("ts", "user_id", "event_type")
     val q = EventStreams.cartFlagsStream(streamDf)
-      .writeStream.format("memory").queryName("cart_out")
+      .writeStream.toMemory("cart_out")
       .outputMode("complete").start()
     val rows = Tables.events(spark, sfDir)
       .select(col("ts").cast("timestamp"), col("user_id"), col("event_type"))
@@ -164,7 +185,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(java.sql.Timestamp, String, String)]
     val streamDf = input.toDF().toDF("ts", "event_type", "props")
     val q = EventStreams.trendingCountsStream(streamDf)
-      .writeStream.format("memory").queryName("trend_out")
+      .writeStream.toMemory("trend_out")
       .outputMode("complete").start()
     val rows = Tables.events(spark, sfDir)
       .select(col("ts").cast("timestamp"), col("event_type"), col("props"))
@@ -206,7 +227,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[EventStreams.UserDay]
     val q = EventStreams.reactivationStream(input.toDS(), gap)
-      .writeStream.format("memory").queryName("react_out")
+      .writeStream.toMemory("react_out")
       .outputMode("append").start()
     val rows = Tables.events(spark, sfDir)
       .select(col("user_id"),
@@ -247,7 +268,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val streamDf = input.toDF().toDF("doc_id", "text")
     val q = DocumentStreams.nearDupScreenStream(streamDf, corpusBuckets)
-      .writeStream.format("memory").queryName("screen_out")
+      .writeStream.toMemory("screen_out")
       .outputMode("append").start()
     val batchDocs = Tables.table(spark, sfDir, "documents").where(isBatch)
       .select("doc_id", "text").collect()
@@ -289,7 +310,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val streamDf = input.toDF().toDF("doc_id", "text")
     val q = DocumentStreams.dupCoverageScreenStream(streamDf, corpusGrams)
-      .writeStream.format("memory").queryName("substr_out")
+      .writeStream.toMemory("substr_out")
       .outputMode("append").start()
     val batchDocs = docs.where(isBatch)
       .select("doc_id", "text").collect()
@@ -316,7 +337,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String, Double)]
     val streamDf = input.toDF().toDF("event_id", "event_type", "value")
     val q = EventStreams.anomalyStream(streamDf, stats)
-      .writeStream.format("memory").queryName("anom_out")
+      .writeStream.toMemory("anom_out")
       .outputMode("append").start()
     val rows = Tables.events(spark, sfDir)
       .select("event_id", "event_type", "value").collect()
@@ -339,7 +360,7 @@ class StreamingSpec extends SparkSpec {
     val k = 8
     val input = MemoryStream[Long]
     val q = EventStreams.heavyHittersStream(input.toDF().toDF("user_id"), k)
-      .writeStream.format("memory").queryName("hh_out")
+      .writeStream.toMemory("hh_out")
       .outputMode("complete").start()
     val users = Tables.events(spark, sfDir).select("user_id").collect()
       .map(_.getLong(0))
@@ -370,7 +391,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String, Double)]
     val streamDf = input.toDF().toDF("event_id", "event_type", "value")
     val q = EventStreams.winsorizeStream(streamDf, bounds)
-      .writeStream.format("memory").queryName("wins_out")
+      .writeStream.toMemory("wins_out")
       .outputMode("append").start()
     val rows = Tables.events(spark, sfDir)
       .select("event_id", "event_type", "value").collect()
@@ -410,7 +431,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(java.sql.Timestamp, Long, String)]
     val streamDf = input.toDF().toDF("ts", "user_id", "event_type")
     val q = EventStreams.signupJoinStream(streamDf, windowSec)
-      .writeStream.format("memory").queryName("sconv_out")
+      .writeStream.toMemory("sconv_out")
       .outputMode("append").start()
     val rows = Tables.events(spark, sfDir)
       .select(col("ts").cast("timestamp"), col("user_id"), col("event_type"))
@@ -448,7 +469,7 @@ class StreamingSpec extends SparkSpec {
     val streamDf = input.toDF().toDF("user_id", "event_id", "ts")
     val q = EventStreams
       .intervalPairsStream(streamDf, graft.operators.IntervalJoin.BoundSec)
-      .writeStream.format("memory").queryName("ival_out")
+      .writeStream.toMemory("ival_out")
       .outputMode("append").start()
     // feed RAW µs-precision timestamps: the operator itself
     // second-truncates, so the stream must match batch on arbitrary input
@@ -477,7 +498,7 @@ class StreamingSpec extends SparkSpec {
     // below never drops an event, and emission happens only at the
     // sentinel-driven closure
     val q = EventStreams.funnelStream(streamDf, "3650 days")
-      .writeStream.format("memory").queryName("funnel_out")
+      .writeStream.toMemory("funnel_out")
       .outputMode("append").start()
     val evts = Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("event_type"),
@@ -514,7 +535,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, Long, java.sql.Timestamp)]
     val streamDf = input.toDF().toDF("user_id", "event_id", "ts")
     val q = EventStreams.sessionizeWithTimeout(streamDf)
-      .writeStream.format("memory").queryName("sess_to_out")
+      .writeStream.toMemory("sess_to_out")
       .outputMode("append").start()
     val rows = Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("ts").cast("timestamp"))
@@ -547,7 +568,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Evt]
     val q = EventStreams.sessionize(input.toDS())
-      .writeStream.format("memory").queryName("sess_out")
+      .writeStream.toMemory("sess_out")
       .outputMode("append").start()
     val evts = Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"),
@@ -586,7 +607,7 @@ class StreamingSpec extends SparkSpec {
     val streamDf = input.toDF()
       .toDF("ts", "user_id", "event_type", "value", "props")
     val q = EventStreams.completenessMonitorStream(streamDf)
-      .writeStream.format("memory").queryName("compl_out")
+      .writeStream.toMemory("compl_out")
       .outputMode("complete").start()
     val rows = src.collect().map(r => (r.getTimestamp(0), r.getLong(1),
       r.getString(2), r.getDouble(3), r.getString(4)))
@@ -616,7 +637,7 @@ class StreamingSpec extends SparkSpec {
     val streamDf = input.toDF()
       .toDF("ts", "user_id", "event_type", "value", "props")
     val q = EventStreams.keyCardinalityMonitorStream(streamDf)
-      .writeStream.format("memory").queryName("keycard_out")
+      .writeStream.toMemory("keycard_out")
       .outputMode("complete").start()
     val rows = src.collect().map(r => (r.getTimestamp(0), r.getLong(1),
       r.getString(2), r.getDouble(3), r.getString(4)))
@@ -640,7 +661,7 @@ class StreamingSpec extends SparkSpec {
     val streamDf = input.toDF().toDF("vec_id", "embedding")
     val q = graft.streaming.EmbeddingStreams
       .clusterAssignStream(spark, streamDf, cents)
-      .writeStream.format("memory").queryName("route_out")
+      .writeStream.toMemory("route_out")
       .outputMode("append").start()
     val rows = Tables.table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>"))
@@ -696,7 +717,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(java.sql.Timestamp, String, Array[Byte])]
     val streamDf = input.toDF().toDF("ts", "media_type", "payload")
     val q = graft.streaming.MediaStreams.decodeHealthMonitorStream(streamDf)
-      .writeStream.format("memory").queryName("media_health_out")
+      .writeStream.toMemory("media_health_out")
       .outputMode("complete").start()
     // counters are per-window algebraic: a batch split must not matter
     val (a, b) = rows.splitAt(rows.length / 2)
@@ -729,7 +750,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[String]
     val q = graft.streaming.IngestStreams.ingestHealthStream(
       input.toDF().toDF("value"))
-      .writeStream.format("memory").queryName("ingest_health_out")
+      .writeStream.toMemory("ingest_health_out")
       .outputMode("complete").start()
     // counters are algebraic: the batch split must not matter
     val (a, b) = lines.splitAt(lines.length / 2)
@@ -765,7 +786,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[String]
     val q = graft.streaming.CrawlStreams.urlFrontierStream(
       input.toDF().toDF("value"), known)
-      .writeStream.format("memory").queryName("url_screen_out")
+      .writeStream.toMemory("url_screen_out")
       .outputMode("append").start()
     val (a, b) = urls.splitAt(2)
     input.addData(a); q.processAllAvailable()
@@ -818,7 +839,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[String]
     val q = graft.streaming.CrawlStreams.robotsScreenStream(
       input.toDF().toDF("value"), rules)
-      .writeStream.format("memory").queryName("robots_screen_out")
+      .writeStream.toMemory("robots_screen_out")
       .outputMode("append").start()
     val (a, b) = urls.splitAt(3)
     input.addData(a); q.processAllAvailable()
@@ -858,7 +879,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val q = graft.streaming.CrawlStreams.sitemapStream(
       input.toDF().toDF("host_id", "xml"), known)
-      .writeStream.format("memory").queryName("sitemap_out")
+      .writeStream.toMemory("sitemap_out")
       .outputMode("append").start()
     val (a, b) = feeds.splitAt(2)
     input.addData(a); q.processAllAvailable()
@@ -891,7 +912,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val q = graft.streaming.CrawlStreams.fetchScheduleStream(
       input.toDF().toDF("host_id", "canon_url"), quotas, delays)
-      .writeStream.format("memory").queryName("fetch_schedule_out")
+      .writeStream.toMemory("fetch_schedule_out")
       .outputMode("append").start()
     val (a, b) = feed.splitAt(feed.length / 2)
     input.addData(a); q.processAllAvailable()
@@ -931,7 +952,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(String, Array[Byte])]
     val q = graft.streaming.CrawlStreams.warcRecordStream(
       input.toDF().toDF("path", "content"))
-      .writeStream.format("memory").queryName("warc_records_out")
+      .writeStream.toMemory("warc_records_out")
       .outputMode("append").start()
     input.addData(files.head); q.processAllAvailable()
     input.addData(files(1)); q.processAllAvailable()
