@@ -7,6 +7,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
+  * Query keys named on the command line restrict the run to those keys
+  * (an unknown key exits 2 and nothing runs); a single-query timing is
+  * `SPARK_GRAFT_BENCH_ITERS=2 SPARK_GRAFT_BENCH_ISOLATE=0 Bench <key>`.
   * Queries are FULLY materialized through the noop sink (every column
   * computed and consumed by the executors) — a bare .count() would let
   * Spark prune columns and skip most of the work being measured.
@@ -151,6 +154,13 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    val unknown = args.filterNot(SparkEntry.queries.contains).distinct.sorted
+    if (unknown.nonEmpty) {
+      System.err.println(s"[bench] unknown query keys: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
+    val names =
+      if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq.distinct.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default 3 sweeps (min-of-sweeps absorbs JIT + contention bursts);
     // an EXPLICIT value is honored as given — iters=1 is a deliberate
@@ -169,7 +179,6 @@ object Bench {
       .groupBy("l_returnflag").count()
       .write.format("noop").mode("overwrite").save()
 
-    val names = SparkEntry.queries.keys.toSeq.sorted
     val times = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
     val failed = scala.collection.mutable.Set[String]()

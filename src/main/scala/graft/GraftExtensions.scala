@@ -6,7 +6,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{ArrayDotProduct, ArrayScale, BloomOps, CharDeletionHashes, CharDeletions, HeavyHitters, HtmlExtract, HyperplaneSigs, NearestCells, RollingHash, SimHash64, SimHashWide, TokenSetHits, TopKByScore, UrlCanon, WordShingles}
 
 /** Session extension registering graft's native expressions as SQL
-  * functions — the supported deployment path for custom Catalyst code:
+  * functions. It is the ONLY place they are registered: the Column
+  * helpers under `graft.functions` and every operator emit plain
+  * `call_function("graft_…")` calls that resolve through it, so every
+  * session that runs graft code must install it. `SparkConfigs.local`
+  * and `SparkConfigs.cluster100TB` do; on a session built without it
+  * the analyzer fails with `UNRESOLVED_ROUTINE` naming the function.
+  * To install it elsewhere:
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...

@@ -7,11 +7,15 @@ import org.apache.spark.sql.SparkSession
   *
   *  - `local`: the test/bench shape (local[N], partitions = cores).
   *    Every session graft builds comes from it: `Verify`, `Bench`,
-  *    `BenchOne`, `ProfileOne`, `Explain`, `WindowAudit`, the test
-  *    suites' shared session (`SparkSpec`) and perfbench's harness.
+  *    `ProfileOne`, `Explain`, `WindowAudit`, the test suites' shared
+  *    session (`SparkSpec`) and perfbench's harness.
   *  - `cluster100TB`: the knobs that matter when the same plans run on
   *    a 1000-executor cluster — documented inline with the reasoning
   *    the judge of a 100× scale-up would apply.
+  *
+  * Both profiles install [[GraftExtensions]], the only place graft's
+  * native functions are registered: a session built without it fails
+  * analysis on the first `graft_*` call (`UNRESOLVED_ROUTINE`).
   *
   * Both profiles make generated code compile once per JVM: Spark keys
   * its codegen cache by (class loader, code), so a per-session class
@@ -35,8 +39,7 @@ object SparkConfigs {
   def local(builder: SparkSession.Builder, cores: Int): SparkSession.Builder =
     builder
       .master(s"local[$cores]")
-      // register graft's native functions once at session build — the
-      // per-operator register() calls then no-op (see Registration)
+      // graft's native functions (see GraftExtensions)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -51,9 +54,7 @@ object SparkConfigs {
   /** Cluster profile: apply on top of a cluster-master builder. */
   def cluster100TB(builder: SparkSession.Builder): SparkSession.Builder =
     builder
-      // register graft's native functions once at session build (the
-      // supported deployment path, see GraftExtensions) — otherwise each
-      // one registers through the per-call Registration fallback
+      // graft's native functions (see GraftExtensions)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       // AQE re-plans with runtime statistics: coalesces small shuffle
       // partitions, converts to broadcast when a side turns out small,

@@ -193,7 +193,7 @@ object TrainingDataPipeline {
     val curatedDocs = graft.sources.Tables.table(spark, srcDir, "documents")
       .select("doc_id", "text")
       .join(frontier, Seq("doc_id"), "left_semi")
-    Dedup.writeSignatureIndex(spark, curatedDocs, sigPath)
+    Dedup.writeSignatureIndex(curatedDocs, sigPath)
 
     RunResult(stageCounts, dqPassed, path, sigPath)
   }

@@ -69,9 +69,6 @@ object ArrayScale {
   val builder: Seq[Expression] => Expression =
     exprs => ArrayScale(exprs(0), exprs(1))
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.ensure(spark, "graft_scale", builder)
-
   def column(a: Column, s: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_scale", a, s)
 }
@@ -91,13 +88,9 @@ object ArrayDotProduct {
     s
   }
 
-  /** Shared SQL builder (used by register() and GraftExtensions). */
+  /** SQL builder (injected by GraftExtensions). */
   val builder: Seq[Expression] => Expression =
     exprs => ArrayDotProduct(exprs(0), exprs(1))
-
-  /** Register as a SQL function; `column` then resolves at analysis. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.ensure(spark, "graft_dot", builder)
 
   def column(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_dot", a, b)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
@@ -36,10 +35,5 @@ object BloomOps {
     case Seq(bloom, value) => BloomFilterMightContain(bloom, value)
     case exprs => throw new IllegalArgumentException(
       s"graft_bloom_contains takes (bloom, key), got ${exprs.length} args")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    Registration.ensure(spark, "graft_bloom_agg", aggBuilder)
-    Registration.ensure(spark, "graft_bloom_contains", containsBuilder)
   }
 }

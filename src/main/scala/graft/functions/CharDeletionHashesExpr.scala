@@ -207,27 +207,16 @@ object CharDeletionHashes {
     if (exprs.size == 1) CharDeletionHashLens(exprs.head, Literal(1))
     else CharDeletionHashLens(exprs(0), exprs(1))
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Registration.ensure(spark, "graft_char_deletion_hashes", builder)
-    Registration.ensure(spark, "graft_char_deletion_hashlens", packedBuilder)
-  }
-
-  def hashesCol(spark: org.apache.spark.sql.SparkSession,
-      str: org.apache.spark.sql.Column,
-      depth: Int = 1): org.apache.spark.sql.Column = {
-    register(spark)
+  def hashesCol(str: org.apache.spark.sql.Column,
+      depth: Int = 1): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_function("graft_char_deletion_hashes",
       str, org.apache.spark.sql.functions.lit(depth))
-  }
 
   /** Packed (length ≪ 48 | hash₄₈) neighborhood keys — see [[packed]]. */
-  def packedCol(spark: org.apache.spark.sql.SparkSession,
-      str: org.apache.spark.sql.Column,
-      depth: Int = 1): org.apache.spark.sql.Column = {
-    register(spark)
+  def packedCol(str: org.apache.spark.sql.Column,
+      depth: Int = 1): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_function("graft_char_deletion_hashlens",
       str, org.apache.spark.sql.functions.lit(depth))
-  }
 }
 
 /** [[CharDeletionHashes]] with the variant's code-point length packed

@@ -98,16 +98,9 @@ object CharDeletions {
     if (exprs.size == 1) CharDeletions(exprs.head, Literal(1))
     else CharDeletions(exprs(0), exprs(1))
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.ensure(spark, "graft_char_deletions", builder)
-
-  /** Column-level API (registers on first use; the supported path is
-    * the GraftExtensions session extension). */
-  def neighborhoodCol(spark: org.apache.spark.sql.SparkSession,
-      str: org.apache.spark.sql.Column,
-      depth: Int = 1): org.apache.spark.sql.Column = {
-    register(spark)
+  /** Column-level API over `graft_char_deletions`. */
+  def neighborhoodCol(str: org.apache.spark.sql.Column,
+      depth: Int = 1): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_function("graft_char_deletions", str,
       org.apache.spark.sql.functions.lit(depth))
-  }
 }

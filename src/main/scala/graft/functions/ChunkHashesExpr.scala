@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -127,14 +127,8 @@ object ChunkHashes {
       foldableLong(exprs(1), "gram").toInt,
       foldableLong(exprs(2), "mask"))
 
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_chunk_hashes", builder)
-
-  def chunkHashesCol(spark: SparkSession, c: Column, gram: Int,
-      mask: Long): Column = {
-    register(spark)
+  def chunkHashesCol(c: Column, gram: Int, mask: Long): Column =
     org.apache.spark.sql.functions.call_function("graft_chunk_hashes", c,
       org.apache.spark.sql.functions.lit(gram),
       org.apache.spark.sql.functions.lit(mask))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DataTypes, LongType}
@@ -50,15 +50,9 @@ object RollingHash {
     h
   }
 
-  /** Shared SQL builder (used by register() and GraftExtensions). */
+  /** SQL builder (injected by GraftExtensions). */
   val builder: Seq[Expression] => Expression = exprs => RollingHash(exprs.head)
 
-  /** Register as a SQL function (no-op when already registered). */
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_rolling_hash", builder)
-
-  def rollingHash(spark: SparkSession, c: Column): Column = {
-    register(spark)
+  def rollingHash(c: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_rolling_hash", c)
-  }
 }

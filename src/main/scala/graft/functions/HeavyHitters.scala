@@ -94,9 +94,6 @@ object HeavyHitters {
       case e => fail(s"non-literal k: ${e.sql}")
     }
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.ensure(spark, "graft_heavy_hitters", builder)
 }
 
 /** At most k (item → count) counters, never storing a non-positive

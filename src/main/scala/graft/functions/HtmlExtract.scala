@@ -2,7 +2,7 @@ package graft.functions
 
 import java.util.Locale
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -317,27 +317,14 @@ object HtmlExtract {
   val parsedBuilder: Seq[Expression] => Expression = exprs => HtmlParsed(exprs.head)
   val linksBuilder: Seq[Expression] => Expression = exprs => HtmlLinks(exprs.head)
 
-  def register(spark: SparkSession): Unit = {
-    Registration.ensure(spark, "graft_html_text", textBuilder)
-    Registration.ensure(spark, "graft_html_block_stats", statsBuilder)
-    Registration.ensure(spark, "graft_html_parsed", parsedBuilder)
-    Registration.ensure(spark, "graft_html_links", linksBuilder)
-  }
-
-  def textCol(spark: SparkSession, html: Column): Column = {
-    register(spark)
+  def textCol(html: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_html_text", html)
-  }
 
-  def parsedCol(spark: SparkSession, html: Column): Column = {
-    register(spark)
+  def parsedCol(html: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_html_parsed", html)
-  }
 
-  def linksCol(spark: SparkSession, html: Column): Column = {
-    register(spark)
+  def linksCol(html: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_html_links", html)
-  }
 }
 
 /** Main text of an HTML page — kept content blocks joined by '\n'

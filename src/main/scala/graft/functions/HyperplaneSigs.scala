@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -127,22 +127,17 @@ object HyperplaneSigs {
   private def longOf(e: Expression): Long =
     e.eval().asInstanceOf[Number].longValue()
 
-  /** Shared SQL builder (used by register() and GraftExtensions):
+  /** SQL builder (injected by GraftExtensions):
     * graft_hyperplane_sigs(vec, numTables, numBits, dim, seed). */
   val builder: Seq[Expression] => Expression = exprs =>
     HyperplaneSigs(exprs(0), intOf(exprs(1)), intOf(exprs(2)),
       intOf(exprs(3)), longOf(exprs(4)))
 
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_hyperplane_sigs", builder)
-
-  def column(spark: SparkSession, vec: Column, numTables: Int, numBits: Int,
-      dim: Int, seed: Long): Column = {
-    register(spark)
+  def column(vec: Column, numTables: Int, numBits: Int,
+      dim: Int, seed: Long): Column =
     org.apache.spark.sql.functions.call_function("graft_hyperplane_sigs",
       vec, org.apache.spark.sql.functions.lit(numTables),
       org.apache.spark.sql.functions.lit(numBits),
       org.apache.spark.sql.functions.lit(dim),
       org.apache.spark.sql.functions.lit(seed))
-  }
 }

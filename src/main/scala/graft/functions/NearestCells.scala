@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -96,19 +96,13 @@ object NearestCells {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** Shared SQL builder (used by register() and GraftExtensions):
+  /** SQL builder (injected by GraftExtensions):
     * graft_nearest_cells(vec, centroids, probes). */
   val builder: Seq[Expression] => Expression =
     exprs => NearestCells(exprs(0), exprs(1), exprs(2))
 
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_nearest_cells", builder)
-
-  def column(spark: SparkSession, vec: Column, centroids: Seq[Seq[Double]],
-      probes: Int): Column = {
-    register(spark)
+  def column(vec: Column, centroids: Seq[Seq[Double]], probes: Int): Column =
     org.apache.spark.sql.functions.call_function("graft_nearest_cells",
       vec, org.apache.spark.sql.functions.typedLit(centroids),
       org.apache.spark.sql.functions.lit(probes))
-  }
 }

@@ -19,9 +19,6 @@ object Shingles {
 
   /** Native-codegen shingles (same semantics as [[wordShingles]]; one
     * pass, no interpreted higher-order functions — see [[WordShingles]]). */
-  def wordShinglesNative(spark: org.apache.spark.sql.SparkSession,
-      text: Column, k: Int): Column = {
-    WordShingles.register(spark)
+  def wordShinglesNative(text: Column, k: Int): Column =
     call_function("graft_word_shingles", text, lit(k))
-  }
 }

@@ -63,9 +63,6 @@ object SimHash64 {
     sig
   }
 
-  /** Shared SQL builder (used by register() and GraftExtensions). */
+  /** SQL builder (injected by GraftExtensions). */
   val builder: Seq[Expression] => Expression = exprs => SimHash64(exprs.head)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.ensure(spark, "graft_simhash64", builder)
 }

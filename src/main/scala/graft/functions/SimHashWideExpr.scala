@@ -149,10 +149,7 @@ object SimHashWide {
     UnsafeArrayData.fromPrimitiveArray(sig)
   }
 
-  /** Shared SQL builder (used by register() and GraftExtensions). */
+  /** SQL builder (injected by GraftExtensions). */
   val builder: Seq[Expression] => Expression =
     exprs => SimHashWide(exprs(0), exprs(1))
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.ensure(spark, "graft_simhash_wide", builder)
 }

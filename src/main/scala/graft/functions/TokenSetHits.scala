@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -79,16 +79,11 @@ object TokenSetHits {
     n
   }
 
-  /** Shared SQL builder (used by register() and GraftExtensions). */
+  /** SQL builder (injected by GraftExtensions). */
   val builder: Seq[Expression] => Expression =
     exprs => TokenSetHits(exprs(0), exprs(1))
 
-  def register(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_token_set_hits", builder)
-
-  def column(spark: SparkSession, text: Column, tokens: Seq[String]): Column = {
-    register(spark)
+  def column(text: Column, tokens: Seq[String]): Column =
     org.apache.spark.sql.functions.call_function("graft_token_set_hits",
       text, org.apache.spark.sql.functions.typedLit(tokens))
-  }
 }

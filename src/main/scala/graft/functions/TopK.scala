@@ -82,12 +82,9 @@ object TopKByScore {
     StructField("score", DoubleType, nullable = false),
     StructField("id", LongType, nullable = false)))
 
-  /** Shared SQL builder (used by register() and GraftExtensions). */
+  /** SQL builder (injected by GraftExtensions). */
   val builder: Seq[Expression] => Expression =
     exprs => TopKByScore(exprs(0), exprs(1), exprs(2).eval().asInstanceOf[Int])
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.ensure(spark, "graft_top_k_by_score", builder)
 }
 
 /** Fixed-capacity worst-first binary heap over (score, id): evicts the

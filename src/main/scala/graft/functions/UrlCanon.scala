@@ -2,7 +2,7 @@ package graft.functions
 
 import java.util.Locale
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -105,20 +105,11 @@ object UrlCanon {
   val canonBuilder: Seq[Expression] => Expression = exprs => UrlCanonExpr(exprs.head)
   val hostBuilder: Seq[Expression] => Expression = exprs => UrlHostExpr(exprs.head)
 
-  def register(spark: SparkSession): Unit = {
-    Registration.ensure(spark, "graft_url_canon", canonBuilder)
-    Registration.ensure(spark, "graft_url_host", hostBuilder)
-  }
-
-  def canonCol(spark: SparkSession, url: Column): Column = {
-    register(spark)
+  def canonCol(url: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_url_canon", url)
-  }
 
-  def hostCol(spark: SparkSession, url: Column): Column = {
-    register(spark)
+  def hostCol(url: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_url_host", url)
-  }
 }
 
 /** Canonical form of a URL under the [[UrlCanon]] contract; null for

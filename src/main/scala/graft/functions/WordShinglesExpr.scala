@@ -78,16 +78,11 @@ object WordShingles {
     s
   }
 
-  /** Shared SQL builders (used by register() and GraftExtensions). */
+  /** SQL builders (injected by GraftExtensions). */
   val shinglesBuilder: Seq[Expression] => Expression =
     exprs => WordShingles(exprs.head, exprs(1).eval().asInstanceOf[Int])
   val ngramsBuilder: Seq[Expression] => Expression =
     exprs => WordNgrams(exprs.head, exprs(1).eval().asInstanceOf[Int])
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Registration.ensure(spark, "graft_word_shingles", shinglesBuilder)
-    Registration.ensure(spark, "graft_word_ngrams", ngramsBuilder)
-  }
 }
 
 /** Non-distinct variant of [[WordShingles]]: every k-gram in position

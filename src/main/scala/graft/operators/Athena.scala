@@ -103,8 +103,7 @@ object Athena {
   /** Top products per category by sales count — per-group top-k through
     * the bounded-heap aggregate (map-side partial heaps; a per-category
     * window row_number would sort every product in the category). */
-  def topProductsPerCategoryOf(spark: SparkSession, perf: DataFrame): DataFrame = {
-    graft.functions.TopKByScore.register(spark)
+  def topProductsPerCategoryOf(perf: DataFrame): DataFrame = {
     perf.where(col("category").isNotNull)
       .groupBy("category")
       .agg(call_function("graft_top_k_by_score",
@@ -118,7 +117,7 @@ object Athena {
   }
 
   def topProductsPerCategory(spark: SparkSession, dir: String): DataFrame =
-    topProductsPerCategoryOf(spark, Gold.productPerformance(spark, dir))
+    topProductsPerCategoryOf(Gold.productPerformance(spark, dir))
 
   /** Category × month revenue pivot — `groupBy().pivot()` with a FIXED
     * value list (1..12), so Spark never runs the extra distinct-values

@@ -54,7 +54,6 @@ object Clustering {
       n / KmeansTargetPop)).toInt
 
   private def corpus(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ArrayDotProduct.register(spark)
     Tables.table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
   }

@@ -93,7 +93,6 @@ object Curation {
     * top-k aggregate, so a stratum of a billion rows costs one partial
     * aggregation — not a window sort of the stratum. */
   def stratifiedSample(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TopKByScore.register(spark)
     Tables.events(spark, dir)
       .select(col("event_type"), col("event_id"),
         // negate: TopKByScore keeps highest-score (ties → smaller id),

@@ -28,23 +28,22 @@ object Dedup {
   /** (doc_id, shingle) pairs — distinct 3-word shingles per doc
     * (native codegen shingling; the interpreted HOF version is the
     * reference semantics, asserted equal in DedupSpec). */
-  private def shingleSetsOf(spark: SparkSession, docs: DataFrame): DataFrame =
+  private def shingleSetsOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      explode(Shingles.wordShinglesNative(spark, col("text"), 3)).as("shingle"))
+      explode(Shingles.wordShinglesNative(col("text"), 3)).as("shingle"))
 
   private def shingleSets(spark: SparkSession, dir: String): DataFrame =
-    shingleSetsOf(spark, Tables.table(spark, dir, "documents"))
+    shingleSetsOf(Tables.table(spark, dir, "documents"))
 
   /** Shingle sets with the per-doc set size riding along (window count
     * instead of a separate aggregate — halves the scans of the corpus:
     * the jaccard join then needs no extra size joins). */
-  private def shingleSetsWithSizeOf(spark: SparkSession,
-      docs: DataFrame): DataFrame =
-    shingleSetsOf(spark, docs).withColumn("n_sh",
+  private def shingleSetsWithSizeOf(docs: DataFrame): DataFrame =
+    shingleSetsOf(docs).withColumn("n_sh",
       count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
 
   private def shingleSetsWithSize(spark: SparkSession, dir: String): DataFrame =
-    shingleSetsWithSizeOf(spark, Tables.table(spark, dir, "documents"))
+    shingleSetsWithSizeOf(Tables.table(spark, dir, "documents"))
 
   /** Jaccard ≥ threshold from per-pair intersection counts
     * (a_id, b_id, n_a, n_b, inter). */
@@ -240,7 +239,7 @@ object Dedup {
   def crossOverlap(spark: SparkSession, dir: String): DataFrame = {
     val sh = Tables.table(spark, dir, "documents")
       .select(col("source"),
-        explode(Shingles.wordShinglesNative(spark, col("text"), 3)).as("shingle"))
+        explode(Shingles.wordShinglesNative(col("text"), 3)).as("shingle"))
       .distinct()
     val per = sh.groupBy("source").agg(count(lit(1)).as("n_sh"))
     val common = sh.groupBy("shingle")
@@ -296,7 +295,7 @@ object Dedup {
     // re-joined the document row per chunk; now only 64-hex chunk keys
     // ever leave the scan.
     val chunks = docs.select(col("doc_id"),
-      explode(graft.functions.ChunkHashes.chunkHashesCol(spark,
+      explode(graft.functions.ChunkHashes.chunkHashesCol(
         col("text"), ChunkGram, ChunkMask)).as("k"))
     val occ = chunks.groupBy("k").agg(count(lit(1)).as("n_occ"))
     chunks.join(occ, Seq("k"))
@@ -335,7 +334,7 @@ object Dedup {
       dfCap: Long): DataFrame = {
     val spans = Tables.table(spark, dir, "documents")
       .select(col("doc_id"),
-        explode(Shingles.wordShinglesNative(spark, col("text"), SpanK)).as("span"))
+        explode(Shingles.wordShinglesNative(col("text"), SpanK)).as("span"))
     val banned = spans.groupBy("span").agg(count(lit(1)).as("df"))
       .where(col("df") > dfCap).select("span")
     val allowed = spans.join(banned, Seq("span"), "left_anti")
@@ -634,7 +633,7 @@ object Dedup {
     * per query repeated the 64-perm signature aggregate four times. */
   private[graft] def minhashBuckets(spark: SparkSession, dir: String): DataFrame =
     ArtifactCache.of(spark, dir, "dd_minhash_index")(
-      minhashBucketsOf(spark, Tables.table(spark, dir, "documents")))
+      minhashBucketsOf(Tables.table(spark, dir, "documents")))
 
   /** Persist the corpus signature index next to the table (corpus ×
     * [[MinhashBands]] fixed-width rows — the table
@@ -659,15 +658,13 @@ object Dedup {
     idx
   }
 
-  private[graft] def minhashBucketsOf(spark: SparkSession,
-      docs: DataFrame): DataFrame = {
-    graft.functions.RollingHash.register(spark)
+  private[graft] def minhashBucketsOf(docs: DataFrame): DataFrame = {
     val nPerm = MinhashPerms
     val bands = MinhashBands
     val rowsPerBand = nPerm / bands
     // one rolling hash per (doc, shingle); each permutation is then
     // ~6 integer ops on it — cheaper than a fresh string hash per perm
-    val sh = shingleSetsOf(spark, docs)
+    val sh = shingleSetsOf(docs)
       .select(col("doc_id"),
         call_function("graft_rolling_hash", col("shingle")).as("hs"))
     val perms: Seq[Column] =
@@ -807,7 +804,6 @@ object Dedup {
     * shape; in production it probes the persisted [[gramHashIndexOf]]
     * index; the verdicts meet in batch-keyed left joins. */
   def admission(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BloomOps.register(spark)
     val isBatch = Curation.portableHash(col("doc_id")) % 10 === 0
     val docs = Tables.table(spark, dir, "documents")
     val hashed = docs.select(col("doc_id"), sha2(col("text"), 256).as("h"),
@@ -937,7 +933,7 @@ object Dedup {
     val av = Url.urlVariants(spark, dir)
       .where(col("variant") === (col("doc_id") % Url.UrlVariants))
       .select(col("doc_id"), col("url"),
-        graft.functions.UrlCanon.canonCol(spark, col("url")).as("canon_url"),
+        graft.functions.UrlCanon.canonCol(col("url")).as("canon_url"),
         isBatch.as("is_batch"))
     val urlFrontier = av.where(!col("is_batch"))
       .where(col("canon_url").isNotNull)
@@ -1073,9 +1069,8 @@ object Dedup {
     * of (doc_id, band, sig) per document (two longs each): build once,
     * append per accepted batch; the corpus TEXT is never re-shingled
     * by later screens. */
-  def writeSignatureIndex(spark: SparkSession, docs: DataFrame,
-      path: String): Unit =
-    minhashBucketsOf(spark, docs).write.mode("overwrite").parquet(path)
+  def writeSignatureIndex(docs: DataFrame, path: String): Unit =
+    minhashBucketsOf(docs).write.mode("overwrite").parquet(path)
 
   /** Screen an incoming batch (doc_id, text) against a PERSISTED
     * signature index — [[minhashIncremental]]'s production form. The
@@ -1088,7 +1083,7 @@ object Dedup {
     * novelty flag ingestion gates on. */
   def screenAgainstIndex(spark: SparkSession, batch: DataFrame,
       corpusDocs: DataFrame, indexPath: String): DataFrame = {
-    val batchBuckets = minhashBucketsOf(spark, batch)
+    val batchBuckets = minhashBucketsOf(batch)
     val corpusBuckets = spark.read.parquet(indexPath)
     val cand = batchBuckets
       .select(col("doc_id").as("batch_id"), col("band"), col("sig"))
@@ -1096,10 +1091,10 @@ object Dedup {
           .select(col("doc_id").as("corpus_id"), col("band"), col("sig")),
         Seq("band", "sig"))
       .select("batch_id", "corpus_id").distinct()
-    val bSh = shingleSetsWithSizeOf(spark, batch)
+    val bSh = shingleSetsWithSizeOf(batch)
       .join(cand.select(col("batch_id").as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi")
-    val cSh = shingleSetsWithSizeOf(spark, corpusDocs)
+    val cSh = shingleSetsWithSizeOf(corpusDocs)
       .join(cand.select(col("corpus_id").as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi")
     val matches = bSh
@@ -1316,7 +1311,6 @@ object Dedup {
   private[graft] def simhashSigs(spark: SparkSession, dir: String,
       lanes: Int): DataFrame =
     ArtifactCache.of(spark, dir, "dd_simhash_sigs") {
-      graft.functions.SimHashWide.register(spark)
       Tables.table(spark, dir, "documents").select(col("doc_id"),
         call_function("graft_simhash_wide", col("text"), lit(lanes))
           .as("simhash"))
@@ -1346,10 +1340,9 @@ object Dedup {
     sigs
   }
 
-  def simhashOn(spark: SparkSession, docs: DataFrame, cap: Long,
+  def simhashOn(docs: DataFrame, cap: Long,
       lanes: Int = 1): DataFrame = {
     require(Set(1, 2, 4, 8).contains(lanes), s"lanes must be 1/2/4/8, got $lanes")
-    graft.functions.SimHashWide.register(spark)
     val sig = docs.select(col("doc_id"),
       call_function("graft_simhash_wide", col("text"), lit(lanes)).as("simhash"))
     simhashOnSigs(sig, cap, lanes)
@@ -1439,7 +1432,7 @@ object Dedup {
   def decontam(spark: SparkSession, dir: String): DataFrame = {
     val withSh = Tables.table(spark, dir, "documents")
       .select(col("doc_id"),
-        Shingles.wordShinglesNative(spark, col("text"), DecontamShingleK).as("shs"),
+        Shingles.wordShinglesNative(col("text"), DecontamShingleK).as("shs"),
         (Curation.portableHash(col("doc_id")) % DecontamBenchMod === 0).as("is_bench"))
     val benchShingles = withSh.where(col("is_bench"))
       .select(explode(col("shs")).as("shingle")).distinct()
@@ -1496,7 +1489,6 @@ object Dedup {
     * (bit-identical to the bloom-free plan), so it carries the full
     * DuckDB oracle. */
   def bloomIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BloomOps.register(spark)
     val docs = Tables.table(spark, dir, "documents")
       .select(col("doc_id"), sha2(col("text"), 256).as("h"),
         (Curation.portableHash(col("doc_id")) % 10 === 0).as("is_batch"))

@@ -736,7 +736,6 @@ object Events {
     * break to the smaller item id (the heap's contract), mirrored in
     * the oracle's ORDER BY. */
   def trendingItems(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TopKByScore.register(spark)
     Tables.events(spark, dir)
       .where(col("event_type").isin("view", "click"))
       .select(to_date(col("ts")).as("day"),
@@ -765,7 +764,6 @@ object Events {
     * an exact `GROUP BY user_id` first pass would shuffle every
     * distinct key at 100 TB. */
   def heavyUsers(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.HeavyHitters.register(spark)
     val e = Tables.events(spark, dir).select("user_id")
     // the sketch lands in ONE driver row (≤ k candidate ids + the total
     // count — O(k) metadata, the same class of driver materialization as

@@ -150,12 +150,12 @@ object FuzzyMatch {
       if (dvRowsEst * 48.0 <= (200L << 20).toDouble) broadcast(df) else df
     val dv = dirty.repartition(np, col("d_key"))
       .select(col("d_key"),
-        explode(CharDeletionHashes.packedCol(spark, col("d_name"), maxEdit))
+        explode(CharDeletionHashes.packedCol(col("d_name"), maxEdit))
           .as("vh"))
       .where(keep(col("vh"), cLo - maxEdit, cHi))
     val cv = cust.repartition(np, col("c_custkey"))
       .select(col("c_custkey").as("clean_key"),
-        explode(CharDeletionHashes.packedCol(spark, col("c_name"), maxEdit))
+        explode(CharDeletionHashes.packedCol(col("c_name"), maxEdit))
           .as("vh"))
       .where(keep(col("vh"), cLo - 2 * maxEdit, cHi - maxEdit))
     // ONE exchange end-to-end after the candidate join: the pair

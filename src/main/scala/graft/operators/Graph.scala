@@ -165,10 +165,10 @@ object Graph {
     ArtifactCache.of(spark, dir, "gr_host_edges") {
       Html.linkPages(spark, dir)
         .select(col("src_host").as("u"),
-          explode(graft.functions.HtmlExtract.linksCol(spark, col("html")))
+          explode(graft.functions.HtmlExtract.linksCol(col("html")))
             .as("href"))
         .select(col("u"),
-          graft.functions.UrlCanon.hostCol(spark, col("href")).as("dhost"))
+          graft.functions.UrlCanon.hostCol(col("href")).as("dhost"))
         .where(col("dhost").isNotNull)
         .where(col("dhost").rlike("^host\\d+\\.example$"))
         .select(col("u"),

@@ -97,7 +97,7 @@ object Html {
     * satisfies it, and HtmlSpec pins the trim/length semantics on
     * planted pages that violate it. */
   def htmlExtract(spark: SparkSession, dir: String): DataFrame = {
-    val p = HtmlExtract.parsedCol(spark, col("html"))
+    val p = HtmlExtract.parsedCol(col("html"))
     htmlPages(spark, dir)
       .select(col("doc_id"), p.as("p"))
       .select(col("doc_id"),
@@ -159,7 +159,7 @@ object Html {
       outDir: String): DataFrame = {
     val extracted = pages
       .select(col("doc_id"),
-        HtmlExtract.textCol(spark, col("html")).as("text"),
+        HtmlExtract.textCol(col("html")).as("text"),
         col("lang"), col("source"))
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         length(col("text")).cast("long").as("n_chars"))

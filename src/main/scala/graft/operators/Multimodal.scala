@@ -22,6 +22,11 @@ object Multimodal {
       doc_id: Long, media_type: String, byte_len: Long, magic: String,
       frame_count: Long, width: Long, height: Long)
 
+  /** Upper-case hex of the first 4 payload BYTES, the `magic` column of
+    * every decoder (the oracles mirror it via substring(hex(blob))). */
+  private def magicHex(payload: Array[Byte]): String =
+    payload.take(4).map(b => f"${b & 0xFF}%02X").mkString
+
   /** The decode seam: swap `StubDecoder` for a real codec in prod. */
   trait MediaDecoder extends Serializable {
     def decode(rec: MediaRecord): MediaMeta
@@ -32,8 +37,7 @@ object Multimodal {
   object StubDecoder extends MediaDecoder {
     def decode(r: MediaRecord): MediaMeta = {
       val len = r.payload.length.toLong
-      // first 4 BYTES (the oracle mirrors this via substring(hex(blob)))
-      val magic = r.payload.take(4).map(b => f"${b & 0xFF}%02X").mkString
+      val magic = magicHex(r.payload)
       MediaMeta(r.doc_id, r.media_type, len, magic,
         frame_count = len % 7 + 1,
         width = 64 + len % 640,
@@ -447,7 +451,7 @@ object Multimodal {
     * bytes; corrupt payloads map to NULL format/dims. */
   object HeaderDecoder extends Serializable {
     def decode(r: MediaRecord): HeaderMeta = {
-      val magic = r.payload.take(4).map(b => f"${b & 0xFF}%02X").mkString
+      val magic = magicHex(r.payload)
       MediaHeaders.parse(r.payload) match {
         case Some((fmt, w, h)) => HeaderMeta(r.doc_id, r.media_type,
           r.payload.length.toLong, magic, Some(fmt), Some(w), Some(h))
@@ -512,7 +516,7 @@ object Multimodal {
     * bytes; corrupt payloads map to NULL format/fields. */
   object AudioHeaderDecoder extends Serializable {
     def decode(r: MediaRecord): AudioHeaderMeta = {
-      val magic = r.payload.take(4).map(b => f"${b & 0xFF}%02X").mkString
+      val magic = magicHex(r.payload)
       MediaHeaders.parseAudio(r.payload) match {
         case Some((fmt, ch, rate, bps, ms)) => AudioHeaderMeta(r.doc_id,
           r.media_type, r.payload.length.toLong, magic,
@@ -562,7 +566,7 @@ object Multimodal {
     * bytes; corrupt payloads map to NULL format/fields. */
   object VideoHeaderDecoder extends Serializable {
     def decode(r: MediaRecord): VideoHeaderMeta = {
-      val magic = r.payload.take(4).map(b => f"${b & 0xFF}%02X").mkString
+      val magic = magicHex(r.payload)
       MediaHeaders.parseVideo(r.payload) match {
         case Some((fmt, w, h, tracks, ms)) => VideoHeaderMeta(r.doc_id,
           r.media_type, r.payload.length.toLong, magic,
@@ -660,7 +664,6 @@ object Multimodal {
     * determinism rules) so the oracle stays SQL. */
   def frameSamples(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.ArrayDotProduct.register(spark)
     val recs = Tables.table(spark, dir, "documents")
       .select(
         col("doc_id"),
@@ -869,7 +872,7 @@ object Multimodal {
     val tables = frameLshTablesFor(bits)
     val sigs = ArtifactCache.of(spark, dir, "mm_frame_sigs")(
       Similarity.capBuckets(
-        Similarity.signatures(spark, f, "fid", tables, bits,
+        Similarity.signatures(f, "fid", tables, bits,
           dim = FrameFeatDim),
         FrameLshBucketCap))
     // the verified pair list is itself a session-cached artifact (the

@@ -150,8 +150,8 @@ object Robots {
   def robotsScreen(spark: SparkSession, dir: String): DataFrame = {
     val v = Url.urlVariants(spark, dir)
       .select(col("doc_id"), col("variant"), col("url"),
-        UrlCanon.canonCol(spark, col("url")).as("canon_url"),
-        UrlCanon.hostCol(spark, col("url")).as("canon_host"))
+        UrlCanon.canonCol(col("url")).as("canon_url"),
+        UrlCanon.hostCol(col("url")).as("canon_host"))
       .withColumn("path",
         when(col("canon_url").isNotNull,
           regexp_replace(col("canon_url"), "^[a-z]+://[^/]+", "")))
@@ -192,8 +192,8 @@ object Robots {
     val isBatch = Curation.portableHash(col("doc_id")) % 10 === 0
     val v = Url.urlVariants(spark, dir)
       .select(col("doc_id"), isBatch.as("is_batch"), col("url"),
-        UrlCanon.canonCol(spark, col("url")).as("canon_url"),
-        UrlCanon.hostCol(spark, col("url")).as("canon_host"))
+        UrlCanon.canonCol(col("url")).as("canon_url"),
+        UrlCanon.hostCol(col("url")).as("canon_host"))
     val batch = v.where(col("is_batch"))
     val valid = batch.where(col("canon_url").isNotNull)
       .withColumn("path",

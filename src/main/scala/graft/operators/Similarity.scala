@@ -91,7 +91,6 @@ object Similarity {
 
   /** Corpus with the norm precomputed once per row (never per pair). */
   private[graft] def corpus(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ArrayDotProduct.register(spark)
     Tables.table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
       .withColumn("nrm", VectorFunctions.norm(col("embedding")))
@@ -104,8 +103,7 @@ object Similarity {
 
   /** Per-query top-k via the bounded-heap aggregate (partial heaps
     * merge map-side; a window row_number would sort every candidate). */
-  private def topKPerQuery(spark: SparkSession, scored: DataFrame): DataFrame = {
-    graft.functions.TopKByScore.register(spark)
+  private def topKPerQuery(scored: DataFrame): DataFrame = {
     scored.groupBy("query_id")
       .agg(call_function("graft_top_k_by_score",
         col("cosine"), col("neighbor_id"), lit(TopK)).as("topk"))
@@ -126,7 +124,7 @@ object Similarity {
         VectorFunctions.cosinePrenormed(
           VectorFunctions.dot(col("embedding"), col("q_emb")),
           col("nrm"), col("q_nrm")).as("cosine"))
-    topKPerQuery(spark, scored)
+    topKPerQuery(scored)
   }
 
   /** LSH bucket signatures: one row per (vec, table) with the table's
@@ -135,11 +133,11 @@ object Similarity {
     * one array), exploded by a native generator — no typed row-object
     * map, so the signature pass fuses into the corpus scan's
     * whole-stage-codegen span. */
-  private[graft] def signatures(spark: SparkSession, df: DataFrame, idCol: String,
+  private[graft] def signatures(df: DataFrame, idCol: String,
       tables: Int = LshTables, bits: Int = LshBits,
       dim: Int = Dim): DataFrame =
     df.select(col(idCol).cast("long").as(idCol),
-        posexplode(graft.functions.HyperplaneSigs.column(spark,
+        posexplode(graft.functions.HyperplaneSigs.column(
           col("embedding"), tables, bits, dim, PlaneSeed)))
       .select(col(idCol), col("pos").as("tbl"), col("col").as("sig"))
 
@@ -168,7 +166,7 @@ object Similarity {
   private[graft] def lshSigs(spark: SparkSession, dir: String): DataFrame =
     ArtifactCache.of(spark, dir, "emb_lsh_sigs") {
       val bits = lshBitsFor(corpusCount(spark, dir))
-      capBuckets(signatures(spark, corpus(spark, dir), "vec_id",
+      capBuckets(signatures(corpus(spark, dir), "vec_id",
         lshTablesFor(bits), bits), LshBucketCap)
     }
 
@@ -287,7 +285,7 @@ object Similarity {
     val cand = cSigs.join(qSigs, Seq("tbl", "sig"))
       .where(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id").distinct()
-    topKPerQuery(spark, cand
+    topKPerQuery(cand
       .join(c, "vec_id")
       .join(broadcast(q.select(col("query_id"), col("q_emb"), col("q_nrm"))), "query_id")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -393,16 +391,16 @@ object Similarity {
     val cells = centroids.size
 
     val cCells = c.select(col("vec_id").cast("long").as("vec_id"),
-      explode(graft.functions.NearestCells.column(spark, col("embedding"),
+      explode(graft.functions.NearestCells.column(col("embedding"),
         centroids, IvfAssign)).as("cell"))
     val qCells = q.select(col("query_id").cast("long").as("query_id"),
-        explode(graft.functions.NearestCells.column(spark, col("q_emb"),
+        explode(graft.functions.NearestCells.column(col("q_emb"),
           centroids, ivfProbesFor(cells))).as("cell"))
 
     val cand = cCells.join(qCells, "cell")
       .where(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id").distinct()
-    topKPerQuery(spark, cand
+    topKPerQuery(cand
       .join(c, "vec_id")
       .join(broadcast(q.select(col("query_id"), col("q_emb"), col("q_nrm"))), "query_id")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -512,10 +510,9 @@ object Similarity {
     * literal), so the compress-reconstruct-score pass fuses into the
     * corpus scan's codegen span. */
   private[graft] def buildTopKPq(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TopKByScore.register(spark)
     val books = pqCodebooks(spark, dir)
     val recon = concat((0 until PqSubspaces).map { m =>
-      val code = element_at(graft.functions.NearestCells.column(spark,
+      val code = element_at(graft.functions.NearestCells.column(
         slice(col("embedding"), m * PqSubDim + 1, PqSubDim), books(m), 1), 1)
       element_at(typedLit(books(m)), code + 1)
     }: _*)
@@ -531,7 +528,7 @@ object Similarity {
         col("approx"), col("vec_id"), lit(PqRerank)).as("topk"))
       .select(col("query_id"), explode(col("topk")).as("t"))
       .select(col("query_id"), col("t.id").as("vec_id"))
-    topKPerQuery(spark, cand
+    topKPerQuery(cand
       .join(c, "vec_id")
       .join(broadcast(q.select(col("query_id"), col("q_emb"), col("q_nrm"))),
         "query_id")
@@ -585,7 +582,6 @@ object Similarity {
     * 100 TB the corpus-pruning variants (IVF cells / LSH buckets, probe
     * then label-filter) slot in exactly as they do for top-k search. */
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ArrayDotProduct.register(spark)
     val c = Tables.table(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("embedding"))
@@ -599,7 +595,7 @@ object Similarity {
         VectorFunctions.cosinePrenormed(
           VectorFunctions.dot(col("embedding"), col("q_emb")),
           col("nrm"), col("q_nrm")).as("cosine"))
-    topKPerQuery(spark, scored)
+    topKPerQuery(scored)
   }
 
   /** Fixed-point scale for centroid sums: embeddings are unit-ish floats,
@@ -646,7 +642,6 @@ object Similarity {
     * mean silhouette crosses engines through the fixed-point
     * [[CentroidScale]] path. */
   def labelSilhouette(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ArrayDotProduct.register(spark)
     val cent = labelCentroids(spark, dir)
       .select("label", "dim", "centroid").collect()
       .groupBy(_.getInt(0)).map { case (l, rows) =>
@@ -776,7 +771,6 @@ object Similarity {
     * the recursion on the driver. */
   def mmrRerank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.TopKByScore.register(spark)
     val c = corpus(spark, dir)
     val q = querySet(c)
     val pool = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
@@ -1079,7 +1073,6 @@ object Similarity {
     * oracle can exact-compare scalars; library callers use the array
     * from `normalizedEmbeddings` directly. */
   def normalizedEmbeddings(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ArrayScale.register(spark)
     corpus(spark, dir)
       .select(col("vec_id"), col("nrm"),
         graft.functions.ArrayScale.column(col("embedding"), col("nrm")).as("unit"))
@@ -1229,7 +1222,6 @@ object Similarity {
     * dot product per vector — no shuffle, no state. */
   def pcaProject(spark: SparkSession, dir: String): DataFrame = {
     val axis = pcaAxis(spark, dir)
-    graft.functions.ArrayDotProduct.register(spark)
     Tables.table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       .select(col("vec_id"),

@@ -163,7 +163,7 @@ object Sitemap {
   private def screenCore(spark: SparkSession, dir: String): DataFrame = {
     val e = entries(spark)
       .select(col("host_id"), col("seq"), col("loc"),
-        graft.functions.UrlCanon.canonCol(spark, col("loc")).as("canon_url"),
+        graft.functions.UrlCanon.canonCol(col("loc")).as("canon_url"),
         to_date(col("lastmod_s")).as("lastmod"), col("priority"))
     e.join(Url.frontier(spark, dir).withColumn("known0", lit(true)),
         Seq("canon_url"), "left")
@@ -182,7 +182,7 @@ object Sitemap {
   private[operators] def lastCrawl(spark: SparkSession, dir: String): DataFrame =
     Url.urlVariants(spark, dir)
       .select(col("doc_id"),
-        graft.functions.UrlCanon.canonCol(spark, col("url")).as("canon_url"))
+        graft.functions.UrlCanon.canonCol(col("url")).as("canon_url"))
       .where(col("canon_url").isNotNull)
       .groupBy("canon_url")
       .agg(min("doc_id").as("first_doc_id"))

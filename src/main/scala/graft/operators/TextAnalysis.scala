@@ -98,7 +98,7 @@ object TextAnalysis {
     val uniqRatio = size(array_distinct(t)) * lit(1.0) / nTok
     // native codegen count (duplicates counted) — the higher-order
     // filter(t, isInCollection) is CodegenFallback, interpreted per row
-    val stopHits  = graft.functions.TokenSetHits.column(spark, col("text"), stopwords)
+    val stopHits  = graft.functions.TokenSetHits.column(col("text"), stopwords)
     val stopRatio = stopHits * lit(1.0) / nTok
     val punctRatio = size(regexp_extract_all(col("text"), lit("""[^\w\s]"""), lit(0))) *
       lit(1.0) / length(col("text"))
@@ -120,7 +120,6 @@ object TextAnalysis {
 
   /** Corpus-wide top-20 bigrams (native codegen n-gram expression). */
   def topNgrams(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.WordShingles.register(spark)
     Tables.table(spark, dir, "documents")
       .select(explode(call_function("graft_word_ngrams", col("text"), lit(2)))
         .as("bigram"))
@@ -338,7 +337,7 @@ object TextAnalysis {
   def fingerprint(spark: SparkSession, dir: String): DataFrame =
     Tables.table(spark, dir, "documents")
       .select(col("doc_id"),
-        RollingHash.rollingHash(spark, col("text")).as("fingerprint"))
+        RollingHash.rollingHash(col("text")).as("fingerprint"))
       .orderBy("doc_id")
 
   /** Terms kept per document by [[tfidf]]. */
@@ -415,7 +414,6 @@ object TextAnalysis {
     * broadcast 1-row aggregate; the per-doc mean is a fixed-point
     * decimal sum, order-independent under any partitioning. */
   def lmScore(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.WordShingles.register(spark)
     // r16: per-word xxhash64 keys (see kn5Score — the model keys on
     // word IDENTITY only and no output column carries text, so the
     // count tables and the corpus-sized scoring join shuffle 8-byte
@@ -558,7 +556,6 @@ object TextAnalysis {
     * stream joins by vocabulary-sized keys and closes with a
     * fixed-point per-doc mean. */
   def knScore(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.WordShingles.register(spark)
     val docs = Tables.table(spark, dir, "documents")
     // r16: per-word xxhash64 keys (see kn5Score — no downstream op or
     // output column reads the word text)
@@ -625,7 +622,6 @@ object TextAnalysis {
     * token stream (the side that scales with corpus mass) is joined
     * exactly ONCE, on the finished per-type score. */
   def kn3Score(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.WordShingles.register(spark)
     val docs = Tables.table(spark, dir, "documents")
     // explicit-width exchange before the ~len× explode (the
     // dupCoverageOf discipline): AQE sizes stage coalescing on the tiny
@@ -720,7 +716,6 @@ object TextAnalysis {
     * the token stream joins exactly ONCE on the finished per-type
     * score. */
   def kn5Score(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.WordShingles.register(spark)
     val docs = Tables.table(spark, dir, "documents")
     // explicit-width exchange before the ~len× explode (see kn3Score)
     val np = spark.sessionState.conf.numShufflePartitions
@@ -833,13 +828,11 @@ object TextAnalysis {
     * doc_id. Docs shorter than n tokens carry share 0 and a NULL gram
     * (nothing repeats in them by construction). */
   def topgramShare(spark: SparkSession, dir: String): DataFrame =
-    topgramShareOf(spark, Tables.table(spark, dir, "documents"))
+    topgramShareOf(Tables.table(spark, dir, "documents"))
 
   /** [[topgramShare]] over an arbitrary (doc_id, text) relation — the
     * seam the planted-corpus spec drives. */
-  private[graft] def topgramShareOf(spark: SparkSession,
-      docsIn: DataFrame): DataFrame = {
-    graft.functions.WordShingles.register(spark)
+  private[graft] def topgramShareOf(docsIn: DataFrame): DataFrame = {
     val docs = docsIn
       .select(col("doc_id"), length(col("text")).as("doc_chars"), col("text"))
     def top(n: Int): DataFrame =
@@ -965,7 +958,7 @@ object TextAnalysis {
   def novelty(spark: SparkSession, dir: String): DataFrame = {
     val sh = Tables.table(spark, dir, "documents")
       .select(col("doc_id"),
-        explode(Shingles.wordShinglesNative(spark, col("text"), 3)).as("g"))
+        explode(Shingles.wordShinglesNative(col("text"), 3)).as("g"))
     val df = sh.groupBy("g").agg(count(lit(1)).as("df"))
     sh.join(df, Seq("g"))
       .groupBy("doc_id")
@@ -1734,7 +1727,6 @@ object TextAnalysis {
     * TakeOrderedAndProject with a unique tiebreaker — never a global
     * sort. */
   def pmiPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.WordShingles.register(spark)
     val bg = Tables.table(spark, dir, "documents")
       .select(explode(call_function("graft_word_ngrams", col("text"), lit(2)))
         .as("bigram"))

@@ -77,8 +77,8 @@ object Url {
   def urlCanon(spark: SparkSession, dir: String): DataFrame =
     urlVariants(spark, dir)
       .select(col("doc_id"), col("variant"), col("url"),
-        UrlCanon.canonCol(spark, col("url")).as("canon_url"),
-        UrlCanon.hostCol(spark, col("url")).as("canon_host"))
+        UrlCanon.canonCol(col("url")).as("canon_url"),
+        UrlCanon.hostCol(col("url")).as("canon_host"))
       .orderBy("doc_id", "variant")
 
   /** `dd_url_dedup`: collapse the variant stream by canonical URL —
@@ -88,7 +88,7 @@ object Url {
     * addresses. ONE shuffle, keyed on the collapsed canonical value. */
   def urlDedup(spark: SparkSession, dir: String): DataFrame =
     urlVariants(spark, dir)
-      .select(col("doc_id"), UrlCanon.canonCol(spark, col("url")).as("canon_url"))
+      .select(col("doc_id"), UrlCanon.canonCol(col("url")).as("canon_url"))
       .where(col("canon_url").isNotNull)
       .groupBy("canon_url")
       .agg(count(lit(1)).as("n_urls"),
@@ -106,7 +106,7 @@ object Url {
   private[graft] def frontier(spark: SparkSession, dir: String): DataFrame =
     ArtifactCache.of(spark, dir, "url_frontier")(
       urlVariants(spark, dir)
-        .select(UrlCanon.canonCol(spark, col("url")).as("canon_url"))
+        .select(UrlCanon.canonCol(col("url")).as("canon_url"))
         .where(col("canon_url").isNotNull)
         .distinct())
 
@@ -145,7 +145,7 @@ object Url {
     val isBatch = Curation.portableHash(col("doc_id")) % 10 === 0
     val v = urlVariants(spark, dir)
       .select(col("doc_id"), col("variant"), col("url"),
-        UrlCanon.canonCol(spark, col("url")).as("canon_url"),
+        UrlCanon.canonCol(col("url")).as("canon_url"),
         isBatch.as("is_batch"))
     val corpusFrontier = v.where(!col("is_batch"))
       .where(col("canon_url").isNotNull)

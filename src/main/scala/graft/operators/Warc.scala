@@ -391,7 +391,7 @@ object Warc {
         }
       }
       .toDF("doc_id", "target_uri", "html")
-    val p = graft.functions.HtmlExtract.parsedCol(spark, col("html"))
+    val p = graft.functions.HtmlExtract.parsedCol(col("html"))
     payloads
       .select(col("doc_id"), col("target_uri"), p.as("p"))
       .select(col("doc_id"), col("target_uri"),

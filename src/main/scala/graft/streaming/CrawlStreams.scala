@@ -29,11 +29,10 @@ object CrawlStreams {
     * it per micro-batch. */
   private[graft] def urlScreen(urls: DataFrame,
       knownCanon: DataFrame): DataFrame = {
-    val spark = urls.sparkSession
     urls
       .select(col("value").as("url"),
-        UrlCanon.canonCol(spark, col("value")).as("canon_url"),
-        UrlCanon.hostCol(spark, col("value")).as("canon_host"))
+        UrlCanon.canonCol(col("value")).as("canon_url"),
+        UrlCanon.hostCol(col("value")).as("canon_host"))
       .join(knownCanon.select(col("canon_url"), lit(true).as("known0")),
         Seq("canon_url"), "left")
       .select(col("url"), col("canon_url"), col("canon_host"),
@@ -86,11 +85,10 @@ object CrawlStreams {
     * (counted, never dropped, never fatal). */
   private[graft] def robotsScreen(urls: DataFrame,
       rules: DataFrame): DataFrame = {
-    val spark = urls.sparkSession
     urls
       .select(col("value").as("url"),
-        UrlCanon.canonCol(spark, col("value")).as("canon_url"),
-        UrlCanon.hostCol(spark, col("value")).as("canon_host"))
+        UrlCanon.canonCol(col("value")).as("canon_url"),
+        UrlCanon.hostCol(col("value")).as("canon_host"))
       .withColumn("path",
         when(col("canon_url").isNotNull,
           regexp_replace(col("canon_url"), "^[a-z]+://[^/]+", "")))
@@ -135,7 +133,7 @@ object CrawlStreams {
       }
       .toDF("host_id", "seq", "loc", "lastmod_s", "priority", "body_corrupt")
       .select(col("host_id"), col("seq"), col("loc"),
-        UrlCanon.canonCol(spark, col("loc")).as("canon_url"),
+        UrlCanon.canonCol(col("loc")).as("canon_url"),
         col("lastmod_s"), col("priority"), col("body_corrupt"))
       .join(knownCanon.select(col("canon_url"), lit(true).as("known0")),
         Seq("canon_url"), "left")

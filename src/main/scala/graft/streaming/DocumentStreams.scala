@@ -26,9 +26,6 @@ object DocumentStreams {
     * asserted by the parity spec; a drifted literal silently empties
     * every bucket hit. */
   def nearDupScreenStream(docs: DataFrame, corpusBuckets: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.WordShingles.register(spark)
-    graft.functions.RollingHash.register(spark)
     val perms = Dedup.MinhashPerms
     val bands = Dedup.MinhashBands
     val rowsPerBand = perms / bands

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming twins of the embedding operators: the batch layer trains
@@ -21,7 +21,7 @@ object EmbeddingStreams {
     * while the batch assignment expands e·e − 2e·c + c·c — identical
     * argmin except for vectors sitting within float-ulp of a Voronoi
     * boundary; StreamingSpec asserts exact agreement on the corpus. */
-  def clusterAssignStream(spark: SparkSession, stream: DataFrame,
+  def clusterAssignStream(stream: DataFrame,
       centroids: Seq[(Long, Seq[Double])]): DataFrame = {
     val sorted = centroids.sortBy(_._1)
     val book = sorted.map(_._2)
@@ -33,7 +33,7 @@ object EmbeddingStreams {
     val cellIds = array(sorted.map(c => lit(c._1.toInt)): _*)
     stream.select(col("vec_id"),
       element_at(cellIds,
-        element_at(graft.functions.NearestCells.column(spark,
+        element_at(graft.functions.NearestCells.column(
           col("embedding").cast("array<double>"), book, 1), 1) + lit(1))
         .as("cluster"))
   }

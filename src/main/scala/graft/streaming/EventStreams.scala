@@ -364,7 +364,6 @@ object EventStreams {
     * a table snapshot exactly as [[graft.operators.Events.heavyUsers]]
     * does. */
   def heavyHittersStream(events: DataFrame, k: Int): DataFrame = {
-    graft.functions.HeavyHitters.register(events.sparkSession)
     events.groupBy().agg(
       call_function("graft_heavy_hitters", col("user_id"), lit(k)).as("cand"),
       count(lit(1)).as("n"))

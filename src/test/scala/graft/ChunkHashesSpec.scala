@@ -17,7 +17,6 @@ class ChunkHashesSpec extends SparkSpec {
 
   /** The ORIGINAL (pre-r15) chunk-key derivation, verbatim. */
   private def oldChunks(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
     val toks = docs.select(col("doc_id"),
       posexplode(split(col("text"), " ")).as(Seq("t", "tok")))
     val w = Window.partitionBy("doc_id").orderBy("t")
@@ -25,7 +24,7 @@ class ChunkHashesSpec extends SparkSpec {
       lag(col("tok"), 3).over(w), lag(col("tok"), 2).over(w),
       lag(col("tok"), 1).over(w))
     val cut = (col("t") >= Dedup.ChunkGram) &&
-      (graft.functions.RollingHash.rollingHash(spark, gram)
+      (graft.functions.RollingHash.rollingHash(gram)
         % Dedup.ChunkMask === 0)
     toks.withColumn("chunk_idx", sum(cut.cast("long")).over(w))
       .groupBy("doc_id", "chunk_idx")
@@ -39,7 +38,7 @@ class ChunkHashesSpec extends SparkSpec {
 
   private def newChunks(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      explode(graft.functions.ChunkHashes.chunkHashesCol(docs.sparkSession,
+      explode(graft.functions.ChunkHashes.chunkHashesCol(
         col("text"), Dedup.ChunkGram, Dedup.ChunkMask)).as("k"))
 
   private def keyBag(df: DataFrame): Map[(Long, String), Long] =

@@ -60,18 +60,18 @@ class DedupSpec extends SparkSpec {
     val big = (0 until 8).map(i => docs.select(
         (col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text")))
       .reduce(_ unionAll _)
-    val capped = Dedup.simhashOn(spark, big, 8L)
+    val capped = Dedup.simhashOn(big, 8L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val uncapped = Dedup.simhashOn(spark, big, Long.MaxValue)
+    val uncapped = Dedup.simhashOn(big, Long.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // the guard only ever REMOVES candidate pairs (precision untouched)…
     assert(capped.subsetOf(uncapped))
     // …and on this skewed corpus it genuinely prunes
     assert(capped.size < uncapped.size)
     // at sandbox scale the default cap is a no-op: identical output
-    val base = Dedup.simhashOn(spark, docs, Dedup.SimhashBucketCap)
+    val base = Dedup.simhashOn(docs, Dedup.SimhashBucketCap)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val baseUncapped = Dedup.simhashOn(spark, docs, Long.MaxValue)
+    val baseUncapped = Dedup.simhashOn(docs, Long.MaxValue)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(base == baseUncapped)
   }
@@ -90,7 +90,7 @@ class DedupSpec extends SparkSpec {
         k <- Seq(3, Dedup.SpanK)) {
       val maxDf = graft.sources.Tables.table(spark, dir, "documents")
         .select(col("doc_id"),
-          explode(Shingles.wordShinglesNative(spark, col("text"), k)).as("s"))
+          explode(Shingles.wordShinglesNative(col("text"), k)).as("s"))
         .groupBy("s").agg(count(lit(1)).as("df"))
         .agg(max("df")).head().getLong(0)
       assert(maxDf <= Dedup.ShingleDfCap,
@@ -129,7 +129,7 @@ class DedupSpec extends SparkSpec {
     // the sandbox-scale replica of 1M docs against the 4096 cap
     val cap = 2L
     def pairs(c: Long, lanes: Int): Set[(Long, Long)] =
-      Dedup.simhashOn(spark, docs, c, lanes).collect()
+      Dedup.simhashOn(docs, c, lanes).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     def recall(p: Set[(Long, Long)]): Double =
       (planted intersect p).size.toDouble / planted.size
@@ -151,13 +151,13 @@ class DedupSpec extends SparkSpec {
     val both = docs.select(
       col("doc_id"),
       Shingles.wordShingles(col("text"), 3).as("hof"),
-      Shingles.wordShinglesNative(spark, col("text"), 3).as("native"))
+      Shingles.wordShinglesNative(col("text"), 3).as("native"))
     assert(both.where(col("hof") =!= col("native")).count() == 0)
     // edge cases: shorter than k, exactly k
     import spark.implicits._
     val edge = Seq("one two", "one two three", "a a a a").toDF("text")
       .select(Shingles.wordShingles(col("text"), 3).as("hof"),
-        Shingles.wordShinglesNative(spark, col("text"), 3).as("native"))
+        Shingles.wordShinglesNative(col("text"), 3).as("native"))
       .collect()
     edge.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1), r))
   }
@@ -470,7 +470,7 @@ class DedupSpec extends SparkSpec {
     // Σ df·n = total (doc, shingle) incidences
     val totalIncidence = graft.sources.Tables.table(spark, sfDir, "documents")
       .select(col("doc_id"),
-        explode(graft.functions.Shingles.wordShinglesNative(spark, col("text"), 3))
+        explode(graft.functions.Shingles.wordShinglesNative(col("text"), 3))
           .as("s")).count()
     assert(hist.map { case (df, n) => df * n }.sum == totalIncidence)
     // the exactness precondition the span/jaccard ops assert is the
@@ -780,7 +780,7 @@ class DedupSpec extends SparkSpec {
     val arriving = graft.operators.Url.urlVariants(spark, sfDir)
       .where(col("variant") === (col("doc_id") % graft.operators.Url.UrlVariants))
       .select(col("doc_id"),
-        graft.functions.UrlCanon.canonCol(spark, col("url")).as("canon_url"))
+        graft.functions.UrlCanon.canonCol(col("url")).as("canon_url"))
       .collect()
       .map(r => (r.getLong(0), Option(r.getAs[String]("canon_url"))))
     val batchIds = docs.filter(_._3).map(_._1).toSet

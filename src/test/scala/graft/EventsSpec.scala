@@ -166,7 +166,6 @@ class EventsSpec extends SparkSpec {
     val k = 16
     val rows = (Seq.fill(400)(1L) ++ Seq.fill(300)(2L) ++ Seq.fill(200)(3L) ++
       (4L to 1000L)).toDF("id").repartition(7)
-    graft.functions.HeavyHitters.register(spark)
     val cand = rows.agg(
       org.apache.spark.sql.functions.call_function("graft_heavy_hitters",
         org.apache.spark.sql.functions.col("id"),

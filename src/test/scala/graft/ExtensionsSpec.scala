@@ -5,6 +5,18 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ExtensionsSpec extends AnyFunSuite {
 
+  /** Every function GraftExtensions injects: the only registration
+    * path, so a name missing here is a name no session can resolve. */
+  private val Injected = Seq(
+    "graft_rolling_hash", "graft_simhash64", "graft_simhash_wide",
+    "graft_word_shingles", "graft_word_ngrams", "graft_dot", "graft_scale",
+    "graft_top_k_by_score", "graft_hyperplane_sigs", "graft_token_set_hits",
+    "graft_nearest_cells", "graft_heavy_hitters", "graft_char_deletions",
+    "graft_char_deletion_hashes", "graft_char_deletion_hashlens",
+    "graft_bloom_agg", "graft_bloom_contains", "graft_html_text",
+    "graft_html_block_stats", "graft_html_parsed", "graft_html_links",
+    "graft_url_canon", "graft_url_host", "graft_chunk_hashes")
+
   test("GraftExtensions makes the native functions available to plain SQL") {
     // getOrCreate reuses any live session and would skip the extension
     // hook — detach the shared test session first, reattach after
@@ -17,6 +29,12 @@ class ExtensionsSpec extends AnyFunSuite {
       .appName("graft-ext-test")
       .getOrCreate()
     try {
+      // a fresh session has run no operator: each name resolves through
+      // the extension alone
+      val fresh = spark.newSession()
+      val missing = Injected.filterNot(fresh.catalog.functionExists)
+      assert(Injected.distinct.size == 24)
+      assert(missing.isEmpty, s"not resolvable: ${missing.mkString(", ")}")
       val row = spark.sql(
         """SELECT graft_rolling_hash('hello world')       AS rh,
           |       graft_simhash64('a b c')                AS sh,

@@ -23,7 +23,7 @@ class FuzzyMatchSpec extends SparkSpec {
   test("deletion neighborhood is distinct, includes the string itself") {
     import spark.implicits._
     val out = Seq("abc", "aab", "").toDF("s")
-      .select(CharDeletions.neighborhoodCol(spark, col("s")).as("v"))
+      .select(CharDeletions.neighborhoodCol(col("s")).as("v"))
       .as[Seq[String]].collect()
     assert(out(0).toSet == Set("abc", "bc", "ac", "ab"))
     assert(out(1).toSet == Set("aab", "ab", "aa")) // duplicate variants collapse
@@ -37,7 +37,7 @@ class FuzzyMatchSpec extends SparkSpec {
     // removed by the exact levenshtein verification.
     import spark.implicits._
     def nb(s: String): Set[String] = Seq(s).toDF("s")
-      .select(CharDeletions.neighborhoodCol(spark, col("s")).as("v"))
+      .select(CharDeletions.neighborhoodCol(col("s")).as("v"))
       .as[Seq[String]].collect().head.toSet
     assert((nb("abcd") & nb("abcd")).nonEmpty)
     assert((nb("abcd") & nb("abd")).nonEmpty)  // deletion
@@ -49,7 +49,7 @@ class FuzzyMatchSpec extends SparkSpec {
   test("depth-2 neighborhood intersection contains the lev<=2 relation") {
     import spark.implicits._
     def nb2(s: String): Set[String] = Seq(s).toDF("s")
-      .select(CharDeletions.neighborhoodCol(spark, col("s"), 2).as("v"))
+      .select(CharDeletions.neighborhoodCol(col("s"), 2).as("v"))
       .as[Seq[String]].collect().head.toSet
     // breadth-first closure: 'abcd' → itself + 4 del¹ + 6 del²
     assert(nb2("abcd").size == 11)
@@ -112,7 +112,7 @@ class FuzzyMatchSpec extends SparkSpec {
       "añbñc", "ΑΒΓΔ", "日本語テキスト", "xy")
     (1 to 3).foreach { depth =>
       val rows = strs.toDF("s").select(
-          graft.functions.CharDeletionHashes.hashesCol(spark, col("s"), depth).as("h"),
+          graft.functions.CharDeletionHashes.hashesCol(col("s"), depth).as("h"),
           expr(s"transform(graft_char_deletions(s, $depth), x -> xxhash64(x))").as("hv"))
         .as[(Seq[Long], Seq[Long])].collect()
       rows.foreach { case (h, hv) =>

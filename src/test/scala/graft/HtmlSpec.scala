@@ -155,7 +155,6 @@ class HtmlSpec extends SparkSpec {
       "<nav><a href=\"/\">All Of This Is Nav</a></nav><p>tiny</p>",
       "<p>5 &lt; 7 &amp; more content here</p><script>x<y</script>",
       "")
-    graft.functions.HtmlExtract.register(spark)
     import spark.implicits._
     pages.toDF("html")
       .selectExpr("graft_html_text(html) AS t", "graft_html_block_stats(html) AS s",

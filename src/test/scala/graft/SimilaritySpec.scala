@@ -163,7 +163,7 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.lshBitsFor(n) == Similarity.LshBits) // sandbox floor
     assert(bits > Similarity.LshBits)
     assert(Similarity.lshTablesFor(bits) > Similarity.LshTables)
-    val sigs = Similarity.signatures(spark, big, "vec_id",
+    val sigs = Similarity.signatures(big, "vec_id",
       Similarity.lshTablesFor(bits), bits)
     val meanPop = sigs.groupBy("tbl", "sig").count()
       .agg(avg("count")).head().getDouble(0)
@@ -182,7 +182,7 @@ class SimilaritySpec extends SparkSpec {
         (col("vec_id") + lit(i * 1000000L)).as("vec_id"), col("embedding")))
       .reduce(_ unionAll _)
     val bits = Similarity.lshBitsFor(big.count())
-    val sigs = Similarity.signatures(spark, big, "vec_id",
+    val sigs = Similarity.signatures(big, "vec_id",
       Similarity.lshTablesFor(bits), bits)
     val capped = Similarity.capBuckets(sigs, 32L)
     val maxPop = capped.groupBy("tbl", "sig").count()

@@ -98,19 +98,28 @@ class StreamingSinkSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(java.sql.Timestamp, Long)]
+    val ckpt = Files.createTempDirectory("graft_dedup_ckpt")
     val q = EventStreams.dedupStream(
       input.toDF().toDF("ts", "event_id"))
       .writeStream.format("memory").queryName("dedup_out")
+      .option("checkpointLocation", ckpt.toString)
       .outputMode("append").start()
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    val t1 = java.sql.Timestamp.valueOf("2024-01-01 00:00:05")
-    input.addData(Seq((t0, 1L), (t0, 2L), (t0, 1L))) // replay of id 1
-    q.processAllAvailable()
-    input.addData(Seq((t1, 2L), (t0, 3L)))           // replay of id 2, re-stamped ts
-    q.processAllAvailable()
-    val out = spark.table("dedup_out").select("event_id")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    q.stop()
+    val out = try {
+      val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+      val t1 = java.sql.Timestamp.valueOf("2024-01-01 00:00:05")
+      input.addData(Seq((t0, 1L), (t0, 2L), (t0, 1L))) // replay of id 1
+      q.processAllAvailable()
+      input.addData(Seq((t1, 2L), (t0, 3L)))           // replay of id 2, re-stamped ts
+      q.processAllAvailable()
+      spark.table("dedup_out").select("event_id")
+        .collect().map(_.getLong(0)).sorted.toSeq
+    } finally {
+      q.stop()
+      val walk = Files.walk(ckpt)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.delete(p))
+      finally walk.close()
+    }
     assert(out == Seq(1L, 2L, 3L))
   }
 

@@ -660,7 +660,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, Seq[Double])]
     val streamDf = input.toDF().toDF("vec_id", "embedding")
     val q = graft.streaming.EmbeddingStreams
-      .clusterAssignStream(spark, streamDf, cents)
+      .clusterAssignStream(streamDf, cents)
       .writeStream.toMemory("route_out")
       .outputMode("append").start()
     val rows = Tables.table(spark, sfDir, "embeddings")

@@ -128,7 +128,6 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("repetition ratio identifies constructed boilerplate") {
     import spark.implicits._
-    graft.functions.WordShingles.register(spark)
     val docs = Seq(
       (1L, "spam spam spam spam spam"),            // all 2-grams identical
       (2L, "all words here are fully distinct"),   // no repeats
@@ -800,7 +799,7 @@ class TextAnalysisSpec extends SparkSpec {
       (3L, "one"),                  // no 2-grams at all -> zeros, NULL grams
       (4L, "the quick brown fox jumps over the lazy dog again") // clean
     ).toDF("doc_id", "text")
-    val out = TextAnalysis.topgramShareOf(spark, docs).collect()
+    val out = TextAnalysis.topgramShareOf(docs).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(out(1L).getAs[String]("top2_gram") == "x y")
     assert(out(1L).getAs[Double]("top2_frac") == 9.0 / 11.0)

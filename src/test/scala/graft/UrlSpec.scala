@@ -54,7 +54,6 @@ class UrlSpec extends SparkSpec {
 
   test("SQL registration: graft_url_canon / graft_url_host resolve and agree") {
     import spark.implicits._
-    graft.functions.UrlCanon.register(spark)
     val row = Seq("HTTP://A.com:80/x/?utm_s=1&b=2&a=1#z").toDF("u")
       .selectExpr("graft_url_canon(u) AS c", "graft_url_host(u) AS h")
       .collect().head

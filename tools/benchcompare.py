@@ -136,7 +136,8 @@ def main():
         for k, prev, now, norm in violations:
             print(f"  OVER {k}: {now:.2f}s vs best prior {prev:.2f}s "
                   f"({now/prev:.1f}x, band 2x*{norm:.2f}) "
-                  f"-> adjudicate with BenchOne")
+                  "-> adjudicate with SPARK_GRAFT_BENCH_ITERS=2 "
+                  f"SPARK_GRAFT_BENCH_ISOLATE=0 graft.Bench {k}")
         sys.exit(1)
     print("all within the host-normalized 2x band")
 
