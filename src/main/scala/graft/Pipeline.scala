@@ -213,12 +213,4 @@ object Pipeline {
     runManifest(spark, lakeBase, today).map { e =>
       e -> run(spark, srcDir, lakeBase, e.loadDate)
     }
-
-  /** [[run]] under the DAG's retry policy. */
-  def runWithRetries(spark: SparkSession, srcDir: String, lakeBase: String,
-      loadDate: String = "d20260101", retries: Int = 1,
-      retryDelayMs: Long = 300000L,
-      sleep: Long => Unit = Thread.sleep): RunResult =
-    withRetries(retries, retryDelayMs, sleep)(_ =>
-      run(spark, srcDir, lakeBase, loadDate))
 }

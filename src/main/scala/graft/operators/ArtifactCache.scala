@@ -1,13 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.{ClassTag, classTag}
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.serializer.JavaSerializer
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Session-lifetime cache for every TRAINED ARTIFACT derived from a
   * corpus dir, under one train-once contract: one derivation per corpus
   * per session, every later consumer reads the cached result. In a
-  * deployment each artifact is persisted next to the table (see
-  * [[Curation.saveClusterMap]]) and loaded via [[put]], never
-  * re-derived on the query path. Two kinds of entry share one map:
+  * deployment each artifact is persisted next to the table with
+  * [[save]] and read back with [[load]], never re-derived on the query
+  * path. Two kinds of entry share one map:
   *
   *  - [[of]]: small derived TABLES (near-dup pair lists, the doc→cluster
   *    map, ANN top-k result tables), `localCheckpoint`ed — materialized
@@ -18,8 +22,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Artifacts of one dir derive from each other (the IVF book from the
   * corpus count, the cluster map from the ngram pair list), so
-  * [[invalidateDir]] is the only complete invalidation after a corpus
-  * dir is rewritten in place.
+  * [[invalidateDir]] is the only invalidation after a corpus dir is
+  * rewritten in place.
   *
   * Lifetime: the outer map is weakly keyed by the session OBJECT (never
   * an identity hash, which two live sessions can share), so entries are
@@ -58,23 +62,33 @@ object ArtifactCache {
     getOrBuild(spark, dir, name)(build.localCheckpoint())
 
   /** The cached driver-side value for (corpus dir, name), building it
-    * on first use (no checkpoint: the value lives on the driver). */
-  private[graft] def value[T](spark: SparkSession, dir: String, name: String)
-      (build: => T): T =
+    * on first use (no checkpoint: the value lives on the driver). A
+    * table that is already a checkpoint — a fixpoint's last state — is
+    * held here too, as built, instead of being checkpointed twice. */
+  private[graft] def value[T: ClassTag](spark: SparkSession, dir: String,
+      name: String)(build: => T): T =
     getOrBuild(spark, dir, name)(build)
 
   /** Deliberately NOT `computeIfAbsent`: builders read other cached
     * artifacts (the IVF book reads the corpus count, `ann_topk_ivf`
     * reads the IVF book, the cluster map reads the ngram pair list), and
     * nested `computeIfAbsent` on one map is a recursive-update error.
-    * Two racing first builds both run; the first to land wins. */
-  private def getOrBuild[T](spark: SparkSession, dir: String, name: String)
-      (build: => T): T = {
+    * Two racing first builds both run; the first to land wins. A hit
+    * of the other kind than the reader's (a [[load]] from a path saved
+    * for another artifact) fails here, by name, not as a cast error. */
+  private def getOrBuild[T: ClassTag](spark: SparkSession, dir: String,
+      name: String)(build: => T): T = {
     val m = forSession(spark)
     val k = key(dir, name)
     val hit = m.get(k)
-    if (hit != null) hit.asInstanceOf[T]
-    else {
+    if (hit != null) {
+      val wanted =
+        if (classOf[Dataset[_]].isAssignableFrom(classTag[T].runtimeClass)) "table"
+        else "value"
+      if (kindOf(hit) != wanted) throw new IllegalStateException(
+        s"artifact $k holds a ${kindOf(hit)}, but its reader expects a $wanted")
+      hit.asInstanceOf[T]
+    } else {
       val t0 = System.nanoTime()
       val built = build.asInstanceOf[AnyRef]
       buildSec.put(k, (System.nanoTime() - t0) / 1e9)
@@ -100,22 +114,60 @@ object ArtifactCache {
     b.result()
   }
 
-  /** Prime the cache with an externally persisted artifact, a table or a
-    * value (the load half of a save/load contract). */
-  private[graft] def put(spark: SparkSession, dir: String, name: String,
-      artifact: AnyRef): Unit =
-    forSession(spark).put(key(dir, name), artifact)
+  private def kindOf(artifact: AnyRef): String = artifact match {
+    case _: Dataset[_] => "table"
+    case _ => "value"
+  }
 
-  /** Drop ONE cached artifact. Prefer [[invalidateDir]] after a corpus
-    * rewrite: artifacts of one dir derive from each other, so dropping
-    * one name while its upstreams stay cached silently re-derives it
-    * from stale inputs. */
-  def invalidate(spark: SparkSession, dir: String, name: String): Unit =
-    forSession(spark).remove(key(dir, name))
+  /** Write the cached artifact (dir, name) to `path`, replacing what is
+    * there: a table as parquet in `path/table`, a value as one
+    * Java-serialized object in `path/value`. The child's name records
+    * the kind, so [[load]] takes no type argument. Saving never builds:
+    * the artifact must be cached. */
+  def save(spark: SparkSession, dir: String, name: String, path: String): Unit = {
+    val artifact = forSession(spark).get(key(dir, name))
+    if (artifact == null) throw new NoSuchElementException(
+      s"cannot save artifact $name of $dir: it is not cached (build it first)")
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.delete(root, true)
+    artifact match {
+      case t: Dataset[_] => t.write.parquet(new Path(root, "table").toString)
+      case v =>
+        val out = serializer(spark).serializeStream(fs.create(new Path(root, "value")))
+        try out.writeObject(v) finally out.close()
+    }
+  }
+
+  /** Read back what [[save]] wrote at `path` and cache it as (dir,
+    * name), replacing any cached entry, so every consumer reads it
+    * instead of deriving it; a table is `localCheckpoint`ed, as [[of]]
+    * does. A loaded artifact is served as saved: most are functions of
+    * the corpus, so after an in-place rewrite call [[invalidateDir]]
+    * and re-derive rather than loading a stale one. Returns the
+    * artifact. */
+  def load(spark: SparkSession, dir: String, name: String, path: String): AnyRef = {
+    val (tablePath, valuePath) = (new Path(path, "table"), new Path(path, "value"))
+    val fs = tablePath.getFileSystem(spark.sessionState.newHadoopConf())
+    val artifact: AnyRef =
+      if (fs.exists(tablePath)) spark.read.parquet(tablePath.toString).localCheckpoint()
+      else if (fs.exists(valuePath)) {
+        val in = serializer(spark).deserializeStream(fs.open(valuePath))
+        try in.readObject[AnyRef]() finally in.close()
+      } else throw new java.io.FileNotFoundException(
+        s"no saved artifact at $path: neither $tablePath nor $valuePath exists")
+    forSession(spark).put(key(dir, name), artifact)
+    artifact
+  }
+
+  /** Java serialization, whatever `spark.serializer` says: the format
+    * on disk must not depend on a session setting. */
+  private def serializer(spark: SparkSession) =
+    new JavaSerializer(spark.sparkContext.getConf).newInstance()
 
   /** Drop EVERY cached artifact, table or value, of a corpus dir
-    * rewritten in place — the one complete invalidation, since the
-    * artifacts of a dir form a derivation chain. */
+    * rewritten in place — the one invalidation, since the artifacts of
+    * a dir form a derivation chain. */
   def invalidateDir(spark: SparkSession, dir: String): Unit = {
     val m = forSession(spark)
     val it = m.keySet().iterator()

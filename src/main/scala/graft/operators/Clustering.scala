@@ -144,28 +144,6 @@ object Clustering {
       fit(spark, c, seedCentroids(c, k))
     }
 
-  /** Persist the trained centroid book next to the table (the
-    * [[Similarity.saveIvfCodebook]] contract): one row per cell,
-    * k×dim doubles — train once, every later driver loads instead of
-    * refitting. */
-  def saveKmeansCentroids(spark: SparkSession, dir: String, path: String): Unit = {
-    import spark.implicits._
-    kmeansCentroids(spark, dir)
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a persisted centroid book and prime the cache for `dir`, so
-    * assignment runs without ever training. Returns the book. */
-  def loadKmeansCentroids(spark: SparkSession, dir: String,
-      path: String): Seq[(Long, Seq[Double])] = {
-    val book = spark.read.parquet(path).orderBy("cell").collect()
-      .map(r => (r.getLong(0),
-        r.getAs[scala.collection.Seq[Double]]("centroid").toSeq)).toSeq
-    ArtifactCache.put(spark, dir, "km_centroids", book)
-    book
-  }
-
   /** Assignment of an arbitrary (vec_id, e) relation to a fitted book
     * (test seam for the init-balance comparison). */
   private[graft] def assignments(spark: SparkSession, c: DataFrame,

@@ -220,41 +220,22 @@ object Curation {
     * [[dedupComponents]], [[clusterStats]], [[dedupWeights]],
     * [[canonicalByQuality]], [[leakageSafeSplit]], [[kfoldAssign]],
     * [[graft.operators.Dedup.sourceDupProfile]] — reads the map instead
-    * of re-deriving the fixpoint. In a deployment the map is persisted
-    * next to the corpus ([[saveClusterMap]]/[[loadClusterMap]] — the
-    * IVF-codebook train-once contract): at 100 TB re-deriving it per
-    * query is a 10×-redundant corpus pass; reading it is one doc-keyed
-    * scan of a two-long-column table. The labels are a unique fixpoint
-    * (smallest doc_id per component), so caching cannot change any
-    * consumer's result. */
+    * of re-deriving the fixpoint. In a deployment the fixpoint's raw
+    * component labels, artifact `dd_cluster_labels`, are persisted next
+    * to the corpus ([[ArtifactCache.save]]/[[ArtifactCache.load]]): at
+    * 100 TB re-deriving them per query is a 10×-redundant corpus pass.
+    * The map is built from the labels by the doc-keyed left join
+    * against the LIVE documents table, so labels persisted before docs
+    * were appended degrade safely — new docs become singleton clusters
+    * instead of vanishing from every consumer — and labels of deleted
+    * docs drop. The labels are a unique fixpoint (smallest doc_id per
+    * component), so caching cannot change any consumer's result. */
   def clusterMap(spark: SparkSession, dir: String): DataFrame =
     ArtifactCache.of(spark, dir, "dd_cluster_map")(
-      resolveClusters(spark, dir, componentLabels(
-        Dedup.ngramJaccard(spark, dir).select("a_id", "b_id"))))
-
-  /** Persist the trained cluster map next to the table (tiny: two long
-    * columns, one row per document). */
-  def saveClusterMap(spark: SparkSession, dir: String, path: String): Unit =
-    clusterMap(spark, dir).orderBy("doc_id")
-      .write.mode("overwrite").parquet(path)
-
-  /** Load a persisted cluster map and prime the cache for `dir`, so
-    * every consumer reads it without ever re-deriving the fixpoint.
-    * The loaded map is RESOLVED against the live documents table first
-    * (the same doc-keyed left join as the build path): a map persisted
-    * before new docs were appended degrades safely — new docs default
-    * to singleton clusters instead of silently vanishing from every
-    * consumer — and rows for deleted docs are dropped. Returns the
-    * resolved map. */
-  def loadClusterMap(spark: SparkSession, dir: String,
-      path: String): DataFrame = {
-    val m = resolveClusters(spark, dir,
-      spark.read.parquet(path)
-        .select(col("doc_id").as("id"), col("cluster_id").as("lbl")))
-      .localCheckpoint()
-    ArtifactCache.put(spark, dir, "dd_cluster_map", m)
-    m
-  }
+      resolveClusters(spark, dir,
+        // `value`, not `of`: the fixpoint's last state is a checkpoint
+        ArtifactCache.value(spark, dir, "dd_cluster_labels")(componentLabels(
+          Dedup.ngramJaccard(spark, dir).select("a_id", "b_id")))))
 
   /** (doc_id, cluster_id) for EVERY document from a label fixpoint over
     * the near-dup pairs (docs in no pair are their own cluster). */

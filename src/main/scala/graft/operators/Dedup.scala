@@ -635,29 +635,6 @@ object Dedup {
     ArtifactCache.of(spark, dir, "dd_minhash_index")(
       minhashBucketsOf(Tables.table(spark, dir, "documents")))
 
-  /** Persist the corpus signature index next to the table (corpus ×
-    * [[MinhashBands]] fixed-width rows — the table
-    * [[screenAgainstIndex]] screens future batches against). */
-  def saveMinhashIndex(spark: SparkSession, dir: String, path: String): Unit =
-    minhashBuckets(spark, dir).orderBy("doc_id", "band")
-      .write.mode("overwrite").parquet(path)
-
-  /** Load a persisted signature index and prime the cache for `dir`,
-    * so every consumer (full-corpus LSH, the incremental screen, the
-    * banding calibration) reads it without re-signing the corpus.
-    * Unlike the cluster map there is no safe resolution against a
-    * changed corpus — a signature is a function of the text — so after
-    * any in-place corpus rewrite call [[ArtifactCache.invalidateDir]]
-    * and re-derive rather than loading a stale index. Returns the
-    * index. */
-  def loadMinhashIndex(spark: SparkSession, dir: String,
-      path: String): DataFrame = {
-    val idx = spark.read.parquet(path)
-      .select("doc_id", "band", "sig").localCheckpoint()
-    ArtifactCache.put(spark, dir, "dd_minhash_index", idx)
-    idx
-  }
-
   private[graft] def minhashBucketsOf(docs: DataFrame): DataFrame = {
     val nPerm = MinhashPerms
     val bands = MinhashBands
@@ -1315,30 +1292,6 @@ object Dedup {
         call_function("graft_simhash_wide", col("text"), lit(lanes))
           .as("simhash"))
     }
-
-  /** Persist the corpus SimHash signature table next to the table
-    * (corpus × 1 fixed-width rows: doc_id + the `lanes`-long wide
-    * signature) — the deployment artifact a restarted driver loads via
-    * [[loadSimhashSigs]] instead of re-hashing the corpus. */
-  def saveSimhashSigs(spark: SparkSession, dir: String, path: String): Unit =
-    simhashSigs(spark, dir, simhashLanesFor(docCount(spark, dir)))
-      .orderBy("doc_id")
-      .write.mode("overwrite").parquet(path)
-
-  /** Load a persisted SimHash signature table and prime the cache for
-    * `dir`. Same staleness contract as [[loadMinhashIndex]]: a
-    * signature is a function of the text (and of the width schedule
-    * [[simhashLanesFor]], which is a function of the corpus count), so
-    * after any in-place corpus rewrite call
-    * [[ArtifactCache.invalidateDir]] and re-derive rather than loading
-    * a stale table. Returns the table. */
-  def loadSimhashSigs(spark: SparkSession, dir: String,
-      path: String): DataFrame = {
-    val sigs = spark.read.parquet(path)
-      .select("doc_id", "simhash").localCheckpoint()
-    ArtifactCache.put(spark, dir, "dd_simhash_sigs", sigs)
-    sigs
-  }
 
   def simhashOn(docs: DataFrame, cap: Long,
       lanes: Int = 1): DataFrame = {

@@ -449,26 +449,6 @@ object Graph {
         .agg(count(lit(1)).as("n_co"))
     }
 
-  /** Persist the co-occurrence pair counts next to the table (the
-    * materialized association table the whole graph family reads). */
-  def savePairCounts(spark: SparkSession, dir: String, path: String): Unit =
-    pairCounts(spark, dir).orderBy("a", "b")
-      .write.mode("overwrite").parquet(path)
-
-  /** Load persisted pair counts and prime the cache for `dir`, so
-    * every graph analytic reads the materialization without re-running
-    * the basket self-join. Counts are a function of the fact table —
-    * after an in-place rewrite, call [[ArtifactCache.invalidateDir]]
-    * and re-derive rather than loading a stale table. Returns the
-    * counts. */
-  def loadPairCounts(spark: SparkSession, dir: String,
-      path: String): DataFrame = {
-    val pc = spark.read.parquet(path)
-      .select("a", "b", "n_co").localCheckpoint()
-    ArtifactCache.put(spark, dir, "gr_pair_counts", pc)
-    pc
-  }
-
   /** Support-filtered co-purchase edges: a cheap filter over the
     * cached [[pairCounts]] artifact. */
   private def coEdges(spark: SparkSession, dir: String): DataFrame =

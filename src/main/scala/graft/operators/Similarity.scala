@@ -170,31 +170,6 @@ object Similarity {
         lshTablesFor(bits), bits), LshBucketCap)
     }
 
-  /** Persist the capped hyperplane signature table next to the corpus
-    * (corpus × tables rows of (vec_id, tbl, sig) minus the capped
-    * mega-buckets) — the deployment artifact a restarted driver loads
-    * via [[loadLshSigs]] instead of re-signing the embedding corpus. */
-  def saveLshSigs(spark: SparkSession, dir: String, path: String): Unit =
-    lshSigs(spark, dir).orderBy("vec_id", "tbl")
-      .write.mode("overwrite").parquet(path)
-
-  /** Load a persisted hyperplane signature table and prime the cache
-    * for `dir`, so every consumer ([[embedNearDup]],
-    * [[semanticDecontam]], [[buildTopKLsh]]) reads it without
-    * re-signing the corpus. Signatures are a function of the embedding
-    * values AND of the derived width schedule
-    * ([[lshBitsFor]]/[[lshTablesFor]], functions of the corpus count),
-    * so after any in-place corpus rewrite call
-    * [[ArtifactCache.invalidateDir]] and re-derive rather than loading
-    * a stale table. Returns the table. */
-  def loadLshSigs(spark: SparkSession, dir: String,
-      path: String): DataFrame = {
-    val sigs = spark.read.parquet(path)
-      .select("vec_id", "tbl", "sig").localCheckpoint()
-    ArtifactCache.put(spark, dir, "emb_lsh_sigs", sigs)
-    sigs
-  }
-
   def embedNearDup(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
     val sigs = lshSigs(spark, dir)
@@ -357,7 +332,7 @@ object Similarity {
     * sample and reused by every later query (an [[ArtifactCache]]
     * value). Keyed by dir ALONE (one book per corpus, like
     * [[Clustering.kmeansCentroids]]): a book primed by
-    * [[loadIvfCodebook]] always wins over a refit, even if its cell
+    * [[ArtifactCache.load]] always wins over a refit, even if its cell
     * count differs from today's derived `ivfCellsFor(n)`, so a
     * persisted book can never be silently ignored. Query paths read
     * the cell count back off the book (`centroids.size`), never off the
@@ -409,28 +384,6 @@ object Similarity {
           col("nrm"), col("q_nrm")).as("cosine")))
   }
 
-  /** Persist the train-once IVF codebook next to the table — the
-    * deployment story the in-memory cache documents: train once, write
-    * the (tiny) codebook as parquet, and every later driver loads it
-    * instead of refitting. One row per cell; the collect in
-    * [[loadIvfCodebook]] is codebook METADATA (cells × dim doubles,
-    * ≤2 MB at [[IvfMaxCells]]), never corpus data. */
-  def saveIvfCodebook(spark: SparkSession, dir: String, path: String): Unit = {
-    import spark.implicits._
-    ivfCodebook(spark, dir, ivfCellsFor(corpusCount(spark, dir))).zipWithIndex
-      .map { case (ctr, i) => (i, ctr) }.toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a persisted IVF codebook and prime the cache for `dir`, so the
-    * query path assigns cells without ever training. Returns the book. */
-  def loadIvfCodebook(spark: SparkSession, dir: String, path: String): Seq[Seq[Double]] = {
-    val book = spark.read.parquet(path).orderBy("cell").collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("centroid").toSeq).toSeq
-    ArtifactCache.put(spark, dir, "ivf_codebook", book)
-    book
-  }
-
   // ---- product quantization (PQ) -----------------------------------------
 
   /** 16 subspaces × 4 dims × 32 codes: near-uniform synthetic
@@ -475,29 +428,6 @@ object Similarity {
           .map(_._2)
       } finally pool.close()
     }
-
-  /** Persist the PQ sub-codebooks (same contract as [[saveIvfCodebook]]):
-    * one row per (subspace, code) sub-centroid. */
-  def savePqCodebooks(spark: SparkSession, dir: String, path: String): Unit = {
-    import spark.implicits._
-    pqCodebooks(spark, dir).zipWithIndex.flatMap { case (book, m) =>
-      book.zipWithIndex.map { case (ctr, code) => (m, code, ctr) }
-    }.toDF("subspace", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Load persisted PQ sub-codebooks and prime the cache for `dir`. */
-  def loadPqCodebooks(spark: SparkSession, dir: String,
-      path: String): Seq[Seq[Seq[Double]]] = {
-    val rows = spark.read.parquet(path).orderBy("subspace", "code").collect()
-    val books = rows.groupBy(_.getAs[Int]("subspace")).toSeq.sortBy(_._1)
-      .map { case (_, rs) =>
-        rs.sortBy(_.getAs[Int]("code"))
-          .map(_.getAs[scala.collection.Seq[Double]]("centroid").toSeq).toSeq
-      }
-    ArtifactCache.put(spark, dir, "pq_codebooks", books)
-    books
-  }
 
   /** PQ ANN: each corpus vector is compressed to its per-subspace
     * nearest sub-centroid indices (the 8-byte code that would be STORED

@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * codegen; the frontier membership is ONE join keyed on the
   * collapsed canonical string (both sides hash-partition on it at
   * crawl scale; the frontier is the persisted index of
-  * [[Url.saveFrontier]]).
+  * [[Url.frontier]], saved with [[ArtifactCache.save]]).
   */
 object Sitemap {
 

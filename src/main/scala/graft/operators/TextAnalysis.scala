@@ -1544,12 +1544,13 @@ object TextAnalysis {
     * (whose last-ulp behavior differs across engines) never enters.
     * Returns (feature means, weights [bias, w1, w2, w3]): the
     * driver-resident model artifact (3 + 4 doubles), trained once per
-    * corpus dir and session (an [[ArtifactCache]] value; the
-    * [[Similarity]] codebook persist/load contract applies if a
-    * restarted driver must skip retraining). */
+    * corpus dir and session (an [[ArtifactCache]] value, which
+    * [[ArtifactCache.save]]/[[ArtifactCache.load]] persist if a
+    * restarted driver must skip retraining). A loaded model is read
+    * from a file, so its shape is checked here, where it is read. */
   private[graft] def qualityLrModel(spark: SparkSession,
-      dir: String): (Array[Double], Array[Double]) =
-    ArtifactCache.value(spark, dir, "quality_lr_model") {
+      dir: String): (Array[Double], Array[Double]) = {
+    val model = ArtifactCache.value(spark, dir, "quality_lr_model") {
       val f = qualityLrFeatures(spark, dir)
       val m = f.agg(gradSum(col("x1")), gradSum(col("x2")),
         gradSum(col("x3")), count(lit(1)).cast("double")).head()
@@ -1571,36 +1572,10 @@ object TextAnalysis {
       }
       (mu, w)
     }
-
-  /** Persist the trained quality-LR model (3 means + 4 weights) — the
-    * IVF-codebook train-once contract: a restarted driver loads the
-    * 7-double artifact instead of re-running the
-    * [[QualityLrRounds]]+1 corpus aggregates. */
-  def saveQualityLrModel(spark: SparkSession, dir: String,
-      path: String): Unit = {
-    import spark.implicits._
-    val (mu, w) = qualityLrModel(spark, dir)
-    (mu.zipWithIndex.map { case (v, i) => ("mu", i, v) } ++
-      w.zipWithIndex.map { case (v, i) => ("w", i, v) }).toSeq
-      .toDF("kind", "idx", "value")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a persisted quality-LR model and prime the cache for `dir`,
-    * so [[qualityLr]] scores without ever training. Same staleness
-    * contract as the signature indexes: the model is a function of the
-    * corpus — after an in-place rewrite, retrain rather than load. */
-  def loadQualityLrModel(spark: SparkSession, dir: String,
-      path: String): (Array[Double], Array[Double]) = {
-    val rows = spark.read.parquet(path).collect()
-      .map(r => (r.getAs[String]("kind"), r.getAs[Int]("idx"),
-        r.getAs[Double]("value")))
-    val mu = rows.filter(_._1 == "mu").sortBy(_._2).map(_._3)
-    val w = rows.filter(_._1 == "w").sortBy(_._2).map(_._3)
+    val (mu, w) = model
     require(mu.length == 3 && w.length == 4,
-      s"malformed quality-LR model at $path: ${mu.length} means, ${w.length} weights")
-    ArtifactCache.put(spark, dir, "quality_lr_model", (mu, w))
-    (mu, w)
+      s"malformed quality-LR model for $dir: ${mu.length} means, ${w.length} weights")
+    model
   }
 
   /** `txt_quality_lr`: TRAINED quality classifier — logistic

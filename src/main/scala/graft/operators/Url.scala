@@ -99,7 +99,7 @@ object Url {
   /** The standing canonical-URL FRONTIER set of a corpus dir — the
     * static side of the streaming frontier screen
     * ([[graft.streaming.CrawlStreams.urlFrontierStream]]) and the
-    * index a production crawler persists ([[saveFrontier]]) so
+    * index a production crawler persists ([[ArtifactCache.save]]) so
     * tomorrow's discovered URLs never re-canonicalize today's corpus.
     * Session-cached ([[ArtifactCache]]), one distinct canonical string
     * per crawled page. */
@@ -109,25 +109,6 @@ object Url {
         .select(UrlCanon.canonCol(col("url")).as("canon_url"))
         .where(col("canon_url").isNotNull)
         .distinct())
-
-  /** Persist the frontier set next to the corpus — the save half of
-    * the save/load index contract ([[graft.operators.Dedup.saveMinhashIndex]]
-    * precedent). */
-  def saveFrontier(spark: SparkSession, dir: String, path: String): Unit =
-    frontier(spark, dir).orderBy("canon_url")
-      .write.mode("overwrite").parquet(path)
-
-  /** Load a persisted frontier and prime the session cache for `dir`,
-    * so every consumer (the streaming screen, [[urlDedup]] callers)
-    * reads it without re-canonicalizing the corpus. Invalidate the dir
-    * and re-derive after any in-place corpus rewrite. Returns the
-    * frontier. */
-  def loadFrontier(spark: SparkSession, dir: String,
-      path: String): DataFrame = {
-    val f = spark.read.parquet(path).select("canon_url").localCheckpoint()
-    ArtifactCache.put(spark, dir, "url_frontier", f)
-    f
-  }
 
   /** `dd_url_incremental`: the frontier screen as a keyed batch
     * contract — arriving URLs (the hash-split batch, the
@@ -139,7 +120,7 @@ object Url {
     *
     * Scale shape: canonicalization is map-side codegen; the screen is
     * ONE join keyed on the collapsed canonical string against the
-    * frontier set (persisted in production — [[saveFrontier]]); no
+    * frontier set (persisted in production — [[ArtifactCache.save]]); no
     * text, no content pass. */
   def urlIncremental(spark: SparkSession, dir: String): DataFrame = {
     val isBatch = Curation.portableHash(col("doc_id")) % 10 === 0

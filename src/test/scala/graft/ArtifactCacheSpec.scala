@@ -10,7 +10,7 @@ import graft.sources.Tables
   * (CurationSpec, SimilaritySpec, FuzzyMatchSpec); this pins the cache
   * semantics themselves, for tables ([[ArtifactCache.of]]) and
   * driver-side values ([[ArtifactCache.value]]) alike: build-once,
-  * put-override, name- and dir-level invalidation. */
+  * save/load, dir-level invalidation. */
 class ArtifactCacheSpec extends SparkSpec {
 
   test("of() builds once per (dir, name) and serves the checkpoint after") {
@@ -65,20 +65,58 @@ class ArtifactCacheSpec extends SparkSpec {
     assert(builds == 8)
   }
 
-  test("put overrides the cached artifact (the load half of persist/load)") {
+  test("save/load round-trips a table and a value") {
     import spark.implicits._
-    val dir = "/cache-spec/corpus-d"
+    val (src, dir) = ("/cache-spec/corpus-d-src", "/cache-spec/corpus-d")
+    val base = Files.createTempDirectory("graft_saveload").toString
+    ArtifactCache.of(spark, src, "t")(Seq((2L, "new")).toDF("k", "v"))
+    ArtifactCache.value(spark, src, "book")(Seq(Seq(0.5, 1.5)))
+    ArtifactCache.save(spark, src, "t", s"$base/t")
+    ArtifactCache.save(spark, src, "book", s"$base/book")
+    // a load replaces what the dir has cached
     ArtifactCache.of(spark, dir, "t")(Seq((1L, "old")).toDF("k", "v"))
-    val loaded = Seq((2L, "new")).toDF("k", "v").localCheckpoint()
-    ArtifactCache.put(spark, dir, "t", loaded)
+    val loaded = ArtifactCache.load(spark, dir, "t", s"$base/t")
     val got = ArtifactCache.of(spark, dir, "t")(
-      sys.error("builder must not run after put"))
+      sys.error("builder must not run after load"))
+    assert(got eq loaded)
+    assert(got.queryExecution.executedPlan.toString.contains("ExistingRDD"))
     assert(got.collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
       Seq((2L, "new")))
     // a loaded value primes the cache the same way
-    ArtifactCache.put(spark, dir, "book", Seq(Seq(0.5, 1.5)))
+    ArtifactCache.load(spark, dir, "book", s"$base/book")
     assert(ArtifactCache.value[Seq[Seq[Double]]](spark, dir, "book")(
-      sys.error("builder must not run after put")) == Seq(Seq(0.5, 1.5)))
+      sys.error("builder must not run after load")) == Seq(Seq(0.5, 1.5)))
+  }
+
+  test("save/load errors name the problem: not cached, nothing saved, other kind") {
+    import spark.implicits._
+    val dir = "/cache-spec/corpus-e"
+    val base = Files.createTempDirectory("graft_saveload_err").toString
+    val notCached = intercept[NoSuchElementException](
+      ArtifactCache.save(spark, dir, "t", s"$base/t"))
+    assert(notCached.getMessage.contains("it is not cached"), notCached.getMessage)
+    val empty = Files.createTempDirectory("graft_saveload_empty").toString
+    val nothing = intercept[java.io.FileNotFoundException](
+      ArtifactCache.load(spark, dir, "t", empty))
+    assert(nothing.getMessage.contains("no saved artifact"), nothing.getMessage)
+    ArtifactCache.of(spark, dir, "t")(Seq(1L).toDF("k"))
+    ArtifactCache.value(spark, dir, "book")(Seq(Seq(0.5)))
+    ArtifactCache.save(spark, dir, "t", s"$base/t")
+    ArtifactCache.save(spark, dir, "book", s"$base/book")
+    // a path of the other kind loads, and its first reader names the
+    // mismatch instead of failing a cast
+    ArtifactCache.load(spark, dir, "t", s"$base/book")
+    val asTable = intercept[IllegalStateException](
+      ArtifactCache.of(spark, dir, "t")(sys.error("builder must not run after load")))
+    assert(asTable.getMessage.contains("holds a value, but its reader expects a table"),
+      asTable.getMessage)
+    ArtifactCache.load(spark, dir, "book", s"$base/t")
+    val asValue = intercept[IllegalStateException](
+      ArtifactCache.value[Seq[Seq[Double]]](spark, dir, "book")(
+        sys.error("builder must not run after load")))
+    assert(asValue.getMessage.contains("holds a table, but its reader expects a value"),
+      asValue.getMessage)
+    ArtifactCache.invalidateDir(spark, dir)
   }
 
   test("invalidateDir after an in-place rewrite: counts, codebooks and models match a fresh derivation") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Clustering
+import graft.operators.{ArtifactCache, Clustering}
 import org.apache.spark.sql.functions._
 
 class ClusteringSpec extends SparkSpec {
@@ -57,9 +57,9 @@ class ClusteringSpec extends SparkSpec {
   test("k-means centroids persist and load without retraining") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_km").toString
     val book = Clustering.kmeansCentroids(spark, sfDir)
-    Clustering.saveKmeansCentroids(spark, sfDir, s"$tmp/km")
+    ArtifactCache.save(spark, sfDir, "km_centroids", s"$tmp/km")
     val fakeDir = "/nonexistent/corpus"
-    val loaded = Clustering.loadKmeansCentroids(spark, fakeDir, s"$tmp/km")
+    val loaded = ArtifactCache.load(spark, fakeDir, "km_centroids", s"$tmp/km")
     assert(loaded == book)
     // load primes the cache: the book resolves for a dir whose table
     // does not exist, proving the assignment path will not retrain

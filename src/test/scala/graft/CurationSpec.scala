@@ -110,7 +110,7 @@ class CurationSpec extends SparkSpec {
     val m1 = Curation.clusterMap(spark, d1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m1 == expected)
-    Curation.saveClusterMap(spark, d1, mapPath)
+    ArtifactCache.save(spark, d1, "dd_cluster_labels", mapPath)
     // NO-RECOMPUTE proof (the codebook no-retrain pattern): a second
     // corpus dir with the SAME ids but all-unique scrambled texts. If
     // any consumer re-derived the fixpoint from the documents table,
@@ -120,7 +120,7 @@ class CurationSpec extends SparkSpec {
       (5L, "qq rr ss tt uu vv ww xx"), (6L, "yy zz ab cd ef gh ij kl"),
       (8L, "mn op qr st uv wx yz az"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$d2/documents.parquet")
-    Curation.loadClusterMap(spark, d2, mapPath)
+    ArtifactCache.load(spark, d2, "dd_cluster_labels", mapPath)
     val viaLoad = Curation.dedupComponents(spark, d2).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
     assert(viaLoad == expected,
@@ -146,13 +146,14 @@ class CurationSpec extends SparkSpec {
     Seq((1L, t), (2L, t + " lambda"),
       (8L, "solo document entirely unlike every other text here"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$d1/documents.parquet")
-    Curation.saveClusterMap(spark, d1, mapPath)
+    Curation.clusterMap(spark, d1)
+    ArtifactCache.save(spark, d1, "dd_cluster_labels", mapPath)
     // the corpus grows (doc 9 appended) and shrinks (doc 8 deleted)
     // AFTER the map was persisted; loading the stale map must not
     // silently drop doc 9 from consumers nor resurrect doc 8
     Seq((1L, t), (2L, t + " lambda"), (9L, "a brand new never seen doc"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$d2/documents.parquet")
-    Curation.loadClusterMap(spark, d2, mapPath)
+    ArtifactCache.load(spark, d2, "dd_cluster_labels", mapPath)
     val got = Curation.dedupComponents(spark, d2).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 9L -> 9L))
@@ -305,14 +306,17 @@ class CurationSpec extends SparkSpec {
     assert(rows.forall(_.getAs[Double]("quality_score") >= 0.5))
     // no two curated docs share exact content
     val ids = rows.map(_.getAs[Long]("doc_id")).toSet
-    val dupNonCanon = Dedup.exact(spark, sfDir)
-      .where(col("n_copies") > 1).collect()
-      .map(_.getAs[Long]("canonical_doc_id")).toSet
-    val allDocs = Tables.table(spark, sfDir, "documents")
+    val dupGroups = Tables.table(spark, sfDir, "documents")
       .select(sha2(col("text"), 256).as("h"), col("doc_id")).collect()
-      .groupBy(_.getString(0)).values.filter(_.length > 1)
-      .flatMap(g => g.map(_.getLong(1)).sorted.tail) // non-canonical dups
-    assert(allDocs.forall(id => !ids.contains(id)))
+      .groupBy(_.getString(0)).values.map(_.map(_.getLong(1)).sorted)
+      .filter(_.length > 1).toSeq
+    // exact dedup keeps the smallest id of every multi-copy group
+    val canonical = Dedup.exact(spark, sfDir)
+      .where(col("n_copies") > 1).collect()
+      .map(r => r.getAs[Long]("canonical_doc_id") -> r.getAs[Long]("n_copies")).toMap
+    assert(canonical == dupGroups.map(g => g.head -> g.length.toLong).toMap)
+    val nonCanon = dupGroups.flatMap(_.tail)
+    assert(nonCanon.forall(id => !ids.contains(id)))
   }
 
   test("curriculum: range-sorted with no window; balanced under one-decile mode concentration") {

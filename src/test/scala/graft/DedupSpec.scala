@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Curation, Dedup}
+import graft.operators.{ArtifactCache, Curation, Dedup}
 import graft.sources.Tables
 
 class DedupSpec extends SparkSpec {
@@ -571,9 +571,9 @@ class DedupSpec extends SparkSpec {
       .toString + "/sigs.parquet"
     val before = Dedup.simhash(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.saveSimhashSigs(spark, sfDir, path)
-    graft.operators.ArtifactCache.invalidateDir(spark, sfDir)
-    Dedup.loadSimhashSigs(spark, sfDir, path)
+    ArtifactCache.save(spark, sfDir, "dd_simhash_sigs", path)
+    ArtifactCache.invalidateDir(spark, sfDir)
+    ArtifactCache.load(spark, sfDir, "dd_simhash_sigs", path)
     // the primed table serves as a checkpoint scan — the wide-signature
     // token-hash pass over the corpus text never re-runs
     val lanes = Dedup.simhashLanesFor(
@@ -593,9 +593,9 @@ class DedupSpec extends SparkSpec {
       .toString + "/index.parquet"
     val before = Dedup.minhashLsh(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.saveMinhashIndex(spark, sfDir, path)
-    graft.operators.ArtifactCache.invalidateDir(spark, sfDir)
-    Dedup.loadMinhashIndex(spark, sfDir, path)
+    ArtifactCache.save(spark, sfDir, "dd_minhash_index", path)
+    ArtifactCache.invalidateDir(spark, sfDir)
+    ArtifactCache.load(spark, sfDir, "dd_minhash_index", path)
     // the primed index serves as a checkpoint scan — the 64-perm
     // signature aggregate over the corpus never re-runs
     val plan = Dedup.minhashBuckets(spark, sfDir)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Graph
+import graft.operators.{ArtifactCache, Graph}
 import graft.sources.Tables
 
 class GraphSpec extends SparkSpec {
@@ -259,9 +259,9 @@ class GraphSpec extends SparkSpec {
       .toString + "/pair_counts.parquet"
     val before = Graph.supportHist(spark, sfDir).collect()
       .map(r => r.getAs[Long]("n_co") -> r.getAs[Long]("n_pairs")).toMap
-    Graph.savePairCounts(spark, sfDir, path)
-    graft.operators.ArtifactCache.invalidateDir(spark, sfDir)
-    Graph.loadPairCounts(spark, sfDir, path)
+    ArtifactCache.save(spark, sfDir, "gr_pair_counts", path)
+    ArtifactCache.invalidateDir(spark, sfDir)
+    ArtifactCache.load(spark, sfDir, "gr_pair_counts", path)
     // the primed artifact serves every graph analytic as a checkpoint
     // scan — the basket self-join over the fact never re-runs
     val plan = Graph.supportHist(spark, sfDir)

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.Similarity
+import org.apache.spark.sql.DataFrame
+import graft.operators.{ArtifactCache, Similarity}
 import graft.sources.Tables
 
 class SimilaritySpec extends SparkSpec {
@@ -211,16 +212,16 @@ class SimilaritySpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft_books").toString
     val cells = Similarity.ivfCellsFor(Similarity.corpusCount(spark, sfDir))
     val book = Similarity.ivfCodebook(spark, sfDir, cells)
-    Similarity.saveIvfCodebook(spark, sfDir, s"$tmp/ivf")
+    ArtifactCache.save(spark, sfDir, "ivf_codebook", s"$tmp/ivf")
     val fakeDir = "/nonexistent/corpus"
-    val loaded = Similarity.loadIvfCodebook(spark, fakeDir, s"$tmp/ivf")
+    val loaded = ArtifactCache.load(spark, fakeDir, "ivf_codebook", s"$tmp/ivf")
     assert(loaded == book)
     // load primes the cache: the codebook resolves for a dir whose table
     // does not exist, proving the query path will not retrain
-    assert(Similarity.ivfCodebook(spark, fakeDir, loaded.size) == book)
+    assert(Similarity.ivfCodebook(spark, fakeDir, book.size) == book)
     val pq = Similarity.pqCodebooks(spark, sfDir)
-    Similarity.savePqCodebooks(spark, sfDir, s"$tmp/pq")
-    assert(Similarity.loadPqCodebooks(spark, fakeDir, s"$tmp/pq") == pq)
+    ArtifactCache.save(spark, sfDir, "pq_codebooks", s"$tmp/pq")
+    assert(ArtifactCache.load(spark, fakeDir, "pq_codebooks", s"$tmp/pq") == pq)
   }
 
   test("mmr rerank matches the driver-replayed greedy recursion") {
@@ -537,9 +538,10 @@ class SimilaritySpec extends SparkSpec {
       .toString + "/sigs.parquet"
     val before = Similarity.embedNearDup(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    Similarity.saveLshSigs(spark, sfDir, path)
-    graft.operators.ArtifactCache.invalidateDir(spark, sfDir)
-    val sigs = Similarity.loadLshSigs(spark, sfDir, path)
+    ArtifactCache.save(spark, sfDir, "emb_lsh_sigs", path)
+    ArtifactCache.invalidateDir(spark, sfDir)
+    val sigs = ArtifactCache.load(spark, sfDir, "emb_lsh_sigs", path)
+      .asInstanceOf[DataFrame]
     // the primed table is a checkpoint scan: the hyperplane signing
     // pass over the embedding corpus never re-runs for any consumer
     assert(sigs.queryExecution.executedPlan.toString.contains("ExistingRDD"))

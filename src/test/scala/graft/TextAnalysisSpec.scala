@@ -433,10 +433,19 @@ class TextAnalysisSpec extends SparkSpec {
     // persist/load round-trip primes the cache with the identical model
     // (the IVF-codebook train-once contract)
     val path = java.nio.file.Files.createTempDirectory("graft_lr").toString + "/model"
-    TextAnalysis.saveQualityLrModel(spark, sfDir, path)
-    ArtifactCache.invalidate(spark, sfDir, "quality_lr_model")
-    val (mu2, w2) = TextAnalysis.loadQualityLrModel(spark, sfDir, path)
+    ArtifactCache.save(spark, sfDir, "quality_lr_model", path)
+    ArtifactCache.invalidateDir(spark, sfDir)
+    ArtifactCache.load(spark, sfDir, "quality_lr_model", path)
+    val (mu2, w2) = TextAnalysis.qualityLrModel(spark, sfDir)
     assert(mu2.toSeq == mu.toSeq && w2.toSeq == w.toSeq)
+    // a saved model of the wrong shape fails where the model is read
+    val (short, bad) = ("/lr-spec/short", "/lr-spec/bad")
+    ArtifactCache.value(spark, short, "quality_lr_model")((Array(0.0), Array(0.0)))
+    ArtifactCache.save(spark, short, "quality_lr_model", s"$path-short")
+    ArtifactCache.load(spark, bad, "quality_lr_model", s"$path-short")
+    val malformed = intercept[IllegalArgumentException](
+      TextAnalysis.qualityLrModel(spark, bad))
+    assert(malformed.getMessage.contains("1 means, 1 weights"), malformed.getMessage)
     val rows2 = TextAnalysis.qualityLr(spark, sfDir).collect()
     assert(rows2.map(_.getAs[Double]("lr_score")).toSeq ==
       rows.map(_.getAs[Double]("lr_score")).toSeq)

@@ -92,21 +92,23 @@ class UrlSpec extends SparkSpec {
   }
 
   test("frontier index: save/load roundtrip primes the cache, no recompute") {
+    import org.apache.spark.sql.DataFrame
     import graft.operators.{ArtifactCache, Url}
     val path = java.nio.file.Files.createTempDirectory("graft_frontier")
       .toString + "/frontier"
     val derived = Url.frontier(spark, sfDir).collect()
       .map(_.getString(0)).sorted
-    Url.saveFrontier(spark, sfDir, path)
+    ArtifactCache.save(spark, sfDir, "url_frontier", path)
     // simulate a restarted driver: drop the session cache, then LOAD
-    ArtifactCache.invalidate(spark, sfDir, "url_frontier")
-    val loaded = Url.loadFrontier(spark, sfDir, path)
+    ArtifactCache.invalidateDir(spark, sfDir)
+    val loaded = ArtifactCache.load(spark, sfDir, "url_frontier", path)
+      .asInstanceOf[DataFrame]
     // the loaded table IS the cache entry now — a consumer reads it
     // without re-canonicalizing the corpus (reference equality proves
     // no re-derivation can occur)
     assert(Url.frontier(spark, sfDir) eq loaded)
     assert(loaded.collect().map(_.getString(0)).sorted.sameElements(derived))
-    // restore the derived artifact for suites that run after this one
-    ArtifactCache.invalidate(spark, sfDir, "url_frontier")
+    // restore the derived artifacts for suites that run after this one
+    ArtifactCache.invalidateDir(spark, sfDir)
   }
 }
