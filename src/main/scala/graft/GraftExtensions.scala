@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{ArrayDotProduct, ArrayScale, BloomOps, CharDeletionHashes, CharDeletions, HeavyHitters, HtmlExtract, HyperplaneSigs, NearestCells, RollingHash, SimHash64, SimHashWide, TokenSetHits, TopKByScore, UrlCanon, WordShingles}
+import graft.functions.{ArrayDotProduct, ArrayScale, BloomOps, CharDeletionHashes, CharDeletions, HeavyHitters, HtmlExtract, HyperplaneSigs, NearestCells, NearestCentroid, RollingHash, SimHash64, SimHashWide, TokenSetHits, TokenStats, TopKByScore, UrlCanon, WordShingles}
 
 /** Session extension registering graft's native expressions as SQL
   * functions. It is the ONLY place they are registered: the Column
@@ -61,9 +61,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject("graft_token_set_hits",
       "count of space-tokens present in a literal token set (duplicates counted)",
       TokenSetHits.builder)
+    inject("graft_token_stats",
+      "per-document token, type, hapax, repeat-pair and 2/3-gram counts as one struct",
+      TokenStats.builder)
     inject("graft_nearest_cells",
       "indices of the n nearest centroids to a vector (IVF assign/probe)",
       NearestCells.builder)
+    inject("graft_nearest_centroid",
+      "(cell, d2) of the nearest centroid by e·e − 2e·c + c·c (k-means assign)",
+      NearestCentroid.builder)
     inject("graft_heavy_hitters",
       "Misra-Gries frequent-items candidates (id, est) with k counters",
       HeavyHitters.builder)

@@ -88,21 +88,14 @@ object Pipeline {
       val silver = chains.map { case (name, _, df) => name -> df }.toMap
 
       // 3. quality gate on the silver layer, a barrier between silver and
-      //    gold: single-pass rule checks plus referential integrity
-      //    (orphan FK rows via broadcast anti-joins)
+      //    gold: the two dimension-key uniqueness rules, and the sales
+      //    rules with the referential-integrity checks (orphan FK rows)
+      //    from one scan of silver sales
       val sales = silver("sales")
-      val rules = DataQuality
-        .genericRules(sales, silver("customers"), silver("products"))
-        .select("check_name", "passed")
-      val refs = Seq(
-        ("customers", "customer_id"), ("products", "product_id"),
-        ("stores", "store_id")).map { case (dim, fk) =>
-        DataQuality.orphanCheck(s"sales_${fk}_fk", sales, fk,
-          silver(dim).select(fk))
-          .select(col("fk_name").as("check_name"), col("passed"))
-      }.reduce(_ unionAll _)
-      val dqPassed = rules.unionAll(refs)
-        .agg(min(col("passed"))).head.getBoolean(0)
+      val dqPassed = DataQuality
+        .genericRules(sales, silver("customers"), silver("products"),
+          silver("stores"))
+        .agg(min(col("passed"))).head().getBoolean(0)
 
       // 4. gold aggregates from silver, written in the S3 layout
       val gold = Seq(

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.functions.VectorFunctions
+import graft.functions.{NearestCentroid, VectorFunctions}
 import graft.sources.Tables
 
 /** Deterministic k-means over the `embeddings` table and the
@@ -21,16 +21,18 @@ import graft.sources.Tables
   *
   * Scale shape: one corpus pass per iteration. The centroid set is
   * k×dim doubles — codebook METADATA (k caps at [[KmeansMaxK]], ≈0.5 MB)
-  * — collected per iteration and re-broadcast as a literal relation,
+  * — collected per iteration and shipped back as a plan literal,
   * exactly the [[Similarity.ivfCodebook]] train-once contract; corpus
-  * rows never reach the driver. Assignment is a broadcast
-  * nested-loop over the k-row centroid relation (O(n·k·d) work, the
-  * irreducible Lloyd cost); the update is one partial-aggregating
-  * groupBy with k×dim groups. k derives from corpus size
-  * ([[kFor]]: n / [[KmeansTargetPop]]) so per-cluster population — and
-  * with it the semantic-dedup pair work — stays ~constant as n grows
-  * instead of the pair join degenerating quadratic (the same
-  * parameter-scaling rule as [[Similarity.ivfCellsFor]]).
+  * rows never reach the driver. Assignment is one projection of the
+  * corpus through the [[NearestCentroid]] kernel, the book a plan
+  * literal (O(n·k·d) work, the irreducible Lloyd cost, with no n·k
+  * rows materialized and no shuffle); the update is one
+  * partial-aggregating groupBy with k×dim groups. k derives from
+  * corpus size ([[kFor]]: n / [[KmeansTargetPop]]) so per-cluster
+  * population — and with it the semantic-dedup pair work — stays
+  * ~constant as n grows instead of the pair join degenerating
+  * quadratic (the same parameter-scaling rule as
+  * [[Similarity.ivfCellsFor]]).
   */
 object Clustering {
 
@@ -47,8 +49,8 @@ object Clustering {
   val SemDedupThreshold = 0.30
 
   /** Cluster count for a corpus of n vectors: n / target population,
-    * floored at the small-n default, capped where the centroid relation
-    * would stop being broadcast-trivial. */
+    * floored at the small-n default, capped where the centroid book
+    * would stop being a trivially small plan literal. */
   def kFor(n: Long): Int =
     math.min(KmeansMaxK.toLong, math.max(KmeansMinK.toLong,
       n / KmeansTargetPop)).toInt
@@ -58,25 +60,13 @@ object Clustering {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
   }
 
-  private def centroidsDf(spark: SparkSession,
-      cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    import spark.implicits._
-    cents.toDF("cell", "c")
-  }
-
-  /** Nearest-centroid assignment: d² = e·e − 2 e·c + c·c over the
-    * broadcast centroid relation, argmin per vector with ties to the
-    * smaller cell (min over a (d2, cell) struct — one partial-merging
-    * aggregate, no window sort). `first(e)` is order-insensitive
-    * because e is constant within a vec_id group. */
-  private def assign(vecs: DataFrame, cents: DataFrame): DataFrame =
-    vecs.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("e"), col("cell"),
-        (VectorFunctions.dot(col("e"), col("e"))
-          - lit(2.0) * VectorFunctions.dot(col("e"), col("c"))
-          + VectorFunctions.dot(col("c"), col("c"))).as("d2"))
-      .groupBy("vec_id")
-      .agg(min(struct(col("d2"), col("cell"))).as("m"), first(col("e")).as("e"))
+  /** Nearest-centroid assignment: one projection of `vecs` through the
+    * native [[NearestCentroid]] kernel over the book literal —
+    * d² = (e·e − 2.0·(e·c)) + c·c, argmin per vector with ties to the
+    * smaller cell (the oracles' `ORDER BY d2, cell`). */
+  private[graft] def assign(vecs: DataFrame, cents: Seq[(Long, Seq[Double])]): DataFrame =
+    vecs.select(col("vec_id"), col("e"),
+        NearestCentroid.column(col("e"), cents).as("m"))
       .select(col("vec_id"), col("e"),
         col("m.cell").as("cell"), col("m.d2").as("d2"))
 
@@ -96,21 +86,14 @@ object Clustering {
       .select(col("vec_id"), col("e")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq.sortBy(_._1)
 
-  /** First-k init (the pre-round-5 rule) — kept ONLY as the baseline the
-    * balance test beats; no query path uses it. */
-  private[graft] def firstKCentroids(c: DataFrame, k: Int): Seq[(Long, Seq[Double])] =
-    c.where(col("vec_id") < k)
-      .select(col("vec_id"), col("e")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq.sortBy(_._1)
-
   /** Fit on an arbitrary (vec_id, e) relation from given seeds (shared
     * by the dir-level entry point and the balance test). */
-  private[graft] def fit(spark: SparkSession, c: DataFrame,
+  private[graft] def fit(c: DataFrame,
       init: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] = {
       var cents = init
       val scale = Similarity.CentroidScale.toDouble
       for (_ <- 1 to KmeansIters) {
-        val means = assign(c, centroidsDf(spark, cents))
+        val means = assign(c, cents)
           .select(col("cell"), posexplode(col("e")).as(Seq("dim", "v")))
           .groupBy("cell", "dim")
           .agg(count(lit(1)).as("n"),
@@ -141,18 +124,11 @@ object Clustering {
     ArtifactCache.value(spark, dir, "km_centroids") {
       val c = corpus(spark, dir)
       val k = kFor(Similarity.corpusCount(spark, dir))
-      fit(spark, c, seedCentroids(c, k))
+      fit(c, seedCentroids(c, k))
     }
 
-  /** Assignment of an arbitrary (vec_id, e) relation to a fitted book
-    * (test seam for the init-balance comparison). */
-  private[graft] def assignments(spark: SparkSession, c: DataFrame,
-      cents: Seq[(Long, Seq[Double])]): DataFrame =
-    assign(c, centroidsDf(spark, cents))
-
   private def finalAssignment(spark: SparkSession, dir: String): DataFrame =
-    assign(corpus(spark, dir),
-      centroidsDf(spark, kmeansCentroids(spark, dir)))
+    assign(corpus(spark, dir), kmeansCentroids(spark, dir))
 
   /** `emb_kmeans`: the final cluster assignment `(vec_id, cluster, d2)`. */
   def kmeans(spark: SparkSession, dir: String): DataFrame =

@@ -116,32 +116,55 @@ object DataQuality {
           col("null_count"))
     }.reduce(_ unionAll _).orderBy("table_name")
 
-  /** Referential-integrity checks: orphan fact rows per foreign key
-    * (sales→customers/products/stores). Each check is one left-anti
-    * join against the (broadcast) dimension key set + a count — no
-    * distinct shuffle of the fact, no collect; at 100 TB the anti join
-    * is a map-side broadcast probe per dimension. */
-  /** One FK check row: count of fact rows whose `fkCol` has no match in
-    * `dimKeys` (single-column DataFrame). */
-  def orphanCheck(name: String, fact: DataFrame, fkCol: String,
-      dimKeys: DataFrame): DataFrame =
-    fact.select(col(fkCol).as("fkv"))
-      .join(broadcast(dimKeys.toDF("k")), col("fkv") === col("k"), "left_anti")
-      .agg(count(lit(1)).as("orphan_rows"))
-      .select(lit(name).as("fk_name"), col("orphan_rows"),
-        (col("orphan_rows") === 0L).as("passed"))
+  /** Whether the row's `fkCol` has no match among the keys of `dimKeys`
+    * (a single-column DataFrame) — a correlated NOT EXISTS, which the
+    * optimizer plans as one ExistenceJoin against the broadcast
+    * dimension: a map-side probe, the fact is never shuffled. Like the
+    * left-anti join it replaces, a row counts once however often its
+    * key repeats in the dimension, and a null FK is an orphan. */
+  private def isOrphan(fkCol: String, dimKeys: DataFrame): Column =
+    !broadcast(dimKeys.toDF("k"))
+      .where(col("k") === col(s"$FactAlias.$fkCol").outer()).exists()
 
-  def referentialIntegrity(spark: SparkSession, dir: String): DataFrame = {
-    val sales = Tables.sales(spark, dir)
-    Seq(
-      orphanCheck("sales_customer_fk", sales, "customer_id",
+  /** The alias [[flagCounts]] gives the fact, so [[isOrphan]]'s outer
+    * reference names it. Unqualified, `outer()` resolves to the
+    * subquery's own column when the dimension key has the FK's name
+    * (`customer_id` on both sides): every row then "exists" and no
+    * orphan is ever counted. */
+  private val FactAlias = "dq_fact"
+
+  /** For each `(name, flag)`, the number of rows of `fact` the flag
+    * holds for, as rows `(name, observed)`: every flag in ONE
+    * projection of `fact`, counted in one global aggregate, so the fact
+    * is scanned once however many checks ride on it (the
+    * [[businessRules]] melt). */
+  private def flagCounts(fact: DataFrame, flags: Seq[(String, Column)]): DataFrame =
+    fact.as(FactAlias).select(flags.map { case (name, flag) => flag.as(name) }: _*)
+      .select(flags.map { case (name, _) => count_if(col(name)).as(name) }: _*)
+      .select(explode(map(flags.flatMap { case (name, _) =>
+        Seq(lit(name), col(name)) }: _*)).as(Seq("name", "observed")))
+
+  /** Referential-integrity checks: orphan fact rows per foreign key,
+    * one row `(fk_name, orphan_rows, passed)` per `(name, fkCol,
+    * dimKeys)` check — [[isOrphan]] flags counted by [[flagCounts]]:
+    * one scan of the fact for every foreign key (one broadcast
+    * ExistenceJoin per dimension), no shuffle of the fact, no
+    * collect. */
+  def orphanChecks(fact: DataFrame,
+      checks: Seq[(String, String, DataFrame)]): DataFrame =
+    flagCounts(fact, checks.map { case (name, fk, dim) => name -> isOrphan(fk, dim) })
+      .select(col("name").as("fk_name"), col("observed").as("orphan_rows"),
+        (col("observed") === 0L).as("passed"))
+
+  def referentialIntegrity(spark: SparkSession, dir: String): DataFrame =
+    orphanChecks(Tables.sales(spark, dir), Seq(
+      ("sales_customer_fk", "customer_id",
         Tables.customers(spark, dir).select("customer_id")),
-      orphanCheck("sales_product_fk", sales, "product_id",
+      ("sales_product_fk", "product_id",
         Tables.products(spark, dir).select("product_id")),
-      orphanCheck("sales_store_fk", sales, "store_id",
-        Tables.stores(spark, dir).select("store_id")))
-      .reduce(_ unionAll _).orderBy("fk_name")
-  }
+      ("sales_store_fk", "store_id",
+        Tables.stores(spark, dir).select("store_id"))))
+      .orderBy("fk_name")
 
   /** `dq_drift`: distribution drift between two snapshots of `events`
     * — total-variation distance between the per-type value histograms
@@ -179,26 +202,31 @@ object DataQuality {
   }
 
   /** Rule set over caller-provided retail tables (the Pipeline's silver
-    * gate): uniqueness, not-null, positivity — each one aggregate pass. */
+    * gate): key uniqueness of two dimensions, one aggregate each; the
+    * not-null and positivity rules on `sales` and its three FK orphan
+    * checks ([[isOrphan]]), all six from ONE scan of `sales`
+    * ([[flagCounts]]). Rows `(check_name, table_name, passed,
+    * observed)`. */
   def genericRules(sales: DataFrame, customers: DataFrame,
-      products: DataFrame): DataFrame = {
-    def rule(name: String, table: String, observed: DataFrame,
-             pass: Column => Column = _ === 0L): DataFrame =
-      observed.select(
-        lit(name).as("check_name"), lit(table).as("table_name"),
-        pass(col("observed")).as("passed"), col("observed"))
+      products: DataFrame, stores: DataFrame): DataFrame = {
+    def unique(name: String, table: String, dim: DataFrame, key: String): DataFrame =
+      dim.agg((count(lit(1)) - countDistinct(col(key))).as("observed"))
+        .select(lit(name).as("name"), lit(table).as("table_name"), col("observed"))
+    val fks = Seq("customer_id" -> customers, "product_id" -> products,
+      "store_id" -> stores)
+    val salesRules = flagCounts(sales, Seq(
+        "product_id_not_null" -> col("product_id").isNull,
+        "quantity_positive" -> (col("quantity") <= 0),
+        "unit_price_non_negative" -> (col("unit_price") < 0)) ++
+      fks.map { case (fk, dim) => s"sales_${fk}_fk" -> isOrphan(fk, dim.select(fk)) })
     Seq(
-      rule("customer_id_unique", "customers",
-        customers.agg((count(lit(1)) - countDistinct(col("customer_id"))).as("observed"))),
-      rule("product_id_unique", "products",
-        products.agg((count(lit(1)) - countDistinct(col("product_id"))).as("observed"))),
-      rule("product_id_not_null", "sales",
-        sales.agg(sum(col("product_id").isNull.cast("long")).as("observed"))),
-      rule("quantity_positive", "sales",
-        sales.agg(sum((col("quantity") <= 0).cast("long")).as("observed"))),
-      rule("unit_price_non_negative", "sales",
-        sales.agg(sum((col("unit_price") < 0).cast("long")).as("observed")))
-    ).reduce(_ unionAll _).orderBy("check_name")
+      unique("customer_id_unique", "customers", customers, "customer_id"),
+      unique("product_id_unique", "products", products, "product_id"),
+      salesRules.select(col("name"), lit("sales").as("table_name"), col("observed"))
+    ).reduce(_ unionAll _)
+      .select(col("name").as("check_name"), col("table_name"),
+        (col("observed") === 0L).as("passed"), col("observed"))
+      .orderBy("check_name")
   }
 
   /** Fixed-point tolerance (1e-4 units) under which an order header

@@ -867,14 +867,15 @@ object Multimodal {
     // repeat consumers read the materialization, never re-sign frames
     val f = ArtifactCache.of(spark, dir, "mm_frame_feats")(
       perceptualFrames(spark, dir))
-    val n = f.count()
-    val bits = frameLshBitsFor(n)
-    val tables = frameLshTablesFor(bits)
-    val sigs = ArtifactCache.of(spark, dir, "mm_frame_sigs")(
+    val sigs = ArtifactCache.of(spark, dir, "mm_frame_sigs") {
+      // the signature width derives from the frame count: counted when
+      // the signatures are built, not on every read of them
+      val bits = frameLshBitsFor(f.count())
       Similarity.capBuckets(
-        Similarity.signatures(f, "fid", tables, bits,
+        Similarity.signatures(f, "fid", frameLshTablesFor(bits), bits,
           dim = FrameFeatDim),
-        FrameLshBucketCap))
+        FrameLshBucketCap)
+    }
     // the verified pair list is itself a session-cached artifact (the
     // dd_minhash_pairs precedent): derived once per corpus, repeat
     // consumers read the materialization

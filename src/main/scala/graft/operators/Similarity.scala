@@ -346,7 +346,7 @@ object Similarity {
       val target = math.max(IvfTrainTarget, IvfTrainPerCell * cells)
       val smp = trainSample(
         c.select(col("vec_id"), col("embedding").as("e")), n, target)
-      Clustering.fit(spark, smp, Clustering.seedCentroids(smp, cells))
+      Clustering.fit(smp, Clustering.seedCentroids(smp, cells))
         .map(_._2)
     }
 
@@ -424,7 +424,7 @@ object Similarity {
       try pool.all(0 until PqSubspaces) { m =>
         val sub = smp.select(col("vec_id"),
           slice(col("embedding"), m * PqSubDim + 1, PqSubDim).as("e"))
-        Clustering.fit(spark, sub, Clustering.seedCentroids(sub, PqCodesK))
+        Clustering.fit(sub, Clustering.seedCentroids(sub, PqCodesK))
           .map(_._2)
       } finally pool.close()
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.functions.{RollingHash, Shingles}
+import graft.functions.{RollingHash, Shingles, TokenStats}
 import graft.sources.Tables
 
 /** Text-analysis operators over the `documents` table: stats, language
@@ -92,7 +92,14 @@ object TextAnalysis {
   /** Quality score: distinct-token ratio, stopword ratio, punctuation
     * ratio, length band — the length/punct/stopword heuristics of
     * LLM-corpus filtering. */
-  def quality(spark: SparkSession, dir: String): DataFrame = {
+  def quality(spark: SparkSession, dir: String): DataFrame =
+    Tables.table(spark, dir, "documents")
+      .select(col("doc_id") +: qualityColumns: _*)
+      .orderBy("doc_id")
+
+  /** [[quality]]'s columns as expressions over `text`, so a consumer
+    * that reads `documents` computes them in the same projection. */
+  private def qualityColumns: Seq[Column] = {
     val t = split(col("text"), " ")
     val nTok   = size(t)
     val uniqRatio = size(array_distinct(t)) * lit(1.0) / nTok
@@ -110,13 +117,30 @@ object TextAnalysis {
         lit(0.3) * least(stopRatio * lit(4.0), lit(1.0)) +
         lit(0.2) * when(lenOk, lit(1.0)).otherwise(lit(0.0)) -
         lit(0.2) * least(punctRatio * lit(10.0), lit(1.0))
-    Tables.table(spark, dir, "documents")
-      .select(
-        col("doc_id"), nTok.as("n_tokens"), uniqRatio.as("uniq_ratio"),
-        stopRatio.as("stop_ratio"), punctRatio.as("punct_ratio"),
-        score.as("quality_score"), (score >= 0.5).as("passed"))
-      .orderBy("doc_id")
+    Seq(nTok.as("n_tokens"), uniqRatio.as("uniq_ratio"),
+      stopRatio.as("stop_ratio"), punctRatio.as("punct_ratio"),
+      score.as("quality_score"), (score >= 0.5).as("passed"))
   }
+
+  /** `documents` with each document's [[TokenStats]] struct as `s`: the
+    * token statistics of [[repRatio]], [[lexicalDiversity]] and
+    * [[qualityEnsemble]], computed in the task that reads the row.
+    * `doc_id` is unique and `text` non-null (TablesSpec), so one output
+    * row per document, as the doc_id-keyed derivations gave. */
+  private def docTokenStats(spark: SparkSession, dir: String): DataFrame =
+    Tables.table(spark, dir, "documents")
+      .select(col("doc_id"), col("text"),
+        TokenStats.column(col("text")).as("s"))
+
+  /** Fraction of a document's k-grams (k = 2, 3) that repeat an earlier
+    * k-gram of the same document; 0 when it has none. */
+  private def dupGramRatio(k: Int): Column = {
+    val n = col(s"s.n_${k}grams")
+    when(n > 0, (n - col(s"s.d_${k}grams")) * lit(1.0) / n).otherwise(lit(0.0))
+  }
+
+  /** Type-token ratio. */
+  private val ttr: Column = col("s.n_types") * lit(1.0) / col("s.n_tokens")
 
   /** Corpus-wide top-20 bigrams (native codegen n-gram expression). */
   def topNgrams(spark: SparkSession, dir: String): DataFrame = {
@@ -170,40 +194,15 @@ object TextAnalysis {
   /** Intra-document repetition — the duplicate-n-gram quality signal of
     * LLM corpus filtering (a document that repeats its own 2/3-grams is
     * boilerplate or a crawler loop): fraction of word n-grams that are
-    * repeats within the document. Native codegen n-gram expression, pure
-    * per-row arithmetic — no shuffle besides the output sort. */
-  def repRatio(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // intra-document: one per-row pass in the typed seam — count n-gram
-    // occurrences and distinct n-grams with a hash set, never
-    // materializing the gram arrays the round-5 formulation built (and
-    // deduped) per row twice
-    def stats(toks: Array[String], n: Int): (Int, Int) = {
-      val total = math.max(0, toks.length - n + 1)
-      if (total == 0) return (0, 0)
-      val seen = new java.util.HashSet[String]()
-      var i = 0
-      while (i + n <= toks.length) {
-        val sb = new StringBuilder(toks(i))
-        var j = 1
-        while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
-        seen.add(sb.toString); i += 1
-      }
-      (total, seen.size)
-    }
-    Tables.table(spark, dir, "documents")
-      .select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        val toks = text.split(" ", -1)
-        val (n2, d2) = stats(toks, 2)
-        val (n3, d3) = stats(toks, 3)
-        (id, n2, if (n2 > 0) (n2 - d2) * 1.0 / n2 else 0.0,
-          n3, if (n3 > 0) (n3 - d3) * 1.0 / n3 else 0.0)
-      })
-      .toDF("doc_id", "n_2grams", "dup_2gram_ratio",
-        "n_3grams", "dup_3gram_ratio")
+    * repeats within the document. One projection of the per-row
+    * [[TokenStats]] kernel — no shuffle besides the output sort. */
+  def repRatio(spark: SparkSession, dir: String): DataFrame =
+    docTokenStats(spark, dir)
+      .select(col("doc_id"), col("s.n_2grams").cast("int").as("n_2grams"),
+        dupGramRatio(2).as("dup_2gram_ratio"),
+        col("s.n_3grams").cast("int").as("n_3grams"),
+        dupGramRatio(3).as("dup_3gram_ratio"))
       .orderBy("doc_id")
-  }
 
   /** `txt_lexical`: per-document lexical-diversity profile — token and
     * type counts, type-token ratio, hapax-legomenon fraction, and the
@@ -213,27 +212,21 @@ object TextAnalysis {
     * [[repRatio]] catches ADJACENT repetition, this catches global
     * vocabulary collapse).
     *
-    * Scale shape: explode to (doc, term) → ONE partial-aggregating
-    * groupBy to per-doc term counts → ONE doc-keyed aggregate — the
-    * TF-IDF shuffle discipline, state bounded by a document's
-    * vocabulary. All four sufficient statistics are exact integers;
-    * each ratio is a single IEEE division, identical both engines. */
-  def lexicalDiversity(spark: SparkSession, dir: String): DataFrame =
-    Tables.table(spark, dir, "documents")
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id")
-      .agg(sum(col("c")).as("n_tokens"),
-        count(lit(1)).as("n_types"),
-        sum(when(col("c") === 1, 1L).otherwise(0L)).as("n_hapax"),
-        sum(col("c") * (col("c") - 1)).as("rep_pairs"))
-      .select(col("doc_id"), col("n_tokens"), col("n_types"), col("n_hapax"),
-        (col("n_types") * lit(1.0) / col("n_tokens")).as("ttr"),
-        (col("n_hapax") * lit(1.0) / col("n_types")).as("hapax_frac"),
-        when(col("n_tokens") >= 2,
-          col("rep_pairs") * lit(1.0) / (col("n_tokens") * (col("n_tokens") - 1)))
+    * Scale shape: one projection of the per-row [[TokenStats]] kernel,
+    * whose hash table is bounded by a document's vocabulary — no
+    * shuffle besides the output sort. All four sufficient statistics
+    * are exact integers; each ratio is a single IEEE division,
+    * identical both engines. */
+  def lexicalDiversity(spark: SparkSession, dir: String): DataFrame = {
+    val nTok = col("s.n_tokens")
+    docTokenStats(spark, dir)
+      .select(col("doc_id"), nTok, col("s.n_types"), col("s.n_hapax"),
+        ttr.as("ttr"),
+        (col("s.n_hapax") * lit(1.0) / col("s.n_types")).as("hapax_frac"),
+        when(nTok >= 2, col("s.rep_pairs") * lit(1.0) / (nTok * (nTok - 1)))
           .otherwise(lit(0.0)).as("simpson_rep"))
       .orderBy("doc_id")
+  }
 
   /** PII patterns shared by the Spark operator and the DuckDB oracle.
     * Kept to constructs Java regex and RE2 parse identically (classes,
@@ -1477,11 +1470,11 @@ object TextAnalysis {
     * long enough, diverse enough, OR clean enough); the ensemble is
     * what LLM-corpus pipelines actually gate on.
     *
-    * Scale shape: all three component passes key their single shuffle
-    * on doc_id, so the ensemble joins are CO-PARTITIONED (no extra
-    * exchange after the components); the blend is one fixed IEEE
-    * expression — bit-identical cross-engine, no round-off gate
-    * wobble. */
+    * Scale shape: every component is a function of the document alone,
+    * so the three families are one projection over ONE scan of
+    * `documents` ([[docTokenStats]]) — no join and no shuffle besides
+    * the output sort; the blend is one fixed IEEE expression —
+    * bit-identical cross-engine, no round-off gate wobble. */
   def qualityEnsemble(spark: SparkSession, dir: String): DataFrame =
     ensembleCore(spark, dir).orderBy("doc_id")
 
@@ -1489,14 +1482,13 @@ object TextAnalysis {
     * [[qualityLr]]'s feature frame (an inner ORDER BY would cost a
     * pointless range exchange mid-plan). */
   private def ensembleCore(spark: SparkSession, dir: String): DataFrame = {
-    val q = quality(spark, dir).select("doc_id", "quality_score")
-    val r = repRatio(spark, dir).select("doc_id", "dup_3gram_ratio")
-    val l = lexicalDiversity(spark, dir).select("doc_id", "ttr")
     val composite =
       lit(0.5) * col("quality_score") +
         lit(0.25) * (lit(1.0) - col("dup_3gram_ratio")) +
         lit(0.25) * col("ttr")
-    q.join(r, "doc_id").join(l, "doc_id")
+    docTokenStats(spark, dir)
+      .select(Seq(col("doc_id"), dupGramRatio(3).as("dup_3gram_ratio"),
+        ttr.as("ttr")) ++ qualityColumns: _*)
       .select(col("doc_id"), col("quality_score"), col("dup_3gram_ratio"),
         col("ttr"), composite.as("composite"),
         (composite >= EnsembleBar).as("keep"))

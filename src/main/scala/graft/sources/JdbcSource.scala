@@ -72,9 +72,6 @@ object JdbcSource {
   def reader(spark: SparkSession, cfg: JdbcConfig): DataFrameReader =
     spark.read.format("jdbc").options(options(cfg))
 
-  def extractTable(spark: SparkSession, cfg: JdbcConfig): DataFrame =
-    reader(spark, cfg).load()
-
   // ---- write-back (warehouse load — the extract contract's mirror) ----
 
   /** Write-side configuration, symmetric with [[JdbcConfig]] (the

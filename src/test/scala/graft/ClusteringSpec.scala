@@ -85,11 +85,13 @@ class ClusteringSpec extends SparkSpec {
     }
     val c = rows.toDF("vec_id", "e")
     def maxPop(init: Seq[(Long, Seq[Double])]): Int = {
-      val fitted = Clustering.fit(spark, c, init)
-      Clustering.assignments(spark, c, fitted).collect()
+      val fitted = Clustering.fit(c, init)
+      Clustering.assign(c, fitted).collect()
         .groupBy(_.getAs[Long]("cell")).map(_._2.length).max
     }
-    val firstK = maxPop(Clustering.firstKCentroids(c, k))
+    // the baseline: init from the first k ids
+    val firstKInit = rows.filter(_._1 < k)
+    val firstK = maxPop(firstKInit)
     val hashed = maxPop(Clustering.seedCentroids(c, k))
     // the hash-ordered seeds sample every region; balance must strictly
     // improve on the collapsed first-k init

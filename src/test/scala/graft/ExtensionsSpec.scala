@@ -15,7 +15,8 @@ class ExtensionsSpec extends AnyFunSuite {
     "graft_char_deletion_hashes", "graft_char_deletion_hashlens",
     "graft_bloom_agg", "graft_bloom_contains", "graft_html_text",
     "graft_html_block_stats", "graft_html_parsed", "graft_html_links",
-    "graft_url_canon", "graft_url_host", "graft_chunk_hashes")
+    "graft_url_canon", "graft_url_host", "graft_chunk_hashes",
+    "graft_token_stats", "graft_nearest_centroid")
 
   test("GraftExtensions makes the native functions available to plain SQL") {
     // getOrCreate reuses any live session and would skip the extension
@@ -33,7 +34,7 @@ class ExtensionsSpec extends AnyFunSuite {
       // the extension alone
       val fresh = spark.newSession()
       val missing = Injected.filterNot(fresh.catalog.functionExists)
-      assert(Injected.distinct.size == 24)
+      assert(Injected.distinct.size == 26)
       assert(missing.isEmpty, s"not resolvable: ${missing.mkString(", ")}")
       val row = spark.sql(
         """SELECT graft_rolling_hash('hello world')       AS rh,

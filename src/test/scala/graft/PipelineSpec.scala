@@ -74,7 +74,7 @@ class PipelineSpec extends SparkSpec {
     }
     val fact = Seq((1L, 10L), (2L, 11L), (3L, 99L)).toDF("id", "fk")
     val dim = Seq(10L, 11L).toDF("k")
-    val planted = DataQuality.orphanCheck("planted", fact, "fk", dim).head()
+    val planted = DataQuality.orphanChecks(fact, Seq(("planted", "fk", dim))).head()
     assert(planted.getAs[Long]("orphan_rows") == 1L)
     assert(!planted.getAs[Boolean]("passed"))
   }

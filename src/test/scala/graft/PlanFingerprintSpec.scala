@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.catalyst.plans.JoinType
 import org.apache.spark.sql.execution.{GlobalLimitExec, LocalTableScanExec, RangeExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -39,13 +40,15 @@ object PlanFingerprint {
       case _: AdaptiveSparkPlanExec => "AdaptivePlan"
       case e: ShuffleExchangeExec =>
         s"Exchange[${e.outputPartitioning.getClass.getSimpleName}]"
-      case j: HashJoin => s"${j.nodeName}[${j.joinType},${j.buildSide}]"
-      case j: SortMergeJoinExec => s"${j.nodeName}[${j.joinType}]"
+      case j: HashJoin => s"${j.nodeName}[${joinType(j.joinType)},${j.buildSide}]"
+      case j: SortMergeJoinExec => s"${j.nodeName}[${joinType(j.joinType)}]"
       case j: BroadcastNestedLoopJoinExec =>
-        s"${j.nodeName}[${j.joinType},${j.buildSide}]"
+        s"${j.nodeName}[${joinType(j.joinType)},${j.buildSide}]"
       // strip per-plan counters: "WholeStageCodegen (3)" → "WholeStageCodegen"
       case p => p.nodeName.replaceAll("\\s*\\(\\d+\\)$", "")
     }
+    // an ExistenceJoin names its output attribute: drop the expression id
+    def joinType(t: JoinType): String = t.toString.replaceAll("#\\d+", "")
     def go(p: SparkPlan, d: Int): Unit = {
       sb.append("  " * d).append(label(p)).append('\n')
       val kids = p match {

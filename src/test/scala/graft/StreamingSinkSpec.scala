@@ -124,6 +124,9 @@ class StreamingSinkSpec extends SparkSpec {
   }
 
   test("partition pruning reaches the scan when filtering silver by load_date") {
+    // the silver write as production runs it: with AQE on, so the
+    // write's REBALANCE hint applies (the streaming session drops it)
+    val spark = SparkSpec.session
     val base = java.nio.file.Files.createTempDirectory("graft_part").toString
     val df = Tables.table(spark, sfDir, "nation")
     graft.sinks.ParquetSink.writePartitioned(

@@ -16,6 +16,10 @@ import graft.sources.Tables
   * inference per (session, dir, table), dropped by `invalidateDir`. */
 class TablesSpec extends SparkSpec {
 
+  /** The three verified scale factors, next to [[sfDir]]. */
+  private val verifiedDirs = Seq("sf0.001", "sf0.01", "sf0.1")
+    .map(sf => s"${new java.io.File(sfDir).getParent}/$sf")
+
   test("salesLite precondition: lineitem→orders FK + order-key uniqueness at every verified SF") {
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")) {
@@ -28,6 +32,23 @@ class TablesSpec extends SparkSpec {
         .join(o.select("o_orderkey"),
           col("l_orderkey") === col("o_orderkey"), "left_anti").count()
       assert(orphans == 0L, s"$orphans orphan lineitems at $dir")
+    }
+  }
+
+  test("row-local text and vector kernels: unique doc_id and vec_id, non-null text at every verified SF") {
+    // a projection keeps one row per input row where a groupBy(doc_id)
+    // merged duplicate ids, and a null text yields no explode rows but a
+    // null kernel struct: TokenStats and NearestCentroid match their
+    // former doc_id/vec_id-keyed derivations only under these
+    for (dir <- verifiedDirs) {
+      val d = Tables.table(spark, dir, "documents")
+        .agg(count(lit(1)), countDistinct(col("doc_id")),
+          count(when(col("text").isNull, 1))).head()
+      assert(d.getLong(0) > 0 && d.getLong(0) == d.getLong(1), s"duplicate doc_id at $dir")
+      assert(d.getLong(2) == 0L, s"null document text at $dir")
+      val e = Tables.table(spark, dir, "embeddings")
+        .agg(count(lit(1)), countDistinct(col("vec_id"))).head()
+      assert(e.getLong(0) > 0 && e.getLong(0) == e.getLong(1), s"duplicate vec_id at $dir")
     }
   }
 
