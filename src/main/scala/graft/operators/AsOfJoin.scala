@@ -15,13 +15,14 @@ import graft.sources.Tables
   */
 object AsOfJoin {
 
-  /** left keeps all its columns plus `asOfCol` = latest `rightVal`
-    * whose `rightTs` ≤ `leftTs` for the same `key` (null if none).
-    * Ties on (key, ts) resolve to the greatest `rightVal` — total
-    * ordering keeps the result deterministic. */
-  def backward(left: DataFrame, right: DataFrame, key: String,
-      leftTs: String, rightTs: String, rightVal: String,
-      asOfCol: String): DataFrame = {
+  /** The tagged union every direction scans: left rows carry `_src` = 1
+    * and a null `_rv`, right rows `_src` = 0 and their value (cast to
+    * `rightVal`'s type), both with their timestamp as `_ts`. `frames`
+    * adds the as-of columns over it, each a window partitioned by `key`;
+    * the left rows are then returned with the tags dropped. */
+  private def tagged(left: DataFrame, right: DataFrame, key: String,
+      leftTs: String, rightTs: String, rightVal: String)(
+      frames: DataFrame => DataFrame): DataFrame = {
     val valType = right.schema(rightVal).dataType
     val l = left
       .withColumn("_ts", col(leftTs))
@@ -30,15 +31,22 @@ object AsOfJoin {
     val r = right.select(
       col(key), col(rightTs).as("_ts"), lit(0).as("_src"),
       col(rightVal).cast(valType).as("_rv"))
-    val unioned = l.unionByName(r, allowMissingColumns = true)
-    val w = Window.partitionBy(key)
-      .orderBy(col("_ts"), col("_src"), col("_rv"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    unioned
-      .withColumn(asOfCol, last(col("_rv"), ignoreNulls = true).over(w))
+    frames(l.unionByName(r, allowMissingColumns = true))
       .where(col("_src") === 1)
       .drop("_ts", "_src", "_rv")
   }
+
+  /** left keeps all its columns plus `asOfCol` = latest `rightVal`
+    * whose `rightTs` ≤ `leftTs` for the same `key` (null if none).
+    * Ties on (key, ts) resolve to the greatest `rightVal` — total
+    * ordering keeps the result deterministic. */
+  def backward(left: DataFrame, right: DataFrame, key: String,
+      leftTs: String, rightTs: String, rightVal: String,
+      asOfCol: String): DataFrame =
+    tagged(left, right, key, leftTs, rightTs, rightVal)(_.withColumn(asOfCol,
+      last(col("_rv"), ignoreNulls = true).over(Window.partitionBy(key)
+        .orderBy(col("_ts"), col("_src"), col("_rv"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
 
   /** Forward as-of: for each left row, the EARLIEST right value with
     * right.ts ≥ left.ts on the same key — the "next scheduled event"
@@ -49,24 +57,11 @@ object AsOfJoin {
     * Still ONE shuffle, no join explosion. */
   def forward(left: DataFrame, right: DataFrame, key: String,
       leftTs: String, rightTs: String, rightVal: String,
-      asOfCol: String): DataFrame = {
-    val valType = right.schema(rightVal).dataType
-    val l = left
-      .withColumn("_ts", col(leftTs))
-      .withColumn("_src", lit(1))
-      .withColumn("_rv", lit(null).cast(valType))
-    val r = right.select(
-      col(key), col(rightTs).as("_ts"), lit(0).as("_src"),
-      col(rightVal).cast(valType).as("_rv"))
-    val unioned = l.unionByName(r, allowMissingColumns = true)
-    val w = Window.partitionBy(key)
-      .orderBy(col("_ts").desc, col("_src"), col("_rv").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    unioned
-      .withColumn(asOfCol, last(col("_rv"), ignoreNulls = true).over(w))
-      .where(col("_src") === 1)
-      .drop("_ts", "_src", "_rv")
-  }
+      asOfCol: String): DataFrame =
+    tagged(left, right, key, leftTs, rightTs, rightVal)(_.withColumn(asOfCol,
+      last(col("_rv"), ignoreNulls = true).over(Window.partitionBy(key)
+        .orderBy(col("_ts").desc, col("_src"), col("_rv").desc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
 
   /** Contract query: each event matched to that user's NEXT order on or
     * after the event time (forward as-of). */
@@ -114,24 +109,13 @@ object AsOfJoin {
   def nearest(left: DataFrame, right: DataFrame, key: String,
       leftTs: String, rightTs: String, rightVal: String,
       prevCol: String, nextCol: String): DataFrame = {
-    val valType = right.schema(rightVal).dataType
-    val l = left
-      .withColumn("_ts", col(leftTs))
-      .withColumn("_src", lit(1))
-      .withColumn("_rv", lit(null).cast(valType))
-    val r = right.select(
-      col(key), col(rightTs).as("_ts"), lit(0).as("_src"),
-      col(rightVal).cast(valType).as("_rv"))
-    val unioned = l.unionByName(r, allowMissingColumns = true)
     val ord = Window.partitionBy(key)
       .orderBy(col("_ts"), col("_src"), col("_rv"))
-    unioned
-      .withColumn(prevCol, last(col("_rv"), ignoreNulls = true)
+    tagged(left, right, key, leftTs, rightTs, rightVal)(
+      _.withColumn(prevCol, last(col("_rv"), ignoreNulls = true)
         .over(ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn(nextCol, first(col("_rv"), ignoreNulls = true)
-        .over(ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
-      .where(col("_src") === 1)
-      .drop("_ts", "_src", "_rv")
+        .withColumn(nextCol, first(col("_rv"), ignoreNulls = true)
+          .over(ord.rowsBetween(Window.currentRow, Window.unboundedFollowing))))
   }
 
   /** Contract query: each event matched to that user's temporally

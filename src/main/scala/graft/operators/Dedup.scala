@@ -665,15 +665,17 @@ object Dedup {
     ArtifactCache.of(spark, dir, "dd_minhash_pairs")(
       minhashLshDerive(spark, dir))
 
-  private def minhashLshDerive(spark: SparkSession, dir: String): DataFrame = {
-    val buckets = minhashBuckets(spark, dir)
-    val cand = buckets.select(col("doc_id").as("a_id"), col("band"), col("sig"))
+  private def minhashLshDerive(spark: SparkSession, dir: String): DataFrame =
+    verifyCandidates(spark, dir, bucketPairs(minhashBuckets(spark, dir)))
+
+  /** The distinct doc pairs (a_id < b_id) sharing at least one
+    * (band, sig) bucket of [[minhashBuckets]]: the banded self-join. */
+  private def bucketPairs(buckets: DataFrame): DataFrame =
+    buckets.select(col("doc_id").as("a_id"), col("band"), col("sig"))
       .join(buckets.select(col("doc_id").as("b_id"), col("band"), col("sig")),
         Seq("band", "sig"))
       .where(col("a_id") < col("b_id"))
       .select("a_id", "b_id").distinct()
-    verifyCandidates(spark, dir, cand)
-  }
 
   /** `dd_minhash_incremental`: NEAR-dup screening of an incoming batch
     * against the standing corpus — the daily-crawl twin of
@@ -970,12 +972,7 @@ object Dedup {
   def lshCalibration(spark: SparkSession, dir: String): DataFrame = {
     val r = MinhashPerms / MinhashBands
     val exact = curveDeciles(spark, dir)
-    val buckets = minhashBuckets(spark, dir)
-    val cand = buckets.select(col("doc_id").as("a_id"), col("band"), col("sig"))
-      .join(buckets.select(col("doc_id").as("b_id"), col("band"), col("sig")),
-        Seq("band", "sig"))
-      .where(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
+    val cand = bucketPairs(minhashBuckets(spark, dir))
       .withColumn("collides", lit(1L))
     val perDecile = exact
       .join(cand, Seq("a_id", "b_id"), "left")

@@ -107,8 +107,10 @@ object TextAnalysis {
     // filter(t, isInCollection) is CodegenFallback, interpreted per row
     val stopHits  = graft.functions.TokenSetHits.column(col("text"), stopwords)
     val stopRatio = stopHits * lit(1.0) / nTok
-    val punctRatio = size(regexp_extract_all(col("text"), lit("""[^\w\s]"""), lit(0))) *
-      lit(1.0) / length(col("text"))
+    // empty text has no characters: ratio 0, not a division by zero
+    val punctRatio = when(length(col("text")) === 0, lit(0.0)).otherwise(
+      size(regexp_extract_all(col("text"), lit("""[^\w\s]"""), lit(0))) *
+        lit(1.0) / length(col("text")))
     val lenOk  = nTok.between(20, 80)
     // raw double score (no ROUND: half-way tie rounding differs between
     // engines; the expression itself is bit-deterministic)
@@ -407,7 +409,7 @@ object TextAnalysis {
     * broadcast 1-row aggregate; the per-doc mean is a fixed-point
     * decimal sum, order-independent under any partitioning. */
   def lmScore(spark: SparkSession, dir: String): DataFrame = {
-    // r16: per-word xxhash64 keys (see kn5Score — the model keys on
+    // r16: per-word xxhash64 keys (see knScoreOf — the model keys on
     // word IDENTITY only and no output column carries text, so the
     // count tables and the corpus-sized scoring join shuffle 8-byte
     // keys; a bigram string maps bijectively onto its word pair —
@@ -438,16 +440,8 @@ object TextAnalysis {
       .select(col("ctx"), col("nxt"),
         ((col("c2").cast("double") + lit(1.0))
           / (col("c1").cast("double") + col("v").cast("double"))).as("p"))
-    val p = bg.join(ptype, Seq("ctx", "nxt"))
-      .select(col("doc_id"), col("p"))
-    p.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(floor(col("p") * lit(LmScale.toDouble))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("s"))
-      .select(col("doc_id"), col("n_bigrams"),
-        (col("s").cast("double") / lit(LmScale.toDouble) / col("n_bigrams"))
-          .as("lm_score"))
-      .orderBy("doc_id")
+    docMean(bg.join(ptype, Seq("ctx", "nxt")).select(col("doc_id"), col("p")),
+      "n_bigrams", "lm_score")
   }
 
   /** `txt_ccnet_bucket`: CCNet-style per-language fluency bucketing
@@ -525,273 +519,119 @@ object TextAnalysis {
       .orderBy("source")
   }
 
-  /** Absolute discount for [[knScore]] — the textbook Kneser-Ney
+  /** Absolute discount of [[knScoreOf]] — the textbook Kneser-Ney
     * constant (Chen & Goodman 1999 use c(ab)-count-based estimates;
     * 0.75 is the standard fixed choice). Exactly representable in
     * binary, so the discounted numerators are engine-identical. */
   val KnDiscount = 0.75
 
-  /** `txt_kn_score`: interpolated Kneser-Ney bigram fluency scoring —
-    * the modern-smoothing upgrade of [[lmScore]]'s add-one model:
-    * p(b|a) = (c(ab)−d)/c(a) + (d·N₁₊(a·)/c(a)) · N₁₊(·b)/B, where
-    * N₁₊(a·)/N₁₊(·b) are distinct continuation/history counts and B
-    * is the bigram-type total — the continuation probability is what
-    * keeps high-frequency-but-context-bound tokens ("Francisco") from
-    * inflating scores, which is exactly the boilerplate failure mode
-    * of add-one filtering. Per-doc score = mean transition
-    * probability (same no-ln discipline as [[lmScore]]: every op is
-    * +,−,×,/ over exact counts, so the doubles are engine-identical;
-    * c(ab) ≥ 1 keeps the discounted numerator positive without a max).
+  /** Interpolated Kneser-Ney n-gram fluency scoring for any order
+    * n ≥ 2 — the modern-smoothing upgrade of [[lmScore]]'s add-one
+    * model, and at n = 5 the STANDARD pretraining fluency filter
+    * (KenLM-class models: CCNet, RefinedWeb and Gopher all filter on a
+    * 5-gram KN perplexity). `txt_kn_score`, `txt_kn3_score` and
+    * `txt_kn5_score` are this kernel at n = 2, 3 and 5. One row per
+    * document with at least n tokens: `countCol` = its n-gram count,
+    * `scoreCol` = its mean n-gram probability.
     *
-    * Scale shape: one bigram explode feeds the (ctx, nxt) type table;
-    * c(a), N₁₊(a·) come from ONE rollup of it (same groupBy), N₁₊(·b)
-    * from one more, B is a broadcast 1-row aggregate; the scoring
-    * stream joins by vocabulary-sized keys and closes with a
-    * fixed-point per-doc mean. */
-  def knScore(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.table(spark, dir, "documents")
-    // r16: per-word xxhash64 keys (see kn5Score — no downstream op or
-    // output column reads the word text)
-    val bg = docs.select(col("doc_id"),
-        explode(call_function("graft_word_ngrams", col("text"), lit(2)))
-          .as("bigram"))
-      .withColumn("ws", split(col("bigram"), " "))
-      .select(col("doc_id"),
-        xxhash64(col("ws").getItem(0)).as("ctx"),
-        xxhash64(col("ws").getItem(1)).as("nxt"))
-    val c2 = bg.groupBy("ctx", "nxt").agg(count(lit(1)).as("c2"))
-    val ca = c2.groupBy("ctx").agg(sum("c2").as("ca"), count(lit(1)).as("n1f"))
-    val n1b = c2.groupBy("nxt").agg(count(lit(1)).as("n1b"))
-    val bt = c2.agg(count(lit(1)).as("bt"))
-    // r15: p is a function of the (ctx, nxt) TYPE alone — finish it on
-    // the type table and join the corpus-sized token stream ONCE (the
-    // old plan joined the stream on (ctx,nxt), then ctx, then nxt).
-    // Same expression tree, bit-identical doubles.
-    val ptype = c2
-      .join(ca, "ctx").join(n1b, "nxt").crossJoin(broadcast(bt))
-      .select(col("ctx"), col("nxt"),
-        ((col("c2").cast("double") - lit(KnDiscount))
-            / col("ca").cast("double")
-          + ((lit(KnDiscount) * col("n1f").cast("double"))
-              / col("ca").cast("double"))
-            * (col("n1b").cast("double") / col("bt").cast("double"))).as("p"))
-    val p = bg.select("doc_id", "ctx", "nxt").join(ptype, Seq("ctx", "nxt"))
-      .select(col("doc_id"), col("p"))
-    p.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(floor(col("p") * lit(LmScale.toDouble))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("s"))
-      .select(col("doc_id"), col("n_bigrams"),
-        (col("s").cast("double") / lit(LmScale.toDouble) / col("n_bigrams"))
-          .as("kn_score"))
-      .orderBy("doc_id")
-  }
-
-  /** `txt_kn3_score`: interpolated Kneser-Ney TRIGRAM fluency scoring —
-    * [[knScore]] extended one order (the standard pretraining fluency
-    * filter is a 5-gram KN; order 3 captures most of the bigram→n-gram
-    * gap). Recursion (Chen & Goodman 1999, continuation counts at the
-    * lower orders, all derived from the ONE trigram type table so
-    * document-initial bigrams never skew the lower orders):
+    * Recursion (Chen & Goodman 1999). Level k is the order-k type table
+    * over the last k words; level n counts the corpus n-grams, and each
+    * lower level is the one above rolled up one position from the left,
+    * so its count ĉ is a continuation count (distinct words preceding
+    * the gram) and document-initial shorter grams never skew the
+    * backoff. With h the level's context (all but its last word w):
     *
-    *   p(w₃|w₁w₂) = (c₃−d)/c₁₂ + (d·N₁₊(w₁w₂·)/c₁₂) · p(w₃|w₂)
-    *   p(w₃|w₂)   = (ĉ(w₂w₃)−d)/ĉ(w₂·) + (d·N̂₁₊(w₂·)/ĉ(w₂·)) · p(w₃)
-    *   p(w₃)      = N̂₁₊(·w₃) / |mid types|
+    *   pₖ(w|h) = (c − d)/c(h·) + (d·N₁₊(h·)/c(h·)) · pₖ₋₁(w|h′)
+    *   p₁(w)   = N₁₊(·w) / |level-2 types|
     *
-    * where ĉ(w₂w₃) = N₁₊(·w₂w₃) (distinct w₁ preceding the bigram) is
-    * the continuation count. c₃ ≥ 1 and ĉ ≥ 1 keep both discounted
-    * numerators positive without a max. Same no-transcendental
-    * discipline as [[knScore]]: every op is +,−,×,/ over exact counts
-    * in a FIXED association order, so the doubles are engine-identical
-    * and the per-doc mean goes through the fixed-point floor.
+    * where h′ drops h's first word, c(h·) sums the level's counts over
+    * h, N₁₊(h·) counts its types and d = [[KnDiscount]]. The
+    * continuation counts are what keep high-frequency but context-bound
+    * tokens ("Francisco") from inflating scores, the boilerplate failure
+    * mode of add-one filtering. Every count is ≥ 1, so each discounted
+    * numerator is positive without a max. Every op is +,−,×,/ over
+    * exact counts in a FIXED association order (no ln, same as
+    * [[lmScore]]) and the per-doc mean goes through the fixed-point
+    * floor, so the doubles are engine-identical.
     *
-    * Scale shape: one trigram explode feeds the (w₁,w₂,w₃) type table;
-    * every other aggregate is a rollup of that table — c₁₂/N₁₊(w₁w₂·)
-    * by (w₁,w₂), the continuation table by (w₂,w₃), its context rollup
-    * by w₂, the unigram continuation by w₃ (all bounded by trigram
-    * TYPES, ≪ corpus mass and Heaps-sublinear in it), and the type
-    * total is a broadcast 1-row aggregate. p is a function of the TYPE
-    * alone, so all interpolation joins run between type tables and the
-    * token stream (the side that scales with corpus mass) is joined
-    * exactly ONCE, on the finished per-type score. */
-  def kn3Score(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.table(spark, dir, "documents")
-    // explicit-width exchange before the ~len× explode (the
-    // dupCoverageOf discipline): AQE sizes stage coalescing on the tiny
-    // PRE-explode bytes and would fold trigram generation to one task
-    val np = spark.sessionState.conf.numShufflePartitions
-    // r16: per-word xxhash64 keys (see kn5Score — no downstream op or
-    // output column reads the word text, so all type tables and the
-    // scoring join shuffle 8-byte keys instead of strings)
+    * Scale shape: an explicit-width exchange on doc_id precedes the
+    * ~len× explode (the dupCoverageOf discipline: AQE sizes stage
+    * coalescing on the tiny PRE-explode bytes and would fold n-gram
+    * generation into one task). ONE explode feeds the top type table;
+    * the n − 2 lower tables are successive rollups of it, each bounded
+    * by the TYPES of the one above and all Heaps-sublinear in corpus
+    * mass. Every level table feeds its context rollup, the next rollup
+    * and its interpolation join, so each is `localCheckpoint`ed (the
+    * context rollups are read once and are not; ReuseExchange does not
+    * fire across differently-aliased branches). The type total is a
+    * broadcast 1-row aggregate.
+    *
+    * r15: p is a function of the n-gram TYPE alone, so the
+    * interpolation is evaluated BOTTOM-UP, each order finished on its
+    * own table (level ⋈ context ⋈ lower order), and the corpus-sized
+    * token stream joins exactly ONCE, on the finished per-type score.
+    *
+    * r16 (the dd_admission hash-before-shuffle pattern): no join or
+    * output column reads word text, so the token stream and every type
+    * table shuffle 8-byte xxhash64 word keys instead of strings. Counts
+    * and joins are identical while no two distinct corpus words collide
+    * in xxhash64 (vocabulary is Heaps-sized; the hash gate re-proves it
+    * at every verified SF), and every join matches on ALL its per-word
+    * keys, so a single-word collision cannot merge gram types by
+    * itself. */
+  private[graft] def knScoreOf(docs: DataFrame, n: Int, countCol: String,
+      scoreCol: String): DataFrame = {
+    require(n >= 2, s"Kneser-Ney order must be at least 2, got $n")
+    val np = docs.sparkSession.sessionState.conf.numShufflePartitions
+    val w = (1 to n).map(i => s"w$i")
     val tg = docs.select(col("doc_id"), col("text"))
       .repartition(np, col("doc_id"))
       .select(col("doc_id"),
-        explode(call_function("graft_word_ngrams", col("text"), lit(3)))
-          .as("trigram"))
-      .withColumn("ws", split(col("trigram"), " "))
-      .select(col("doc_id"),
-        xxhash64(col("ws").getItem(0)).as("w1"),
-        xxhash64(col("ws").getItem(1)).as("w2"),
-        xxhash64(col("ws").getItem(2)).as("w3"))
-    // the type table feeds FIVE rollups + the scoring join; without the
-    // checkpoint each rollup re-runs the explode+aggregate subtree
-    // (ReuseExchange does not fire across differently-aliased branches)
-    val c3 = tg.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c3"))
-      .localCheckpoint()
-    val c12 = c3.groupBy("w1", "w2")
-      .agg(sum("c3").as("c12"), count(lit(1)).as("n12f"))
-    val mid = c3.groupBy("w2", "w3").agg(count(lit(1)).as("cm"))
-      .localCheckpoint()
-    val mctx = mid.groupBy("w2")
-      .agg(sum("cm").as("cmt"), count(lit(1)).as("nmf"))
-    val uni = mid.groupBy("w3").agg(count(lit(1)).as("cu"))
-    val mt = mid.agg(count(lit(1)).as("mt"))
-    // r15: bottom-up per-level evaluation (see kn5Score) — the bigram
-    // interpolation finishes on the (w2,w3) continuation table instead
-    // of riding every join at trigram-type width. Same expression tree,
-    // bit-identical doubles.
-    val p2 = mid.join(mctx, Seq("w2")).join(uni, Seq("w3"))
-      .crossJoin(broadcast(mt))
-      .select(col("w2"), col("w3"),
-        ((col("cm").cast("double") - lit(KnDiscount))
-            / col("cmt").cast("double")
-          + ((lit(KnDiscount) * col("nmf").cast("double"))
-              / col("cmt").cast("double"))
-            * (col("cu").cast("double") / col("mt").cast("double"))).as("p2"))
-    val ptype = c3
-      .join(c12, Seq("w1", "w2"))
-      .join(p2, Seq("w2", "w3"))
-      .select(col("w1"), col("w2"), col("w3"),
-        ((col("c3").cast("double") - lit(KnDiscount))
-            / col("c12").cast("double")
-          + ((lit(KnDiscount) * col("n12f").cast("double"))
-              / col("c12").cast("double"))
-            * col("p2"))
-          .as("p"))
-    val p = tg.join(ptype, Seq("w1", "w2", "w3")).select(col("doc_id"), col("p"))
-    p.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(floor(col("p") * lit(LmScale.toDouble))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("s"))
-      .select(col("doc_id"), col("n_trigrams"),
-        (col("s").cast("double") / lit(LmScale.toDouble) / col("n_trigrams"))
-          .as("kn3_score"))
-      .orderBy("doc_id")
-  }
-
-  /** `txt_kn5_score`: interpolated Kneser-Ney 5-GRAM fluency scoring —
-    * the STANDARD pretraining fluency-filter order (KenLM-class
-    * models: CCNet, RefinedWeb, Gopher all filter on a 5-gram KN
-    * perplexity). [[kn3Score]]'s recursion extended two more orders,
-    * every lower order derived from the ONE 5-gram type table by
-    * successive continuation-count rollups (so document-initial
-    * shorter grams never skew the backoff):
-    *
-    *   p(w₅|w₁..w₄) = (c₅−d)/c₁₄ + (d·N₁₊(w₁..w₄·)/c₁₄) · p(w₅|w₂w₃w₄)
-    *   p(w₅|w₂w₃w₄) = (ĉ₄−d)/ĉ₄ᶜ + (d·N̂₄(w₂w₃w₄·)/ĉ₄ᶜ) · p(w₅|w₃w₄)
-    *   p(w₅|w₃w₄)   = (ĉ₃−d)/ĉ₃ᶜ + (d·N̂₃(w₃w₄·)/ĉ₃ᶜ) · p(w₅|w₄)
-    *   p(w₅|w₄)     = (ĉ₂−d)/ĉ₂ᶜ + (d·N̂₂(w₄·)/ĉ₂ᶜ) · p(w₅)
-    *   p(w₅)        = N̂₁₊(·w₅) / |(w₄,w₅) types|
-    *
-    * where ĉₖ is the type count of the order-(k+1) table rolled up one
-    * position from the left (ĉ₄(w₂..w₅) = N₁₊(·w₂w₃w₄w₅) = distinct w₁
-    * in the 5-gram table, and so on down). All counts ≥ 1 keep every
-    * discounted numerator positive without a max. Same
-    * no-transcendental +,−,×,/ fixed-association discipline as
-    * [[knScore]]/[[kn3Score]], so the doubles are engine-identical and
-    * the per-doc mean goes through the fixed-point floor.
-    *
-    * Scale shape: ONE 5-gram explode feeds the type table; the seven
-    * lower-order tables are successive rollups of it (each bounded by
-    * the previous table's TYPES — types⁵ ≥ types⁴ ≥ … — all
-    * Heaps-sublinear in corpus mass), the bigram-type total is a
-    * broadcast 1-row aggregate, p is a function of the TYPE alone, and
-    * the token stream joins exactly ONCE on the finished per-type
-    * score. */
-  def kn5Score(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.table(spark, dir, "documents")
-    // explicit-width exchange before the ~len× explode (see kn3Score)
-    val np = spark.sessionState.conf.numShufflePartitions
-    val gram = docs.select(col("doc_id"), col("text"))
-      .repartition(np, col("doc_id"))
-      .select(col("doc_id"),
-        explode(call_function("graft_word_ngrams", col("text"), lit(5)))
+        explode(call_function("graft_word_ngrams", col("text"), lit(n)))
           .as("g"))
       .withColumn("ws", split(col("g"), " "))
-    // r16 (§2.3, the dd_admission hash-before-shuffle pattern): every
-    // downstream groupBy/join keys on the WORDS, never reads their
-    // text, and no output column carries gram text — so the corpus-
-    // sized token stream and all eight type tables shuffle 8-byte
-    // xxhash64 word keys instead of strings (the dominant shuffle was
-    // five strings per stream row riding the c5 groupBy and the final
-    // scoring join). Counts and joins are identical while no two
-    // distinct corpus words collide in xxhash64 (vocabulary is
-    // Heaps-sized; the hash gate re-proves it at every verified SF),
-    // and every join still matches on ALL per-word keys, so a single-
-    // word collision cannot merge gram types by itself.
-    val tg = gram.select(col("doc_id") +: (0 until 5).map(i =>
-        xxhash64(col("ws").getItem(i)).as(s"w${i + 1}")): _*)
-    // the type table feeds the rollup chain + the scoring join — the
-    // kn3Score checkpoint discipline at every re-read table
-    val c5 = tg.groupBy("w1", "w2", "w3", "w4", "w5")
-      .agg(count(lit(1)).as("c5")).localCheckpoint()
-    val c14 = c5.groupBy("w1", "w2", "w3", "w4")
-      .agg(sum("c5").as("c14"), count(lit(1)).as("n14f"))
-    val q4 = c5.groupBy("w2", "w3", "w4", "w5").agg(count(lit(1)).as("c4m"))
-      .localCheckpoint()
-    val q4ctx = q4.groupBy("w2", "w3", "w4")
-      .agg(sum("c4m").as("c4t"), count(lit(1)).as("n4f"))
-    val q3 = q4.groupBy("w3", "w4", "w5").agg(count(lit(1)).as("c3m"))
-      .localCheckpoint()
-    val q3ctx = q3.groupBy("w3", "w4")
-      .agg(sum("c3m").as("c3t"), count(lit(1)).as("n3f"))
-    val q2 = q3.groupBy("w4", "w5").agg(count(lit(1)).as("c2m"))
-      .localCheckpoint()
-    val q2ctx = q2.groupBy("w4")
-      .agg(sum("c2m").as("c2t"), count(lit(1)).as("n2f"))
-    val uni = q2.groupBy("w5").agg(count(lit(1)).as("cu"))
-    val bt = q2.agg(count(lit(1)).as("bt"))
+      .select(col("doc_id") +: w.indices.map(i =>
+        xxhash64(col("ws").getItem(i)).as(w(i))): _*)
+    def types(t: DataFrame, keys: Seq[String]): DataFrame =
+      t.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c")).localCheckpoint()
+    // levels(j) is the order-(n − j) table, keyed by w.drop(j)
+    val levels = (1 to n - 2).scanLeft(types(tg, w))((t, j) => types(t, w.drop(j)))
     val d = lit(KnDiscount)
-    def dbl(c: Column): Column = c.cast("double")
-    // r15: the interpolation is evaluated BOTTOM-UP, each order finished
-    // on its OWN type table — the old plan joined all eight lower-order
-    // stats onto the (largest) 5-gram table, so every interpolation join
-    // carried 5-gram-type-sized rows; now the three cheapest joins run
-    // at (w4,w5) size, two at (w3..w5), two at (w2..w5), and only the
-    // last two at full width. Bottom-up evaluation of the SAME nested
-    // expression tree — the doubles are bit-identical.
-    val p2 = q2.join(q2ctx, Seq("w4")).join(uni, Seq("w5"))
-      .crossJoin(broadcast(bt))
-      .select(col("w4"), col("w5"),
-        ((dbl(col("c2m")) - d) / dbl(col("c2t"))
-          + ((d * dbl(col("n2f"))) / dbl(col("c2t")))
-            * (dbl(col("cu")) / dbl(col("bt")))).as("p2"))
-    val p3 = q3.join(q3ctx, Seq("w3", "w4")).join(p2, Seq("w4", "w5"))
-      .select(col("w3"), col("w4"), col("w5"),
-        ((dbl(col("c3m")) - d) / dbl(col("c3t"))
-          + ((d * dbl(col("n3f"))) / dbl(col("c3t"))) * col("p2")).as("p3"))
-    val p4 = q4.join(q4ctx, Seq("w2", "w3", "w4"))
-      .join(p3, Seq("w3", "w4", "w5"))
-      .select(col("w2"), col("w3"), col("w4"), col("w5"),
-        ((dbl(col("c4m")) - d) / dbl(col("c4t"))
-          + ((d * dbl(col("n4f"))) / dbl(col("c4t"))) * col("p3")).as("p4"))
-    val ptype = c5.join(c14, Seq("w1", "w2", "w3", "w4"))
-      .join(p4, Seq("w2", "w3", "w4", "w5"))
-      .select(col("w1"), col("w2"), col("w3"), col("w4"), col("w5"),
-        ((dbl(col("c5")) - d) / dbl(col("c14"))
-          + ((d * dbl(col("n14f"))) / dbl(col("c14"))) * col("p4"))
-          .as("p"))
-    val p = tg.join(ptype, Seq("w1", "w2", "w3", "w4", "w5"))
-      .select(col("doc_id"), col("p"))
+    def dbl(c: String): Column = col(c).cast("double")
+    // one order of the recursion, finished on its own table: the level
+    // joined to its context rollup, then `lower` joins the order below
+    def interpolate(level: DataFrame, keys: Seq[String], lowerP: Column)(
+        lower: DataFrame => DataFrame): DataFrame = {
+      val ctx = level.groupBy(keys.init.map(col): _*)
+        .agg(sum("c").as("ct"), count(lit(1)).as("nf"))
+      lower(level.join(ctx, keys.init))
+        .select(keys.map(col) :+
+          ((dbl("c") - d) / dbl("ct") + ((d * dbl("nf")) / dbl("ct")) * lowerP)
+            .as("p"): _*)
+    }
+    val bottom = levels.last
+    val p2 = interpolate(bottom, w.takeRight(2), dbl("cu") / dbl("bt"))(
+      _.join(bottom.groupBy(w.last).agg(count(lit(1)).as("cu")), Seq(w.last))
+        .crossJoin(broadcast(bottom.agg(count(lit(1)).as("bt")))))
+    val ptype = levels.indices.init.reverseIterator.foldLeft(p2) { (lower, j) =>
+      interpolate(levels(j), w.drop(j), col("p"))(_.join(lower, w.drop(j + 1)))
+    }
+    docMean(tg.join(ptype, w).select(col("doc_id"), col("p")), countCol, scoreCol)
+  }
+
+  /** The per-document mean of `p` over (doc_id, p) rows: `countCol`
+    * rows, mean `scoreCol`. The sum is over `p` floored onto the
+    * [[LmScale]] fixed-point grid, exact and order-free in both
+    * engines. */
+  private def docMean(p: DataFrame, countCol: String, scoreCol: String): DataFrame =
     p.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_5grams"),
+      .agg(count(lit(1)).as(countCol),
         sum(floor(col("p") * lit(LmScale.toDouble))
           .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("s"))
-      .select(col("doc_id"), col("n_5grams"),
-        (col("s").cast("double") / lit(LmScale.toDouble) / col("n_5grams"))
-          .as("kn5_score"))
+      .select(col("doc_id"), col(countCol),
+        (col("s").cast("double") / lit(LmScale.toDouble) / col(countCol))
+          .as(scoreCol))
       .orderBy("doc_id")
-  }
 
   /** Gopher rule thresholds: a doc is repetition-flagged when the top
     * 2-/3-/4-gram occupies more than this fraction of its characters
@@ -1767,8 +1607,9 @@ object TextAnalysis {
        |         len(list_filter(string_split(text,' '),
        |               x -> list_contains([$stopList], x))) * 1.0
        |           / len(string_split(text,' ')) AS stop_ratio,
-       |         len(regexp_extract_all(text, '[^\\w\\s]')) * 1.0
-       |           / length(text) AS punct_ratio
+       |         CASE WHEN length(text) = 0 THEN 0.0
+       |              ELSE len(regexp_extract_all(text, '[^\\w\\s]')) * 1.0
+       |                     / length(text) END AS punct_ratio
        |  FROM documents)
        |SELECT doc_id, n_tokens, uniq_ratio, stop_ratio, punct_ratio,
        |       0.5*uniq_ratio + 0.3*LEAST(stop_ratio*4.0, 1.0)
@@ -2321,7 +2162,8 @@ object TextAnalysis {
          |       CASE ((rn - 1) * 3) // n_lang WHEN 0 THEN 'head'
          |            WHEN 1 THEN 'middle' ELSE 'tail' END AS bucket
          |FROM r ORDER BY doc_id""".stripMargin),
-    QueryDef("txt_kn_score", knScore,
+    QueryDef("txt_kn_score", (spark, dir) =>
+        knScoreOf(Tables.table(spark, dir, "documents"), 2, "n_bigrams", "kn_score"),
       s"""WITH bg AS (
          |  SELECT doc_id, unnest(list_transform(generate_series(1, len(t)-1),
          |           i -> t[i])) AS ctx,
@@ -2345,7 +2187,8 @@ object TextAnalysis {
          |       CAST(SUM(CAST(FLOOR(p*$LmScale) AS DECIMAL(38,0))) AS DOUBLE)
          |         / $LmScale / COUNT(*) AS kn_score
          |FROM p GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-    QueryDef("txt_kn3_score", kn3Score,
+    QueryDef("txt_kn3_score", (spark, dir) =>
+        knScoreOf(Tables.table(spark, dir, "documents"), 3, "n_trigrams", "kn3_score"),
       s"""WITH tg AS (
          |  SELECT doc_id, unnest(list_transform(generate_series(1, len(t)-2),
          |           i -> t[i])) AS w1,
@@ -2380,7 +2223,8 @@ object TextAnalysis {
          |       CAST(SUM(CAST(FLOOR(p*$LmScale) AS DECIMAL(38,0))) AS DOUBLE)
          |         / $LmScale / COUNT(*) AS kn3_score
          |FROM p GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-    QueryDef("txt_kn5_score", kn5Score,
+    QueryDef("txt_kn5_score", (spark, dir) =>
+        knScoreOf(Tables.table(spark, dir, "documents"), 5, "n_5grams", "kn5_score"),
       s"""WITH tg AS (
          |  SELECT doc_id, unnest(list_transform(generate_series(1, len(t)-4),
          |           i -> t[i])) AS w1,

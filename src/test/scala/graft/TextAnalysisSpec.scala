@@ -407,6 +407,24 @@ class TextAnalysisSpec extends SparkSpec {
       rows.exists(!_.getAs[Boolean]("keep")))
   }
 
+  test("quality and the ensemble score an empty document (punct_ratio 0)") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_text").toString
+    Seq((1L, "hello, world"), (2L, ""), (3L, "a plain sentence"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val q = TextAnalysis.quality(spark, dir).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r).toMap
+    assert(q.keySet == Set(1L, 2L, 3L))
+    assert(q(2L).getAs[Double]("punct_ratio") == 0.0)
+    assert(q(1L).getAs[Double]("punct_ratio") == 1.0 / 12)
+    val e = TextAnalysis.qualityEnsemble(spark, dir).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r).toMap
+    assert(e.keySet == Set(1L, 2L, 3L))
+    e.foreach { case (id, r) =>
+      assert(r.getAs[Double]("quality_score") == q(id).getAs[Double]("quality_score"))
+    }
+  }
+
   test("trained quality LR: beats the majority baseline, score/flag consistent") {
     val rows = TextAnalysis.qualityLr(spark, sfDir).collect()
     assert(rows.length ==
@@ -720,83 +738,86 @@ class TextAnalysisSpec extends SparkSpec {
       logs.getAs[Long]("n_phones") == 0)
   }
 
-  test("kn3 score matches a brute-force trigram Kneser-Ney replay") {
+  /** Brute-force interpolated Kneser-Ney replay of order `n` over
+    * (doc_id, text): per document, (n-gram count, mean probability
+    * through the fixed-point floor). Each lower-order table is the one
+    * above rolled up one word from the left, so its counts are
+    * continuation counts; the unigram level is N₁₊(·w) over the bigram
+    * types. Tokens are `split(" ", -1)`, as the kernel's. */
+  private def knReplay(docs: Seq[(Long, String)], n: Int): Map[Long, (Long, Double)] = {
+    val grams = docs.flatMap { case (id, text) =>
+      text.split(" ", -1).toList.sliding(n).filter(_.length == n).map(id -> _)
+    }
+    val top = grams.groupBy(_._2).map { case (g, o) => g -> o.length.toLong }
+    // levels(k) holds the order-(n − k) types, keyed by their words
+    val levels = (1 to n - 2).scanLeft(top) { (upper, _) =>
+      upper.keys.toSeq.groupBy(_.tail).map { case (g, o) => g -> o.size.toLong }
+    }
+    val ctx = levels.map(_.groupBy(_._1.init)
+      .map { case (h, m) => h -> (m.values.sum, m.size.toLong) })
+    val cu = levels.last.keys.toSeq.groupBy(_.last)
+      .map { case (w, g) => w -> g.size.toLong }
+    val bt = levels.last.size.toLong
+    val d = TextAnalysis.KnDiscount
+    def p(g: List[String], k: Int): Double = {
+      val (ct, nf) = ctx(k)(g.init)
+      val lower =
+        if (k == levels.size - 1) cu(g.last).toDouble / bt.toDouble
+        else p(g.tail, k + 1)
+      (levels(k)(g).toDouble - d) / ct.toDouble +
+        ((d * nf.toDouble) / ct.toDouble) * lower
+    }
+    grams.groupBy(_._1).map { case (id, gs) =>
+      val s = gs.map { case (_, g) => math.floor(p(g, 0) * 1000000000L.toDouble) }.sum
+      id -> (gs.length.toLong, s / 1e9 / gs.length)
+    }
+  }
+
+  /** The `key` query at sfDir against [[knReplay]] of order `n`. */
+  private def assertKnReplay(key: String, n: Int, countCol: String,
+      scoreCol: String): Unit = {
     val docs = Tables.table(spark, sfDir, "documents")
       .select("doc_id", "text").collect()
-      .map(r => (r.getAs[Long]("doc_id"),
-        r.getAs[String]("text").split(" ", -1).toList))
-    val tgs = docs.flatMap { case (id, ts) =>
-      ts.sliding(3).collect { case List(a, b, c) => (id, a, b, c) }
-    }
-    val c3 = tgs.groupBy(t => (t._2, t._3, t._4)).map { case (k, g) =>
-      k -> g.length.toLong
-    }
-    val c12 = c3.groupBy(k => (k._1._1, k._1._2))
-      .map { case (k, m) => k -> m.values.sum }
-    val n12f = c3.groupBy(k => (k._1._1, k._1._2))
-      .map { case (k, m) => k -> m.size.toLong }
-    // continuation counts: distinct w1 per (w2, w3), all lower orders
-    // derived from the trigram type table
-    val cm = c3.keys.toSeq.groupBy(k => (k._2, k._3))
-      .map { case (k, g) => k -> g.size.toLong }
-    val cmt = cm.groupBy(_._1._1).map { case (w2, m) => w2 -> m.values.sum }
-    val nmf = cm.groupBy(_._1._1).map { case (w2, m) => w2 -> m.size.toLong }
-    val cu = cm.keys.toSeq.groupBy(_._2).map { case (w3, g) => w3 -> g.size.toLong }
-    val mt = cm.size.toLong
-    val d = TextAnalysis.KnDiscount
-    val expected = tgs.groupBy(_._1).map { case (id, bs) =>
-      val s = bs.map { case (_, a, b, c) =>
-        val p = (c3((a, b, c)).toDouble - d) / c12((a, b)).toDouble +
-          ((d * n12f((a, b)).toDouble) / c12((a, b)).toDouble) *
-            ((cm((b, c)).toDouble - d) / cmt(b).toDouble +
-              ((d * nmf(b).toDouble) / cmt(b).toDouble) *
-                (cu(c).toDouble / mt.toDouble))
-        math.floor(p * 1000000000L.toDouble)
-      }.sum
-      id -> (bs.length.toLong, s / 1e9 / bs.length)
-    }
-    val rows = TextAnalysis.kn3Score(spark, sfDir).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("text"))).toSeq
+    val expected = knReplay(docs, n)
+    val rows = graft.SparkEntry.queries(key)(spark, sfDir).collect()
     assert(rows.length == expected.size)
     rows.foreach { r =>
-      val (n, score) = expected(r.getAs[Long]("doc_id"))
-      assert(r.getAs[Long]("n_trigrams") == n)
-      assert(r.getAs[Double]("kn3_score") == score)
+      val (cnt, score) = expected(r.getAs[Long]("doc_id"))
+      assert(r.getAs[Long](countCol) == cnt)
+      assert(r.getAs[Double](scoreCol) == score)
       assert(score > 0.0 && score <= 1.0)
     }
   }
 
+  test("kn3 score matches a brute-force trigram Kneser-Ney replay") {
+    assertKnReplay("txt_kn3_score", 3, "n_trigrams", "kn3_score")
+  }
+
   test("kn score matches a brute-force Kneser-Ney replay") {
-    val docs = Tables.table(spark, sfDir, "documents")
-      .select("doc_id", "text").collect()
-      .map(r => (r.getAs[Long]("doc_id"),
-        r.getAs[String]("text").split(" ", -1).toList))
-    val bigrams = docs.flatMap { case (id, ts) =>
-      ts.sliding(2).collect { case List(a, b) => (id, a, b) }
-    }
-    val c2 = bigrams.groupBy(t => (t._2, t._3)).map { case (k, g) =>
-      k -> g.length.toLong
-    }
-    val ca = c2.groupBy(_._1._1).map { case (a, m) => a -> m.values.sum }
-    val n1f = c2.groupBy(_._1._1).map { case (a, m) => a -> m.size.toLong }
-    val n1b = c2.groupBy(_._1._2).map { case (b, m) => b -> m.size.toLong }
-    val bt = c2.size.toLong
-    val d = TextAnalysis.KnDiscount
-    val expected = bigrams.groupBy(_._1).map { case (id, bs) =>
-      val s = bs.map { case (_, a, b) =>
-        val p = (c2((a, b)).toDouble - d) / ca(a).toDouble +
-          ((d * n1f(a).toDouble) / ca(a).toDouble) *
-            (n1b(b).toDouble / bt.toDouble)
-        math.floor(p * 1000000000L.toDouble)
-      }.sum
-      id -> (bs.length.toLong, s / 1e9 / bs.length)
-    }
-    val rows = TextAnalysis.knScore(spark, sfDir).collect()
-    assert(rows.length == expected.size)
-    rows.foreach { r =>
-      val (n, score) = expected(r.getAs[Long]("doc_id"))
-      assert(r.getAs[Long]("n_bigrams") == n)
-      assert(r.getAs[Double]("kn_score") == score)
-      assert(score > 0.0 && score <= 1.0)
+    assertKnReplay("txt_kn_score", 2, "n_bigrams", "kn_score")
+  }
+
+  test("kn5 score matches a brute-force 5-gram Kneser-Ney replay") {
+    assertKnReplay("txt_kn5_score", 5, "n_5grams", "kn5_score")
+  }
+
+  test("kn kernel: sub-n docs get no row, a doubled space is an empty token (planted)") {
+    import spark.implicits._
+    val planted = Seq(
+      (1L, "the cat sat on the mat"),
+      (2L, "the cat"),
+      (3L, "the  cat sat"), // tokens: the, "", cat, sat
+      (4L, "on the mat the cat sat on"))
+    Seq(2, 3, 5).foreach { n =>
+      val rows = TextAnalysis.knScoreOf(planted.toDF("doc_id", "text"), n,
+        "n_grams", "score").collect()
+        .map(r => r.getAs[Long]("doc_id") ->
+          (r.getAs[Long]("n_grams"), r.getAs[Double]("score"))).toMap
+      assert(rows == knReplay(planted, n), s"n=$n")
+      val nTokens = Map(1L -> 6, 2L -> 2, 3L -> 4, 4L -> 7)
+      assert(rows.keySet == nTokens.filter(_._2 >= n).keySet, s"n=$n")
+      rows.foreach { case (id, (cnt, _)) => assert(cnt == nTokens(id) - n + 1, s"n=$n") }
     }
   }
 
