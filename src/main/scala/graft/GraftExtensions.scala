@@ -3,16 +3,19 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{ArrayDotProduct, ArrayScale, BloomOps, CharDeletionHashes, CharDeletions, HeavyHitters, HtmlExtract, HyperplaneSigs, NearestCells, NearestCentroid, RollingHash, SimHash64, SimHashWide, TokenSetHits, TokenStats, TopKByScore, UrlCanon, WordShingles}
+import graft.functions.{ArrayDotProduct, ArrayScale, BloomOps, CharDeletionHashes, CharDeletions, HeavyHitters, HtmlExtract, HyperplaneSigs, NearestCells, NearestCentroid, RollingHash, SimHashWide, TokenSetHits, TokenStats, TopKByScore, UrlCanon, WordShingles}
+import graft.sources.FkJoinElimination
 
-/** Session extension registering graft's native expressions as SQL
-  * functions. It is the ONLY place they are registered: the Column
-  * helpers under `graft.functions` and every operator emit plain
-  * `call_function("graft_…")` calls that resolve through it, so every
-  * session that runs graft code must install it. `SparkConfigs.local`
-  * and `SparkConfigs.cluster100TB` do; on a session built without it
-  * the analyzer fails with `UNRESOLVED_ROUTINE` naming the function.
-  * To install it elsewhere:
+/** Session extension installing graft's native expressions as SQL
+  * functions and its one optimizer rule, [[FkJoinElimination]]. It is
+  * the ONLY place either is installed: the Column helpers under
+  * `graft.functions` and every operator emit plain
+  * `call_function("graft_…")` calls that resolve through it, and the
+  * `Tables` views rely on the rule to drop foreign-key joins nothing
+  * reads, so every session that runs graft code must install it.
+  * `SparkConfigs.local` and `SparkConfigs.cluster100TB` do; on a session
+  * built without it the analyzer fails with `UNRESOLVED_ROUTINE` naming
+  * the function. To install it elsewhere:
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
@@ -20,16 +23,17 @@ import graft.functions.{ArrayDotProduct, ArrayScale, BloomOps, CharDeletionHashe
   *   SparkSession.builder().withExtensions(new GraftExtensions()) ...
   * }}}
   *
-  * after which `SELECT graft_simhash64(text) FROM docs` parses and
-  * codegens like a builtin. (The same hook would register a custom
-  * `Rule[LogicalPlan]` via `injectOptimizerRule` or a `SparkStrategy`
-  * via `injectPlannerStrategy` if an operator ever needs a bespoke
-  * physical plan; graft's operators so far compose from existing plans,
-  * so only functions are injected.)
+  * after which `SELECT graft_simhash_wide(text, 1) FROM docs` parses and
+  * codegens like a builtin. The rule joins the optimizer's
+  * operator-optimization batch through `injectOptimizerRule`; the same
+  * hook would add a `SparkStrategy` via `injectPlannerStrategy` if an
+  * operator ever needs a bespoke physical plan.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectOptimizerRule(_ => FkJoinElimination)
+
     def inject(name: String, usage: String,
         builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((
@@ -39,8 +43,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
     inject("graft_rolling_hash",
       "polynomial rolling-hash fingerprint of a string", RollingHash.builder)
-    inject("graft_simhash64",
-      "64-bit SimHash of space-tokenized text", SimHash64.builder)
     inject("graft_simhash_wide",
       "width-scaled SimHash of space-tokenized text as n 64-bit lanes",
       SimHashWide.builder)
@@ -88,12 +90,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject("graft_bloom_contains",
       "bloom-filter probe; false = proof of absence",
       BloomOps.containsBuilder)
-    inject("graft_html_text",
-      "main text of an HTML page (boilerplate-dropped blocks joined by \\n)",
-      HtmlExtract.textBuilder)
-    inject("graft_html_block_stats",
-      "HTML block census [n_blocks, n_kept, n_dropped_link, n_dropped_short]",
-      HtmlExtract.statsBuilder)
     inject("graft_html_parsed",
       "full HTML parse as one struct (text + block census in a single page walk)",
       HtmlExtract.parsedBuilder)

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DataTypes}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,9 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * labels) that would otherwise poison every downstream quality /
   * dedup / LM-score signal.
   *
-  * The extraction contract (shared verbatim by [[HtmlText]],
-  * [[HtmlBlockStats]] and the oracle synthesis arithmetic in
-  * `graft.operators.Html`):
+  * The extraction contract (shared verbatim by [[HtmlParsed]] and the
+  * oracle synthesis arithmetic in `graft.operators.Html`):
   *   - `<!-- … -->` comments and the full contents of
   *     `<script>`/`<style>`/`<title>` elements are removed (metadata,
   *     never content; close-tag match is case-insensitive, an
@@ -204,17 +202,11 @@ object HtmlExtract {
     Parsed(out.toString, nBlocks, nKept, nLink, nShort)
   }
 
-  /** Called from generated code: kept blocks joined by '\n'. */
-  def text(html: UTF8String): UTF8String =
-    UTF8String.fromString(parse(html.toString).text)
-
   /** Called from generated code: the FULL parse result as one struct
     * (text, n_blocks, n_kept, n_dropped_link, n_dropped_short) — so a
     * query needing both the text and the census runs the page scan
     * ONCE per row (codegen subexpression elimination dedupes the
-    * struct eval across the projected fields) instead of paying the
-    * dominant per-row HTML walk twice via separate [[HtmlText]] +
-    * [[HtmlBlockStats]] calls. */
+    * struct eval across the projected fields). */
   def parsedRow(html: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
     val p = parse(html.toString)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
@@ -304,69 +296,14 @@ object HtmlExtract {
       out.toArray(new Array[UTF8String](out.size())))
   }
 
-  /** Called from generated code:
-    * [n_blocks, n_kept, n_dropped_link, n_dropped_short]. */
-  def stats(html: UTF8String): ArrayData = {
-    val p = parse(html.toString)
-    UnsafeArrayData.fromPrimitiveArray(
-      Array(p.nBlocks, p.nKept, p.nDroppedLink, p.nDroppedShort))
-  }
-
-  val textBuilder: Seq[Expression] => Expression = exprs => HtmlText(exprs.head)
-  val statsBuilder: Seq[Expression] => Expression = exprs => HtmlBlockStats(exprs.head)
   val parsedBuilder: Seq[Expression] => Expression = exprs => HtmlParsed(exprs.head)
   val linksBuilder: Seq[Expression] => Expression = exprs => HtmlLinks(exprs.head)
-
-  def textCol(html: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_html_text", html)
 
   def parsedCol(html: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_html_parsed", html)
 
   def linksCol(html: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_html_links", html)
-}
-
-/** Main text of an HTML page — kept content blocks joined by '\n'
-  * under the [[HtmlExtract]] contract. */
-case class HtmlText(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DataTypes.StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"html_text requires a string argument, got ${child.dataType}")
-
-  override def dataType: DataType = DataTypes.StringType
-
-  override def nullSafeEval(input: Any): Any =
-    HtmlExtract.text(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlExtract.text($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): HtmlText =
-    copy(child = newChild)
-}
-
-/** Block census of an HTML page under the [[HtmlExtract]] contract:
-  * [n_blocks, n_kept, n_dropped_link, n_dropped_short]. */
-case class HtmlBlockStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DataTypes.StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"html_block_stats requires a string argument, got ${child.dataType}")
-
-  override def dataType: DataType = ArrayType(DataTypes.LongType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    HtmlExtract.stats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlExtract.stats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): HtmlBlockStats =
-    copy(child = newChild)
 }
 
 /** Full parse of an HTML page under the [[HtmlExtract]] contract, as

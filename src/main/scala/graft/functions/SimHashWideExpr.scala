@@ -8,10 +8,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DataTypes, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Width-parameterized SimHash: `lanes` independent 64-bit SimHash
-  * signatures of the same token set, returned as `array<bigint>` —
-  * the scale path for [[SimHash64]], whose fixed 64-bit signature
-  * saturates the 8-block candidate index near n ≈ 1M documents
-  * (256 bucket values per 8-bit block).
+  * signatures of the same token set, returned as `array<bigint>`. One
+  * lane is the 64-bit SimHash, whose fixed signature saturates the
+  * 8-block candidate index near n ≈ 1M documents (256 bucket values
+  * per 8-bit block); more lanes are the scale path.
   *
   * Bit j of the width-`64·lanes` signature votes with the PORTABLE
   * hash family ([[vote]]): the word's polynomial rolling hash
@@ -21,9 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * engine (the DuckDB oracle included) regenerates every signature
   * bit exactly — which the former per-word xxhash64 never allowed
   * (r14 VERDICT #1: dd_simhash was rows-only for exactly that
-  * reason). Lane 0 IS the [[SimHash64]] signature bit-for-bit (same
-  * tokens, same coordinates) and lanes are decorrelated by the
-  * quadratic mix. Width = 64·lanes bits; with the block count held at
+  * reason). Lane 0 is the same at every width (same tokens, same
+  * coordinates) and lanes are decorrelated by the quadratic mix. Width = 64·lanes bits; with the block count held at
   * 8 (the d+1 = 8 pigeonhole for Hamming ≤ 7), block keys widen to
   * 8·lanes bits, keeping expected bucket population n/2^(8·lanes)
   * flat as the corpus grows — the `width ≈ blocks · log₂(n/targetPop)`
@@ -31,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the Hamming budget is absolute and the signature grows to keep the
   * index sparse).
   *
-  * Like [[SimHash64]] this is a pure per-row projection (one vote pass
+  * A pure per-row projection (one vote pass
   * over distinct tokens, all lanes in one loop) — no shuffle; at 100 TB
   * the signature stage is a map over the corpus.
   */

@@ -138,7 +138,7 @@ object Athena {
   }
 
   def categoryMonthPivot(spark: SparkSession, dir: String): DataFrame =
-    categoryMonthPivotOf(Tables.salesLite(spark, dir), Tables.products(spark, dir))
+    categoryMonthPivotOf(Tables.sales(spark, dir), Tables.products(spark, dir))
 
   /** Category × year ROLLUP: per-(category, year) revenue plus per-
     * category subtotals and a grand total in ONE aggregate pass —
@@ -179,7 +179,7 @@ object Athena {
   }
 
   def salesRollup(spark: SparkSession, dir: String): DataFrame =
-    salesRollupOf(Tables.salesLite(spark, dir), Tables.products(spark, dir))
+    salesRollupOf(Tables.sales(spark, dir), Tables.products(spark, dir))
 
   /** `ath_month_unpivot`: melt the category × month pivot back to long
     * form `(category, mth, revenue)` — the wide→long inverse every BI
@@ -208,7 +208,7 @@ object Athena {
     * IEEE ops both engines, NULL for a category's first year. */
   def yoyGrowth(spark: SparkSession, dir: String): DataFrame = {
     val p = Tables.products(spark, dir).select("product_id", "category")
-    val cy = Tables.salesLite(spark, dir)
+    val cy = Tables.sales(spark, dir)
       .join(broadcast(p), "product_id")
       .groupBy(col("category"), year(col("sale_ts")).as("sale_year"))
       .agg(count(lit(1)).as("n_sales"),
@@ -339,7 +339,7 @@ object Athena {
     * country-catalog groupBy. */
   def storeCredit(spark: SparkSession, dir: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(28, 0)
-    val rev = Tables.salesLite(spark, dir)
+    val rev = Tables.sales(spark, dir)
       .groupBy("store_id")
       .agg(sum(floor(col("unit_price") * col("quantity") * lit(10000))
           .cast(dec)).as("rev_i"),

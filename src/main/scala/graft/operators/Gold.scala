@@ -78,7 +78,7 @@ object Gold {
       .orderBy("sale_date")
 
   def dailySalesSummary(spark: SparkSession, dir: String): DataFrame =
-    dailySalesSummaryOf(Tables.salesLite(spark, dir))
+    dailySalesSummaryOf(Tables.sales(spark, dir))
 
   /** Top customers by total spend (load.py:190-221): top 10, left-joined
     * to the customer dimension (broadcast). */
@@ -114,7 +114,7 @@ object Gold {
   }
 
   def productPerformance(spark: SparkSession, dir: String): DataFrame =
-    productPerformanceOf(Tables.salesLite(spark, dir), Tables.products(spark, dir))
+    productPerformanceOf(Tables.sales(spark, dir), Tables.products(spark, dir))
 
   /** Store performance (load.py:256-280): per store, transactions, items,
     * revenue; joined to the store dimension. */
@@ -131,7 +131,7 @@ object Gold {
   }
 
   def storePerformance(spark: SparkSession, dir: String): DataFrame =
-    storePerformanceOf(Tables.salesLite(spark, dir), Tables.stores(spark, dir))
+    storePerformanceOf(Tables.sales(spark, dir), Tables.stores(spark, dir))
 
   /** The `inventory` mapped table as a contract surface (SURVEY §3):
     * the availability ledger per (store, product). */
@@ -157,7 +157,7 @@ object Gold {
       .orderBy(col("revenue").desc, col("manager_id"))
 
   def managerRevenue(spark: SparkSession, dir: String): DataFrame =
-    managerRevenueOf(Tables.salesLite(spark, dir), Tables.stores(spark, dir),
+    managerRevenueOf(Tables.sales(spark, dir), Tables.stores(spark, dir),
       Tables.salesManagers(spark, dir))
 
   /** `gold_rfm`: recency/frequency/monetary segmentation — every
@@ -259,7 +259,7 @@ object Gold {
 
   private def buildBasketAffinity(spark: SparkSession, dir: String): DataFrame = {
     val sku = Tables.products(spark, dir).select(col("product_id"), col("sku"))
-    val b = Tables.salesLite(spark, dir)
+    val b = Tables.sales(spark, dir)
       .select(expr("transaction_id DIV 10").as("basket_id"), col("product_id"))
       .join(broadcast(sku), Seq("product_id"))
       .select("basket_id", "sku").distinct()
@@ -362,7 +362,7 @@ object Gold {
     * constant-price category (zero x-variance) yields NULL, never a
     * NaN. */
   def priceSlope(spark: SparkSession, dir: String): DataFrame =
-    priceSlopeOf(Tables.salesLite(spark, dir), Tables.products(spark, dir))
+    priceSlopeOf(Tables.sales(spark, dir), Tables.products(spark, dir))
 
   def priceSlopeOf(sales: DataFrame, products: DataFrame): DataFrame = {
     val dec = DecimalType(38, 0)
@@ -442,7 +442,7 @@ object Gold {
     * rounding; doubles appear only in the output money columns (the
     * [[moneySum]] convention). */
   def abcClass(spark: SparkSession, dir: String): DataFrame =
-    abcClassOf(Tables.salesLite(spark, dir))
+    abcClassOf(Tables.sales(spark, dir))
 
   def abcClassOf(sales: DataFrame): DataFrame = {
     val dec = DecimalType(38, 0)
@@ -484,7 +484,7 @@ object Gold {
     * corrupt — at 100 TB per-month per-product demand beyond ~3·10⁹
     * units wants a DECIMAL widening, a one-line change.) */
   def xyzClass(spark: SparkSession, dir: String): DataFrame = {
-    val pm = Tables.salesLite(spark, dir)
+    val pm = Tables.sales(spark, dir)
       .select(col("product_id"), col("quantity"),
         (year(col("sale_ts")) * 12 + month(col("sale_ts")) - 1)
           .cast("long").as("ym"))
@@ -521,7 +521,7 @@ object Gold {
   def snaiveBacktest(spark: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
     val p = Tables.products(spark, dir).select("product_id", "category")
-    val rev = Tables.salesLite(spark, dir)
+    val rev = Tables.sales(spark, dir)
       .join(broadcast(p), "product_id")
       .select(col("category"),
         (year(col("sale_ts")) * 12 + month(col("sale_ts")) - 1).as("ym"),
@@ -558,7 +558,7 @@ object Gold {
     * order-independent and engine-portable. */
   def marketShare(spark: SparkSession, dir: String): DataFrame = {
     val p = Tables.products(spark, dir).select("product_id", "sku", "category")
-    val rev = Tables.salesLite(spark, dir)
+    val rev = Tables.sales(spark, dir)
       .join(broadcast(p), "product_id")
       .groupBy("category", "sku")
       .agg(count(lit(1)).as("n_sales"),
@@ -720,7 +720,7 @@ object Gold {
     * cross-engine. */
   def seasonality(spark: SparkSession, dir: String): DataFrame = {
     val p = Tables.products(spark, dir).select("product_id", "category")
-    val cm = Tables.salesLite(spark, dir)
+    val cm = Tables.sales(spark, dir)
       .join(broadcast(p), "product_id")
       .groupBy(col("category"), month(col("sale_ts")).as("mth"))
       .agg(count(lit(1)).as("n_sales"),
@@ -780,7 +780,7 @@ object Gold {
     * day counts (`(n−1)·stale > 3·span`) — no division, no doubles, no
     * window. */
   def stockoutRisk(spark: SparkSession, dir: String): DataFrame = {
-    val led = Tables.salesLite(spark, dir)
+    val led = Tables.sales(spark, dir)
       .groupBy("store_id", "product_id")
       .agg(count(lit(1)).as("n_movements"),
         min(to_date(col("sale_ts"))).as("first_movement_date"),
@@ -819,7 +819,7 @@ object Gold {
     * fixed-point revenue, one IEEE division per cell. */
   def aovMonthly(spark: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(28, 0)
-    val m = Tables.salesLite(spark, dir)
+    val m = Tables.sales(spark, dir)
       .select((year(col("sale_ts")) * 12 + month(col("sale_ts")) - 1).as("ym"),
         expr("transaction_id DIV 10").as("order_key"),
         col("unit_price"), col("quantity"))
@@ -854,7 +854,7 @@ object Gold {
     * identical in both engines. */
   def categoryHhi(spark: SparkSession, dir: String): DataFrame = {
     val p = Tables.products(spark, dir).select("product_id", "sku", "category")
-    val rev = Tables.salesLite(spark, dir)
+    val rev = Tables.sales(spark, dir)
       .join(broadcast(p), "product_id")
       .groupBy("category", "sku")
       .agg(sum(floor(col("unit_price") * col("quantity") * lit(10000))
@@ -922,7 +922,7 @@ object Gold {
     * aggregate per product; the ratio is one IEEE division and the
     * cut is a TakeOrderedAndProject with a unique tiebreak. */
   def topMovers(spark: SparkSession, dir: String): DataFrame = {
-    val s = Tables.salesLite(spark, dir)
+    val s = Tables.sales(spark, dir)
       .select(col("product_id"),
         datediff(to_date(col("sale_ts")), lit("1970-01-01").cast("date"))
           .cast("long").as("eday"),
@@ -963,7 +963,7 @@ object Gold {
     * arithmetic is pure integer (y·12+m); the only doubles are the two
     * output rates, each one IEEE division of exact longs. */
   def inventoryTurnover(spark: SparkSession, dir: String): DataFrame = {
-    val led = Tables.salesLite(spark, dir)
+    val led = Tables.sales(spark, dir)
       .withColumn("ym",
         (year(col("sale_ts")) * 12 + month(col("sale_ts")) - 1).cast("long"))
       .groupBy("store_id", "product_id")
@@ -1003,7 +1003,7 @@ object Gold {
     // the fact join + distinct (4 scans; ReuseExchange does not fire
     // across the differently-aliased sides). The assortment is
     // store×product-bounded — checkpoint-sized, not fact-sized.
-    val sp = Tables.salesLite(spark, dir)
+    val sp = Tables.sales(spark, dir)
       .select("store_id", "product_id").distinct().localCheckpoint()
     val per = sp.groupBy("store_id").agg(count(lit(1)).as("n_products"))
     sp.select(col("store_id").as("store_a"), col("product_id"))
@@ -1051,7 +1051,7 @@ object Gold {
   def revenueAutocorr(spark: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
     val d19 = DecimalType(19, 0)
-    val m = Tables.salesLite(spark, dir)
+    val m = Tables.sales(spark, dir)
       .withColumn("ym",
         (year(col("sale_ts")) * 12 + month(col("sale_ts")) - 1).cast("long"))
       .groupBy("ym")
@@ -1172,7 +1172,7 @@ object Gold {
     * month-catalog-sized rollup. */
   def priceIndex(spark: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(28, 0)
-    val pm = Tables.salesLite(spark, dir)
+    val pm = Tables.sales(spark, dir)
       .select(col("product_id"),
         (year(col("sale_ts")) * 12 + month(col("sale_ts")) - 1).as("ym"),
         col("unit_price"), col("quantity"))

@@ -438,7 +438,7 @@ object Graph {
     * repeated the family's dominant shuffle eight times. */
   private def pairCounts(spark: SparkSession, dir: String): DataFrame =
     ArtifactCache.of(spark, dir, "gr_pair_counts") {
-      val b = Tables.salesLite(spark, dir)
+      val b = Tables.sales(spark, dir)
         .select(expr("transaction_id DIV 10").as("basket_id"),
           col("product_id"))
         .distinct()

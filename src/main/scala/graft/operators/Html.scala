@@ -159,7 +159,7 @@ object Html {
       outDir: String): DataFrame = {
     val extracted = pages
       .select(col("doc_id"),
-        HtmlExtract.textCol(col("html")).as("text"),
+        HtmlExtract.parsedCol(col("html")).getField("text").as("text"),
         col("lang"), col("source"))
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         length(col("text")).cast("long").as("n_chars"))

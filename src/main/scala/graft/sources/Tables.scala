@@ -11,9 +11,29 @@ import graft.operators.ArtifactCache
   * Scale notes: `sales` is a fact⋈fact join (lineitem⋈orders) that
   * shuffles on the order key — on a real cluster both sides are bucketed
   * by orderkey so the join is co-located; dimension views (customers /
-  * stores) join tiny `nation` with a broadcast.
+  * stores) join tiny `nation` with a broadcast. Each of these joins runs
+  * along a declared foreign key and is dropped where its other side is
+  * not read.
   */
 object Tables {
+
+  /** A declared foreign key: in every source dir, each `table.column`
+    * value is non-null and matches exactly one `refTable.refColumn` row
+    * of the same dir. */
+  final case class ForeignKey(table: String, column: String,
+      refTable: String, refColumn: String)
+
+  /** The declared foreign keys of the star schema (TPC-H's referential
+    * contract: dbgen generates lineitems by order and keys every customer
+    * and supplier to a nation). [[FkJoinElimination]] reads this list
+    * and nothing else; TablesSpec checks every entry at every verified
+    * scale factor (no orphan, unique referenced key), so a data drop
+    * that breaks the contract fails there, not as silently diverging
+    * results. */
+  val foreignKeys: Seq[ForeignKey] = Seq(
+    ForeignKey("lineitem", "l_orderkey", "orders", "o_orderkey"),
+    ForeignKey("customer", "c_nationkey", "nation", "n_nationkey"),
+    ForeignKey("supplier", "s_nationkey", "nation", "n_nationkey"))
 
   /** A source table. Inferring a parquet schema launches a Spark job
     * (about 100 ms warm on local[4]), so the inferred schema is an
@@ -58,7 +78,17 @@ object Tables {
     * packing collides. linenumber stays ≤ 7, so `DIV 10` still
     * recovers the order/basket key exactly; but any operator using
     * transaction_id as an ORDERING tiebreak must add a further key
-    * (e.g. product_id) to get a total order both engines agree on. */
+    * (e.g. product_id) to get a total order both engines agree on.
+    *
+    * The lineitem⋈orders join exists only to attach `customer_id`.
+    * `l_orderkey → o_orderkey` is a declared [[foreignKeys]] entry, so
+    * where nothing reads `customer_id` [[FkJoinElimination]] drops the
+    * join and the plan scans lineitem alone: no orders scan, no join as
+    * wide as the fact (a broadcast probe locally, a shuffle join of the
+    * fact at cluster scale). A consumer that reads or filters
+    * `customer_id` keeps the join. Every oracle still derives sales
+    * THROUGH the join ([[salesCte]]), so the hash gate re-proves the
+    * elimination on every run. */
   def sales(spark: SparkSession, dir: String): DataFrame = {
     val li = table(spark, dir, "lineitem")
     val o  = table(spark, dir, "orders").select("o_orderkey", "o_custkey")
@@ -72,32 +102,6 @@ object Tables {
         (col("l_extendedprice") / col("l_quantity")).as("unit_price"),
         col("l_shipdate").as("sale_ts"))
   }
-
-  /** [[sales]] WITHOUT the customer key — FK-INFORMED JOIN ELIMINATION
-    * (r16, guide §2.4 "remove shuffles outright"): the lineitem⋈orders
-    * join exists only to attach `o_custkey`, and under the TPC-H
-    * referential contract (every `l_orderkey` matches exactly one
-    * `orders` row — dbgen generates lineitems BY order) an inner join
-    * that contributes no columns neither drops nor duplicates rows, so
-    * projecting customer_id away makes the join a no-op. Catalyst
-    * cannot prove that (no FK/uniqueness metadata on parquet), so the
-    * ~25 consumers that never read customer_id were each paying a scan
-    * of `orders` plus a fact-wide join — a broadcast probe locally, a
-    * full shuffle join of the fact at cluster scale. The precondition
-    * is pinned two ways: TablesSpec asserts zero orphan lineitems and
-    * unique order keys at EVERY verified SF, and every consumer's
-    * DuckDB oracle still derives sales THROUGH the join
-    * ([[salesCte]]), so the hash gate re-proves result equality per
-    * run. Queries that read customer_id keep [[sales]]. */
-  def salesLite(spark: SparkSession, dir: String): DataFrame =
-    table(spark, dir, "lineitem")
-      .select(
-        (col("l_orderkey") * 10 + col("l_linenumber")).as("transaction_id"),
-        col("l_partkey").as("product_id"),
-        col("l_suppkey").as("store_id"),
-        col("l_quantity").cast("bigint").as("quantity"),
-        (col("l_extendedprice") / col("l_quantity")).as("unit_price"),
-        col("l_shipdate").as("sale_ts"))
 
   /** Reference `customers` dimension (customer ⋈ nation, broadcast). */
   def customers(spark: SparkSession, dir: String): DataFrame = {

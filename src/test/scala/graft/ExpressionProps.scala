@@ -2,7 +2,7 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
 import org.apache.spark.unsafe.types.UTF8String
-import graft.functions.{HyperplaneSigs, NearestCells, RollingHash, SimHash64, SimHashWide, TokenSetHits, WordShingles}
+import graft.functions.{HyperplaneSigs, NearestCells, RollingHash, SimHashWide, TokenSetHits, WordShingles}
 
 /** Property tests for the native codegen expressions against naive
   * reference implementations on arbitrary input (these are the
@@ -49,33 +49,34 @@ object ExpressionProps extends Properties("graft.functions") {
       got == expected
     }
 
+  /** The 64-bit SimHash: lane 0 of a one-lane [[SimHashWide]]. */
+  private def simhash64(s: String): Long =
+    SimHashWide.hash(UTF8String.fromString(s), 1).getLong(0)
+
   property("simhash is permutation-invariant over token order") =
     Prop.forAll(Gen.choose(1, 20).flatMap(n => Gen.listOfN(n, word))) { ws =>
-      val a = SimHash64.hash(UTF8String.fromString(ws.mkString(" ")))
-      val b = SimHash64.hash(UTF8String.fromString(scala.util.Random
-        .shuffle(ws).mkString(" ")))
+      val a = simhash64(ws.mkString(" "))
+      val b = simhash64(scala.util.Random.shuffle(ws).mkString(" "))
       a == b
     }
 
   property("simhash: identical docs collide, disjoint vocabularies differ") =
     Prop.forAll(Gen.choose(5, 20).flatMap(n => Gen.listOfN(n, word))) { ws =>
       val s = ws.mkString(" ")
-      val same = SimHash64.hash(UTF8String.fromString(s)) ==
-        SimHash64.hash(UTF8String.fromString(s))
+      val same = simhash64(s) == simhash64(s)
       // disjoint vocabulary (suffix makes every token distinct from ws's)
       val other = ws.map(_ + "qx9").mkString(" ")
-      val differ = SimHash64.hash(UTF8String.fromString(s)) !=
-        SimHash64.hash(UTF8String.fromString(other))
+      val differ = simhash64(s) != simhash64(other)
       same && differ
     }
 
   property("simhash_wide: lane 0 is simhash64, lanes decorrelate, order-invariant") =
     Prop.forAll(Gen.choose(5, 20).flatMap(n => Gen.listOfN(n, word))) { ws =>
-      val s = UTF8String.fromString(ws.mkString(" "))
-      val wide = SimHashWide.hash(s, 4).toLongArray()
+      val s = ws.mkString(" ")
+      val wide = SimHashWide.hash(UTF8String.fromString(s), 4).toLongArray()
       val shuffled = SimHashWide.hash(UTF8String.fromString(
         scala.util.Random.shuffle(ws).mkString(" ")), 4).toLongArray()
-      wide(0) == SimHash64.hash(s) &&
+      wide(0) == simhash64(s) &&
         wide.distinct.length == 4 &&
         wide.sameElements(shuffled)
     }

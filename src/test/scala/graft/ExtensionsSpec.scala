@@ -8,13 +8,13 @@ class ExtensionsSpec extends AnyFunSuite {
   /** Every function GraftExtensions injects: the only registration
     * path, so a name missing here is a name no session can resolve. */
   private val Injected = Seq(
-    "graft_rolling_hash", "graft_simhash64", "graft_simhash_wide",
+    "graft_rolling_hash", "graft_simhash_wide",
     "graft_word_shingles", "graft_word_ngrams", "graft_dot", "graft_scale",
     "graft_top_k_by_score", "graft_hyperplane_sigs", "graft_token_set_hits",
     "graft_nearest_cells", "graft_heavy_hitters", "graft_char_deletions",
     "graft_char_deletion_hashes", "graft_char_deletion_hashlens",
-    "graft_bloom_agg", "graft_bloom_contains", "graft_html_text",
-    "graft_html_block_stats", "graft_html_parsed", "graft_html_links",
+    "graft_bloom_agg", "graft_bloom_contains", "graft_html_parsed",
+    "graft_html_links",
     "graft_url_canon", "graft_url_host", "graft_chunk_hashes",
     "graft_token_stats", "graft_nearest_centroid")
 
@@ -34,11 +34,14 @@ class ExtensionsSpec extends AnyFunSuite {
       // the extension alone
       val fresh = spark.newSession()
       val missing = Injected.filterNot(fresh.catalog.functionExists)
-      assert(Injected.distinct.size == 26)
+      assert(Injected.distinct.size == 23)
       assert(missing.isEmpty, s"not resolvable: ${missing.mkString(", ")}")
+      // the one optimizer rule rides the same extension
+      assert(fresh.sessionState.optimizer.extendedOperatorOptimizationRules
+        .contains(graft.sources.FkJoinElimination))
       val row = spark.sql(
         """SELECT graft_rolling_hash('hello world')       AS rh,
-          |       graft_simhash64('a b c')                AS sh,
+          |       graft_simhash_wide('a b c', 1)          AS sh,
           |       graft_word_shingles('a b c d', 2)       AS ws,
           |       graft_word_ngrams('a b a b', 2)         AS ng,
           |       graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dp

@@ -115,12 +115,13 @@ class HtmlSpec extends SparkSpec {
 
   test("pure-SQL sessions reach the extractor (extension-registered)") {
     val row = spark.sql(
-      """SELECT graft_html_text('<nav><a href="/">Home Page Nav</a></nav>' ||
-        |         '<p>actual body text</p>') AS t,
-        |       graft_html_block_stats('<p>short</p><p>actual body text</p>') AS s
+      """SELECT graft_html_parsed('<nav><a href="/">Home Page Nav</a></nav>' ||
+        |         '<p>actual body text</p>').text AS t,
+        |       graft_html_parsed('<p>short</p><p>actual body text</p>') AS s
         |""".stripMargin).head()
     assert(row.getAs[String]("t") == "actual body text")
-    assert(row.getSeq[Long](1) == Seq(2L, 1L, 0L, 1L))
+    val s = row.getStruct(1)
+    assert((1 until 5).map(s.getLong) == Seq(2L, 1L, 0L, 1L))
   }
 
   test("planted page: link extraction contract (graft_html_links)") {
@@ -157,14 +158,14 @@ class HtmlSpec extends SparkSpec {
       "")
     import spark.implicits._
     pages.toDF("html")
-      .selectExpr("graft_html_text(html) AS t", "graft_html_block_stats(html) AS s",
-        "graft_html_parsed(html) AS p")
+      .selectExpr("html", "graft_html_parsed(html) AS p")
       .collect().foreach { r =>
-        val p = r.getStruct(2)
-        assert(p.getAs[String]("text") == r.getAs[String]("t"))
+        val want = parsed(r.getString(0))
+        val p = r.getStruct(1)
+        assert(p.getAs[String]("text") == want.text)
         assert(Seq(p.getAs[Long]("n_blocks"), p.getAs[Long]("n_kept"),
           p.getAs[Long]("n_dropped_link"), p.getAs[Long]("n_dropped_short")) ==
-          r.getSeq[Long](1))
+          Seq(want.nBlocks, want.nKept, want.nDroppedLink, want.nDroppedShort))
       }
   }
 

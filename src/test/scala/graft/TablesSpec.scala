@@ -1,37 +1,40 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.ArtifactCache
 import graft.sources.Tables
 
-/** Preconditions for [[Tables.salesLite]]'s FK-informed join
-  * elimination (r16): an inner join that contributes no columns is a
-  * no-op iff it neither DROPS stream rows (no orphan lineitems) nor
-  * DUPLICATES them (unique order keys). Both are the TPC-H referential
-  * contract; assert them at every verified scale factor so a future
+/** Preconditions for [[graft.sources.FkJoinElimination]]: an inner
+  * join along a declared foreign key that contributes no columns is a
+  * no-op iff it neither DROPS referencing rows (no orphans) nor
+  * DUPLICATES them (unique referenced keys). Both are the TPC-H
+  * referential contract; assert them for every entry of
+  * [[Tables.foreignKeys]] at every verified scale factor so a future
   * data drop that violates the contract fails HERE, loudly, instead of
-  * silently diverging ~25 gold/athena/graph queries from their
+  * silently diverging the queries whose join the rule drops from their
   * join-through oracles. Also pins [[Tables.table]]'s schema memo: one
   * inference per (session, dir, table), dropped by `invalidateDir`. */
 class TablesSpec extends SparkSpec {
+
+  private def scansOf(df: DataFrame): Seq[String] = FkJoinEliminationSpec.scans(df)
 
   /** The three verified scale factors, next to [[sfDir]]. */
   private val verifiedDirs = Seq("sf0.001", "sf0.01", "sf0.1")
     .map(sf => s"${new java.io.File(sfDir).getParent}/$sf")
 
-  test("salesLite precondition: lineitem→orders FK + order-key uniqueness at every verified SF") {
-    for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
-        "/root/testdata/sf0.1")) {
-      val li = Tables.table(spark, dir, "lineitem")
-      val o = Tables.table(spark, dir, "orders")
-      val dupKeys = o.groupBy("o_orderkey").agg(count(lit(1)).as("c"))
+  test("declared foreign keys: no orphans, unique referenced keys at every verified SF") {
+    assert(Tables.foreignKeys.nonEmpty)
+    for (dir <- verifiedDirs; fk <- Tables.foreignKeys) {
+      val ref = Tables.table(spark, dir, fk.refTable).select(col(fk.refColumn))
+      val dupKeys = ref.groupBy(fk.refColumn).agg(count(lit(1)).as("c"))
         .where(col("c") > 1).count()
-      assert(dupKeys == 0L, s"duplicate o_orderkey at $dir")
-      val orphans = li.select("l_orderkey")
-        .join(o.select("o_orderkey"),
-          col("l_orderkey") === col("o_orderkey"), "left_anti").count()
-      assert(orphans == 0L, s"$orphans orphan lineitems at $dir")
+      assert(dupKeys == 0L, s"duplicate ${fk.refTable}.${fk.refColumn} at $dir")
+      // a null key matches nothing, so left_anti counts it as an orphan
+      val orphans = Tables.table(spark, dir, fk.table).select(col(fk.column))
+        .join(ref, col(fk.column) === col(fk.refColumn), "left_anti").count()
+      assert(orphans == 0L, s"$orphans orphan ${fk.table}.${fk.column} at $dir")
     }
   }
 
@@ -52,14 +55,20 @@ class TablesSpec extends SparkSpec {
     }
   }
 
-  test("salesLite is sales minus customer_id, row for row") {
+  test("sales without its join equals sales through it, row for row") {
     val dir = "/root/testdata/sf0.01"
-    val full = Tables.sales(spark, dir).drop("customer_id")
-      .orderBy("transaction_id", "product_id").collect().map(_.toSeq).toSeq
-    val lite = Tables.salesLite(spark, dir)
-      .orderBy("transaction_id", "product_id").collect().map(_.toSeq).toSeq
+    val sales = Tables.sales(spark, dir)
+    // nothing reads customer_id: the rule drops the orders join
+    val dropped = sales.drop("customer_id")
+    // a customer_id filter sits on the orders side: the join stays
+    val kept = sales.where(col("customer_id").isNotNull).drop("customer_id")
+    assert(scansOf(dropped) == Seq("lineitem"))
+    assert(scansOf(kept).sorted == Seq("lineitem", "orders"))
+    def rows(df: DataFrame) = df.orderBy(df.columns.map(col).toIndexedSeq: _*)
+      .collect().map(_.toSeq).toSeq
+    val lite = rows(dropped)
     assert(lite.nonEmpty)
-    assert(lite == full)
+    assert(lite == rows(kept))
   }
 
   test("a second read of a source table in a session launches no Spark job") {
